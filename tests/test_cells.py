@@ -145,6 +145,39 @@ def test_knn_table_hierarchical_equals_dense():
     np.testing.assert_array_equal(zidx, want_zidx.astype(np.int32))
 
 
+def test_knn_cells_restricted_equals_full_table():
+    """The restricted kNN routine (what an incremental zone update runs on
+    the cells it must rebuild) gives each cell the same list as the full
+    table, whichever cells it is asked for."""
+    import numpy as np
+
+    from tzspark.cells import _compile_knn_table, _knn_cells
+
+    rng = np.random.default_rng(43)
+    nz, res = 120, 6
+    lat0 = rng.uniform(-80, 70, nz)
+    lng0 = rng.uniform(-170, 150, nz)
+    bbox = np.stack(
+        [lat0, lng0, lat0 + rng.uniform(0.5, 15, nz), lng0 + rng.uniform(0.5, 15, nz)],
+        axis=1,
+    ).astype(np.float32)
+    off, zidx = _compile_knn_table(bbox, res)
+    n = 1 << res
+    for cells in (
+        np.arange(n * n),
+        np.sort(rng.choice(n * n, 37, replace=False)),
+        np.array([0, n * n - 1]),
+        np.empty(0, np.int64),
+    ):
+        s_off, s_zidx = _knn_cells(bbox, res, cells)
+        assert s_off.dtype == off.dtype and s_zidx.dtype == zidx.dtype
+        np.testing.assert_array_equal(np.diff(s_off), np.diff(off)[cells])
+        want = [zidx[off[c]:off[c + 1]] for c in cells]
+        np.testing.assert_array_equal(
+            s_zidx, np.concatenate(want) if want else np.empty(0, np.int32)
+        )
+
+
 def test_cell_children_introspection(zones, idx):
     """R7: cell_children must agree with the probe — the resolved zone of an
     interior point appears in a full-claim list of its ancestor chain; a

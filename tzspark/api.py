@@ -117,14 +117,32 @@ class TimezoneLookup:
         return compile_cover(self.zones, self.base_res, self.max_res)
 
     # -- incremental maintenance (store Delete/Replace — rtree R5/R6) -------
-    # CSR splicing on the live compiled index (cells.delete_zone/add_zone),
-    # byte-identical to a recompile over the updated zone list; self.zones
-    # is updated too, so _content_key re-keys every cover cache correctly.
+    # CSR splicing on the live compiled index (cells.delete_zone/add_zone/
+    # replace_zone) plus a kNN table rebuilt only in the cells the changed
+    # MBR can reach — byte-identical to a recompile over the updated zone
+    # list. self.zones is updated too, so _content_key re-keys every cover
+    # cache correctly, and the superseded index's assign() broadcast is
+    # released (_swap_idx).
+
+    def _swap_idx(self, idx: CompiledIndex) -> None:
+        """Install an updated index; unpersist the broadcast assign() made of
+        the old one. unpersist only drops executor copies — a DataFrame built
+        before the swap still evaluates (executors re-fetch the blocks). A
+        broadcast of an application that has since stopped is just dropped."""
+        memo = getattr(self, "_assign_memo", None)
+        if memo is not None:
+            from pyspark import SparkContext
+
+            sc = SparkContext._active_spark_context
+            if sc is not None and sc.applicationId == memo[0]:
+                memo[2].unpersist()
+            self._assign_memo = None
+        self.idx = idx
 
     def delete_zone(self, zone_id: int) -> "TimezoneLookup":
         from .cells import delete_zone
 
-        self.idx = delete_zone(self.idx, zone_id)  # raises before any mutation
+        self._swap_idx(delete_zone(self.idx, zone_id))  # raises before any mutation
         self.zones = [z for z in self.zones if z.zone_id != zone_id]
         self._tz_by_id.pop(int(zone_id), None)
         return self
@@ -132,7 +150,7 @@ class TimezoneLookup:
     def add_zone(self, zone: Zone) -> "TimezoneLookup":
         from .cells import add_zone
 
-        self.idx = add_zone(self.idx, zone)
+        self._swap_idx(add_zone(self.idx, zone))
         self.zones = sorted(self.zones + [zone], key=lambda z: z.zone_id)
         self._tz_by_id[int(zone.zone_id)] = zone.tzid
         return self
@@ -140,7 +158,7 @@ class TimezoneLookup:
     def replace_zone(self, zone: Zone) -> "TimezoneLookup":
         from .cells import replace_zone
 
-        self.idx = replace_zone(self.idx, zone)
+        self._swap_idx(replace_zone(self.idx, zone))
         self.zones = sorted(
             [z for z in self.zones if z.zone_id != zone.zone_id] + [zone],
             key=lambda z: z.zone_id,
@@ -263,9 +281,17 @@ class TimezoneLookup:
         """The broadcast PIP join over an image+caption DataFrame."""
         from .engine import assign_timezones, zone_dim_df
 
-        idx_b = spark.sparkContext.broadcast(self.idx)
-        dim = zone_dim_df(spark, self.zones)
-        return assign_timezones(images_df, idx_b, dim, max_res=self.max_res)
+        # one broadcast + zone dim per (Spark application, compiled index):
+        # re-pickling the index and rebuilding the dim per call is the
+        # driver-side setup of every op otherwise (_swap_idx releases it)
+        app = spark.sparkContext.applicationId
+        memo = getattr(self, "_assign_memo", None)
+        if memo is None or memo[0] != app or memo[1] is not self.idx:
+            memo = self._assign_memo = (
+                app, self.idx, spark.sparkContext.broadcast(self.idx),
+                zone_dim_df(spark, self.zones),
+            )
+        return assign_timezones(images_df, memo[2], memo[3], max_res=self.max_res)
 
     def cover_tables(self, spark, cache_dir: str = None):
         """The compiled cover as relational tables (covertable.CoverTables),

@@ -43,7 +43,7 @@ from .geom import (
 DEFAULT_BASE_RES = 4
 DEFAULT_MAX_RES = 10
 # kNN candidate grid: 256x256 cells. Finer cells keep exactness (see
-# _compile_knn_table) while shrinking candidate lists — measured on the
+# _knn_cells) while shrinking candidate lists — measured on the
 # world set: res 6 -> 58.5 avg candidates/cell, 161k kNN rows/s;
 # res 8 -> 6.9 avg, 1.93M rows/s (12x), identical outputs. The hierarchical
 # compile makes res 8 as cheap to build as res 6 was.
@@ -192,7 +192,7 @@ class CompiledIndex:
     # delete_zone/add_zone/replace_zone can splice one zone in or out without
     # recompiling anything else (the reference store's Delete/Replace, R5/R6)
     zone_edge_off: np.ndarray = None
-    # coarse-cell kNN candidate table (exact pruning; see _compile_knn_table)
+    # coarse-cell kNN candidate table (exact pruning; see _knn_cells)
     knn_res: int = None
     knn_off: np.ndarray = None  # ((1<<knn_res)^2 + 1,) int64 CSR
     knn_zidx: np.ndarray = None  # int32 indices into zone_ids/zone_bbox
@@ -384,9 +384,11 @@ def _pip_edge_subset(zone_edges, lat0, lng0, lat1, lng1) -> np.ndarray:
 _KNN_BASE_RES = 4  # dense level the hierarchical refinement starts from
 
 
-def _cell_rects(n: int):
-    """Per-cell float64 bounds at an n x n grid, in cell-id order."""
-    cells = np.arange(n * n, dtype=np.int64)
+def _cell_rects(n: int, cells: np.ndarray = None):
+    """Per-cell float64 bounds at an n x n grid: every cell in cell-id order,
+    or the given cell ids."""
+    if cells is None:
+        cells = np.arange(n * n, dtype=np.int64)
     rows_f = (cells // n).astype(np.float64)
     cols_f = (cells % n).astype(np.float64)
     return (
@@ -397,6 +399,25 @@ def _cell_rects(n: int):
     )
 
 
+def _rect_dists(c_lat0, c_lng0, c_lat1, c_lng1, z_lat0, z_lng0, z_lat1, z_lng1):
+    """Squared (nearest, farthest-corner) clamp distances between cell rects
+    and zone MBRs, elementwise. d_min <= d_max holds in float64 too (every
+    operation is monotone), which the incremental kNN update relies on."""
+    gl = np.maximum(np.maximum(z_lat0 - c_lat1, c_lat0 - z_lat1), 0.0)
+    gg = np.maximum(np.maximum(z_lng0 - c_lng1, c_lng0 - z_lng1), 0.0)
+    fl = np.maximum(np.maximum(z_lat0 - c_lat0, c_lat1 - z_lat1), 0.0)
+    fg = np.maximum(np.maximum(z_lng0 - c_lng0, c_lng1 - z_lng1), 0.0)
+    return gl * gl + gg * gg, fl * fl + fg * fg
+
+
+def _seg_min(vals, seg_off):
+    """Per-segment minimum of a CSR-segmented array; +inf for empty segments."""
+    cnt = np.diff(seg_off)
+    out = np.full(len(cnt), np.inf)
+    out[cnt > 0] = np.minimum.reduceat(vals, seg_off[:-1][cnt > 0])
+    return out
+
+
 def _knn_keep_mask(c_lat0, c_lng0, c_lat1, c_lng1, z_lat0, z_lng0, z_lat1,
                    z_lng1, seg_off):
     """Exactness predicate per (cell, zone) pair row, CSR-segmented by cell:
@@ -404,30 +425,37 @@ def _knn_keep_mask(c_lat0, c_lng0, c_lat1, c_lng1, z_lat0, z_lng0, z_lat1,
     is the min over the cell's candidate zones of the farthest-corner clamp
     distance. All arrays are per-PAIR (already gathered); seg_off bounds the
     cells' pair segments."""
-    gl = np.maximum(np.maximum(z_lat0 - c_lat1, c_lat0 - z_lat1), 0.0)
-    gg = np.maximum(np.maximum(z_lng0 - c_lng1, c_lng0 - z_lng1), 0.0)
-    d_min = gl * gl + gg * gg
-    fl = np.maximum(np.maximum(z_lat0 - c_lat0, c_lat1 - z_lat1), 0.0)
-    fg = np.maximum(np.maximum(z_lng0 - c_lng0, c_lng1 - z_lng1), 0.0)
-    d_max = fl * fl + fg * fg
-    cnt = np.diff(seg_off)
-    u = np.minimum.reduceat(d_max, seg_off[:-1][cnt > 0])
-    u_full = np.empty(len(cnt), np.float64)
-    u_full[cnt > 0] = u
-    return d_min <= np.repeat(u_full, cnt)
+    d_min, d_max = _rect_dists(
+        c_lat0, c_lng0, c_lat1, c_lng1, z_lat0, z_lng0, z_lat1, z_lng1
+    )
+    return d_min <= np.repeat(_seg_min(d_max, seg_off), np.diff(seg_off))
+
+
+def _bbox_cols(zone_bbox: np.ndarray):
+    """(min_lat, min_lng, max_lat, max_lng) float64 columns of a (Z, 4) MBR array."""
+    return tuple(zone_bbox[:, k].astype(np.float64) for k in range(4))
 
 
 def _compile_knn_table(zone_bbox: np.ndarray, res: int = DEFAULT_KNN_RES):
-    """Exact kNN candidate prefilter, compiled per coarse cell.
+    """Exact kNN candidate prefilter over every res-level cell (the full
+    build: _knn_cells over all cells). Returns the (n*n + 1,) CSR offsets
+    and the int32 zone-index lists."""
+    n = 1 << res
+    return _knn_cells(zone_bbox, res, np.arange(n * n, dtype=np.int64))
 
-    For each res-level cell c: U(c) = min over zones of the distance from
-    the FARTHEST point of c to the zone MBR (an upper bound on any point's
-    nearest-zone distance — the clamp distance is convex in p, so the max
-    over the cell is attained at a corner). Keep exactly the zones whose
-    NEAREST rect-to-rect distance to c is <= U(c): for every p in c the true
-    argmin (and every distance tie, hence the min-zone_id tie-break) is
-    inside the kept list. Brute-force argmin over Z zones per point becomes
-    argmin over a handful of candidates.
+
+def _knn_cells(zone_bbox: np.ndarray, res: int, cells: np.ndarray):
+    """Exact kNN candidate lists of the given res-level cells (sorted unique
+    int64 ids) -> (off, zidx) CSR over ``cells``.
+
+    For each cell c: U(c) = min over zones of the distance from the FARTHEST
+    point of c to the zone MBR (an upper bound on any point's nearest-zone
+    distance — the clamp distance is convex in p, so the max over the cell
+    is attained at a corner). Keep exactly the zones whose NEAREST
+    rect-to-rect distance to c is <= U(c): for every p in c the true argmin
+    (and every distance tie, hence the min-zone_id tie-break) is inside the
+    kept list. Brute-force argmin over Z zones per point becomes argmin over
+    a handful of candidates.
 
     Compiled HIERARCHICALLY: dense only at _KNN_BASE_RES, then each finer
     level tests a child cell only against its parent's kept list. Exact
@@ -437,21 +465,42 @@ def _compile_knn_table(zone_bbox: np.ndarray, res: int = DEFAULT_KNN_RES):
     parent. This is what makes a res-8 grid (65k cells, ~7 candidates/cell,
     ~12x faster probes than res 6) compile in ~1 s instead of the dense
     (cells x zones) minute at Z = 24,000.
+
+    A cell's list depends only on its ancestors' lists, so the routine
+    visits just ``cells`` and their ancestors; over all cells it is the full
+    build (_compile_knn_table), over a few it is the incremental update's
+    rebuild (_knn_update), and both give the same bytes per cell.
+
+    Which cells an update must rebuild. Let a zone change its MBR from Bo to
+    Bn (a delete has no Bn, an add no Bo), and let U_old(c) be the min over
+    c's OLD list of d_max — equal to U(c) over all old zones, because the
+    d_max argmin has d_min <= d_max = U and is therefore kept. If the zone
+    is not in c's old list then d_max(Bo, c) >= d_min(Bo, c) > U_old(c), so
+    the zone never set U(c); if also d_min(Bn, c) > U_old(c), then
+    d_max(Bn, c) > U_old(c) too, so U(c) is unchanged, the old zone was not
+    kept and the new MBR is not kept: c's list is its old list, renumbered
+    for the shifted zone indices. Only the cells that listed the zone or
+    that satisfy d_min(Bn, c) <= U_old(c) can change.
     """
-    z_lat0 = zone_bbox[:, 0].astype(np.float64)
-    z_lng0 = zone_bbox[:, 1].astype(np.float64)
-    z_lat1 = zone_bbox[:, 2].astype(np.float64)
-    z_lng1 = zone_bbox[:, 3].astype(np.float64)
+    z_lat0, z_lng0, z_lat1, z_lng1 = _bbox_cols(zone_bbox)
     nz = len(z_lat0)
+    cells = np.asarray(cells, np.int64)
     if nz == 0:
-        n = 1 << res
-        return np.zeros(n * n + 1, np.int64), np.empty(0, np.int32)
+        return np.zeros(len(cells) + 1, np.int64), np.empty(0, np.int32)
+
+    # the ancestors of ``cells`` at every level, coarse to fine
+    base = min(res, _KNN_BASE_RES)
+    levels = [cells]
+    for r in range(res, base, -1):
+        n = 1 << r
+        c = levels[-1]
+        levels.append(np.unique((c // n >> 1) * (n >> 1) + (c % n >> 1)))
+    levels.reverse()
 
     # dense base level (chunked (cells x zones) matrices)
-    base = min(res, _KNN_BASE_RES)
-    n = 1 << base
-    c_lat0, c_lng0, c_lat1, c_lng1 = _cell_rects(n)
-    off = np.zeros(n * n + 1, dtype=np.int64)
+    lv = levels[0]
+    c_lat0, c_lng0, c_lat1, c_lng1 = _cell_rects(1 << base, lv)
+    off = np.zeros(len(lv) + 1, dtype=np.int64)
     keep_parts = []
     # smaller chunks than the query-side budget: the FIRST chunk's
     # temporaries fault in fresh pages (expensive on this host's bad
@@ -459,8 +508,8 @@ def _compile_knn_table(zone_bbox: np.ndarray, res: int = DEFAULT_KNN_RES):
     # many small chunks beat few huge ones — same flops, ~8x fewer fresh
     # pages at Z=24k (measured 103 s -> ~1 s for the res-4 dense level)
     step = max(1, min(_KNN_CELL_BUDGET, 500_000) // max(nz, 1))
-    for s in range(0, n * n, step):
-        sl = slice(s, min(s + step, n * n))
+    for s in range(0, len(lv), step):
+        sl = slice(s, min(s + step, len(lv)))
         ncell = sl.stop - sl.start
         pair_z = np.tile(np.arange(nz, dtype=np.int64), ncell)
         pair_c = np.repeat(np.arange(ncell, dtype=np.int64), nz)
@@ -481,15 +530,14 @@ def _compile_knn_table(zone_bbox: np.ndarray, res: int = DEFAULT_KNN_RES):
     )
 
     # refine level by level: child candidates come from the parent's list
-    for r in range(base + 1, res + 1):
-        n_par, n = 1 << (r - 1), 1 << r
-        c_lat0, c_lng0, c_lat1, c_lng1 = _cell_rects(n)
-        cells = np.arange(n * n, dtype=np.int64)
-        parent = (cells // n >> 1) * n_par + (cells % n >> 1)
+    for r, lv_par, lv in zip(range(base + 1, res + 1), levels, levels[1:]):
+        n = 1 << r
+        c_lat0, c_lng0, c_lat1, c_lng1 = _cell_rects(n, lv)
+        parent = np.searchsorted(lv_par, (lv // n >> 1) * (n >> 1) + (lv % n >> 1))
         cnt = (off[parent + 1] - off[parent]).astype(np.int64)
         pair_zrow = _ragged_ramp(off[parent], cnt)  # rows into zidx
         pair_z = zidx[pair_zrow].astype(np.int64)
-        pair_c = np.repeat(cells, cnt)
+        pair_c = np.repeat(np.arange(len(lv), dtype=np.int64), cnt)
         seg = np.concatenate([[0], np.cumsum(cnt)]).astype(np.int64)
         keep = _knn_keep_mask(
             c_lat0[pair_c], c_lng0[pair_c], c_lat1[pair_c], c_lng1[pair_c],
@@ -497,10 +545,63 @@ def _compile_knn_table(zone_bbox: np.ndarray, res: int = DEFAULT_KNN_RES):
             seg,
         )
         zidx = zidx[pair_zrow[keep]]
-        new_off = np.zeros(n * n + 1, dtype=np.int64)
-        new_off[1:] = np.cumsum(np.add.reduceat(keep.astype(np.int64), seg[:-1]))
-        off = new_off
+        off = np.zeros(len(lv) + 1, dtype=np.int64)
+        off[1:] = np.cumsum(np.add.reduceat(keep.astype(np.int64), seg[:-1]))
     return off, zidx
+
+
+def _knn_update(prev: CompiledIndex, idx: CompiledIndex, pos: int,
+                old_bbox=None, new_bbox=None):
+    """idx's kNN table from prev's, after the zone at index ``pos`` changed
+    its MBR from ``old_bbox`` to ``new_bbox`` (None for a delete's new / an
+    add's old side). Rebuilds with _knn_cells only the cells whose list can
+    change (the argument is in _knn_cells' docstring) and copies every other
+    cell's list, renumbered by the zone-count change past ``pos``."""
+    res = prev.knn_res
+    n = 1 << res
+    off, zi = prev.knn_off, prev.knn_zidx
+    cnt = np.diff(off)
+    aff = np.zeros(n * n, dtype=bool)
+    if old_bbox is not None:  # cells that listed the zone
+        aff[np.searchsorted(off, np.flatnonzero(zi == pos), side="right") - 1] = True
+    if new_bbox is not None:  # cells where the new MBR is within U_old
+        c_lat0, c_lng0, c_lat1, c_lng1 = _cell_rects(n)
+        d_new, _ = _rect_dists(
+            c_lat0, c_lng0, c_lat1, c_lng1, *np.asarray(new_bbox, np.float64)
+        )
+        # U_old from the whole old list, only where d_new could be <= it:
+        # any one candidate's d_max bounds U_old from above
+        z_lat0, z_lng0, z_lat1, z_lng1 = _bbox_cols(prev.zone_bbox)
+        ub = np.full(n * n, np.inf)
+        has = cnt > 0
+        first = zi[off[:-1][has]]
+        _, ub[has] = _rect_dists(
+            c_lat0[has], c_lng0[has], c_lat1[has], c_lng1[has],
+            z_lat0[first], z_lng0[first], z_lat1[first], z_lng1[first],
+        )
+        near = np.flatnonzero(d_new <= ub)
+        ncnt = cnt[near]
+        pz = zi[_ragged_ramp(off[near], ncnt)].astype(np.int64)
+        pc = np.repeat(near, ncnt)
+        _, d_max = _rect_dists(
+            c_lat0[pc], c_lng0[pc], c_lat1[pc], c_lng1[pc],
+            z_lat0[pz], z_lng0[pz], z_lat1[pz], z_lng1[pz],
+        )
+        u_old = _seg_min(d_max, np.concatenate([[0], np.cumsum(ncnt)]))
+        aff[near[d_new[near] <= u_old]] = True
+
+    cells = np.flatnonzero(aff)
+    a_off, a_zi = _knn_cells(idx.zone_bbox, res, cells)
+    shift = len(idx.zone_ids) - len(prev.zone_ids)  # +1 add, -1 delete, 0 replace
+    zi_old = zi.astype(np.int64)
+    zi_old[zi_old >= pos] += shift  # the zone's own rows sit in rebuilt cells
+    new_cnt = cnt.copy()
+    new_cnt[cells] = np.diff(a_off)
+    starts = off[:-1].copy()
+    starts[cells] = len(zi) + a_off[:-1]
+    pool = np.concatenate([zi_old, a_zi.astype(np.int64)])
+    knn_off = np.concatenate([[0], np.cumsum(new_cnt)]).astype(np.int64)
+    return knn_off, pool[_ragged_ramp(starts, new_cnt)].astype(np.int32)
 
 
 def _zone_cover_task(args):
@@ -552,7 +653,7 @@ def compile_cover(
     zones = sorted(zones, key=lambda z: z.zone_id)
     zone_ids = np.array([z.zone_id for z in zones], dtype=np.int32)
     tzids = [z.tzid for z in zones]
-    zone_bbox = np.array([z.bbox for z in zones], dtype=F32)
+    zone_bbox = np.array([z.bbox for z in zones], dtype=F32).reshape(-1, 4)
 
     # global flat edge arrays + per-zone offsets
     edge_parts = [ring_edges(z.ring_lat, z.ring_lng) for z in zones]
@@ -739,16 +840,30 @@ def _set_boundary_edges(idx: CompiledIndex, edge_idx: np.ndarray) -> None:
         idx.b_eb_lat = idx.b_eb_lng = None
 
 
-def _finalize_index(idx: CompiledIndex) -> CompiledIndex:
+def _finalize_index(idx: CompiledIndex, prev: CompiledIndex = None,
+                    pos: int = None, old_bbox=None,
+                    new_bbox=None) -> CompiledIndex:
     """kNN candidate table + stats — the shared tail of compile_cover and the
-    incremental update paths (same formulas => identical index bytes)."""
-    idx.knn_off, idx.knn_zidx = _compile_knn_table(idx.zone_bbox, idx.knn_res)
+    incremental update paths (same formulas => identical index bytes).
+
+    With ``prev`` (the index before a one-zone update at zone index ``pos``,
+    whose MBR went from ``old_bbox`` to ``new_bbox``) only the kNN cells the
+    change can reach are rebuilt (_knn_update); otherwise the whole table."""
+    if prev is None:
+        idx.knn_off, idx.knn_zidx = _compile_knn_table(idx.zone_bbox, idx.knn_res)
+    else:
+        idx.knn_off, idx.knn_zidx = _knn_update(prev, idx, pos, old_bbox, new_bbox)
     # the pruned path's reduceat assumes every coarse cell keeps >=1 candidate
     # (true by construction: keep includes each cell's d_max argmin zone);
-    # make the invariant explicit so a compile regression fails loudly here
-    # instead of silently mis-resolving in knn_fallback
+    # checked here, on every path, so a compile or update regression fails
+    # loudly instead of silently mis-resolving in knn_fallback
     if len(idx.zone_ids):
-        assert (np.diff(idx.knn_off) > 0).all(), "empty kNN candidate cell"
+        empty = np.flatnonzero(np.diff(idx.knn_off) == 0)
+        if len(empty):
+            raise RuntimeError(
+                f"empty kNN candidate cell: {len(empty)} cells at res "
+                f"{idx.knn_res}, first {int(empty[0])}"
+            )
     n_full = {r: len(v[0]) for r, v in idx.full.items()}
     idx.stats = {
         "zones": len(idx.zone_ids),
@@ -772,32 +887,37 @@ def _finalize_index(idx: CompiledIndex) -> CompiledIndex:
 # them, but the store API exposes them): zones are independent in the cover,
 # so one zone can be cut out of / merged into every CSR structure without
 # touching any other zone's geometry work. Results are BYTE-IDENTICAL to a
-# fresh compile_cover over the updated zone list (tests/test_index_update.py)
-# — only the kNN candidate table is recompiled from the (Z,4) bbox array,
-# because its pruning is not reversible (a deleted zone may have justified
-# dropping another cell candidate); that step is O(Z · coarse cells) with no
-# polygon geometry.
+# fresh compile_cover over the updated zone list (tests/test_index_update.py).
+# The kNN candidate table is not spliced: a zone's MBR can enter or leave
+# other zones' candidate lists. _finalize_index instead rebuilds only the
+# kNN cells the changed MBR can reach (_knn_update; the exactness argument is
+# in _knn_cells) and copies the rest — no polygon geometry, and a replace
+# splices out and in before finalizing once.
 # ---------------------------------------------------------------------------
 
 
-def delete_zone(idx: CompiledIndex, zone_id: int) -> CompiledIndex:
-    """A new CompiledIndex with ``zone_id`` removed (input left untouched —
-    it may be live in a broadcast). O(index size), no cover recompute."""
+def _zone_pos(idx: CompiledIndex, zone_id: int) -> tuple:
+    """(insertion index of ``zone_id`` in idx.zone_ids, present?). Raises
+    for indexes without the span arrays the splices need."""
     if idx.b_edge_idx is None or idx.zone_edge_off is None:
         raise ValueError(
             "index predates INDEX_FORMAT_VERSION 5 (no edge-index/span "
             "arrays) — recompile before incremental updates"
         )
     pos = int(np.searchsorted(idx.zone_ids, zone_id))
-    if pos >= len(idx.zone_ids) or idx.zone_ids[pos] != zone_id:
-        raise KeyError(f"zone_id {zone_id} not in index")
+    return pos, pos < len(idx.zone_ids) and idx.zone_ids[pos] == zone_id
 
+
+def _splice_out(idx: CompiledIndex, pos: int) -> CompiledIndex:
+    """The cover structures of idx without the zone at index ``pos`` (no kNN
+    table or stats yet — _finalize_index adds them)."""
     out = CompiledIndex(
         base_res=idx.base_res,
         max_res=idx.max_res,
         zone_ids=np.delete(idx.zone_ids, pos),
         tzids=idx.tzids[:pos] + idx.tzids[pos + 1 :],
         zone_bbox=np.delete(idx.zone_bbox, pos, axis=0),
+        knn_res=idx.knn_res,
     )
     # global edge blob: cut the zone's contiguous span, shift later spans
     zeo = idx.zone_edge_off
@@ -846,26 +966,14 @@ def delete_zone(idx: CompiledIndex, zone_id: int) -> CompiledIndex:
     ei = idx.b_edge_idx[np.repeat(mk, e_cnt)].astype(np.int64)
     ei[ei >= s1] -= cut  # kept subsets never index the deleted span
     _set_boundary_edges(out, ei)
-
-    out.knn_res = idx.knn_res
-    return _finalize_index(out)
+    return out
 
 
-def add_zone(idx: CompiledIndex, zone: Zone) -> CompiledIndex:
-    """A new CompiledIndex with ``zone`` merged in (store append for a live
-    index — S9's AddTimezone without a full rebuild). Only the NEW zone's
-    cover is computed; existing zones' structures are spliced around it."""
-    from .geom import ring_edges
-
-    if idx.b_edge_idx is None or idx.zone_edge_off is None:
-        raise ValueError(
-            "index predates INDEX_FORMAT_VERSION 5 (no edge-index/span "
-            "arrays) — recompile before incremental updates"
-        )
-    pos = int(np.searchsorted(idx.zone_ids, zone.zone_id))
-    if pos < len(idx.zone_ids) and idx.zone_ids[pos] == zone.zone_id:
-        raise KeyError(f"zone_id {zone.zone_id} already in index")
-
+def _splice_in(idx: CompiledIndex, zone: Zone, pos: int) -> CompiledIndex:
+    """The cover structures of idx with ``zone`` inserted at index ``pos``
+    (no kNN table or stats yet — _finalize_index adds them). Only the new
+    zone's cover is computed; existing zones' structures are spliced around
+    it."""
     na_lat, na_lng, nb_lat, nb_lng = ring_edges(zone.ring_lat, zone.ring_lng)
     n_new = na_lat.shape[0]
     zeo = idx.zone_edge_off
@@ -879,6 +987,7 @@ def add_zone(idx: CompiledIndex, zone: Zone) -> CompiledIndex:
         zone_bbox=np.insert(
             idx.zone_bbox, pos, np.asarray(zone.bbox, dtype=F32), axis=0
         ),
+        knn_res=idx.knn_res,
     )
     out.ea_lat = np.concatenate([idx.ea_lat[:ins], na_lat, idx.ea_lat[ins:]])
     out.ea_lng = np.concatenate([idx.ea_lng[:ins], na_lng, idx.ea_lng[ins:]])
@@ -948,14 +1057,40 @@ def add_zone(idx: CompiledIndex, zone: Zone) -> CompiledIndex:
     out.b_off = np.concatenate([uoff, [len(sc)]]).astype(np.int64)
     _set_boundary_edges(out, pool[_ragged_ramp(all_start[order], cnt_o)])
 
-    out.knn_res = idx.knn_res
-    return _finalize_index(out)
+    return out
+
+
+def delete_zone(idx: CompiledIndex, zone_id: int) -> CompiledIndex:
+    """A new CompiledIndex with ``zone_id`` removed (input left untouched —
+    it may be live in a broadcast). O(index size), no cover recompute."""
+    pos, present = _zone_pos(idx, zone_id)
+    if not present:
+        raise KeyError(f"zone_id {zone_id} not in index")
+    return _finalize_index(
+        _splice_out(idx, pos), idx, pos, old_bbox=idx.zone_bbox[pos]
+    )
+
+
+def add_zone(idx: CompiledIndex, zone: Zone) -> CompiledIndex:
+    """A new CompiledIndex with ``zone`` merged in (store append for a live
+    index — S9's AddTimezone without a full rebuild)."""
+    pos, present = _zone_pos(idx, zone.zone_id)
+    if present:
+        raise KeyError(f"zone_id {zone.zone_id} already in index")
+    out = _splice_in(idx, zone, pos)
+    return _finalize_index(out, idx, pos, new_bbox=out.zone_bbox[pos])
 
 
 def replace_zone(idx: CompiledIndex, zone: Zone) -> CompiledIndex:
-    """Swap a zone's geometry in place (rtree R6 Replace): exact
-    delete + add under the same zone_id."""
-    return add_zone(delete_zone(idx, zone.zone_id), zone)
+    """Swap a zone's geometry in place (rtree R6 Replace): exact delete +
+    add under the same zone_id, spliced out and in with one kNN update."""
+    pos, present = _zone_pos(idx, zone.zone_id)
+    if not present:
+        raise KeyError(f"zone_id {zone.zone_id} not in index")
+    out = _splice_in(_splice_out(idx, pos), zone, pos)
+    return _finalize_index(
+        out, idx, pos, old_bbox=idx.zone_bbox[pos], new_bbox=out.zone_bbox[pos]
+    )
 
 
 def resolve_points(idx: CompiledIndex, lat: np.ndarray, lng: np.ndarray) -> np.ndarray:
@@ -1096,7 +1231,7 @@ def knn_fallback(idx: CompiledIndex, lat: np.ndarray, lng: np.ndarray) -> np.nda
 
     Candidate-pruned via the compiled coarse-cell table (knn_off/knn_zidx):
     each point compares only the zones that can be nearest for ANY point of
-    its coarse cell (exact pruning, see _compile_knn_table) — argmin over
+    its coarse cell (exact pruning, see _knn_cells) — argmin over
     ~tens of candidates instead of a dense (N, Z) float64 matrix that at
     reference scale (Z ~ 25k polygon rows) would be multi-GB per Arrow batch.
     Falls back to the chunked brute force for indexes without a table.
