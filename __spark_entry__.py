@@ -103,31 +103,6 @@ _ROUND6_FIRST = [
     "q98_decontaminate", "q99_od_flow_matrix",
 ]
 
-# Round-5 rotation list, kept for reference (CORRECTNESS_r05.json recorded
-# exactly these 50 names).
-_ROUND5_FIRST = [
-    "q55_sq8_encode", "q56_sq8_search", "q60_pq_adc_search", "q61_ivfpq_search",
-    "q63_snapshot_time_travel", "q69_image_ahash_neardup", "q71_zonal_image_stats",
-    "q81_image_dedup_canonical", "q82_local_time_rollup", "q83_zone_quota_sample",
-    "q84_patchify", "q87_flip_patchify", "q92_snapshot_merge",
-    "q94_image_quality_filter", "q97_cluster_metadata", "q100_tile_shard_pack",
-    "q30_resize", "q31_stream_assign",
-    # new in round 5, never driver-recorded either:
-    "q101_substring_dedup", "q102_semdedup",
-    "q103_image_sharpness", "q104_zone_dissolve",
-    "q105_trajectory_resample", "q106_boundary_distance",
-    "q107_scene_cuts", "q108_unigram_surprisal", "q109_daylight_consistency",
-    # the 23 highest-value of the names recorded only in round 3 (the nine
-    # displaced r3-only names, q42 and q44-q51, keep their r3 green rows):
-    "q13_dedup_exact", "q14_ngram_jaccard", "q15_minhash_lsh", "q16_simhash",
-    "q17_lang_id", "q18_quality_score", "q19_token_count", "q20_doc_fingerprint",
-    "q21_ann_bruteforce", "q22_ann_lsh_bucket", "q23_embed_near_dup",
-    "q24_extract_gps", "q25_psnr_invariant", "q26_tile_raster",
-    "q27_full_engine_synthetic", "q29_image_features", "q32_ivf_assign",
-    "q33_ivf_search", "q34_simhash_near_dup", "q35_corpus_clean",
-    "q37_near_dup_clusters", "q38_centroid_outliers", "q41_full_engine_boxes",
-]
-
 
 def _rotate(d: dict) -> dict:
     head = {k: d[k] for k in _ROUND6_FIRST if k in d}

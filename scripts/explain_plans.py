@@ -7,7 +7,8 @@ assert the plan properties the design promises:
    (ReadSchema), captions/phash are not read;
 3. filter pushdown: a fmt/w predicate reaches the parquet scan
    (PushedFilters);
-4. tile rollup: partial aggregation shuffles only the tiny partial-sum rows.
+4. tile rollup: decode runs in ONE mapInArrow below the only Exchange, so
+   only the tiny partial-sum rows shuffle.
 """
 
 import os
@@ -23,7 +24,7 @@ from tzspark.engine import (
     assign_timezones,
     broadcast_cover,
     get_spark,
-    tile_rollup,
+    tile_rollup_fused,
     zone_dim_df,
 )
 from tzspark.datasets import images_df
@@ -92,9 +93,20 @@ def main():
     if not re.search(r"PushedFilters: \[[^\]]*EqualTo\(fmt,raw\)", p3):
         failures.append("pushdown: fmt filter not pushed to parquet scan")
 
-    # 4. tile rollup shuffles only partial sums
-    p4 = plan_of(tile_rollup(assign_timezones(images, idx_b, dim)))
-    sections.append(("tile rollup (two-phase partial aggregation)", p4))
+    # 4. tile rollup shuffles only partial sums: ONE Python stage (the
+    # mapInArrow decode), and it sits below the only Exchange — the tree
+    # dump lists operators top-down from the sink
+    p4 = plan_of(tile_rollup_fused(images))
+    sections.append(("tile rollup (mapInArrow decode + partial aggregation)", p4))
+    tree4 = p4.split("\n\n\n")[0]
+    n_py4 = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow)", p4))
+    if n_py4 != 1 or "MapInArrow" not in tree4:
+        failures.append(f"tile: {n_py4} Python stages (expected exactly 1 MapInArrow)")
+    n_ex4 = len(re.findall(r"\bExchange \(", tree4))
+    if n_ex4 != 1:
+        failures.append(f"tile: {n_ex4} Exchanges (expected exactly 1)")
+    elif tree4.find("MapInArrow") < tree4.find("Exchange ("):
+        failures.append("tile: the decode stage runs above the Exchange")
 
     # 5. fused one-pass lookup+tile: ONE PythonMapInArrow, one Exchange,
     # bytes-only ReadSchema (payload crosses once, partials shuffle)
@@ -113,16 +125,6 @@ def main():
     m5 = re.search(r"ReadSchema: struct<([^>]*)>", p5)
     if m5 and m5.group(1) != "bytes:binary":
         failures.append(f"onepass: scan reads more than bytes: {m5.group(1)}")
-    # the exchange must sit ABOVE the python map stage (partials), i.e. the
-    # MapInPandas node appears before the first Exchange in the tree dump
-    map_pos = p4.find("MapInPandas")
-    ex_pos = p4.find("Exchange")
-    if map_pos == -1 or (ex_pos != -1 and ex_pos < map_pos):
-        # formatted plans list operators top-down from the sink; Exchange
-        # printed BEFORE MapInPandas means shuffle happens after decode: good
-        pass
-    if "MapInPandas" not in p4:
-        failures.append("tile: decode stage missing from plan")
 
     # 6. broadcast-free cover-as-table resolve: cover joins must be shuffle
     # joins (the whole point — nothing driver-sized), exactly one Python
@@ -858,7 +860,8 @@ def main():
             "- tzid attach = BroadcastHashJoin, no SortMergeJoin\n"
             f"- zone_id-only projection scans ReadSchema struct<{read_cols}>\n"
             "- fmt equality filter pushed to the parquet scan\n"
-            "- tile rollup shuffles only post-decode partial sums\n"
+            "- tile rollup: one MapInArrow decode below the only Exchange "
+            "(shuffles post-decode partial sums only)\n"
             "- cover-as-table resolve: cover joins are ShuffledHashJoin, zero "
             "BroadcastHashJoin, one Python stage (the boundary PIP)\n"
             "- as-of join: zero join operators, exactly one Exchange "

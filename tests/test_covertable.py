@@ -13,8 +13,9 @@ from tzspark.covertable import (
     knn_via_join,
     resolve_via_join,
 )
-from tzspark.engine import assign_udf, knn_only_udf, resolve_only_udf
-from tzspark.queries_geo import box_zones, pts_df
+from tzspark.engine import assign_udf, resolve_only_udf
+from tzspark.geom import F32
+from tzspark.queries_geo import box_zones, pts_df, q12_knn_engine
 
 SF = "/root/testdata/sf0.001"
 
@@ -43,6 +44,22 @@ def test_resolve_join_equals_broadcast(spark, box_cover):
     assert (want["zone_id"] == got["zone_id"]).all()
     assert (got["zone_id"] == -1).any()  # both regimes exercised
     assert (got["zone_id"] >= 0).any()
+
+
+def test_q12_one_python_stage(spark, box_cover):
+    """q12 is ONE assign probe filtered on via_knn: exactly one
+    ArrowEvalPython (the filter must not re-evaluate the probe), and its
+    rows are the kNN answers of exactly the points no box contains."""
+    idx, _ = box_cover
+    df = q12_knn_engine(spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    got = _pd(df, ["event_id", "zone_id"])
+    p = _pd(pts_df(spark, SF), ["event_id", "lat", "lng"])
+    la, lg = p["lat"].to_numpy(F32), p["lng"].to_numpy(F32)
+    un = resolve_points(idx, la, lg) == -1
+    assert got.index.tolist() == p.index[un].tolist()
+    assert got["zone_id"].tolist() == knn_fallback(idx, la[un], lg[un]).tolist()
 
 
 def test_assign_join_equals_broadcast(spark, box_cover):
@@ -128,7 +145,6 @@ def test_union_tenants_isolation(spark):
     tenant B, and each tenant's answer equals its own single-tenant
     broadcast kernel."""
     from tzspark.cells import Zone
-    from tzspark.geom import F32
 
     za = [Zone(0, "A/Box", np.array([0, 0, 10, 10], F32),
                np.array([0, 10, 10, 0], F32))]

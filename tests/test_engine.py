@@ -11,7 +11,7 @@ from tzspark.engine import (
     broadcast_cover,
     quarantined_rows,
     salted_tile_counts,
-    tile_rollup,
+    tile_rollup_fused,
     zone_dim_df,
 )
 from tzspark.geom import F32
@@ -96,7 +96,7 @@ def test_quarantine_path(spark, zones):
 
 
 def test_tile_rollup(assigned):
-    tiles = tile_rollup(assigned).toPandas()
+    tiles = tile_rollup_fused(assigned).toPandas()
     assert tiles["n_images"].sum() == N
     assert (tiles["mean_luma"] > 0).all() and (tiles["mean_luma"] < 255).all()
     # hot-cell skew visible: top tile should hold a big share

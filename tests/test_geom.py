@@ -10,6 +10,7 @@ from tzspark.geom import (
     F32,
     contains_batch,
     contains_scalar,
+    ragged_parity,
     ring_edges,
     contains_batch_edges,
 )
@@ -110,3 +111,51 @@ def test_edge_subset_parity_invariance():
         a_lat[keep], a_lng[keep], b_lat[keep], b_lng[keep], p_lat, p_lng
     )
     np.testing.assert_array_equal(full, sub)
+
+
+# integer coords make points land on vertices/edges and edges go vertical or
+# horizontal (zero-length lng spans: the kernel's divide-by-zero rows)
+_COORD = st.one_of(st.integers(-4, 4).map(float), st.floats(-10, 10, width=32))
+_RUN = st.tuples(
+    st.lists(st.tuples(_COORD, _COORD), max_size=9),  # ring: 0..9 edges
+    st.tuples(_COORD, _COORD),  # the run's point
+)
+_EMPTY_RUN = ([], (0.0, 0.0))
+
+
+def _ragged_vs_dense(runs):
+    """(ragged_parity over all runs, the dense kernel run by run)."""
+    edges, counts, dense = [], [], []
+    for verts, (plat, plng) in runs:
+        e = ring_edges(
+            np.array([v[0] for v in verts], F32), np.array([v[1] for v in verts], F32)
+        )
+        edges.append(e)
+        counts.append(len(verts))
+        dense.append(bool(contains_batch_edges(
+            *e, np.array([plat], F32), np.array([plng], F32)
+        )[0]))
+    cols = [np.concatenate([np.empty(0, F32)] + [e[k] for e in edges]) for k in range(4)]
+    got = ragged_parity(
+        np.array([r[1][0] for r in runs], F32), np.array([r[1][1] for r in runs], F32),
+        *cols, np.array(counts, np.int64),
+    )
+    return got.tolist(), dense
+
+
+@settings(max_examples=300, deadline=None)
+@given(runs=st.lists(_RUN, min_size=1, max_size=12))
+def test_ragged_parity_matches_dense_reference(runs):
+    """ragged_parity (every lookup path's refine kernel) == the dense
+    contains_batch_edges evaluated run by run, with empty runs at the start,
+    in the middle and at the end of the batch (an empty run is outside)."""
+    mid = len(runs) // 2
+    runs = [_EMPTY_RUN] + runs[:mid] + [_EMPTY_RUN] + runs[mid:] + [_EMPTY_RUN]
+    got, dense = _ragged_vs_dense(runs)
+    assert got == dense
+    assert not got[0] and not got[mid + 1] and not got[-1]
+
+
+def test_ragged_parity_all_runs_empty():
+    assert _ragged_vs_dense([_EMPTY_RUN] * 3) == ([False] * 3, [False] * 3)
+    assert _ragged_vs_dense([]) == ([], [])

@@ -35,6 +35,7 @@ import numpy as np
 from .geom import (
     F32,
     contains_batch_edges,
+    ragged_parity,
     ring_bbox,
     ring_edges,
     segment_bbox_overlaps_rect,
@@ -1172,13 +1173,7 @@ def _ragged_ramp(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
 
 def _resolve_pairs(idx, lat, lng, out, pair_pt, pair_ci, e_cnt):
     """Evaluate PIP for (point, candidate) pairs; fold argmin into ``out``."""
-    e_start = idx.b_edge_off[pair_ci]
-    flat = _ragged_ramp(e_start, e_cnt)  # rows into the materialized edges
-    if len(flat) == 0:
-        return
-    pair_of_row = np.repeat(np.arange(len(pair_ci), dtype=np.int64), e_cnt)
-    pl = lat[pair_pt][pair_of_row]
-    pg = lng[pair_pt][pair_of_row]
+    flat = _ragged_ramp(idx.b_edge_off[pair_ci], e_cnt)  # rows into the edges
     if idx.b_ea_lat is not None:  # materialized contiguous edge subsets
         a_lat, a_lng = idx.b_ea_lat[flat], idx.b_ea_lng[flat]
         b_lat, b_lng = idx.b_eb_lat[flat], idx.b_eb_lng[flat]
@@ -1186,13 +1181,9 @@ def _resolve_pairs(idx, lat, lng, out, pair_pt, pair_ci, e_cnt):
         g = idx.b_edge_idx[flat]
         a_lat, a_lng = idx.ea_lat[g], idx.ea_lng[g]
         b_lat, b_lng = idx.eb_lat[g], idx.eb_lng[g]
-    straddle = (a_lng > pg) != (b_lng > pg)
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        t = ((b_lat - a_lat) * (pg - a_lng)) / (b_lng - a_lng) + a_lat
-    cross = (straddle & (pl < t)).astype(np.int64)
-    row_starts = np.concatenate([[0], e_cnt.cumsum()[:-1]]).astype(np.int64)
-    parity = np.add.reduceat(cross, row_starts) & 1
-    inside = parity.astype(bool)
+    inside = ragged_parity(
+        lat[pair_pt], lng[pair_pt], a_lat, a_lng, b_lat, b_lng, e_cnt
+    )
     if inside.any():
         zid = idx.zone_ids[idx.b_zone[pair_ci[inside]]].astype(np.int64)
         np.minimum.at(out, pair_pt[inside], zid)
@@ -1243,22 +1234,24 @@ def knn_fallback(idx: CompiledIndex, lat: np.ndarray, lng: np.ndarray) -> np.nda
         return np.empty(0, dtype=np.int32)
     lat = np.asarray(lat, dtype=F32)
     lng = np.asarray(lng, dtype=F32)
-    if idx.knn_off is None:  # legacy/brute path, chunked
-        return _knn_brute(idx, lat, lng)
 
     # The pruned table's exactness proof only covers the valid coordinate
     # domain: cell_rowcol CLAMPS out-of-range coords into border cells whose
     # candidate list was computed for points INSIDE the cell, so e.g.
     # lat=200 could miss its true nearest zone. Unvalidated callers
     # (search_many, direct knn_fallback) route such points to the exact
-    # brute-force argmin instead.
-    in_dom = (lat >= -90.0) & (lat <= 90.0) & (lng >= -180.0) & (lng <= 180.0)
+    # brute-force argmin instead. A NaN coordinate is no point at all: its
+    # distance to every zone is NaN, so it has no nearest zone (-1).
+    in_dom = in_domain(lat, lng)
     if not in_dom.all():
-        out = np.empty(n, dtype=np.int32)
-        ins, outs = np.flatnonzero(in_dom), np.flatnonzero(~in_dom)
+        out = np.full(n, -1, dtype=np.int32)
+        ins = np.flatnonzero(in_dom)
+        outs = np.flatnonzero(~in_dom & ~(np.isnan(lat) | np.isnan(lng)))
         out[ins] = knn_fallback(idx, lat[ins], lng[ins])
         out[outs] = _knn_brute(idx, lat[outs], lng[outs])
         return out
+    if idx.knn_off is None:  # legacy/brute path, chunked
+        return _knn_brute(idx, lat, lng)
 
     cells = cell_id(lat, lng, idx.knn_res)
     cnt = idx.knn_off[cells + 1] - idx.knn_off[cells]
@@ -1279,6 +1272,31 @@ def knn_fallback(idx: CompiledIndex, lat: np.ndarray, lng: np.ndarray) -> np.nda
     is_min = d2 == dmin[np.repeat(np.arange(n, dtype=np.int64), cnt)]
     zid_pairs = np.where(is_min, idx.zone_ids[zi].astype(np.int64), np.iinfo(np.int64).max)
     return np.minimum.reduceat(zid_pairs, seg).astype(np.int32)
+
+
+def in_domain(lat, lng) -> np.ndarray:
+    """Valid-coordinate mask: lat in [-90, 90] and lng in [-180, 180] (the
+    reference's LatLng.Valid, geo/latlng.go:24-31). NaN is never valid."""
+    return (lat >= -90.0) & (lat <= 90.0) & (lng >= -180.0) & (lng <= 180.0)
+
+
+def assign_points(idx: CompiledIndex, lat, lng) -> tuple:
+    """The engine's whole point lookup (reference Search, timezone.go:58-78):
+    resolve_points, then knn_fallback for the points no zone contains.
+
+    Returns (zone_id int32, via_knn bool). via_knn marks the kNN answers; a
+    point with no answer at all (NaN coordinates) gets zone_id -1 and
+    via_knn False. Every lookup path — the broadcast UDFs, the fused image
+    kernels, describe_point — goes through here."""
+    lat = np.asarray(lat, dtype=F32)
+    lng = np.asarray(lng, dtype=F32)
+    zid = resolve_points(idx, lat, lng)
+    via = np.zeros(zid.shape[0], dtype=bool)
+    un = np.flatnonzero(zid == -1)
+    if un.size:
+        zid[un] = knn_fallback(idx, lat[un], lng[un])
+        via[un] = zid[un] != -1
+    return zid, via
 
 
 # ---------------------------------------------------------------------------
@@ -1351,17 +1369,20 @@ def cell_children(idx: CompiledIndex, cell: int, res: int = None) -> dict:
 def describe_point(idx: CompiledIndex, lat: float, lng: float) -> dict:
     """Single-point probe trace: the cell chain a lookup walks for (lat,
     lng) plus the resolved zone — ``cell_children`` keyed by coordinates,
-    with the engine's answer attached (via="full"|"boundary"|"knn")."""
+    with the engine's answer attached (via="full"|"boundary"|"knn", or ""
+    with zone_id -1 when there is no answer: NaN coordinates)."""
     la = np.array([lat], dtype=F32)
     lg = np.array([lng], dtype=F32)
     cell = int(cell_id(la, lg, idx.max_res)[0])
     info = cell_children(idx, cell, idx.max_res)
-    zid = int(resolve_points(idx, la, lg)[0])
-    if zid >= 0:
-        via = "full" if any(zid in v for v in info["full"].values()) else "boundary"
-    else:
-        zid = int(knn_fallback(idx, la, lg)[0])
+    zid, via_knn = assign_points(idx, la, lg)
+    zid = int(zid[0])
+    if via_knn[0]:
         via = "knn"
+    elif zid < 0:
+        via = ""
+    else:
+        via = "full" if any(zid in v for v in info["full"].values()) else "boundary"
     info["zone_id"] = zid
     info["via"] = via
     zi = int(np.searchsorted(idx.zone_ids, zid))

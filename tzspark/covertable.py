@@ -38,13 +38,12 @@ nothing per executor.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .cells import DEFAULT_KNN_RES, CompiledIndex, cell_id_col
-from .geom import F32
+from .cells import DEFAULT_KNN_RES, CompiledIndex, _ragged_ramp, cell_id_col
+from .geom import F32, ragged_parity
 
 INTERIOR_SCHEMA = T.StructType(
     [
@@ -382,60 +381,15 @@ class CoverTables:
         )
 
 
-def _pip_pairs_udf():
-    """pandas_udf: (lat, lng, edge-subset arrays) -> inside? per joined row.
-
-    The same float32 even-odd ray cast as cells._resolve_pairs, over ragged
-    per-row edge lists flattened once per Arrow batch (one kernel pass, no
-    per-row Python). Parity over the pruned subset == parity over the full
-    ring (cells._pip_edge_subset invariant carried by the boundary table)."""
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(lat: pd.Series, lng: pd.Series, ea_lat: pd.Series, ea_lng: pd.Series,
-             eb_lat: pd.Series, eb_lng: pd.Series) -> pd.Series:
-        n = len(lat)
-        if n == 0:
-            return pd.Series(np.zeros(0, bool))
-        pl = lat.to_numpy(dtype=F32, na_value=np.nan)
-        pg = lng.to_numpy(dtype=F32, na_value=np.nan)
-        vals = ea_lat.to_numpy()
-        counts = np.fromiter((len(v) for v in vals), np.int64, n)
-
-        def flat(s):
-            a = s.to_numpy()
-            return (
-                np.concatenate(a).astype(F32, copy=False)
-                if counts.sum()
-                else np.empty(0, F32)
-            )
-
-        a_lat, a_lng = flat(ea_lat), flat(ea_lng)
-        b_lat, b_lng = flat(eb_lat), flat(eb_lng)
-        row = np.repeat(np.arange(n, dtype=np.int64), counts)
-        PL, PG = pl[row], pg[row]
-        straddle = (a_lng > PG) != (b_lng > PG)
-        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-            t = ((b_lat - a_lat) * (PG - a_lng)) / (b_lng - a_lng) + a_lat
-        cross = (straddle & (PL < t)).astype(np.int64)
-        out = np.zeros(n, bool)
-        nz = counts > 0
-        if nz.any():
-            seg = np.concatenate([[0], np.cumsum(counts)[:-1]]).astype(np.int64)
-            parity = np.add.reduceat(cross, seg[nz]) & 1
-            out[nz] = parity.astype(bool)
-        return pd.Series(out)
-
-    return _pip
-
-
 def _pip_filter_arrow(jb: DataFrame, carry: list) -> DataFrame:
     """(joined point x boundary-candidate rows) -> (_k, *carry, cand) for
-    rows whose point lies INSIDE the candidate's pruned edge subset — the
-    same float32 even-odd ray cast as _pip_pairs_udf, but as one mapInArrow
-    stage reading the four edge-list columns zero-copy from their Arrow
-    values/offsets buffers (round 6: the pandas_udf expression form
-    materialized a per-row ndarray object for each of the four arrays on
-    every joined row before concatenating them back together)."""
+    rows whose point lies INSIDE the candidate's pruned edge subset, as one
+    mapInArrow stage. Each batch's four edge-list columns are flattened
+    from their Arrow values/offsets buffers into one ragged edge table for
+    geom.ragged_parity, the same float32 even-odd ray cast the broadcast
+    probe (cells._resolve_pairs) refines with. Parity over the pruned
+    subset == parity over the full ring (the cells._pip_edge_subset
+    invariant the boundary table carries)."""
     import pyarrow as pa
 
     in_schema = jb.schema
@@ -455,16 +409,7 @@ def _pip_filter_arrow(jb: DataFrame, carry: list) -> DataFrame:
         off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
         vals = col.values.to_numpy(zero_copy_only=False)
         counts = np.diff(off)
-        total = int(counts.sum())
-        if total == 0:
-            return np.empty(0, F32), counts
-        within = np.arange(total, dtype=np.int64) - np.repeat(
-            np.cumsum(counts) - counts, counts
-        )
-        return (
-            vals[np.repeat(off[:-1], counts) + within].astype(F32, copy=False),
-            counts,
-        )
+        return vals[_ragged_ramp(off[:-1], counts)].astype(F32, copy=False), counts
 
     def _run(batches):
         for b in batches:
@@ -478,20 +423,7 @@ def _pip_filter_arrow(jb: DataFrame, carry: list) -> DataFrame:
             a_lng, _ = _flat(b.column(ci["ea_lng"]))
             b_lat, _ = _flat(b.column(ci["eb_lat"]))
             b_lng, _ = _flat(b.column(ci["eb_lng"]))
-            row = np.repeat(np.arange(n, dtype=np.int64), counts)
-            PL, PG = pl[row], pg[row]
-            straddle = (a_lng > PG) != (b_lng > PG)
-            with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-                t = ((b_lat - a_lat) * (PG - a_lng)) / (b_lng - a_lng) + a_lat
-            cross = (straddle & (PL < t)).astype(np.int64)
-            out = np.zeros(n, bool)
-            nz = counts > 0
-            if nz.any():
-                seg = np.concatenate([[0], np.cumsum(counts)[:-1]]).astype(
-                    np.int64
-                )
-                parity = np.add.reduceat(cross, seg[nz]) & 1
-                out[nz] = parity.astype(bool)
+            out = ragged_parity(pl, pg, a_lat, a_lng, b_lat, b_lng, counts)
             if not out.any():
                 continue
             keep = pa.array(out)

@@ -30,9 +30,10 @@ from pyspark.sql import types as T
 from .cells import (
     DEFAULT_MAX_RES,
     CompiledIndex,
+    assign_points,
     cell_id_col,
     compile_cover,
-    knn_fallback,
+    in_domain,
     resolve_points,
 )
 from .imagecodec import extract_gps_batch
@@ -214,7 +215,7 @@ def gps_header_col(bytes_col):
     """JVM-side header slice: only the 17-byte EXIF-style prefix crosses the
     Arrow boundary into Python, not the full image payload — ~100x less
     JVM<->Python traffic on multi-KB images. The full-blob path stays for
-    decode-heavy operators (tile_rollup)."""
+    the decode-heavy mapInArrow kernels (tile_rollup_fused and its kin)."""
     from .imagecodec import HEADER_LEN
 
     return F.substring(bytes_col, 1, HEADER_LEN)
@@ -256,19 +257,13 @@ def lookup_udf(idx_bcast):
     def _lookup(hdr: pd.Series) -> pd.DataFrame:
         idx: CompiledIndex = idx_bcast.value
         lat, lng, ok = extract_gps_batch(hdr.tolist())
-        ok = ok & (lat >= -90.0) & (lat <= 90.0) & (lng >= -180.0) & (lng <= 180.0)
+        ok &= in_domain(lat, lng)
         n = ok.shape[0]
         zid = np.full(n, -1, dtype=np.int32)
         via = np.zeros(n, dtype=bool)
         if ok.any():
             okw = np.flatnonzero(ok)
-            z = resolve_points(idx, lat[okw], lng[okw])
-            un = z == -1
-            if un.any():
-                z = z.copy()
-                z[un] = knn_fallback(idx, lat[okw[un]], lng[okw[un]])
-            zid[okw] = z
-            via[okw[un]] = True
+            zid[okw], via[okw] = assign_points(idx, lat[okw], lng[okw])
         return pd.DataFrame(
             {"lat": lat, "lng": lng, "gps_ok": ok, "zone_id": zid, "via_knn": via}
         )
@@ -279,19 +274,16 @@ def lookup_udf(idx_bcast):
 def assign_udf(idx_bcast):
     """pandas_udf: (lat, lng) -> (zone_id, via_knn). One pass: interior-cell
     O(1) hit, boundary-cell exact float32 ray cast, kNN for the remainder —
-    the whole reference `Search` (timezone.go:58-78) per Arrow batch."""
+    the whole reference `Search` (timezone.go:58-78) per Arrow batch
+    (cells.assign_points). A null coordinate gets (-1, False)."""
 
     @F.pandas_udf(ASSIGN_STRUCT)
     def _assign(lat: pd.Series, lng: pd.Series) -> pd.DataFrame:
         idx: CompiledIndex = idx_bcast.value
         la = lat.to_numpy(dtype=np.float32, na_value=np.nan)
         lg = lng.to_numpy(dtype=np.float32, na_value=np.nan)
-        zid = resolve_points(idx, la, lg)
-        un = zid == -1
-        if un.any():
-            zid = zid.copy()
-            zid[un] = knn_fallback(idx, la[un], lg[un])
-        return pd.DataFrame({"zone_id": zid.astype(np.int32), "via_knn": un})
+        zid, via = assign_points(idx, la, lg)
+        return pd.DataFrame({"zone_id": zid, "via_knn": via})
 
     return _assign
 
@@ -308,19 +300,6 @@ def resolve_only_udf(idx_bcast):
         return pd.Series(resolve_points(idx, la, lg))
 
     return _resolve
-
-
-def knn_only_udf(idx_bcast):
-    """pandas_udf: (lat, lng) -> nearest zone_id (clamp distance to MBR)."""
-
-    @F.pandas_udf(T.IntegerType())
-    def _knn(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        idx: CompiledIndex = idx_bcast.value
-        la = lat.to_numpy(dtype=np.float32, na_value=np.nan)
-        lg = lng.to_numpy(dtype=np.float32, na_value=np.nan)
-        return pd.Series(knn_fallback(idx, la, lg))
-
-    return _knn
 
 
 # ---------------------------------------------------------------------------
@@ -384,20 +363,8 @@ def quarantined_rows(images: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# raster <-> vector tiling (applyInPandas over tile groups)
+# raster <-> vector tiling (mapInArrow image kernels)
 # ---------------------------------------------------------------------------
-
-TILE_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("cell_id", T.LongType(), False),
-        T.StructField("n_images", T.LongType(), False),
-        T.StructField("n_pixels", T.LongType(), False),
-        T.StructField("mean_luma", T.DoubleType(), False),
-        T.StructField("mean_lat", T.DoubleType(), False),
-        T.StructField("mean_lng", T.DoubleType(), False),
-    ]
-)
-
 
 _TILE_PARTIAL_SCHEMA = T.StructType(
     [
@@ -435,49 +402,6 @@ def _tile_partial_arrays(cells, lat, lng, stats):
     }
 
 
-def _tile_final(partials: DataFrame) -> DataFrame:
-    return partials.groupBy("cell_id").agg(
-        F.sum("n_images").alias("n_images"),
-        F.sum("n_pixels").alias("n_pixels"),
-        (F.sum("luma_sum") / F.sum("n_pixels")).alias("mean_luma"),
-        (F.sum("lat_sum") / F.sum("n_images")).alias("mean_lat"),
-        (F.sum("lng_sum") / F.sum("n_images")).alias("mean_lng"),
-    )
-
-
-def tile_rollup(assigned_with_bytes: DataFrame) -> DataFrame:
-    """Raster<->vector tiling: per-tile stats over decoded pixel data.
-
-    Two-phase by design: images are decoded WHERE THEY ALREADY ARE
-    (mapInPandas, no shuffle of multi-KB payloads) into per-partition
-    per-cell partial sums; only those tiny partials shuffle into the final
-    per-cell aggregate. This also neutralizes tile skew — a hot urban cell
-    with 30% of all images decodes across every input partition instead of
-    serializing into one straggler group (the naive
-    groupBy(cell).applyInPandas(decode) was measured 15x slower at 1M rows).
-    Decode + stats are fully vectorized (imagecodec.batch_image_stats): no
-    per-image Python loop."""
-    from .imagecodec import batch_image_stats, pack_blobs
-
-    def _partial(batches):
-        for pdf in batches:
-            data, offsets = pack_blobs(pdf["bytes"].tolist())
-            st = batch_image_stats(data, offsets)
-            out = _tile_partial_arrays(
-                pdf["cell_id"].to_numpy(),
-                pdf["lat"].to_numpy(dtype=np.float64),
-                pdf["lng"].to_numpy(dtype=np.float64),
-                st,
-            )
-            if out is not None:
-                yield pd.DataFrame(out)
-
-    partials = assigned_with_bytes.select("cell_id", "bytes", "lat", "lng").mapInPandas(
-        _partial, _TILE_PARTIAL_SCHEMA
-    )
-    return _tile_final(partials)
-
-
 def _arrow_binary_view(col):
     """Zero-copy (data uint8, offsets int64) view of an Arrow binary array —
     the Arrow-batch analog of the reference's mmap reinterpret
@@ -508,10 +432,34 @@ def _arrow_binary_view(col):
     return data, offs, valid
 
 
+def _image_batch_stats(batch) -> dict:
+    """The first step of every image mapInArrow kernel: zero-copy binary
+    view of the batch's bytes column (column 0) -> vectorized header parse
+    + decode stats (imagecodec.batch_image_stats), with ``ok`` cleared for
+    undecodable, out-of-domain and null rows."""
+    from .imagecodec import batch_image_stats
+
+    data, offsets, valid = _arrow_binary_view(batch.column(0))
+    st = batch_image_stats(data, offsets)
+    st["ok"] &= in_domain(st["lat"], st["lng"])
+    if valid is not None:
+        st["ok"] &= valid
+    return st
+
+
 def tile_rollup_fused(images: DataFrame, max_res: int = DEFAULT_MAX_RES) -> DataFrame:
-    """tile_rollup with the whole per-row chain FUSED into one Python stage:
-    header parse -> validity -> cell encode -> vectorized decode -> per-cell
-    partial sums, in a single mapInArrow over the bytes column.
+    """Raster<->vector tiling: per-tile stats over decoded pixel data, with
+    the whole per-row chain FUSED into one Python stage: header parse ->
+    validity -> cell encode -> vectorized decode -> per-cell partial sums,
+    in a single mapInArrow over the bytes column.
+
+    Two-phase by design: images are decoded WHERE THEY ALREADY ARE (no
+    shuffle of multi-KB payloads) into per-batch per-cell partial sums;
+    only those tiny partials shuffle into the final per-cell aggregate.
+    This also neutralizes tile skew — a hot urban cell with 30% of all
+    images decodes across every input partition instead of serializing
+    into one straggler group (the naive groupBy(cell).applyInPandas(decode)
+    was measured 15x slower at 1M rows).
 
     Why mapInArrow (not mapInPandas): the payload column is consumed directly
     from the Arrow buffers — one zero-copy np.frombuffer per batch instead of
@@ -522,25 +470,23 @@ def tile_rollup_fused(images: DataFrame, max_res: int = DEFAULT_MAX_RES) -> Data
     import pyarrow as pa
 
     from .cells import cell_id as cell_id_np
-    from .imagecodec import batch_image_stats
 
     def _fused(batches):
         for batch in batches:
-            data, offsets, valid = _arrow_binary_view(batch.column(0))
-            st = batch_image_stats(data, offsets)
+            st = _image_batch_stats(batch)
             lat, lng = st["lat"], st["lng"]
-            st["ok"] &= (
-                (lat >= -90.0) & (lat <= 90.0) & (lng >= -180.0) & (lng <= 180.0)
-            )
-            if valid is not None:
-                st["ok"] &= valid
-            cells = cell_id_np(lat, lng, max_res)
-            out = _tile_partial_arrays(cells, lat, lng, st)
+            out = _tile_partial_arrays(cell_id_np(lat, lng, max_res), lat, lng, st)
             if out is not None:
                 yield pa.RecordBatch.from_pydict(out)
 
     partials = images.select("bytes").mapInArrow(_fused, _TILE_PARTIAL_SCHEMA)
-    return _tile_final(partials)
+    return partials.groupBy("cell_id").agg(
+        F.sum("n_images").alias("n_images"),
+        F.sum("n_pixels").alias("n_pixels"),
+        (F.sum("luma_sum") / F.sum("n_pixels")).alias("mean_luma"),
+        (F.sum("lat_sum") / F.sum("n_images")).alias("mean_lat"),
+        (F.sum("lng_sum") / F.sum("n_images")).alias("mean_lng"),
+    )
 
 
 _ONEPASS_SCHEMA = T.StructType(
@@ -575,56 +521,33 @@ def lookup_tile_onepass(
     import pyarrow as pa
 
     from .cells import cell_id as cell_id_np
-    from .imagecodec import batch_image_stats
 
     def _fused(batches):
         idx: CompiledIndex = idx_bcast.value
         for batch in batches:
-            data, offsets, valid = _arrow_binary_view(batch.column(0))
-            st = batch_image_stats(data, offsets)
+            st = _image_batch_stats(batch)
             lat, lng = st["lat"], st["lng"]
-            ok = st["ok"] & (
-                (lat >= -90.0) & (lat <= 90.0) & (lng >= -180.0) & (lng <= 180.0)
-            )
-            if valid is not None:
-                ok &= valid
-            st["ok"] = ok
-            okw = np.flatnonzero(ok)
+            okw = np.flatnonzero(st["ok"])
             if okw.shape[0] == 0:
                 continue
-            zid = resolve_points(idx, lat[okw], lng[okw])
-            un = zid == -1
-            if un.any():
-                zid[un] = knn_fallback(idx, lat[okw[un]], lng[okw[un]])
+            zid, via = assign_points(idx, lat[okw], lng[okw])
             uz, inv = np.unique(zid, return_inverse=True)
             m = len(uz)
-            zn = np.bincount(inv, minlength=m).astype(np.int64)
-            zk = np.bincount(inv, weights=un.astype(np.float64), minlength=m).astype(np.int64)
-            zeros = np.zeros(m)
-            out = {
-                "grp": np.zeros(m, np.int32),
-                "key": uz.astype(np.int64),
-                "n": zn,
-                "n_knn": zk,
-                "n_pixels": zeros.astype(np.int64),
-                "luma_sum": zeros,
-                "lat_sum": zeros,
-                "lng_sum": zeros,
-            }
             tiles = _tile_partial_arrays(cell_id_np(lat, lng, max_res), lat, lng, st)
-            if tiles is not None:
-                t_m = len(tiles["cell_id"])
-                out = {
-                    "grp": np.concatenate([out["grp"], np.ones(t_m, np.int32)]),
-                    "key": np.concatenate([out["key"], tiles["cell_id"]]),
-                    "n": np.concatenate([out["n"], tiles["n_images"]]),
-                    "n_knn": np.concatenate([out["n_knn"], np.zeros(t_m, np.int64)]),
-                    "n_pixels": np.concatenate([out["n_pixels"], tiles["n_pixels"]]),
-                    "luma_sum": np.concatenate([out["luma_sum"], tiles["luma_sum"]]),
-                    "lat_sum": np.concatenate([out["lat_sum"], tiles["lat_sum"]]),
-                    "lng_sum": np.concatenate([out["lng_sum"], tiles["lng_sum"]]),
-                }
-            yield pa.RecordBatch.from_pydict(out)
+            t_m = len(tiles["cell_id"])
+            cols = {  # (per-zone rows, per-tile rows)
+                "grp": (np.zeros(m, np.int32), np.ones(t_m, np.int32)),
+                "key": (uz.astype(np.int64), tiles["cell_id"]),
+                "n": (np.bincount(inv, minlength=m), tiles["n_images"]),
+                "n_knn": (np.bincount(inv[via], minlength=m), np.zeros(t_m, np.int64)),
+                "n_pixels": (np.zeros(m, np.int64), tiles["n_pixels"]),
+                "luma_sum": (np.zeros(m), tiles["luma_sum"]),
+                "lat_sum": (np.zeros(m), tiles["lat_sum"]),
+                "lng_sum": (np.zeros(m), tiles["lng_sum"]),
+            }
+            yield pa.RecordBatch.from_pydict(
+                {k: np.concatenate(v) for k, v in cols.items()}
+            )
 
     partials = images.select("bytes").mapInArrow(_fused, _ONEPASS_SCHEMA)
     return partials.groupBy("grp", "key").agg(
@@ -651,7 +574,7 @@ def zone_rollup_view(onepass: DataFrame, zone_dim: DataFrame) -> DataFrame:
 
 
 def tile_rollup_view(onepass: DataFrame) -> DataFrame:
-    """grp=1 rows of lookup_tile_onepass -> the tile_rollup output schema."""
+    """grp=1 rows of lookup_tile_onepass -> the tile_rollup_fused output schema."""
     t = onepass.where(F.col("grp") == 1)
     return t.select(
         F.col("key").alias("cell_id"),
@@ -683,35 +606,24 @@ def zonal_channel_rollup(
     content, fused into one scan + one Arrow crossing — the vector-zone
     analog of tile_rollup_fused (which keys by raster tile).
 
-    Each batch resolves its images to zones (compiled-cover probe + kNN
-    fallback, same kernels as lookup_udf) AND folds their decoded pixels
-    into EXACT int64 channel sums (batch_image_stats — no decode loop), so
-    the shuffle carries only ~|zones| partial rows per batch and every
-    aggregate is integer-exact: summation order can never perturb the
-    result, which is what lets a DuckDB oracle hash-match the full rollup.
-    Means come out as one int/int division per zone row at the end."""
+    Each batch resolves its images to zones (cells.assign_points, the
+    compiled-cover probe + kNN fallback lookup_udf runs) AND folds their
+    decoded pixels into EXACT int64 channel sums (batch_image_stats — no
+    decode loop), so the shuffle carries only ~|zones| partial rows per
+    batch and every aggregate is integer-exact: summation order can never
+    perturb the result, which is what lets a DuckDB oracle hash-match the
+    full rollup. Means come out as one int/int division per zone row at the
+    end."""
     import pyarrow as pa
-
-    from .imagecodec import batch_image_stats
 
     def _fused(batches):
         idx: CompiledIndex = idx_bcast.value
         for batch in batches:
-            data, offsets, valid = _arrow_binary_view(batch.column(0))
-            st = batch_image_stats(data, offsets)
-            lat, lng = st["lat"], st["lng"]
-            ok = st["ok"] & (
-                (lat >= -90.0) & (lat <= 90.0) & (lng >= -180.0) & (lng <= 180.0)
-            )
-            if valid is not None:
-                ok &= valid
-            okw = np.flatnonzero(ok)
+            st = _image_batch_stats(batch)
+            okw = np.flatnonzero(st["ok"])
             if okw.size == 0:
                 continue
-            zid = resolve_points(idx, lat[okw], lng[okw])
-            un = zid == -1
-            if un.any():
-                zid[un] = knn_fallback(idx, lat[okw[un]], lng[okw[un]])
+            zid, via = assign_points(idx, st["lat"][okw], st["lng"][okw])
             uz, inv = np.unique(zid, return_inverse=True)
             m = len(uz)
             ch = st["ch_sum"][okw].astype(np.float64)  # < 2^53, exact
@@ -719,9 +631,7 @@ def zonal_channel_rollup(
             out = {
                 "zone_id": uz.astype(np.int64),
                 "n": np.bincount(inv, minlength=m).astype(np.int64),
-                "n_knn": np.bincount(
-                    inv, weights=un.astype(np.float64), minlength=m
-                ).astype(np.int64),
+                "n_knn": np.bincount(inv[via], minlength=m),
                 "n_pixels": np.bincount(inv, weights=npx, minlength=m).astype(
                     np.int64
                 ),

@@ -32,12 +32,8 @@ import zipfile
 
 import numpy as np
 
-from .cells import Zone
+from .cells import Zone, in_domain
 from .geom import F32
-
-
-def _valid_mask(lat: np.ndarray, lng: np.ndarray) -> np.ndarray:
-    return (lat >= -90) & (lat <= 90) & (lng >= -180) & (lng <= 180)
 
 
 def _ring_to_arrays(ring) -> tuple:
@@ -52,7 +48,7 @@ def _ring_to_arrays(ring) -> tuple:
     # lat=90.0000001 (f32 -> 90.0) is KEPT there.
     lng = arr[:, 0].astype(F32)
     lat = arr[:, 1].astype(F32)
-    m = _valid_mask(lat, lng)
+    m = in_domain(lat, lng)
     return lat[m], lng[m]
 
 

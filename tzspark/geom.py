@@ -13,12 +13,14 @@ even-odd ray cast — /root/reference/geo/polygon.go:100-116 (`ContainsLatLng`,
 * the ring is implicitly closed: edge v[-1] -> v[0] is always tested
   (polygon.go:104).
 
-Two implementations are provided:
+Three implementations are provided:
 
 * ``contains_scalar`` — a line-faithful loop port, used only as the golden
   oracle in tests (this is the "pure-Python float32 oracle", SURVEY.md §5.1),
 * ``contains_batch`` / ``contains_batch_edges`` — vectorized numpy kernels
-  used inside pandas UDFs at runtime (SURVEY.md §2.2 F4).
+  used inside pandas UDFs at runtime (SURVEY.md §2.2 F4),
+* ``ragged_parity`` — the per-point edge-run form every lookup path refines
+  with (the compiled cover's boundary cells and the cover-table join).
 """
 
 from __future__ import annotations
@@ -100,15 +102,46 @@ def contains_batch_edges(
     # chunk over points so the (chunk, E) temporaries stay bounded
     step = max(1, _CHUNK_CELLS // max(e, 1))
     for s in range(0, n, step):
-        pl = p_lat[s : s + step, None]  # (c,1)
-        pg = p_lng[s : s + step, None]
-        straddle = (a_lng[None, :] > pg) != (b_lng[None, :] > pg)  # (c,E)
-        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-            dlat = b_lat - a_lat  # (E,) f32
-            dlng = b_lng - a_lng
-            t = (dlat[None, :] * (pg - a_lng[None, :])) / dlng[None, :] + a_lat[None, :]
-        cross = straddle & (pl < t)
+        cross = _ray_crosses(
+            p_lat[s : s + step, None], p_lng[s : s + step, None],
+            a_lat, a_lng, b_lat, b_lng,
+        )  # (c,E)
         out[s : s + step] = np.bitwise_xor.reduce(cross, axis=1)
+    return out
+
+
+def _ray_crosses(p_lat, p_lng, a_lat, a_lng, b_lat, b_lng) -> np.ndarray:
+    """Does the +lat ray from each point cross each edge (polygon.go:113-116)?
+
+    Elementwise over broadcast float32 arrays — (c,1) points against (E,)
+    edges in the dense kernel, one point per edge row in the ragged one —
+    so both kernels evaluate this one expression, op by op in float32."""
+    straddle = (a_lng > p_lng) != (b_lng > p_lng)
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        t = ((b_lat - a_lat) * (p_lng - a_lng)) / (b_lng - a_lng) + a_lat
+    return straddle & (p_lat < t)
+
+
+def ragged_parity(p_lat, p_lng, a_lat, a_lng, b_lat, b_lng, counts) -> np.ndarray:
+    """Even-odd ray cast of point i against its OWN run of edges.
+
+    The ragged (CSR) twin of contains_batch_edges: the edge arrays are the
+    runs of all points concatenated, point i owning the next ``counts[i]``
+    edges. An empty run contains nothing. One pass over all edge rows, then
+    one xor-reduce per non-empty run. Returns a bool array of len(counts).
+    """
+    counts = np.asarray(counts, dtype=np.int64)
+    out = np.zeros(counts.shape[0], dtype=bool)
+    nz = counts > 0
+    if not nz.any():
+        return out
+    row = np.repeat(np.arange(counts.shape[0], dtype=np.int64), counts)
+    cross = _ray_crosses(
+        np.asarray(p_lat, dtype=F32)[row], np.asarray(p_lng, dtype=F32)[row],
+        a_lat, a_lng, b_lat, b_lng,
+    )
+    starts = counts.cumsum() - counts
+    out[nz] = np.bitwise_xor.reduceat(cross, starts[nz])
     return out
 
 

@@ -401,18 +401,21 @@ Q11_SQL = Q10_SQL
 
 
 def q12_knn_engine(spark, sf_dir):
-    """J2 engine kernel: unmatched points -> numpy clamp-distance argmin."""
-    from .engine import knn_only_udf, resolve_only_udf
+    """J2 engine kernel: unmatched points -> numpy clamp-distance argmin.
+
+    One assign probe, filtered on via_knn: a single Python stage. The probe
+    is marked nondeterministic so Catalyst cannot copy it into the filter
+    (the q106 single-evaluation guard)."""
+    from .engine import assign_udf
 
     zones = box_zones(spark, sf_dir)
     idx = compile_cover(zones, base_res=3, max_res=7)
     bidx = spark.sparkContext.broadcast(idx)
-    p = pts_df(spark, sf_dir)
-    r = p.withColumn("zid", resolve_only_udf(bidx)(F.col("lat"), F.col("lng")))
-    un = r.where(F.col("zid") == -1)
-    return un.select(
-        "event_id", knn_only_udf(bidx)(F.col("lat"), F.col("lng")).alias("zone_id")
+    probe = assign_udf(bidx).asNondeterministic()
+    a = pts_df(spark, sf_dir).select(
+        "event_id", probe(F.col("lat"), F.col("lng")).alias("a")
     )
+    return a.where(F.col("a.via_knn")).select("event_id", "a.zone_id")
 
 
 Q12_SQL = f"""
