@@ -8,7 +8,9 @@ assert the plan properties the design promises:
 3. filter pushdown: a fmt/w predicate reaches the parquet scan
    (PushedFilters);
 4. tile rollup: decode runs in ONE mapInArrow below the only Exchange, so
-   only the tiny partial-sum rows shuffle.
+   only the tiny partial-sum rows shuffle;
+5. quarantine side output: the extract UDF crosses into Python once (one
+   ArrowEvalPython), not once more inside the validity Filter.
 """
 
 import os
@@ -24,6 +26,7 @@ from tzspark.engine import (
     assign_timezones,
     broadcast_cover,
     get_spark,
+    quarantined_rows,
     tile_rollup_fused,
     zone_dim_df,
 )
@@ -107,6 +110,15 @@ def main():
         failures.append(f"tile: {n_ex4} Exchanges (expected exactly 1)")
     elif tree4.find("MapInArrow") < tree4.find("Exchange ("):
         failures.append("tile: the decode stage runs above the Exchange")
+
+    # 4b. quarantine side output: the nondeterministic extract UDF keeps the
+    # validity Filter above its one ArrowEvalPython (a deterministic UDF is
+    # re-instantiated inside the Filter: two Python stages per row)
+    p4b = plan_of(quarantined_rows(images))
+    sections.append(("quarantine side output (one extract crossing)", p4b))
+    n_py4b = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow)", p4b))
+    if n_py4b != 1 or "ArrowEvalPython" not in p4b:
+        failures.append(f"quarantine: {n_py4b} Python stages (expected exactly 1 ArrowEvalPython)")
 
     # 5. fused one-pass lookup+tile: ONE PythonMapInArrow, one Exchange,
     # bytes-only ReadSchema (payload crosses once, partials shuffle)
@@ -862,6 +874,8 @@ def main():
             "- fmt equality filter pushed to the parquet scan\n"
             "- tile rollup: one MapInArrow decode below the only Exchange "
             "(shuffles post-decode partial sums only)\n"
+            "- quarantine side output: exactly one ArrowEvalPython (the "
+            "Filter does not re-run the extract UDF)\n"
             "- cover-as-table resolve: cover joins are ShuffledHashJoin, zero "
             "BroadcastHashJoin, one Python stage (the boundary PIP)\n"
             "- as-of join: zero join operators, exactly one Exchange "

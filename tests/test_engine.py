@@ -1,5 +1,7 @@
 """End-to-end Spark pipeline vs the committed golden oracle."""
 
+import sys
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -87,12 +89,45 @@ def test_quarantine_path(spark, zones):
     dim = zone_dim_df(spark, zones)
     ok = assign_timezones(df, idx_b, dim)
     q = quarantined_rows(df)
+    # the extract UDF runs once per row: the Filter must not re-instantiate it
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
     assert sorted(r["image_id"] for r in ok.select("image_id").collect()) == ["a"]
     assert sorted(r["image_id"] for r in q.select("image_id").collect()) == [
         "b",
         "c",
         "d",
     ]
+
+
+def test_workers_get_guarded_zip_refresh(spark):
+    """A worker that runs a tzspark kernel has imported the package, so its
+    per-task importlib.invalidate_caches() skips unchanged zip archives
+    (tzspark/_zipimport.py) — on CPython < 3.13, where the stdlib re-reads."""
+    import pyarrow as pa
+
+    def probe(batches):
+        import zipimport
+
+        from tzspark.cells import in_domain
+
+        for b in batches:
+            lat = b.column("lat").to_numpy()
+            method = zipimport.zipimporter.invalidate_caches
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "in_domain": pa.array(in_domain(lat, lat)),
+                    "method": pa.array([method.__module__] * len(lat)),
+                    "py": pa.array([sys.version_info >= (3, 13)] * len(lat)),
+                }
+            )
+
+    df = spark.range(0, 64, numPartitions=4).selectExpr("CAST(id AS FLOAT) AS lat")
+    out = df.mapInArrow(probe, "in_domain boolean, method string, py boolean")
+    rows = out.distinct().collect()
+    assert {r["in_domain"] for r in rows} == {True}
+    for r in rows:
+        assert r["method"] == ("zipimport" if r["py"] else "tzspark._zipimport"), rows
 
 
 def test_tile_rollup(assigned):

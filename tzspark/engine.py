@@ -17,6 +17,19 @@ Scale notes (the 100 TB design, tested at local[*]):
   the matched/unmatched split); `via_knn` is emitted so downstream can audit,
 * skewed tiles (dense urban cells) are handled at aggregation time by salted
   two-phase group-by + AQE (spark.sql.adaptive.skewJoin for join paths).
+
+Per-task worker cost: every Spark Python task first runs PySpark's
+`setup_spark_files`, which calls `importlib.invalidate_caches()`. On CPython
+3.10-3.12 that re-parses the whole central directory of every cached zip
+archive importer (16 in a worker, over pyspark.zip, the Spark jar and the
+py4j zip: 26,672 entries in pure Python), 100-200 ms per task against ~55 ms of
+lookup kernels for a 40k-image op. CPython 3.13 refreshes lazily. Importing
+tzspark (which every worker does when it unpickles a kernel or a
+CompiledIndex) installs a stat guard (`_zipimport.py`) so an unchanged
+archive is not re-read; a rewritten or removed one still is. It is not a
+custom `spark.python.daemon.module`, because executors that receive tzspark
+as `--py-files` could not import the daemon. The layer it moves is
+`engine.overhead_s` / `spark.executor_run_ms` in the benchmark's traced run.
 """
 
 from __future__ import annotations
@@ -353,8 +366,13 @@ def assign_timezones(
 
 def quarantined_rows(images: DataFrame) -> DataFrame:
     """The rows assign_timezones drops — routed to a side output instead of
-    erroring the job (reference errors per-call, timezone.go:62-64)."""
-    gps = images.withColumn("g", extract_gps_udf()(gps_header_col(F.col("bytes"))))
+    erroring the job (reference errors per-call, timezone.go:62-64).
+
+    The extract UDF is marked nondeterministic, as lookup_udf is: otherwise
+    Catalyst re-instantiates it inside the Filter below the projection and
+    every row crosses into Python twice (two ArrowEvalPython stages)."""
+    extract = extract_gps_udf().asNondeterministic()
+    gps = images.withColumn("g", extract(gps_header_col(F.col("bytes"))))
     return gps.where(
         ~F.col("g.gps_ok")
         | ~F.col("g.lat").between(-90.0, 90.0)
