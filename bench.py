@@ -191,9 +191,10 @@ def headline_queries(spark, images):
             F.sum(F.col("via_knn").cast("long")).alias("n_via_knn"),
         )
 
-    # the broadcast-FREE path at the same reference operating point: cover
-    # persisted as parquet tables (one-off, content-hash cached), lookup is
-    # cell-id equi-joins — the apples-to-apples row against
+    # the broadcast-FREE path at the same reference operating point: the
+    # cover persisted as a parquet table of index shards (one-off,
+    # content-hash cached), lookup is a points x shards cogroup running
+    # cells.assign_points — the apples-to-apples row against
     # lookup_world_zones for the zone-sets-past-the-broadcast-budget regime
     def _world_lookup_join():
         from pyspark.sql import functions as F
@@ -206,35 +207,26 @@ def headline_queries(spark, images):
         )
 
     # MULTI-TENANT at world scale: two world-size zone sets unioned into one
-    # tenant-keyed cover (covertable.union_tenants), resolved for a mixed
-    # image stream in a single shuffle-partitioned job — the regime where
-    # per-tenant broadcasts are impossible by construction (2x the world
-    # cover could never broadcast). Cover DataFrames are built once here;
-    # the thunk times the probe joins + rollup, matching how
-    # world_lookup_join treats its cover as a prebuilt table.
+    # tenant-keyed shard table (covertable.union_tenants), resolved for a
+    # mixed image stream in a single shuffle-partitioned job — the regime
+    # where per-tenant broadcasts are impossible by construction (2x the
+    # world cover could never broadcast). Both covers below are the one
+    # persisted layout (CoverTables.save/load), read back from parquet; the
+    # thunks time the lookup + rollup.
     from tzspark.covertable import CoverTables, assign_images_via_join
 
-    # bucketed on (tenant, ..., cell): the 2x-world cover (415 MB as plain
-    # parquet) never re-exchanges — doubly important here since multi-tenant
-    # is by definition the past-the-broadcast-budget regime
-    mt_prefix = "covbmt2_" + tl_world._content_key()[:16]
-    if not CoverTables.bucketed_exists(spark, mt_prefix):
+    mt_path = tl_world._cover_dir(os.path.join(CACHE, "covers")) + "_mt2"
+    if not os.path.exists(os.path.join(mt_path, "meta.json")):
         CoverTables.union_tenants(
             spark, {"a": tl_world.idx, "b": tl_world.idx}
-        ).save_bucketed(spark, mt_prefix, n_buckets=max(CPUS, 32))
-    cov_mt = CoverTables.load_bucketed(spark, mt_prefix)
+        ).save(mt_path)
+    cov_mt = CoverTables.load(spark, mt_path)
 
-    # BUCKETED cover layout: the same broadcast-free lookup with the cover
-    # bucketed+sorted on its probe join keys — every probe then shuffles
-    # ONLY the narrow points side; the ~208 MB cover never re-exchanges
-    # (write-once, probe-many). The apples-to-apples row against
-    # world_lookup_join isolates the cover-shuffle cost.
-    bprefix = "covb_" + tl_world._content_key()[:16]
-    if not CoverTables.bucketed_exists(spark, bprefix):
-        tl_world.cover_tables(
-            spark, os.path.join(CACHE, "covers")
-        ).save_bucketed(spark, bprefix, n_buckets=max(CPUS, 32))
-    cov_wb = CoverTables.load_bucketed(spark, bprefix)
+    # the world cover as the image-level lookup alone (no tzid attach):
+    # against world_lookup_join it isolates the dim join + tzid rollup. The
+    # row keeps its name from the retired bucketed cover layout, so earlier
+    # BENCH artifacts stay comparable by name.
+    cov_wb = tl_world.cover_tables(spark, os.path.join(CACHE, "covers"))
 
     def _world_lookup_join_bucketed():
         return assign_images_via_join(images, cov_wb).groupBy("zone_id").agg(
@@ -916,11 +908,12 @@ def single_world_run(cpus: int):
 
 def single_join_run(cpus: int):
     """Child mode for --scaling: the BROADCAST-FREE lookup (covertable
-    assign_via_join) against the reference-scale cover persisted as parquet
-    tables — the round-3 flagship path for zone sets past the broadcast
-    budget. Unlike the broadcast rows this one SHUFFLES (cell-id equi-joins),
-    so its single-box N-vs-4N ratio also carries the local shuffle service's
-    fixed costs; on a real cluster the exchange is network-parallel."""
+    assign_via_join) against the reference-scale cover persisted as a
+    parquet table of index shards — the round-3 flagship path for zone sets
+    past the broadcast budget. Unlike the broadcast rows this one SHUFFLES
+    (points x shards cogroup), so its single-box N-vs-4N ratio also carries
+    the local shuffle service's fixed costs; on a real cluster the exchange
+    is network-parallel."""
     from pyspark.sql import functions as F
 
     from tzspark.api import TimezoneLookup

@@ -10,7 +10,9 @@ assert the plan properties the design promises:
 4. tile rollup: decode runs in ONE mapInArrow below the only Exchange, so
    only the tiny partial-sum rows shuffle;
 5. quarantine side output: the extract UDF crosses into Python once (one
-   ArrowEvalPython), not once more inside the validity Filter.
+   ArrowEvalPython), not once more inside the validity Filter;
+6. join path: one FlatMapCoGroupsInArrow per lookup, the cover never
+   broadcast (join_path_checks; tier-1 runs it in tests/test_plans.py).
 """
 
 import os
@@ -138,127 +140,13 @@ def main():
     if m5 and m5.group(1) != "bytes:binary":
         failures.append(f"onepass: scan reads more than bytes: {m5.group(1)}")
 
-    # 6. broadcast-free cover-as-table resolve: cover joins must be shuffle
-    # joins (the whole point — nothing driver-sized), exactly one Python
-    # stage (the boundary PIP), zero BroadcastHashJoin anywhere
-    from tzspark.cells import compile_cover
-    from tzspark.covertable import CoverTables, resolve_via_join
-    from tzspark.queries_geo import box_zones, pts_df
+    # 6-6c. the broadcast-free lookup (join path): join_path_checks below
+    from tzspark.queries_geo import pts_df
 
     sf_small = "/root/testdata/sf0.001"
-    cov = CoverTables.from_index(
-        spark, compile_cover(box_zones(spark, sf_small), base_res=3, max_res=7)
-    )
-    p6 = plan_of(
-        resolve_via_join(pts_df(spark, sf_small), "event_id", cov).select(
-            "event_id", "zone_id"
-        )
-    )
-    sections.append(("broadcast-free cover-as-table resolve (join path)", p6))
-    n_shj = len(re.findall(r"\(\d+\) ShuffledHashJoin", p6))
-    n_bhj = len(re.findall(r"\(\d+\) BroadcastHashJoin", p6))
-    n_py6 = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow)", p6))
-    if n_shj < 2:
-        failures.append(f"cover-join: {n_shj} ShuffledHashJoins (expected >= 2)")
-    if n_bhj != 0:
-        failures.append(f"cover-join: {n_bhj} BroadcastHashJoins (expected 0)")
-    if n_py6 != 1:
-        failures.append(f"cover-join: {n_py6} Python stages (expected exactly 1)")
-
-    # 6b. full join-path assignment: the narrow points projection and the
-    # per-key zone map are cached, so the upstream plan (scan + any extract
-    # UDF) is not re-evaluated per consumer branch — the static plan holds
-    # at most 3 Python stages (cached-lineage copy, boundary PIP, output
-    # side) where the round-3 initial form had 6
-    from tzspark.covertable import assign_via_join
-
-    p6b = plan_of(
-        assign_via_join(pts_df(spark, sf_small), "event_id", cov)
-        .groupBy("zone_id")
-        .count()
-    )
-    sections.append(("full join-path assignment (cached narrow frames)", p6b))
-    n_py6b = len(re.findall(r"ArrowEvalPython", p6b))
-    if n_py6b > 3:
-        failures.append(
-            f"assign-join: {n_py6b} Python stages (expected <= 3 with caching)"
-        )
-    if "InMemoryTableScan" not in p6b:
-        failures.append("assign-join: narrow frames are not cached")
-
-    # 6c. MULTI-TENANT join-path assignment: N zone sets unioned into one
-    # tenant-keyed cover must still resolve as ONE shuffle-partitioned job —
-    # zero BroadcastHashJoin (no per-tenant broadcasts), every cover probe a
-    # shuffle join keyed on (tenant, cell), same bounded Python-stage count
-    # as the single-tenant path
-    idx_t = compile_cover(box_zones(spark, sf_small), base_res=3, max_res=7)
-    cov_mt = CoverTables.union_tenants(spark, {"a": idx_t, "b": idx_t})
-    pts_t = pts_df(spark, sf_small).withColumn(
-        "tenant", F.when(F.col("event_id") % 2 == 0, "a").otherwise("b")
-    )
-    p6c = plan_of(
-        assign_via_join(pts_t, "event_id", cov_mt).groupBy("tenant", "zone_id").count()
-    )
-    sections.append(("multi-tenant assignment (tenant-keyed cover union)", p6c))
-    # every cover probe (interior, boundary, knn) must be a ShuffledHashJoin
-    # whose keys LEAD with tenant; the only broadcast allowed is the final
-    # per-key map join back onto the wide points row (keyed on _k — Catalyst
-    # size-based at tiny SF; at scale the points side is the big side)
-    probe_shj = re.findall(
-        r"\(\d+\) ShuffledHashJoin\nLeft keys \[\d+\]: \[tenant", p6c
-    )
-    if len(probe_shj) < 3:
-        failures.append(
-            f"multi-tenant: {len(probe_shj)} tenant-keyed shuffle probes "
-            "(expected 3: interior, boundary, knn)"
-        )
-    bad_bhj = re.findall(
-        r"\(\d+\) BroadcastHashJoin\nLeft keys \[\d+\]: \[(?:tenant|res|cell|knn)",
-        p6c,
-    )
-    if bad_bhj:
-        failures.append(
-            f"multi-tenant: {len(bad_bhj)} cover probes are broadcasts "
-            "(expected 0 — no per-tenant broadcasts)"
-        )
-    if len(re.findall(r"ArrowEvalPython", p6c)) > 3:
-        failures.append("multi-tenant: Python stages exceed the cached bound")
-
-    # 6d. BUCKETED cover probe: the cover persisted via save_bucketed (each
-    # table bucketed on exactly its probe join keys) must scan bucket-aware
-    # everywhere — zero cover-side Exchange, so a resolve shuffles only the
-    # narrow points side. This is the write-once probe-many layout that
-    # removes the dominant shuffle volume (~208 MB of boundary edges at
-    # reference scale) from every later lookup job; Iceberg analog:
-    # bucket(n, keys) partition transform.
-    prefix = "plans_covb"
-    CoverTables.from_index(spark, idx_t).save_bucketed(spark, prefix, n_buckets=8)
-    try:
-        cov_b = CoverTables.load_bucketed(spark, prefix)
-        r_b = assign_via_join(pts_df(spark, sf_small), "event_id", cov_b).select(
-            "event_id", "zone_id", "via_knn"
-        )
-        p6d = plan_of(r_b)
-        sections.append(("bucketed cover probe (zero cover-side shuffle)", p6d))
-        if p6d.count("Bucketed: true") < 3:
-            failures.append(
-                f"bucketed-cover: only {p6d.count('Bucketed: true')} bucket-aware "
-                "scans (expected >= 3: interior, boundary, knn)"
-            )
-        if "Bucketed: false" in p6d:
-            failures.append(
-                "bucketed-cover: a cover scan fell back to a non-bucketed read"
-            )
-        n_ex6b = len(re.findall(r"\(\d+\) Exchange\b", p6b))
-        n_ex6d = len(re.findall(r"\(\d+\) Exchange\b", p6d))
-        if n_ex6d >= n_ex6b:
-            failures.append(
-                f"bucketed-cover: {n_ex6d} Exchanges, not fewer than the "
-                f"in-memory cover path's {n_ex6b} — bucketing removed no shuffle"
-            )
-    finally:
-        for s in ("interior", "boundary", "knn"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{s}")
+    s6, f6 = join_path_checks(spark, images, sf_small)
+    sections += s6
+    failures += f6
 
     # 6e. distance joins (radius + proximity self-join): grid-blocked cell
     # equi-joins — the plan must contain NO CartesianProduct and NO
@@ -876,8 +764,9 @@ def main():
             "(shuffles post-decode partial sums only)\n"
             "- quarantine side output: exactly one ArrowEvalPython (the "
             "Filter does not re-run the extract UDF)\n"
-            "- cover-as-table resolve: cover joins are ShuffledHashJoin, zero "
-            "BroadcastHashJoin, one Python stage (the boundary PIP)\n"
+            "- join path: one FlatMapCoGroupsInArrow (points x index shards) "
+            "per lookup, the cover never broadcast, multi-tenant cogroup keys "
+            "lead with tenant, the image path's GPS extract evaluated once\n"
             "- as-of join: zero join operators, exactly one Exchange "
             "(user_id) feeding the last-value window\n"
             "- sessionization: both gap windows share one user_id Exchange "
@@ -953,6 +842,81 @@ def main():
         print(" -", f_)
     spark.stop()
     sys.exit(1 if failures else 0)
+
+
+
+def join_path_checks(spark, images, sf_small):
+    """Sections 6-6c, the broadcast-free lookup (covertable's shard
+    cogroup), as ([(title, plan)], [failure]). tests/test_plans.py runs the
+    same checks in tier-1.
+
+    Every join-path lookup is ONE FlatMapCoGroupsInArrow (points x index
+    shards, cells.assign_points per group), the cover is never the input of
+    a BroadcastExchange (only the tiny salt table, the zone dim or a small
+    points side are), a multi-tenant cogroup groups on keys that lead with
+    tenant, and on the image path the GPS-extract UDF is evaluated once
+    (one ArrowEvalPython, under the cached narrow points)."""
+    from tzspark.cells import compile_cover
+    from tzspark.covertable import (
+        CoverTables,
+        assign_images_via_join,
+        assign_via_join,
+    )
+    from tzspark.queries_geo import box_zones, pts_df
+
+    idx = compile_cover(box_zones(spark, sf_small), base_res=3, max_res=7)
+    cov = CoverTables.from_index(spark, idx)
+    sections, failures = [], []
+
+    def lookup_shape(tag, plan):
+        n_cg = len(re.findall(r"\(\d+\) FlatMapCoGroupsInArrow\b", plan))
+        if n_cg != 1:
+            failures.append(f"{tag}: {n_cg} FlatMapCoGroupsInArrow (expected exactly 1)")
+        bcast_inputs = re.findall(r"\(\d+\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
+        if any("blob#" in i for i in bcast_inputs):
+            failures.append(f"{tag}: the cover shards are broadcast")
+
+    # 6. single-tenant assignment over a points table
+    p6 = plan_of(
+        assign_via_join(pts_df(spark, sf_small), "event_id", cov)
+        .groupBy("zone_id").count()
+    )
+    sections.append(("broadcast-free assignment (shard cogroup, join path)", p6))
+    lookup_shape("assign-join", p6)
+    if re.search(r"ArrowEvalPython|MapInArrow|MapInPandas", p6):
+        failures.append("assign-join: a Python stage besides the cogroup")
+
+    # 6b. the image path (TimezoneLookup.assign_join's core): the extract UDF
+    # runs once, inside the cached narrow points that feed both the salt
+    # count and the lookup; the raw image side joins back with no Python
+    p6b = plan_of(assign_images_via_join(images, cov).groupBy("zone_id").count())
+    sections.append(("broadcast-free image assignment (one GPS extract)", p6b))
+    lookup_shape("image-join", p6b)
+    n_py6b = len(re.findall(r"\(\d+\) ArrowEvalPython\b", p6b))
+    if n_py6b != 1:
+        failures.append(f"image-join: {n_py6b} ArrowEvalPython (expected exactly 1: the GPS extract)")
+    if "InMemoryRelation" not in p6b:
+        failures.append("image-join: the narrow points are not cached")
+
+    # 6c. MULTI-TENANT: N zone sets unioned into one tenant-keyed shard table
+    # resolve in ONE cogroup whose grouping keys lead with tenant on both
+    # sides (no per-tenant broadcasts, no per-tenant jobs)
+    cov_mt = CoverTables.union_tenants(spark, {"a": idx, "b": idx})
+    pts_t = pts_df(spark, sf_small).withColumn(
+        "tenant", F.when(F.col("event_id") % 2 == 0, "a").otherwise("b")
+    )
+    p6c = plan_of(
+        assign_via_join(pts_t, "event_id", cov_mt).groupBy("tenant", "zone_id").count()
+    )
+    sections.append(("multi-tenant assignment (tenant-keyed shard table)", p6c))
+    lookup_shape("multi-tenant", p6c)
+    if not re.search(
+        r"\(\d+\) FlatMapCoGroupsInArrow\n(?:.*\n){2}Arguments: \[tenant#\d+, "
+        r"shard_id#\d+L, _salt#\d+\], \[tenant#\d+, shard_id#\d+L, _salt#\d+\]",
+        p6c,
+    ):
+        failures.append("multi-tenant: cogroup keys do not lead with tenant on both sides")
+    return sections, failures
 
 
 if __name__ == "__main__":

@@ -1,21 +1,41 @@
-"""Cover-as-table resolve (covertable.py): the broadcast-free join path must
+"""Cover-as-table lookup (covertable.py): the broadcast-free join path must
 equal the broadcast kernels exactly — resolve, kNN, and the full facade
-assignment — including on the reference-scale world zone set."""
+assignment — including on the reference-scale world zone set. Its kernel is
+cells.assign_points on spatial shards of the index, so a shard must answer
+exactly like the full index for every point inside it."""
+
+import json
+import os
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from tzspark.cells import compile_cover, knn_fallback, resolve_points
+from tzspark.cells import (
+    Zone,
+    assign_points,
+    cell_id,
+    compile_cover,
+    knn_fallback,
+    resolve_points,
+)
 from tzspark.covertable import (
+    SHARD_LAYOUT_VERSION,
     CoverTables,
     assign_via_join,
     knn_via_join,
+    open_shard,
     resolve_via_join,
+    shard_blobs,
+    shard_res,
 )
 from tzspark.engine import assign_udf, resolve_only_udf
 from tzspark.geom import F32
 from tzspark.queries_geo import box_zones, pts_df, q12_knn_engine
+
+from tests.test_cover_property import _ring
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,6 +49,160 @@ def box_cover(spark):
 
 def _pd(df, cols):
     return df.select(*cols).toPandas().set_index(cols[0]).sort_index()
+
+
+def _sharded_assign(idx, lat, lng):
+    """cells.assign_points run shard by shard, each point in the shard the
+    join path keys it to (cell_id at shard_res; NaN points go to shard 0,
+    where they must still get no answer)."""
+    blobs = shard_blobs(idx)
+    with np.errstate(invalid="ignore"):
+        sh = cell_id(lat, lng, shard_res(idx))
+    sh[np.isnan(lat) | np.isnan(lng)] = 0
+    zid = np.full(len(lat), -2, np.int32)
+    via = np.zeros(len(lat), bool)
+    for s in np.unique(sh):
+        m = sh == s
+        zid[m], via[m] = assign_points(open_shard(blobs[int(s)]), lat[m], lng[m])
+    return zid, via
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    seeds=st.lists(
+        st.tuples(
+            st.floats(-80, 80), st.floats(-170, 170), st.floats(0.5, 40.0),
+            st.integers(3, 40), st.floats(0, 6.28),
+        ),
+        min_size=1,
+        max_size=6,
+    ),
+    base_res=st.sampled_from([3, 4]),
+    probe_seed=st.integers(0, 2**31 - 1),
+)
+def test_shard_assign_equals_full_index(seeds, base_res, probe_seed):
+    """Shard-wise assign_points == full-index assign_points (zone_id and
+    via_knn) on random points, ring vertices, edge midpoints, points exactly
+    on shard boundaries and on the clamped grid edges, NaN and
+    out-of-domain input."""
+    zones = [
+        Zone(k, f"Z{k}", *_ring(cx, cy, r, n, ph))
+        for k, (cy, cx, r, n, ph) in enumerate(seeds)
+    ]
+    idx = compile_cover(zones, base_res=base_res, max_res=7)
+    rng = np.random.default_rng(probe_seed)
+    ring_lat = np.concatenate([z.ring_lat for z in zones])
+    ring_lng = np.concatenate([z.ring_lng for z in zones])
+    mid_lat = np.concatenate(
+        [(z.ring_lat + np.roll(z.ring_lat, -1)) / F32(2) for z in zones]
+    )
+    mid_lng = np.concatenate(
+        [(z.ring_lng + np.roll(z.ring_lng, -1)) / F32(2) for z in zones]
+    )
+    n = 1 << shard_res(idx)
+    b_lat = -90.0 + 180.0 * np.arange(n + 1) / n  # shard rows' edges
+    b_lng = -180.0 + 360.0 * np.arange(n + 1) / n
+    g_lat, g_lng = np.meshgrid(b_lat, b_lng)
+    u_lat, u_lng = rng.uniform(-90, 90, 300), rng.uniform(-180, 180, 300)
+    lat = np.concatenate([
+        u_lat, ring_lat, mid_lat, g_lat.ravel(), rng.choice(b_lat, 200), u_lat[:200],
+        np.full(50, 90.0), np.full(50, -90.0), u_lat[:50], u_lat[:50],
+        [np.nan, 5.0, np.nan, 95.0, -95.0, 10.0, 10.0, 1e9],
+    ]).astype(F32)
+    lng = np.concatenate([
+        u_lng, ring_lng, mid_lng, g_lng.ravel(), u_lng[:200], rng.choice(b_lng, 200),
+        u_lng[:50], u_lng[:50], np.full(50, 180.0), np.full(50, -180.0),
+        [10.0, np.nan, np.nan, 10.0, 10.0, 200.0, -200.0, 0.0],
+    ]).astype(F32)
+    want = assign_points(idx, lat, lng)
+    got = _sharded_assign(idx, lat, lng)
+    np.testing.assert_array_equal(got[0], want[0])
+    np.testing.assert_array_equal(got[1], want[1])
+
+
+def test_shard_assign_equals_full_index_bench_world():
+    """The benchmark's 480-zone world cut (zones whose bbox centre lies in
+    lat [0, 24] x lng [0, 36]): 100k synth_coords points, identical answers
+    shard-wise and on the full index."""
+    from tzspark.datasets import synth_coords
+    from tzspark.zones import make_world_zones
+
+    zones = [z for z in make_world_zones()
+             if 0 <= (z.ring_lat.min() + z.ring_lat.max()) / 2 <= 24
+             and 0 <= (z.ring_lng.min() + z.ring_lng.max()) / 2 <= 36]
+    assert len(zones) == 480
+    idx = compile_cover(zones)
+    lat, lng = synth_coords(np.arange(100_000))
+    want = assign_points(idx, lat, lng)
+    got = _sharded_assign(idx, lat, lng)
+    np.testing.assert_array_equal(got[0], want[0])
+    np.testing.assert_array_equal(got[1], want[1])
+    assert want[1].any() and (~want[1]).any()  # both regimes exercised
+
+
+def test_join_nan_null_and_out_of_domain(spark):
+    """NaN and null coordinates get (-1, False) on the join path, as from
+    cells.assign_points on the broadcast path; out-of-domain points get
+    their kNN zone. Checked through assign_via_join and both thin
+    wrappers."""
+    from tzspark.zones import make_zones
+
+    idx = compile_cover(make_zones())
+    cov = CoverTables.from_index(spark, idx)
+    rows = [(1, float("nan"), 10.0), (2, None, 10.0), (3, 10.0, float("nan")),
+            (4, 95.0, 10.0), (5, 10.0, 200.0), (6, 10.0, 10.0), (7, 45.0, 45.0)]
+    p = spark.createDataFrame(rows, "k long, lat double, lng double")
+    la = np.array([np.nan if r[1] is None else r[1] for r in rows], F32)
+    lg = np.array([r[2] for r in rows], F32)
+    zid, via = assign_points(idx, la, lg)
+    want = {r[0]: (int(z), bool(v)) for r, z, v in zip(rows, zid, via)}
+    assert want[1] == want[2] == want[3] == (-1, False)
+    assert want[4] == (33, True) and want[5] == (32, True)
+
+    got = {r["k"]: (r["zone_id"], r["via_knn"])
+           for r in assign_via_join(p, "k", cov).collect()}
+    assert got == want
+    got_r = {r["k"]: r["zone_id"] for r in resolve_via_join(p, "k", cov).collect()}
+    assert got_r == {k: (-1 if v else z) for k, (z, v) in want.items()}
+    got_k = {r["k"]: r["zone_id"] for r in knn_via_join(p, "k", cov).collect()}
+    assert got_k == {k: z for k, (z, v) in want.items() if v}
+
+
+def test_stale_persisted_cover_is_regenerated(spark, tmp_path):
+    """cover_tables(cache_dir=...) regenerates, never reads, a cover dir at
+    its key that carries another shard layout version or the old
+    interior/boundary/knn table layout; the rewritten meta.json carries
+    this layout version and the answers are right."""
+    from tzspark.api import TimezoneLookup
+    from tzspark.zones import make_zones
+
+    tl = TimezoneLookup(make_zones(n_coast=200))
+    other = compile_cover(make_zones(n_coast=200)[:5])  # wrong answers if read
+    p = pts_df(spark, SF)
+    pp = p.toPandas()
+    zid, via = assign_points(tl.idx, pp["lat"].to_numpy(F32), pp["lng"].to_numpy(F32))
+    want = dict(zip(pp["event_id"], zip(zid.tolist(), via.tolist())))
+    for plant in ("other_version", "old_tables"):
+        cache = str(tmp_path / plant)
+        path = tl._cover_dir(cache)
+        if plant == "other_version":
+            CoverTables.from_index(spark, other).save(path)
+            with open(f"{path}/meta.json") as f:
+                meta = json.load(f)
+            meta["layout"] = SHARD_LAYOUT_VERSION + 1
+        else:  # the interior/boundary/knn layout and its meta
+            for t in ("interior", "boundary", "knn"):
+                spark.range(3).write.parquet(f"{path}/{t}")
+            meta = {"base_res": 4, "max_res": 10, "knn_res": 8, "keys": []}
+        with open(f"{path}/meta.json", "w") as f:
+            json.dump(meta, f)
+        cov = tl.cover_tables(spark, cache_dir=cache)
+        with open(f"{path}/meta.json") as f:
+            assert json.load(f)["layout"] == SHARD_LAYOUT_VERSION
+        assert sorted(os.listdir(path)) == ["meta.json", "shards"]
+        got = {r["event_id"]: (r["zone_id"], r["via_knn"])
+               for r in assign_via_join(p, "event_id", cov).collect()}
+        assert got == want, plant
 
 
 def test_resolve_join_equals_broadcast(spark, box_cover):
@@ -169,7 +343,7 @@ def test_union_tenants_isolation(spark):
     )
     got = {
         r["k"]: (r["zone_id"], r["via_knn"])
-        for r in assign_via_join(pts, "k", cov, persist=False).collect()
+        for r in assign_via_join(pts, "k", cov).collect()
     }
     # (5,5): inside A's box; offshore for B -> kNN still lands on B's only zone
     assert got[1] == (0, False)

@@ -113,22 +113,6 @@ def test_cc_nodes_superset_is_inert(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99, 100: 100}
 
 
-def test_interior_res_levels_metadata(spark):
-    from tzspark.cells import compile_cover
-    from tzspark.covertable import CoverTables
-    from tzspark.zones import make_zones
-
-    cov = CoverTables.from_index(spark, compile_cover(make_zones(n_coast=200)))
-    levels = cov.interior_res_levels()
-    want = sorted(
-        r["res"] for r in cov.interior.select("res").distinct().collect()
-    )
-    assert levels == want
-    assert all(cov.base_res <= r <= cov.max_res for r in levels)
-    # memoized: second call returns the same object without a job
-    assert cov.interior_res_levels() is levels
-
-
 def test_cc_contraction_matches_bruteforce_and_loop(spark):
     """Dense-blob fixture where the round-1 HLL decision provably fires
     (distinct labels << nodes): the contracted path must produce the exact

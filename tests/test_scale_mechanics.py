@@ -112,62 +112,24 @@ def test_spark_distributed_compile_identical(spark):
     assert pickle.dumps(a) == pickle.dumps(b)
 
 
-def test_bucketed_cover_boundary_join_no_shuffle(spark, assigned):
-    """The zone-table-update scenario at 10^12 rows: the points table is
-    already bucketed on cell_id (assign_bucketed output); a NEW compiled
-    cover's boundary table, bucketed the same way through the TableIO seam,
-    joins it with ZERO Exchange — re-resolving after a zone change never
-    reshuffles the big table."""
-    from tzspark.cells import compile_cover
-    from tzspark.covertable import CoverTables
-    from tzspark.tableio import TableIO
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    io = TableIO(spark)
-    try:
-        pts = io.write_bucketed(
-            assigned.select("image_id", "lat", "lng", "cell_id"),
-            "t_pts_bucketed", 8, "cell_id",
-        )
-        cov = CoverTables.from_index(
-            spark, compile_cover(make_zones(n_coast=500))
-        )
-        bnd = io.write_bucketed(cov.boundary, "t_cover_boundary", 8, "cell_id")
-        j = pts.join(bnd, "cell_id")
-        plan = _plan(j)
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange" not in plan.replace("BroadcastExchange", ""), plan
-        assert j.count() > 0  # some points do land in boundary cells
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        for t in ("t_pts_bucketed", "t_cover_boundary"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_aqe_skew_split_fires_on_hot_cell_join(spark):
+def test_hot_shard_points_split_across_tasks(spark):
     """The dense-urban-tile regime: a point stream concentrated in ONE cell
-    makes that cell's shuffle partition dominate the cover-as-table probe
-    join. The plan must ADMIT AQE's skew-join split — after execution the
-    skewed partition is split into multiple tasks (`AQEShuffleRead skewed`
-    in the final adaptive plan) — and the split must not change answers.
-
-    Thresholds are scaled to test size (the defaults trigger at 256 MB
-    partitions); forceOptimizeSkewedJoin accepts the extra shuffle the
-    downstream rollup would otherwise veto, which on a real cluster is the
-    documented knob for skew-dominated stages.
-    """
+    puts almost every point in one shard of the join-path lookup. AQE cannot
+    split a cogroup group, so the lookup salts the hot shard itself: its
+    points must run in >= 2 tasks of the cogroup stage (read from
+    spark_partition_id on the cogroup output, which no exchange separates
+    from it), and the answers must equal the driver kernels."""
     import numpy as np
 
-    from tzspark.cells import cell_id, compile_cover, resolve_points
-    from tzspark.covertable import CoverTables, resolve_via_join
+    from tzspark.cells import assign_points, cell_id, compile_cover, resolve_points
+    from tzspark.covertable import CoverTables, _lookup, _narrow
     from tzspark.geom import F32
 
     zones = make_zones(n_coast=2000)
     idx = compile_cover(zones)
     cov = CoverTables.from_index(spark, idx)
     # ~350k points in a 0.02-degree blob inside one hot cell (urban tile),
-    # plus a thin uniform background — the blob's (res, cell) keys all
-    # collide, so its shuffle partition is ~100x the median
+    # plus a thin uniform background
     n_hot, n_bg = 350_000, 20_000
     pts = (
         spark.range(0, n_hot + n_bg, 1, 8)
@@ -189,37 +151,15 @@ def test_aqe_skew_split_fires_on_hot_cell_join(spark):
             .alias("lng"),
         )
     )
-    old = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.adaptive.forceOptimizeSkewedJoin",
-        )
-    }
+    res, cached = _lookup(_narrow(pts, "pid", cov, "lat", "lng"), cov)
     try:
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "262144"
+        got = (
+            res.select("_k", "zone_id", "via_knn", F.spark_partition_id().alias("task"))
+            .toPandas()
+            .sort_values("_k")
         )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "131072")
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize", "65536"
-        )
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-        r = resolve_via_join(pts, "pid", cov).groupBy("zone_id").count()
-        got = {row["zone_id"]: row["count"] for row in r.collect()}
-        plan = _plan(r)
     finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    assert "AQEShuffleRead skewed" in plan, plan[:2000]
-    # answers under the split must equal the broadcast kernel's
+        cached.unpersist()
     ids = np.arange(n_hot + n_bg, dtype=np.int64)
     la = np.where(
         ids < n_hot, 3.0 + ((ids * 2654435761) % 20000) / 1e6,
@@ -229,64 +169,17 @@ def test_aqe_skew_split_fires_on_hot_cell_join(spark):
         ids < n_hot, 3.0 + ((ids * 40503) % 20000) / 1e6,
         -6.0 + ((ids * 104729) % 48000) / 1000.0,
     ).astype(F32)
-    want_ids = resolve_points(idx, la, lg)
-    want = dict(zip(*np.unique(want_ids, return_counts=True)))
-    want = {int(k): int(v) for k, v in want.items()}
-    got = {(-1 if k is None else int(k)): int(v) for k, v in got.items()}
-    assert got == want
-
-
-def test_bucketed_cover_probe_skips_cover_shuffle(spark, tmp_path):
-    """save_bucketed lays the cover out bucketed on each table's probe join
-    keys, so a resolve shuffles ONLY the narrow points side: all three cover
-    scans must read bucket-aware (no Exchange above them), answers must
-    equal the plain-parquet cover path, and a fresh-catalog session must be
-    able to re-register the same files via the meta sidecar."""
-    from pyspark.sql import functions as F
-
-    from tzspark.cells import compile_cover
-    from tzspark.covertable import CoverTables, assign_via_join
-    from tzspark.queries_geo import pts_df
-
-    idx = compile_cover(make_zones(n_coast=500))
-    cov_plain = CoverTables.from_index(spark, idx)
-    prefix = "t_covb_test"
-    cov_plain.save_bucketed(spark, prefix, n_buckets=8)
-    try:
-        assert CoverTables.bucketed_exists(spark, prefix)
-        cov_b = CoverTables.load_bucketed(spark, prefix)
-        pts = pts_df(spark, "/root/testdata/sf0.001")
-        r_b = assign_via_join(pts, "event_id", cov_b).select(
-            "event_id", "zone_id", "via_knn"
-        )
-        got = {tuple(r) for r in r_b.collect()}
-        plan = _plan(r_b)
-        # the printed adaptive tree repeats scans across stages/branches —
-        # assert every cover scan is bucket-aware, none fell back
-        assert plan.count("Bucketed: true") >= 3, plan[:1500]
-        assert "Bucketed: false" not in plan
-        want = {
-            tuple(r)
-            for r in assign_via_join(pts, "event_id", cov_plain)
-            .select("event_id", "zone_id", "via_knn")
-            .collect()
-        }
-        assert got == want and len(got) > 0
-        # fresh-catalog path: drop the catalog entries (files stay), reload
-        for s in ("interior", "boundary", "knn"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{s}")
-        # external re-registration must not delete files on later DROP, and
-        # must read bucket-aware again
-        cov_b2 = CoverTables.load_bucketed(spark, prefix)
-        r2 = assign_via_join(pts, "event_id", cov_b2).select(
-            "event_id", "zone_id", "via_knn"
-        )
-        assert {tuple(r) for r in r2.collect()} == want
-        p2 = _plan(r2)
-        assert p2.count("Bucketed: true") >= 3 and "Bucketed: false" not in p2
-    finally:
-        for s in ("interior", "boundary", "knn"):
-            spark.sql(f"DROP TABLE IF EXISTS t_covb_test_{s}")
+    assert got["_k"].tolist() == ids.tolist()
+    # the hot shard's points ran in several cogroup tasks
+    shard = cell_id(la, lg, cov.shard_res)
+    hot = shard == shard[0]
+    assert hot.sum() >= n_hot
+    assert len(set(got["task"].to_numpy()[hot].tolist())) >= 2
+    # and the answers under the split equal the driver kernels
+    zid, via = assign_points(idx, la, lg)
+    np.testing.assert_array_equal(got["zone_id"].to_numpy(), zid)
+    np.testing.assert_array_equal(got["via_knn"].to_numpy(), via)
+    np.testing.assert_array_equal(np.where(via, -1, zid), resolve_points(idx, la, lg))
 
 
 def test_proximity_join_at_scale_planted_cluster(spark):

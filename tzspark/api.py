@@ -293,16 +293,28 @@ class TimezoneLookup:
             )
         return assign_timezones(images_df, memo[2], memo[3], max_res=self.max_res)
 
+    def _cover_dir(self, cache_dir: str) -> str:
+        """The persisted cover's directory: keyed by the zone content and
+        the shard-blob layout version, hashed together."""
+        from .covertable import SHARD_LAYOUT_VERSION
+
+        h = hashlib.blake2b(digest_size=16)
+        h.update(f"{self._content_key()}:shards-v{SHARD_LAYOUT_VERSION}".encode())
+        return os.path.join(cache_dir, f"covertbl_{h.hexdigest()}")
+
     def cover_tables(self, spark, cache_dir: str = None):
-        """The compiled cover as relational tables (covertable.CoverTables),
-        optionally persisted as parquet keyed by the zone-content hash — the
-        broadcast-free counterpart of the pickle cache in _compile.
+        """The compiled cover as a table of spatial shards
+        (covertable.CoverTables), optionally persisted as parquet under
+        ``cache_dir`` — the broadcast-free counterpart of the pickle cache
+        in _compile. A persisted cover of another layout (or a torn one
+        without meta.json) is regenerated, never read.
 
         Memoized per (Spark application, cache_dir, zone content): repeated
-        probes reuse one CoverTables instance — and with it the
-        interior_res_levels metadata read — instead of re-deriving driver-
-        side table objects per call (round 6; the DataFrames are lazy table
-        handles, no data is cached by this)."""
+        probes reuse one CoverTables instance instead of re-slicing the
+        index per call (the DataFrames are lazy table handles, no data is
+        cached by this)."""
+        import shutil
+
         from .covertable import CoverTables
 
         key = (spark.sparkContext.applicationId, cache_dir, self._content_key())
@@ -312,10 +324,13 @@ class TimezoneLookup:
         if key in memo:
             return memo[key]
         if cache_dir:
-            path = os.path.join(cache_dir, f"covertbl_{self._content_key()}")
-            if not os.path.exists(os.path.join(path, "meta.json")):
+            path = self._cover_dir(cache_dir)
+            try:
+                out = CoverTables.load(spark, path)
+            except (OSError, ValueError):
+                shutil.rmtree(path, ignore_errors=True)
                 CoverTables.from_index(spark, self.idx).save(path)
-            out = CoverTables.load(spark, path)
+                out = CoverTables.load(spark, path)
         else:
             out = CoverTables.from_index(spark, self.idx)
         memo[key] = out
@@ -323,8 +338,9 @@ class TimezoneLookup:
 
     def assign_join(self, spark, images_df, cache_dir: str = None):
         """assign() with ZERO broadcast of the compiled cover: GPS extract
-        (header-only Arrow crossing) -> quarantine -> cell-id equi-joins
-        against the cover tables (covertable.assign_via_join) -> tzid attach.
+        (header-only Arrow crossing) -> quarantine -> cells.assign_points
+        on spatial shards of the index, cogrouped with the points
+        (covertable.assign_images_via_join) -> tzid attach.
 
         Same output as assign() (pinned in tests/test_covertable.py); use it
         when the zone set is past the broadcast budget (the 142 MB world

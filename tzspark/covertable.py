@@ -1,167 +1,165 @@
-"""Cover-as-table resolve: the broadcast-free lookup path.
+"""Cover-as-table lookup: the broadcast-free path.
 
 The default engine broadcasts the whole CompiledIndex to every executor
 (engine.assign_timezones) — right up to the point where the zone set outgrows
 the broadcast budget (142 MB at the synthetic reference operating point;
-real timezone-boundary-builder coastlines are 20k-vertex rings,
-/root/reference/README.md:9, and a 10x richer or multi-tenant zone table
-breaks it). This module is the other physical strategy for the SAME logical
-operator (SURVEY.md §2.3 J1 names it explicitly:
-``points.join(cells_df, 'cell_id') + PIP``): the compiled cover is laid out
-as two RELATIONAL tables and the probe becomes cell-id equi-joins —
-shuffle-partitioned like any other big join, no driver-side structure at all.
+real timezone-boundary-builder coastlines are 20k-vertex rings, and a 10x
+richer or multi-tenant zone table breaks it). This module is the other
+physical strategy for the SAME logical operator (SURVEY.md §2.3 J1): the
+compiled cover becomes a table of spatial shards, and the probe is a
+shuffle, not a broadcast. The kernel is the broadcast path's own
+cells.assign_points; only the way the index reaches it differs.
 
-Tables (both derivable from a CompiledIndex, persistable as parquet keyed by
-the existing content hash):
+A shard is one grid cell at resolution ``shard_res(idx)`` (<= base_res <=
+knn_res), holding the slice of the CompiledIndex inside it:
 
-* interior(res, cell_id, zmin)       — full-claim cells per resolution; zmin
-  is the min zone_id claiming the cell (resolve's argmin only ever needs it)
-* boundary(cell_id, zone_id, ea/eb lat/lng arrays) — one row per
-  (max-res boundary cell, candidate zone) carrying the pruned edge subset
+* its interior cells per resolution and its boundary cells, with each
+  boundary candidate's pruned edge run materialized;
+* the kNN candidate lists (CSR) of its kNN cells;
+* the global zone_ids / zone_bbox — O(zones), so zone indices need no
+  renumbering and the brute-force kNN for clamped out-of-domain points
+  stays exact.
 
-and for the kNN fallback:
+Every interior, boundary and kNN cell has exactly one shard ancestor, and a
+point's cells at every resolution lie in the point's shard, so
+assign_points on the shard reads exactly what it reads on the full index
+(pinned in tests/test_covertable.py). A lookup keys the points by shard and
+runs
 
-* knn(knn_cell, zone_id, min/max lat/lng) — the exact coarse-cell candidate
-  table (cells.py _compile_knn_table) as rows; the clamp-distance argmin is
-  then PURE column arithmetic + min(struct(dist2, zone_id)) — no UDF at all.
+    points.groupBy(keys, shard_id, salt)
+          .cogroup(shards.groupBy(keys, shard_id, salt))
+          .applyInArrow(assign_points per group)
 
-Semantics are pinned equal to the broadcast kernels (tests/test_covertable.py
-and the q39/q40 driver oracles — same SQL oracles as q11/q12).
+then joins the (key, zone_id, via_knn) result back onto the rows. The edges
+cross the exchange once per shard, not once per probe row.
 
-Scale shape: the points side shuffles only (key, lat, lng, cell_id); the
-cover side shuffles once and can be bucketed/persisted. Skewed boundary
-cells (a dense city cell with many candidates) are ordinary join skew —
-AQE's skewJoin splitting applies, unlike a broadcast whose cost is all-or-
-nothing per executor.
+Skew: a cogroup group runs in one task, and AQE cannot split it. One small
+job counts the points per shard; a shard holding more than its share of the
+session's shuffle partitions spreads its points over that many salted groups,
+and only that shard's blob is replicated to each.
 """
 
 from __future__ import annotations
+
+import pickle
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .cells import DEFAULT_KNN_RES, CompiledIndex, _ragged_ramp, cell_id_col
-from .geom import F32, ragged_parity
-
-INTERIOR_SCHEMA = T.StructType(
-    [
-        T.StructField("res", T.IntegerType(), False),
-        T.StructField("cell_id", T.LongType(), False),
-        T.StructField("zmin", T.IntegerType(), False),
-    ]
+from .cells import (
+    CompiledIndex,
+    _ragged_ramp,
+    assign_points,
+    cell_id_col,
+    cell_id_parent,
 )
+from .geom import F32
 
-BOUNDARY_SCHEMA = T.StructType(
-    [
-        T.StructField("cell_id", T.LongType(), False),
-        T.StructField("zone_id", T.IntegerType(), False),
-        T.StructField("ea_lat", T.ArrayType(T.FloatType()), False),
-        T.StructField("ea_lng", T.ArrayType(T.FloatType()), False),
-        T.StructField("eb_lat", T.ArrayType(T.FloatType()), False),
-        T.StructField("eb_lng", T.ArrayType(T.FloatType()), False),
-    ]
-)
+SHARD_RES = 4  # shard grid cap: 16 x 16 cells of 11.25 x 22.5 degrees
+# Kept in every blob and in a saved cover's meta.json, and mixed into
+# api.TimezoneLookup's cover cache key: bump it whenever the blob changes.
+SHARD_LAYOUT_VERSION = 1
 
-KNN_SCHEMA = T.StructType(
+SHARDS_SCHEMA = T.StructType(
     [
-        T.StructField("knn_cell", T.LongType(), False),
-        T.StructField("zone_id", T.IntegerType(), False),
-        T.StructField("min_lat", T.DoubleType(), False),
-        T.StructField("min_lng", T.DoubleType(), False),
-        T.StructField("max_lat", T.DoubleType(), False),
-        T.StructField("max_lng", T.DoubleType(), False),
+        T.StructField("shard_id", T.LongType(), False),
+        T.StructField("blob", T.BinaryType(), False),
     ]
 )
 
 
-def _interior_arrow(idx: CompiledIndex):
-    import pyarrow as pa
+def shard_res(idx: CompiledIndex) -> int:
+    """Shard resolution: never finer than base_res or knn_res, so every
+    interior, boundary and kNN cell lies in exactly one shard."""
+    return min(SHARD_RES, idx.base_res, idx.knn_res)
 
-    res_parts, cell_parts, zmin_parts = [], [], []
-    for r in range(idx.base_res, idx.max_res + 1):
-        cells, off, zl = idx.full[r]
-        if len(cells) == 0:
-            continue
-        res_parts.append(np.full(len(cells), r, np.int32))
-        cell_parts.append(cells)
-        # full-claim lists are sorted by zone index == zone_id order, so the
-        # first element IS the argmin zone (same shortcut resolve_points uses)
-        zmin_parts.append(idx.zone_ids[zl[off[:-1]]].astype(np.int32))
-    if not res_parts:
-        return pa.table(
-            {"res": pa.array([], pa.int32()), "cell_id": pa.array([], pa.int64()),
-             "zmin": pa.array([], pa.int32())}
-        )
-    return pa.table(
-        {
-            "res": np.concatenate(res_parts),
-            "cell_id": np.concatenate(cell_parts),
-            "zmin": np.concatenate(zmin_parts),
+
+def _knn_block(shard: int, s_res: int, knn_res: int) -> np.ndarray:
+    """Ascending ids of the kNN cells inside ``shard``."""
+    m = 1 << (knn_res - s_res)
+    r0, c0 = (shard >> s_res) * m, (shard & ((1 << s_res) - 1)) * m
+    rows = np.arange(r0, r0 + m, dtype=np.int64)
+    cols = np.arange(c0, c0 + m, dtype=np.int64)
+    return (rows[:, None] * (1 << knn_res) + cols[None, :]).ravel()
+
+
+def _by_shard(cells: np.ndarray, res: int, s_res: int):
+    """(order, lo, hi): the positions of ``cells`` in shard s are
+    order[lo[s]:hi[s]], ascending (stable sort of sorted cell ids)."""
+    par = cell_id_parent(cells.astype(np.int64), res, s_res)
+    order = np.argsort(par, kind="stable")
+    ids = np.arange(1 << (2 * s_res))
+    return (order, np.searchsorted(par[order], ids, "left"),
+            np.searchsorted(par[order], ids, "right"))
+
+
+def _csr_take(off: np.ndarray, rows: np.ndarray):
+    """(offsets, flat positions) of the CSR rows ``rows``."""
+    cnt = off[rows + 1] - off[rows]
+    sub = np.zeros(len(rows) + 1, np.int64)
+    np.cumsum(cnt, out=sub[1:])
+    return sub, _ragged_ramp(off[rows], cnt)
+
+
+def shard_blobs(idx: CompiledIndex) -> dict:
+    """{shard_id: blob}: the index sliced into shards (no recompile). A blob
+    is a pickled dict of CompiledIndex fields; open_shard inverts it."""
+    s_res = shard_res(idx)
+    full = {r: (v, _by_shard(v[0], r, s_res)) for r, v in idx.full.items()}
+    b_cells = idx.b_cells if idx.b_cells is not None else np.empty(0, np.int64)
+    b_groups = _by_shard(b_cells, idx.max_res, s_res)
+    out = {}
+    for s in range(1 << (2 * s_res)):
+        d = {
+            "v": SHARD_LAYOUT_VERSION, "shard": s, "shard_res": s_res,
+            "base_res": idx.base_res, "max_res": idx.max_res,
+            "knn_res": idx.knn_res, "zone_ids": idx.zone_ids,
+            "zone_bbox": idx.zone_bbox, "full": {},
         }
-    )
+        for r, ((cells, off, zl), (order, lo, hi)) in full.items():
+            rows = order[lo[s]:hi[s]]
+            sub, flat = _csr_take(off, rows)
+            d["full"][r] = (cells[rows], sub, zl[flat])
+        order, lo, hi = b_groups
+        rows = order[lo[s]:hi[s]]
+        d["b_cells"] = b_cells[rows]
+        if len(b_cells):
+            d["b_off"], cand = _csr_take(idx.b_off, rows)
+            d["b_zone"] = idx.b_zone[cand]
+            d["b_edge_off"], e = _csr_take(idx.b_edge_off, cand)
+            if idx.b_ea_lat is None:  # index form: gather the shard's runs
+                e = idx.b_edge_idx[e]
+                src = (idx.ea_lat, idx.ea_lng, idx.eb_lat, idx.eb_lng)
+            else:
+                src = (idx.b_ea_lat, idx.b_ea_lng, idx.b_eb_lat, idx.b_eb_lng)
+            for name, a in zip(("b_ea_lat", "b_ea_lng", "b_eb_lat", "b_eb_lng"), src):
+                d[name] = a[e]
+        d["knn_off"], d["knn_zidx"] = None, None
+        if idx.knn_off is not None:
+            d["knn_off"], flat = _csr_take(
+                idx.knn_off, _knn_block(s, s_res, idx.knn_res)
+            )
+            d["knn_zidx"] = idx.knn_zidx[flat]
+        out[s] = pickle.dumps(d, protocol=pickle.HIGHEST_PROTOCOL)
+    return out
 
 
-def _boundary_arrow(idx: CompiledIndex):
-    import pyarrow as pa
-
-    if idx.b_cells is None or len(idx.b_cells) == 0:
-        empty_list = pa.array([], pa.list_(pa.float32()))
-        return pa.table(
-            {"cell_id": pa.array([], pa.int64()), "zone_id": pa.array([], pa.int32()),
-             "ea_lat": empty_list, "ea_lng": empty_list,
-             "eb_lat": empty_list, "eb_lng": empty_list}
-        )
-    cnt = np.diff(idx.b_off)
-    cell_per_cand = np.repeat(idx.b_cells, cnt)
-    zid = idx.zone_ids[idx.b_zone].astype(np.int32)
-    if idx.b_ea_lat is not None:  # materialized contiguous edge subsets
-        ea_lat, ea_lng = idx.b_ea_lat, idx.b_ea_lng
-        eb_lat, eb_lng = idx.b_eb_lat, idx.b_eb_lng
-    else:  # index form: gather once from the global edge arrays
-        g = idx.b_edge_idx
-        ea_lat, ea_lng = idx.ea_lat[g], idx.ea_lng[g]
-        eb_lat, eb_lng = idx.eb_lat[g], idx.eb_lng[g]
-    offs = idx.b_edge_off.astype(np.int32)
-
-    def lst(v):
-        return pa.ListArray.from_arrays(pa.array(offs), pa.array(v))
-
-    return pa.table(
-        {
-            "cell_id": cell_per_cand,
-            "zone_id": zid,
-            "ea_lat": lst(ea_lat),
-            "ea_lng": lst(ea_lng),
-            "eb_lat": lst(eb_lat),
-            "eb_lng": lst(eb_lng),
-        }
-    )
-
-
-def _knn_arrow(idx: CompiledIndex):
-    import pyarrow as pa
-
-    cnt = np.diff(idx.knn_off)
-    cells = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
-    zi = idx.knn_zidx.astype(np.int64)
-    bb = idx.zone_bbox.astype(np.float64)
-    return pa.table(
-        {
-            "knn_cell": cells,
-            "zone_id": idx.zone_ids[zi].astype(np.int32),
-            "min_lat": bb[zi, 0],
-            "min_lng": bb[zi, 1],
-            "max_lat": bb[zi, 2],
-            "max_lng": bb[zi, 3],
-        }
-    )
-
-
-def _warehouse_dir(spark: SparkSession) -> str:
-    d = spark.conf.get("spark.sql.warehouse.dir")
-    return d[5:] if d.startswith("file:") else d
+def open_shard(blob: bytes) -> CompiledIndex:
+    """A shard blob as a CompiledIndex that cells.assign_points accepts for
+    the points of that shard. Its kNN CSR is re-spread over the global kNN
+    cell numbering (empty outside the shard)."""
+    d = pickle.loads(blob)
+    if d.pop("v") != SHARD_LAYOUT_VERSION:
+        raise ValueError("shard blob of another layout version")
+    shard, s_res = d.pop("shard"), d.pop("shard_res")
+    if d["knn_off"] is not None:
+        k = d["knn_res"]
+        dense = np.zeros((1 << (2 * k)) + 1, np.int64)
+        dense[_knn_block(shard, s_res, k) + 1] = np.diff(d["knn_off"])
+        d["knn_off"] = np.cumsum(dense)
+    return CompiledIndex(tzids=[], **d)
 
 
 def _df(spark: SparkSession, tbl, schema) -> DataFrame:
@@ -172,32 +170,37 @@ def _df(spark: SparkSession, tbl, schema) -> DataFrame:
 
 
 class CoverTables:
-    """The compiled cover as three DataFrames (interior / boundary / knn).
+    """The compiled cover as ONE table of spatial shards,
+    ``(keys..., shard_id, blob)`` (see the module docstring).
 
-    ``keys`` names extra partition columns present in all three tables
-    (e.g. ('tenant',) after union_tenant_covers); every probe join then
-    matches on keys + cell columns, so MANY zone sets resolve in ONE job.
+    ``keys`` names extra columns that lead every grouping key (e.g.
+    ('tenant',) after union_tenants): the points carry the same columns,
+    so MANY zone sets resolve in ONE job.
     """
 
-    def __init__(self, interior: DataFrame, boundary: DataFrame, knn: DataFrame,
-                 base_res: int, max_res: int, knn_res: int,
-                 keys: tuple = ()):
-        self.interior = interior
-        self.boundary = boundary
-        self.knn = knn
+    def __init__(self, shards: DataFrame, base_res: int, max_res: int,
+                 knn_res: int, shard_res: int, keys: tuple = ()):
+        self.shards = shards
         self.base_res = base_res
         self.max_res = max_res
         self.knn_res = knn_res
+        self.shard_res = shard_res
         self.keys = tuple(keys)
+
+    def _meta(self) -> dict:
+        return {"layout": SHARD_LAYOUT_VERSION, "base_res": self.base_res,
+                "max_res": self.max_res, "knn_res": self.knn_res,
+                "shard_res": self.shard_res, "keys": list(self.keys)}
 
     @classmethod
     def from_index(cls, spark: SparkSession, idx: CompiledIndex) -> "CoverTables":
-        return cls(
-            _df(spark, _interior_arrow(idx), INTERIOR_SCHEMA),
-            _df(spark, _boundary_arrow(idx), BOUNDARY_SCHEMA),
-            _df(spark, _knn_arrow(idx), KNN_SCHEMA),
-            idx.base_res, idx.max_res, idx.knn_res or DEFAULT_KNN_RES,
-        )
+        import pyarrow as pa
+
+        blobs = shard_blobs(idx)
+        tbl = pa.table({"shard_id": pa.array(list(blobs), pa.int64()),
+                        "blob": pa.array(list(blobs.values()), pa.binary())})
+        return cls(_df(spark, tbl, SHARDS_SCHEMA), idx.base_res, idx.max_res,
+                   idx.knn_res, shard_res(idx))
 
     @classmethod
     def union_tenants(
@@ -207,390 +210,145 @@ class CoverTables:
 
         This is the multi-tenant regime that motivates the join path in the
         first place: N zone sets whose combined size exceeds any broadcast
-        budget become rows of shared tables, and the probe is still a
-        single shuffle-partitioned job — join keys (tenant, cell_id). All
-        tenants must share the same resolutions (one compile config).
+        budget become rows of one shared table, and the probe is still a
+        single shuffle-partitioned job — grouping keys (tenant, shard_id).
+        All tenants must share the same resolutions (one compile config).
         ``covers`` maps tenant id -> CompiledIndex.
         """
         parts = {t: cls.from_index(spark, idx) for t, idx in covers.items()}
         first = next(iter(parts.values()))
+        shards = None
         for t, ct in parts.items():
-            if (ct.base_res, ct.max_res, ct.knn_res) != (
-                first.base_res, first.max_res, first.knn_res
-            ):
+            if ct._meta() != first._meta():
                 raise ValueError(f"tenant {t!r} compiled with different resolutions")
-
-        def _u(pick):
-            dfs = [pick(ct).withColumn("tenant", F.lit(t)) for t, ct in parts.items()]
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d)
-            return out
-
-        return cls(
-            _u(lambda c: c.interior), _u(lambda c: c.boundary), _u(lambda c: c.knn),
-            first.base_res, first.max_res, first.knn_res, keys=("tenant",),
-        )
+            d = ct.shards.select(F.lit(t).alias("tenant"), "shard_id", "blob")
+            shards = d if shards is None else shards.unionByName(d)
+        return cls(shards, first.base_res, first.max_res, first.knn_res,
+                   first.shard_res, keys=("tenant",))
 
     def save(self, path: str):
-        """Persist as parquet snapshot dirs (one per table + a meta row).
-        Callers key ``path`` by the zone-content hash (api._content_key) so
-        a changed zone table can never read a stale cover."""
+        """Persist as a parquet dir of shard rows plus meta.json, written
+        last. Callers key ``path`` by the zone-content hash and the layout
+        version (api.TimezoneLookup.cover_tables), so a changed zone table
+        can never read a stale cover."""
         import json
         import os
 
         os.makedirs(path, exist_ok=True)
-        self.interior.write.mode("overwrite").parquet(f"{path}/interior")
-        self.boundary.write.mode("overwrite").parquet(f"{path}/boundary")
-        self.knn.write.mode("overwrite").parquet(f"{path}/knn")
+        self.shards.write.mode("overwrite").parquet(f"{path}/shards")
         with open(f"{path}/meta.json", "w") as f:
-            json.dump({"base_res": self.base_res, "max_res": self.max_res,
-                       "knn_res": self.knn_res, "keys": list(self.keys)}, f)
+            json.dump(self._meta(), f)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "CoverTables":
+        """Open a saved cover. Raises ValueError for a cover of another
+        layout (a meta.json without this SHARD_LAYOUT_VERSION)."""
         import json
 
         with open(f"{path}/meta.json") as f:
             meta = json.load(f)
-        return cls(
-            spark.read.parquet(f"{path}/interior"),
-            spark.read.parquet(f"{path}/boundary"),
-            spark.read.parquet(f"{path}/knn"),
-            meta["base_res"], meta["max_res"], meta["knn_res"],
-            keys=tuple(meta.get("keys", ())),
-        )
-
-    # -- bucketed layout: the cover never re-shuffles ------------------------
-    #
-    # The cover is write-once probe-many; bucketing each table on EXACTLY its
-    # probe join keys makes every later resolve shuffle ONLY the narrow
-    # points side — the cover-side Exchange (the dominant shuffle volume:
-    # ~208 MB of boundary edges at reference scale, Nx that multi-tenant)
-    # disappears from every probe plan. Iceberg analog: bucket(n, keys)
-    # partition transform. Bucket cols must EQUAL the join keys — a strict
-    # subset makes the planner disable the bucketed scan (measured).
-
-    def interior_res_levels(self):
-        """Sorted resolutions that actually carry interior cells, memoized
-        per CoverTables instance (a one-off <= (max_res-base_res+1)-row
-        metadata read, the partition-pruning analog for the probe side).
-
-        The probe explode enumerates a point's ancestor cell per
-        resolution; a resolution with ZERO interior cells can never match,
-        so skipping it is exact regardless of data. At the world operating
-        point the cover holds interior cells only at res 9-10, so this
-        cuts the interior probe exchange from 7 to 2 rows per point."""
-        if getattr(self, "_res_levels", None) is None:
-            rows = self.interior.select("res").distinct().collect()
-            self._res_levels = sorted(r["res"] for r in rows)
-        return self._res_levels
-
-    def _bucket_specs(self):
-        ks = list(self.keys)
-        return [
-            ("interior", self.interior, ks + ["res", "cell_id"]),
-            ("boundary", self.boundary, ks + ["cell_id"]),
-            ("knn", self.knn, ks + ["knn_cell"]),
-        ]
-
-    def save_bucketed(self, spark: SparkSession, prefix: str, n_buckets: int = 32):
-        """Persist the three cover tables BUCKETED+SORTED on their probe join
-        keys as catalog tables ``{prefix}_{interior,boundary,knn}`` plus a
-        meta sidecar in the warehouse dir for cross-session re-registration
-        (the in-memory catalog forgets bucket metadata between sessions; the
-        sidecar lets load_bucketed re-declare the same spec over the same
-        files)."""
-        import json
-        import os
-
-        import os as _os
-
-        wh = _warehouse_dir(spark)
-        for suffix, df, cols in self._bucket_specs():
-            t = f"{prefix}_{suffix}"
-            # EXTERNAL (explicit path): the content-addressed files outlive
-            # any catalog entry — dropping the table never deletes the cover.
-            # Repartition on the bucket keys first: without it every writer
-            # partition emits a slice of every bucket (P x B small files; a
-            # bucket's scan task then opens P files), with it each bucket is
-            # exactly one file.
-            (
-                df.repartition(n_buckets, *[F.col(c) for c in cols])
-                .write.mode("overwrite")
-                .bucketBy(n_buckets, *cols)
-                .sortBy(*cols)
-                .option("path", _os.path.join(wh, t))
-                .saveAsTable(t)
+        if meta.get("layout") != SHARD_LAYOUT_VERSION:
+            raise ValueError(
+                f"{path}: cover layout {meta.get('layout')!r}, "
+                f"expected {SHARD_LAYOUT_VERSION}"
             )
-        meta = {
-            "base_res": self.base_res, "max_res": self.max_res,
-            "knn_res": self.knn_res, "keys": list(self.keys),
-            "n_buckets": n_buckets,
-        }
-        with open(os.path.join(_warehouse_dir(spark), f"{prefix}_meta.json"), "w") as f:
-            json.dump(meta, f)
-
-    @classmethod
-    def bucketed_exists(cls, spark: SparkSession, prefix: str) -> bool:
-        import os
-
-        return os.path.exists(
-            os.path.join(_warehouse_dir(spark), f"{prefix}_meta.json")
-        )
-
-    @classmethod
-    def load_bucketed(cls, spark: SparkSession, prefix: str) -> "CoverTables":
-        """Open a save_bucketed cover. If the session catalog does not know
-        the tables yet (fresh session over an existing warehouse), re-declare
-        them as external bucketed tables over the written files — bucket ids
-        are encoded in the part-file names, so the re-declared spec reads
-        bucket-aware."""
-        import json
-        import os
-
-        wh = _warehouse_dir(spark)
-        with open(os.path.join(wh, f"{prefix}_meta.json")) as f:
-            meta = json.load(f)
-        ks = list(meta.get("keys", ()))
-        specs = [
-            ("interior", ks + ["res", "cell_id"]),
-            ("boundary", ks + ["cell_id"]),
-            ("knn", ks + ["knn_cell"]),
-        ]
-        dfs = {}
-        for suffix, cols in specs:
-            t = f"{prefix}_{suffix}"
-            if not spark.catalog.tableExists(t):
-                loc = os.path.join(wh, t)
-                sch = spark.read.parquet(loc).schema
-                col_sql = ", ".join(
-                    f"`{f.name}` {f.dataType.simpleString()}" for f in sch.fields
-                )
-                bcols = ", ".join(f"`{c}`" for c in cols)
-                spark.sql(
-                    f"CREATE TABLE {t} ({col_sql}) USING PARQUET "
-                    f"CLUSTERED BY ({bcols}) SORTED BY ({bcols}) "
-                    f"INTO {meta['n_buckets']} BUCKETS LOCATION '{loc}'"
-                )
-            dfs[suffix] = spark.table(t)
         return cls(
-            dfs["interior"], dfs["boundary"], dfs["knn"],
+            spark.read.parquet(f"{path}/shards"),
             meta["base_res"], meta["max_res"], meta["knn_res"],
-            keys=tuple(ks),
+            meta["shard_res"], keys=tuple(meta["keys"]),
         )
 
 
-def _pip_filter_arrow(jb: DataFrame, carry: list) -> DataFrame:
-    """(joined point x boundary-candidate rows) -> (_k, *carry, cand) for
-    rows whose point lies INSIDE the candidate's pruned edge subset, as one
-    mapInArrow stage. Each batch's four edge-list columns are flattened
-    from their Arrow values/offsets buffers into one ragged edge table for
-    geom.ragged_parity, the same float32 even-odd ray cast the broadcast
-    probe (cells._resolve_pairs) refines with. Parity over the pruned
-    subset == parity over the full ring (the cells._pip_edge_subset
-    invariant the boundary table carries)."""
+def _assign_group(points, shard):
+    """One cogroup: the points of one (keys, shard, salt) group and that
+    shard's blob (no row when no cover exists for the keys)."""
     import pyarrow as pa
 
-    in_schema = jb.schema
-    out_schema = T.StructType(
-        [in_schema["_k"]]
-        + [in_schema[c] for c in carry]
-        + [T.StructField("cand", T.IntegerType(), False)]
+    n = points.num_rows
+    zid, via = np.full(n, -1, np.int32), np.zeros(n, bool)
+    if n and shard.num_rows:
+        lat = np.asarray(points.column("_lat").to_numpy(), F32)  # null -> NaN
+        lng = np.asarray(points.column("_lng").to_numpy(), F32)
+        zid, via = assign_points(open_shard(shard.column("blob")[0].as_py()), lat, lng)
+    return pa.table({"_k": points.column("_k"), "_lat": points.column("_lat"),
+                     "_lng": points.column("_lng"), "zone_id": zid, "via_knn": via})
+
+
+def _salts(pts: DataFrame, keys: list, p: int):
+    """((keys..., shard_id, _n) frame, total groups): each shard's salt
+    count from its point count and the shuffle partitions ``p``. A shard
+    holding a fraction f of the points gets ceil(f * p) salted groups."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    spark = pts.sparkSession
+    rows = pts.groupBy(*keys, "shard_id").count().collect()
+    total = sum(r["count"] for r in rows)
+    live = [(*r[:-1], min(p, -(-r["count"] * p // total)))
+            for r in rows if r["shard_id"] is not None]
+    schema = T.StructType(
+        [pts.schema[k] for k in keys]
+        + [T.StructField("shard_id", T.LongType()), T.StructField("_n", T.IntegerType())]
     )
-    sel = jb.select(
-        "_k", "_lat", "_lng", "zone_id",
-        "ea_lat", "ea_lng", "eb_lat", "eb_lng",
-    )
-    meta_cols = ["_k"] + list(carry)  # carry ⊆ {_lat, _lng}, already in sel
-
-    def _flat(col):
-        """list<float> column -> (row-contiguous float32 values, counts)."""
-        off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        vals = col.values.to_numpy(zero_copy_only=False)
-        counts = np.diff(off)
-        return vals[_ragged_ramp(off[:-1], counts)].astype(F32, copy=False), counts
-
-    def _run(batches):
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            ci = {name: i for i, name in enumerate(b.schema.names)}
-            pl = b.column(ci["_lat"]).to_numpy(zero_copy_only=False).astype(F32)
-            pg = b.column(ci["_lng"]).to_numpy(zero_copy_only=False).astype(F32)
-            a_lat, counts = _flat(b.column(ci["ea_lat"]))
-            a_lng, _ = _flat(b.column(ci["ea_lng"]))
-            b_lat, _ = _flat(b.column(ci["eb_lat"]))
-            b_lng, _ = _flat(b.column(ci["eb_lng"]))
-            out = ragged_parity(pl, pg, a_lat, a_lng, b_lat, b_lng, counts)
-            if not out.any():
-                continue
-            keep = pa.array(out)
-            arrs = [b.column(ci[c]).filter(keep) for c in meta_cols]
-            arrs.append(
-                pa.array(
-                    b.column(ci["zone_id"]).to_numpy(zero_copy_only=False)[out]
-                    .astype(np.int32)
-                )
-            )
-            yield pa.RecordBatch.from_arrays(
-                arrs, names=[f.name for f in out_schema.fields]
-            )
-
-    return sel.mapInArrow(_run, out_schema)
+    # a local (Arrow) relation: broadcasting it runs no Spark job
+    tbl = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in live],
+                               schema=to_arrow_schema(schema))
+    return _df(spark, tbl, schema), sum(r[-1] for r in live)
 
 
-def _resolve_cands(
-    pts: DataFrame, cover: "CoverTables", carry_latlng: bool = False
-) -> DataFrame:
-    """(_k, [keys...], _lat, _lng) -> (_k, _zid): argmin containing zone per
-    key, MATCHED keys only. Interior claims join on (keys, res, ancestor
-    cell); boundary cells join on (keys, max-res cell) and refine with the
-    pruned-edge float32 ray cast; both candidate streams min-aggregate per
-    key. ``cover.keys`` columns (e.g. tenant) must be present in pts.
+def _lookup(pts: DataFrame, cover: CoverTables):
+    """(_k, [keys...], _lat, _lng) -> (_k, _lat, _lng, zone_id, via_knn), one
+    row per input row: cells.assign_points on each point's shard. Null or NaN
+    coordinates get (-1, False), as on the broadcast path.
 
-    carry_latlng=True additionally groups by (_lat, _lng) and keeps them on
-    the output — for callers whose key is unique per point (the image
-    path), this is the same grouping and saves a later map-back join. Do
-    NOT set it when keys may repeat with different coords."""
+    Returns (result, cached): ``cached`` is the narrow point frame, persisted
+    because the salt count and the lookup both read it (for the image path
+    it holds the GPS-extract output). Callers that run per micro-batch
+    unpersist it."""
+    from pyspark.storagelevel import StorageLevel
+
     ks = list(cover.keys)
-    pb = pts.withColumn(
-        "cell_id", cell_id_col(F.col("_lat"), F.col("_lng"), cover.max_res)
+    grp = [*ks, "shard_id", "_salt"]
+    cached = pts.withColumn(
+        "shard_id", cell_id_col(F.col("_lat"), F.col("_lng"), cover.shard_res)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    p = int(pts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    salts, n_groups = _salts(cached, ks, p)
+    # a fixed partition count on both sides: AQE coalesces by bytes, and the
+    # narrow points of a salted hot shard are few bytes but many ray casts —
+    # coalescing would fold the salted groups back into one task
+    n_part = max(1, min(p, n_groups))
+    left = (
+        cached.join(F.broadcast(salts), [*ks, "shard_id"], "left")
+        .withColumn("_salt", F.pmod(F.xxhash64("_k"), F.coalesce("_n", F.lit(1))).cast("int"))
+        .select("_k", *grp, "_lat", "_lng")
+        .repartition(n_part, *grp)
     )
-    jb = pb.join(cover.boundary.hint("shuffle_hash"), [*ks, "cell_id"])
-    carry = ["_lat", "_lng"] if carry_latlng else []
-    # coords ride along as first() aggregates (every row of a key carries
-    # the SAME coords, so first is deterministic) — the agg stays keyed on
-    # _k alone and its hash(_k) partitioning remains reusable by the
-    # downstream key joins.
-    carry_aggs = [F.first(c).alias(c) for c in carry]
-    bm = _pip_filter_arrow(jb, carry)
-
-    # interior probe: only the resolutions that CARRY interior cells
-    # (interior_res_levels) — a res with no cells can never match, so the
-    # explode shrinks from (max_res-base_res+1) rows/point to the live
-    # levels (2 at the world operating point: probe exchange 7M -> 2M rows
-    # at the 1M-image bench row).
-    levels = cover.interior_res_levels()
-    if not levels:
-        return bm.groupBy("_k").agg(F.min("cand").alias("_zid"), *carry_aggs)
-    anc = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(r).alias("res"),
-                    cell_id_col(F.col("_lat"), F.col("_lng"), r).alias("cell_id"),
-                )
-                for r in levels
-            ]
-        )
-    ).alias("a")
-    pi = pts.select("_k", *carry, *ks, anc).select(
-        "_k", *carry, *ks, "a.res", "a.cell_id"
+    # only the shards that hold points ship, a hot one once per salt
+    right = (
+        cover.shards.join(F.broadcast(salts), [*ks, "shard_id"])
+        .select(*ks, "shard_id",
+                F.explode(F.sequence(F.lit(0), F.col("_n") - 1)).alias("_salt"), "blob")
+        .repartition(n_part, *grp)
     )
-    im = pi.join(
-        cover.interior.hint("shuffle_hash"), [*ks, "res", "cell_id"]
-    ).select("_k", *carry, F.col("zmin").alias("cand"))
-    return im.unionAll(bm).groupBy("_k").agg(
-        F.min("cand").alias("_zid"), *carry_aggs
+    schema = T.StructType(
+        [cached.schema["_k"], cached.schema["_lat"], cached.schema["_lng"],
+         T.StructField("zone_id", T.IntegerType(), False),
+         T.StructField("via_knn", T.BooleanType(), False)]
     )
-
-
-def _knn_best(
-    pts: DataFrame, cover: "CoverTables", carry_latlng: bool = False
-) -> DataFrame:
-    """(_k, [keys...], _lat, _lng) -> (_k, _zid): nearest zone by squared
-    MBR clamp distance (float64 from float32 coords, tie-break min zone_id)
-    via the (keys, coarse-cell) candidate equi-join — pure column
-    arithmetic, no UDF. carry_latlng as in _resolve_cands."""
-    carry = ["_lat", "_lng"] if carry_latlng else []
-    p = pts.withColumn(
-        "knn_cell", cell_id_col(F.col("_lat"), F.col("_lng"), cover.knn_res)
+    res = left.groupBy(*grp).cogroup(right.groupBy(*grp)).applyInArrow(
+        _assign_group, schema
     )
-    j = p.join(cover.knn.hint("shuffle_hash"), [*cover.keys, "knn_cell"])
-    la = F.col("_lat").cast("double")
-    lg = F.col("_lng").cast("double")
-    dlat = F.greatest(F.col("min_lat") - la, la - F.col("max_lat"), F.lit(0.0))
-    dlng = F.greatest(F.col("min_lng") - lg, lg - F.col("max_lng"), F.lit(0.0))
-    d2 = dlat * dlat + dlng * dlng
-    return (
-        j.withColumn("d2", d2)
-        .groupBy("_k")
-        .agg(
-            F.min(F.struct(F.col("d2"), F.col("zone_id"))).alias("b"),
-            *[F.first(c).alias(c) for c in carry],
-        )
-        .select("_k", *carry, F.col("b.zone_id").alias("_zid"))
-    )
+    return res, cached
 
 
-def resolve_via_join(
-    points: DataFrame,
-    key_col: str,
-    cover: CoverTables,
-    lat_col: str = "lat",
-    lng_col: str = "lng",
-) -> DataFrame:
-    """Broadcast-free resolve: (key, lat, lng) -> (points.*, zone_id).
-
-    Semantics == cells.resolve_points (argmin zone_id over containing zones,
-    -1 when none; float32 half-open PIP):
-
-    * interior claims: the point's ancestor cell at EACH resolution joins the
-      interior table on (res, cell_id) — one explode into base..max thin rows
-      per point, one shuffle-partitioned equi-join,
-    * boundary cells: the max-res cell joins the boundary table on cell_id;
-      the pruned-edge float32 ray cast runs in a pandas UDF over the joined
-      candidate fragments,
-    * argmin: min() over both candidate streams per key, left-joined back.
-
-    Joins are hinted shuffle_hash on the cover side — the point of this path
-    is that NOTHING is broadcast, so it keeps working when the cover is 10x
-    the driver's budget. (For covers that DO fit, engine.assign_timezones'
-    broadcast probe is the faster physical strategy; this is the same logical
-    operator at the other end of the size regime.)
-    """
-    pts = points.select(
+def _narrow(points: DataFrame, key_col: str, cover: CoverTables,
+            lat_col: str, lng_col: str) -> DataFrame:
+    return points.select(
         F.col(key_col).alias("_k"),
+        *[F.col(k).cast(cover.shards.schema[k].dataType) for k in cover.keys],
         F.col(lat_col).cast("float").alias("_lat"),
         F.col(lng_col).cast("float").alias("_lng"),
-        *[F.col(k) for k in cover.keys],
-    )
-    cands = _resolve_cands(pts, cover)
-    return (
-        points.join(cands, F.col(key_col) == F.col("_k"), "left")
-        .drop("_k")
-        .withColumn("zone_id", F.coalesce(F.col("_zid"), F.lit(-1)).cast("int"))
-        .drop("_zid")
-    )
-
-
-def knn_via_join(
-    points: DataFrame,
-    key_col: str,
-    cover: CoverTables,
-    lat_col: str = "lat",
-    lng_col: str = "lng",
-) -> DataFrame:
-    """Broadcast-free kNN fallback: nearest zone by squared MBR clamp
-    distance, tie-break min zone_id — cells.knn_fallback as a relational
-    plan: coarse-cell equi-join against the exact candidate table, clamp
-    distance as pure column arithmetic (float64 from float32 coords, the
-    same formula as the q12 SQL oracle), argmin via min(struct(dist2, id)).
-    No UDF anywhere."""
-    pts = points.select(
-        F.col(key_col).alias("_k"),
-        F.col(lat_col).cast("float").alias("_lat"),
-        F.col(lng_col).cast("float").alias("_lng"),
-        *[F.col(k) for k in cover.keys],
-    )
-    best = _knn_best(pts, cover)
-    return (
-        points.join(best, F.col(key_col) == F.col("_k"), "inner")
-        .drop("_k")
-        .withColumn("zone_id", F.col("_zid").cast("int"))
-        .drop("_zid")
     )
 
 
@@ -600,80 +358,59 @@ def assign_via_join(
     cover: CoverTables,
     lat_col: str = "lat",
     lng_col: str = "lng",
-    persist: bool = True,
 ) -> DataFrame:
-    """resolve_via_join + kNN fallback for unmatched points — the full
-    engine assignment (engine.assign_udf semantics) with zero broadcasts.
-    Adds zone_id + via_knn to ``points``.
-
-    Shape: the heavy ``points`` plan is consumed exactly ONCE (the final
-    key join); resolve and kNN run over a NARROW (key, lat, lng) projection
-    whose per-key result is a (key, zone_id, via_knn) map. With
-    persist=True (default) the narrow projection and the map are
-    MEMORY_AND_DISK-cached — without it, the matched/unmatched branching
-    re-evaluated the whole upstream plan per consumer (for the image front
-    half: the parquet scan + GPS-extract UDF appeared 6x in the static
-    plan). Streaming callers pass persist=False: per-microbatch persists
-    accumulate across triggers.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    pts = points.select(
-        F.col(key_col).alias("_k"),
-        F.col(lat_col).cast("float").alias("_lat"),
-        F.col(lng_col).cast("float").alias("_lng"),
-        *[F.col(k) for k in cover.keys],
-    )
-    if persist:
-        pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
-    cands = _resolve_cands(pts, cover)  # (_k, _zid) for MATCHED keys only
-    if persist:
-        cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    un = pts.join(cands.select("_k"), "_k", "left_anti")
-    kbest = _knn_best(un, cover)  # (_k, _zid) for the unmatched keys
-    zmap = cands.withColumn("via_knn", F.lit(False)).unionByName(
-        kbest.withColumn("via_knn", F.lit(True))
-    )
-    return (
-        points.join(zmap, F.col(key_col) == F.col("_k"), "inner")
-        .drop("_k")
-        .withColumn("zone_id", F.col("_zid").cast("int"))
-        .drop("_zid")
-    )
+    """The full engine assignment (engine.assign_udf semantics) with zero
+    broadcast of the cover: adds zone_id + via_knn to ``points``. A point no
+    zone contains gets its kNN zone (via_knn True); a null or NaN coordinate
+    gets (-1, False). ``key_col`` must be unique and non-null per row: the
+    result joins back on it. ``cover.keys`` columns (e.g. tenant) must be
+    present in ``points``."""
+    res, _ = _lookup(_narrow(points, key_col, cover, lat_col, lng_col), cover)
+    return points.join(
+        res.select("_k", "zone_id", "via_knn"), F.col(key_col) == F.col("_k")
+    ).drop("_k")
 
 
-def assign_images_via_join(
-    images: DataFrame,
+def resolve_via_join(
+    points: DataFrame,
+    key_col: str,
     cover: CoverTables,
-    key_col: str = "image_id",
-    persist: bool = True,
+    lat_col: str = "lat",
+    lng_col: str = "lng",
 ) -> DataFrame:
-    """The image-table front half + the join assignment: GPS extract (header
-    bytes only cross into Python), quarantine (bad blob OR out-of-domain
-    coords), cell encode, then assign_via_join. Mirrors
-    engine.assign_timezones' row semantics with zero broadcasts; used by
-    api.TimezoneLookup.assign_join (batch) and streaming.stream_assign_join
-    (per micro-batch)."""
-    from pyspark.storagelevel import StorageLevel
+    """assign_via_join without the kNN answers: adds zone_id, the argmin
+    containing zone (cells.resolve_points semantics), -1 when none."""
+    return assign_via_join(points, key_col, cover, lat_col, lng_col).withColumn(
+        "zone_id", F.when(F.col("via_knn"), F.lit(-1)).otherwise(F.col("zone_id"))
+    ).drop("via_knn")
 
+
+def knn_via_join(
+    points: DataFrame,
+    key_col: str,
+    cover: CoverTables,
+    lat_col: str = "lat",
+    lng_col: str = "lng",
+) -> DataFrame:
+    """The kNN answers of assign_via_join (cells.knn_fallback semantics):
+    the rows no zone contains, with their nearest zone as zone_id. Rows a
+    zone contains and rows with no answer (null/NaN coordinates) drop out."""
+    return assign_via_join(points, key_col, cover, lat_col, lng_col).where(
+        F.col("via_knn")
+    ).drop("via_knn")
+
+
+def _assign_images(images: DataFrame, cover: CoverTables, key_col: str):
+    """assign_images_via_join plus its cached narrow frame (see _lookup)."""
     from .engine import extract_gps_udf, gps_header_col
 
     ks = list(cover.keys)
-    # Narrow decision branch (round 6): ONLY the key [+ tenant keys] and the
-    # 17-byte header prefix enter Python; the old shape passed the FULL
-    # image frame through the quarantine filter into assign_via_join, whose
-    # final key join then re-ran the scan + extract UDF a second time just
-    # to re-derive the filter (the only non-pruned dependency). The zone
-    # map's key set equals the non-quarantined key set by construction
-    # (every surviving point gets a zone via resolve or kNN), so the heavy
-    # side can be the RAW image table — no Python stage, scan pruned to the
-    # consumer's columns — with lat/lng re-attached from the persisted
-    # narrow projection and cell_id/quarantined recomputed/constant.
-    # asNondeterministic: the quarantine filter references the UDF's struct
-    # fields, and Catalyst otherwise re-instantiates the UDF below the
-    # pushed filter — two stacked ArrowEvalPython nodes per evaluation
-    # (the q106 double-eval defect; guide-pattern guard, engine.lookup_udf
-    # does the same). The function itself is pure.
+    # Only the key [+ tenant keys] and the 17-byte header prefix enter
+    # Python for the extract. asNondeterministic: the quarantine filter
+    # references the UDF's struct fields, and Catalyst otherwise
+    # re-instantiates the UDF below the pushed filter (two stacked
+    # ArrowEvalPython nodes; engine.lookup_udf does the same). The function
+    # itself is pure.
     g = images.select(
         F.col(key_col).alias("_k"),
         *ks,
@@ -681,40 +418,39 @@ def assign_images_via_join(
             gps_header_col(F.col("bytes"))
         ).alias("g"),
     )
-    pts = g.where(
+    ok = g.where(
         F.col("g.gps_ok")
         & F.col("g.lat").between(-90.0, 90.0)
         & F.col("g.lng").between(-180.0, 180.0)
-    ).select(
-        "_k", *ks, F.col("g.lat").alias("_lat"), F.col("g.lng").alias("_lng")
     )
-    if persist:
-        pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
-    # carry_latlng: image_id is unique per row, so grouping the candidate
-    # streams by (_k, _lat, _lng) is the same grouping and the zone map
-    # comes out already carrying the coords — no separate map-back join.
-    cands = _resolve_cands(pts, cover, carry_latlng=True)
-    if persist:
-        cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    un = pts.join(cands.select("_k"), "_k", "left_anti")
-    kbest = _knn_best(un, cover, carry_latlng=True)
-    attach = cands.withColumn("via_knn", F.lit(False)).unionByName(
-        kbest.withColumn("via_knn", F.lit(True))
+    res, cached = _lookup(_narrow(ok, "_k", cover, "g.lat", "g.lng"), cover)
+    # the heavy side is the RAW image table (no Python stage, scan pruned to
+    # the consumer's columns); lat/lng come back from the lookup result
+    out = images.join(res, F.col(key_col) == F.col("_k")).select(
+        *images.columns,
+        F.col("_lat").alias("lat"),
+        F.col("_lng").alias("lng"),
+        F.lit(False).alias("quarantined"),
+        cell_id_col(F.col("_lat"), F.col("_lng"), cover.max_res).alias("cell_id"),
+        "via_knn",
+        "zone_id",
     )
-    return (
-        images.join(attach, F.col(key_col) == F.col("_k"), "inner")
-        .select(
-            *images.columns,
-            F.col("_lat").alias("lat"),
-            F.col("_lng").alias("lng"),
-            F.lit(False).alias("quarantined"),
-            cell_id_col(F.col("_lat"), F.col("_lng"), cover.max_res).alias(
-                "cell_id"
-            ),
-            "via_knn",
-            F.col("_zid").cast("int").alias("zone_id"),
-        )
-    )
+    return out, cached
+
+
+def assign_images_via_join(
+    images: DataFrame,
+    cover: CoverTables,
+    key_col: str = "image_id",
+) -> DataFrame:
+    """The image-table front half + the join assignment: GPS extract (header
+    bytes only cross into Python), quarantine (bad blob OR out-of-domain
+    coords), then the shard lookup. Mirrors engine.assign_timezones' row
+    semantics with zero broadcast of the cover; used by
+    api.TimezoneLookup.assign_join (batch) and streaming.stream_assign_join
+    (per micro-batch). Building the frame runs one small job (the per-shard
+    point count that sets the salts)."""
+    return _assign_images(images, cover, key_col)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -771,8 +507,9 @@ def radius_join(
 
     100 TB shape: shuffles on cell id like every cover probe; dense-cell
     skew is ordinary join skew (AQE skew-split applies) and the exploded
-    zone side is write-once — persist it bucketed on `cell` exactly like
-    save_bucketed's cover tables to take its Exchange off the steady path.
+    zone side is write-once — persist it bucketed on `cell`
+    (tableio.TableIO.write_bucketed) to take its Exchange off the steady
+    path.
 
     Returns (key, zone_id:int, dist2:double) — one row per qualifying pair.
     """

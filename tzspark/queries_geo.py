@@ -439,12 +439,11 @@ SELECT event_id, CAST(zone_id AS INTEGER) AS zone_id FROM d WHERE rn = 1
 
 def q39_resolve_join(spark, sf_dir):
     """J1, broadcast-free physical strategy: the SAME resolve semantics as
-    q11 (compiled cover, argmin zone_id, float32 half-open PIP) executed as
-    cell-id equi-joins against the cover-as-table form (covertable.py) —
-    interior claims join on (res, cell), boundary candidates join on the
-    max-res cell and ray-cast in a pandas UDF over the joined fragments.
-    Same oracle as q10/q11; zero broadcasts (shuffle_hash-hinted), so the
-    path survives zone tables 10x past the driver's broadcast budget."""
+    q11 (compiled cover, argmin zone_id, float32 half-open PIP) executed on
+    the cover-as-table form (covertable.py): the points cogroup with the
+    spatial shards of the index and cells.assign_points runs per shard.
+    Same oracle as q10/q11; nothing index-sized is broadcast, so the path
+    survives zone tables 10x past the driver's broadcast budget."""
     from .covertable import CoverTables, resolve_via_join
 
     zones = box_zones(spark, sf_dir)
@@ -455,19 +454,16 @@ def q39_resolve_join(spark, sf_dir):
 
 
 def q40_knn_join(spark, sf_dir):
-    """J2, broadcast-free: unmatched points -> nearest zone via the coarse-
-    cell candidate TABLE (equi-join + pure-column clamp distance + struct
-    argmin — no UDF). Same oracle as q12."""
-    from .covertable import CoverTables, knn_via_join, resolve_via_join
+    """J2, broadcast-free: the points no box contains -> nearest zone, the
+    kNN answers of the same shard lookup as q39 (covertable.knn_via_join).
+    Same oracle as q12."""
+    from .covertable import CoverTables, knn_via_join
 
     zones = box_zones(spark, sf_dir)
     idx = compile_cover(zones, base_res=3, max_res=7)
     cov = CoverTables.from_index(spark, idx)
     p = pts_df(spark, sf_dir)
-    un = resolve_via_join(p, "event_id", cov).where(F.col("zone_id") == -1).drop(
-        "zone_id"
-    )
-    return knn_via_join(un, "event_id", cov).select("event_id", "zone_id")
+    return knn_via_join(p, "event_id", cov).select("event_id", "zone_id")
 
 
 def q43_zone_update_resolve(spark, sf_dir):
@@ -667,8 +663,8 @@ def q52_multi_tenant_resolve(spark, sf_dir):
     zone sets (tenant 'a' = the nation boxes, tenant 'b' = the same boxes
     shifted +6 lat / +10 lng, all float32-exact) unioned into ONE
     tenant-keyed cover (CoverTables.union_tenants) and resolved for a mixed
-    point stream in a single job — every probe join matches on
-    (tenant, cell_id), so N tenants cost one shuffle, not N broadcasts.
+    point stream in a single job — the points cogroup with the shards on
+    (tenant, shard_id), so N tenants cost one shuffle, not N broadcasts.
     Oracle: per-tenant rectangle containment argmin + clamp-distance kNN
     over the tenant-unioned box table."""
     from .covertable import CoverTables, assign_via_join

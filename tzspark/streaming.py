@@ -53,32 +53,36 @@ def stream_assign_join(
     checkpoint_dir: str,
     key_col: str = "image_id",
 ):
-    """The BROADCAST-FREE lookup (covertable.assign_via_join) on a stream.
+    """The BROADCAST-FREE lookup (covertable.assign_images_via_join) on a
+    stream.
 
-    assign_via_join is a multi-join + per-key aggregation plan — as a direct
-    streaming query that would mean unbounded aggregation state, but per
-    micro-batch every key is complete, so the idiomatic form is foreachBatch:
-    each trigger's batch runs the exact BATCH join pipeline (same code, same
-    semantics, pinned in tests/test_streaming.py) and appends to the sink;
-    checkpointLocation gives exactly-once across restarts (a replayed batch
-    id overwrites rather than duplicates under the default parquet sink
-    contract... foreachBatch requires the writer itself to be idempotent, so
-    the writer partitions by batch_id and overwrites that partition).
+    The lookup cogroups each point's spatial shard of the index with the
+    points and needs a per-shard point count first, so it is not a
+    streaming operator; but per micro-batch every key is complete, so the
+    idiomatic form is foreachBatch: each trigger's batch runs the exact
+    BATCH pipeline (same code, same semantics, pinned in
+    tests/test_streaming.py) and appends to the sink. checkpointLocation
+    gives exactly-once across restarts; foreachBatch requires the writer
+    itself to be idempotent, so the writer partitions by batch_id and
+    overwrites that partition.
 
     Returns the started StreamingQuery (AvailableNow trigger — drain + stop).
     """
-    from .covertable import assign_images_via_join
+    from .covertable import _assign_images
 
     def _process(batch_df: DataFrame, batch_id: int):
-        # persist=False: per-microbatch persists would accumulate across
-        # triggers with nobody to unpersist them
-        out = assign_images_via_join(
-            batch_df, cover, key_col, persist=False
-        ).withColumn("_batch_id", F.lit(batch_id))
-        # idempotent replay: a re-delivered batch replaces its own partition
-        out.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("_batch_id").parquet(out_path)
+        out, cached = _assign_images(batch_df, cover, key_col)
+        try:
+            # idempotent replay: a re-delivered batch replaces its own partition
+            out.withColumn("_batch_id", F.lit(batch_id)).write.mode(
+                "overwrite"
+            ).option("partitionOverwriteMode", "dynamic").partitionBy(
+                "_batch_id"
+            ).parquet(out_path)
+        finally:
+            # the batch's narrow points were cached for the lookup; drop
+            # them so caches do not pile up across triggers
+            cached.unpersist()
 
     q = (
         images_stream.writeStream.foreachBatch(_process)
