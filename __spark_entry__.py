@@ -12,7 +12,7 @@ oracles. Text/similarity queries cover the training-data operator families
 over `documents` / `embeddings`. The image queries (q24-q30) are oracle-
 checked too: the synthetic pixels and the codec are pure arithmetic in the
 row index, so decoded channel sums / PSNR / tile raster stats are exactly
-SQL-expressible (COVERAGE.md "pixel-synthesis SQL oracles"). All 100
+SQL-expressible (COVERAGE.md "pixel-synthesis SQL oracles"). All 109
 queries carry a value-level DuckDB oracle.
 """
 
@@ -71,45 +71,6 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Round-6 sampling rotation (VERDICT r5 item 4): the driver's correctness
-# gate records the FIRST 50 entries of queries() per round. The 59 names
-# with no CORRECTNESS_r05 row lead this round, stalest first — the 9 names
-# whose newest driver row is round 3, then the round-4-resting names — so
-# after r6 every query has a row in r5 ∪ r6. Every query is still present
-# and oracle-checked; only the iteration order changes.
-_ROUND6_FIRST = [
-    # newest driver row = round 3:
-    "q42_full_engine_boxes_join", "q44_dedup_canonical", "q45_asof_join",
-    "q46_sessionize", "q47_tfidf_topterms", "q48_pii_scrub",
-    "q49_stratified_sample", "q50_chunk_documents", "q51_sequence_pack",
-    # newest driver row = round 4 (50 names; the first 41 of these fill the
-    # driver's 50-name window, the rest follow immediately after):
-    "q01_validity_filter", "q02_cell_encode", "q03_bbox_join",
-    "q04_deterministic_match", "q05_knn_fallback", "q06_tile_counts",
-    "q07_salted_agg", "q08_zone_bounds", "q09_zone_table_build",
-    "q10_pip_exact_kernel", "q11_resolve_cover", "q12_knn_engine",
-    "q28_frame_sample", "q36_pricing_summary", "q39_resolve_join",
-    "q40_knn_join", "q43_zone_update_resolve", "q52_multi_tenant_resolve",
-    "q53_radius_join", "q54_proximity_pairs", "q57_geo_dbscan",
-    "q58_user_displacement", "q59_hll_tile_users", "q62_pagerank",
-    "q64_zone_geometry", "q65_zone_transitions", "q66_focal_tile_stats",
-    "q67_clip_conservation", "q68_idw_interpolation", "q70_tile_pyramid",
-    "q72_colocation", "q73_haversine_displacement", "q74_weighted_sample",
-    "q75_zone_dwell", "q76_tile_top_users", "q77_knn_points_join",
-    "q78_repetition_signals", "q79_geohash", "q80_zorder_layout",
-    "q85_mix_interleave", "q86_countmin_tokens", "q88_zone_value_quantiles",
-    "q89_versioned_resolve", "q90_bm25_rank", "q91_stream_window_counts",
-    "q93_stream_dedup", "q95_overlay_join", "q96_mobility_entropy",
-    "q98_decontaminate", "q99_od_flow_matrix",
-]
-
-
-def _rotate(d: dict) -> dict:
-    head = {k: d[k] for k in _ROUND6_FIRST if k in d}
-    tail = {k: v for k, v in d.items() if k not in head}
-    return {**head, **tail}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ §2.7)."""
     from tzspark.queries_extra import EXTRA_QUERIES
@@ -130,7 +91,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out[name] = _shipped(fn)
     for name, fn in EXTRA_QUERIES.items():
         out[name] = _shipped(fn)
-    return _rotate(out)
+    return out
 
 
 def oracle_sql() -> dict[str, str]:
@@ -142,4 +103,4 @@ def oracle_sql() -> dict[str, str]:
 
     out = {name: sql for name, (_fn, sql) in {**GEO_QUERIES, **TEXT_QUERIES}.items()}
     out.update(EXTRA_ORACLES)
-    return _rotate(out)
+    return out

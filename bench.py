@@ -751,51 +751,22 @@ def compute_job_df(spark, n_rows: int, n_parts: int = 256):
     return a.groupBy("a.zone_id").count()
 
 
-def single_compute_run(cpus: int):
-    from tzspark.engine import get_spark
-
-    spark = get_spark(
-        app=f"tzspark-compute-{cpus}", master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 16),
-        # kernel chunks internally (cache-sized); bigger Arrow batches just
-        # amortize per-batch serde overhead
-        extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "65536"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+def _compute_job(spark, cpus: int):
     # fixed 500k-row tasks at every parallelism level: constant per-task
     # overhead fraction, so the ratio measures scaling, not amortization
     df = compute_job_df(spark, COMPUTE_ROWS, n_parts=max(COMPUTE_ROWS // 500_000, cpus))
-    for _ in range(3):  # C2 JIT needs several passes over the Arrow codepath
-        materialize(df)
-    times = []
-    for _ in range(5):
-        t0 = time.time()
-        materialize(df)
-        times.append(time.time() - t0)
-    dt = min(times)  # noise on this box is strictly ADDITIVE (one-sided
-    # multi-second fault/steal stalls, BASELINE.md round 4), so min-of-5 is
-    # the consistent estimator of machine capability; median gets dragged
-    # by a single stalled rep
-    print(json.dumps({"cpus": cpus, "sec": round(dt, 3),
-                      "rows_sec": round(COMPUTE_ROWS / dt, 1),
-                      "all_secs": [round(t, 3) for t in times]}))
-    spark.stop()
+    return lambda: materialize(df)
 
 
-def single_noop_run(cpus: int):
-    """Child mode for --scaling: the IO/framework ceiling control — the same
-    parquet scan + JVM->Python Arrow transfer of the payload column as the
-    full pipeline, with a NO-OP Python stage (touches nothing). Whatever
-    efficiency this measures is the best any payload-consuming job can do on
-    this box; the pipeline's efficiency should be judged against it."""
+def _noop_job(spark, cpus: int):
+    """The IO/framework ceiling control: the same parquet scan + JVM->Python
+    Arrow transfer of the payload column as the full pipeline, with a NO-OP
+    Python stage (touches nothing). Whatever efficiency this measures is the
+    best any payload-consuming job can do on this box; the pipeline's
+    efficiency should be judged against it."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
-    from tzspark.engine import get_spark
-
-    spark = get_spark(app=f"tzspark-noop-{cpus}", master=f"local[{cpus}]",
-                      shuffle_partitions=max(cpus, 16))
-    spark.sparkContext.setLogLevel("ERROR")
     global N_ROWS
     N_ROWS = SCALING_ROWS
     ensure_images(spark)
@@ -806,21 +777,9 @@ def single_noop_run(cpus: int):
         for b in batches:
             yield pa.RecordBatch.from_pydict({"n": [len(b.column(0))]})
 
-    def job():
-        materialize(images.select("bytes").mapInArrow(_noop, schema).groupBy().sum("n"))
-
-    for _ in range(3):
-        job()
-    times = []
-    for _ in range(5):
-        t0 = time.time()
-        job()
-        times.append(time.time() - t0)
-    dt = min(times)  # min-of-5; see the estimator note above
-    print(json.dumps({"cpus": cpus, "sec": round(dt, 3),
-                      "rows_sec": round(N_ROWS / dt, 1),
-                      "all_secs": [round(t, 3) for t in times]}))
-    spark.stop()
+    return lambda: materialize(
+        images.select("bytes").mapInArrow(_noop, schema).groupBy().sum("n")
+    )
 
 
 def _kernel_worker(args):
@@ -862,24 +821,18 @@ def kernel_scaling():
             "n_rows_per_proc": 2_000_000}
 
 
-def single_world_run(cpus: int):
-    """Child mode for --scaling: the lookup join against the REFERENCE-SCALE
-    zone index (make_world_zones: 1,200 tzids / 24k polygons / 4.8M vertices,
-    ~142 MB broadcast) — the N-vs-4N row where the big broadcast is part of
-    the measured job (materialized to every python worker during warmup,
+def _world_job(spark, cpus: int):
+    """The lookup join against the REFERENCE-SCALE zone index
+    (make_world_zones: 1,200 tzids / 24k polygons / 4.8M vertices, ~142 MB
+    broadcast) — the N-vs-4N row where the big broadcast is part of the
+    measured job (materialized to every python worker during warmup,
     exactly like a long-running cluster job's first task wave)."""
     from pyspark.sql import functions as F
 
     from tzspark.api import TimezoneLookup
-    from tzspark.engine import assign_udf, get_spark
+    from tzspark.engine import assign_udf
     from tzspark.zones import make_world_zones
 
-    spark = get_spark(
-        app=f"tzspark-world-{cpus}", master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 16),
-        extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "65536"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
     tl = TimezoneLookup(make_world_zones(), cache_dir=os.path.join(CACHE, "covers"))
     idx_b = spark.sparkContext.broadcast(tl.idx)
     n_rows = WORLD_ROWS
@@ -892,41 +845,22 @@ def single_world_run(cpus: int):
     df = pts.select(assign_udf(idx_b)(F.col("lat"), F.col("lng")).alias("a")).groupBy(
         "a.zone_id"
     ).count()
-    for _ in range(3):
-        materialize(df)
-    times = []
-    for _ in range(5):
-        t0 = time.time()
-        materialize(df)
-        times.append(time.time() - t0)
-    dt = min(times)  # min-of-5; see the estimator note above
-    print(json.dumps({"cpus": cpus, "sec": round(dt, 3),
-                      "rows_sec": round(n_rows / dt, 1),
-                      "all_secs": [round(t, 3) for t in times]}))
-    spark.stop()
+    return lambda: materialize(df)
 
 
-def single_join_run(cpus: int):
-    """Child mode for --scaling: the BROADCAST-FREE lookup (covertable
-    assign_via_join) against the reference-scale cover persisted as a
-    parquet table of index shards — the round-3 flagship path for zone sets
-    past the broadcast budget. Unlike the broadcast rows this one SHUFFLES
-    (points x shards cogroup), so its single-box N-vs-4N ratio also carries
-    the local shuffle service's fixed costs; on a real cluster the exchange
-    is network-parallel."""
+def _join_job(spark, cpus: int):
+    """The BROADCAST-FREE lookup (covertable assign_via_join) against the
+    reference-scale cover persisted as a parquet table of index shards —
+    the flagship path for zone sets past the broadcast budget. Unlike the
+    broadcast rows this one SHUFFLES (points x shards cogroup), so its
+    single-box N-vs-4N ratio also carries the local shuffle service's fixed
+    costs; on a real cluster the exchange is network-parallel."""
     from pyspark.sql import functions as F
 
     from tzspark.api import TimezoneLookup
     from tzspark.covertable import assign_via_join
-    from tzspark.engine import get_spark
     from tzspark.zones import make_world_zones
 
-    spark = get_spark(
-        app=f"tzspark-join-{cpus}", master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 16),
-        extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "65536"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
     tl = TimezoneLookup(make_world_zones(), cache_dir=os.path.join(CACHE, "covers"))
     cov = tl.cover_tables(spark, cache_dir=os.path.join(CACHE, "covers"))
     n_rows = JOIN_ROWS
@@ -938,54 +872,69 @@ def single_join_run(cpus: int):
         .cast("float").alias("lng"),
     )
     df = assign_via_join(pts, "k", cov).groupBy("zone_id").count()
-    for _ in range(3):
-        materialize(df)
-    times = []
-    for _ in range(5):
-        t0 = time.time()
-        materialize(df)
-        times.append(time.time() - t0)
-    dt = min(times)  # min-of-5; see the estimator note above
-    print(json.dumps({"cpus": cpus, "sec": round(dt, 3),
-                      "rows_sec": round(n_rows / dt, 1),
-                      "all_secs": [round(t, 3) for t in times]}))
-    spark.stop()
+    return lambda: materialize(df)
 
 
-def single_run(cpus: int):
-    """Child mode for --scaling: time the full engine — per-zone lookup
-    rollup AND per-tile raster stats over the payload table, computed by the
-    one-pass fused operator (engine.lookup_tile_onepass): one parquet scan,
-    one JVM->Python payload transfer, one shuffle of tiny partials. The
-    outputs equal the old two-job form (pytest-pinned); the single pass
-    halves the shared scan/transfer traffic that binds a one-box N-vs-4N
-    comparison."""
-    global N_ROWS
-    N_ROWS = SCALING_ROWS
-    from tzspark.engine import broadcast_cover, get_spark, lookup_tile_onepass
+def _pipeline_job(spark, cpus: int):
+    """The full engine — per-zone lookup rollup AND per-tile raster stats
+    over the payload table, computed by the one-pass fused operator
+    (engine.lookup_tile_onepass): one parquet scan, one JVM->Python payload
+    transfer, one shuffle of tiny partials. The outputs equal the old
+    two-job form (pytest-pinned); the single pass halves the shared
+    scan/transfer traffic that binds a one-box N-vs-4N comparison."""
+    from tzspark.engine import broadcast_cover, lookup_tile_onepass
     from tzspark.zones import make_zones
 
-    spark = get_spark(app=f"tzspark-scale-{cpus}", master=f"local[{cpus}]",
-                      shuffle_partitions=max(cpus, 16))
-    spark.sparkContext.setLogLevel("ERROR")
+    global N_ROWS
+    N_ROWS = SCALING_ROWS
     ensure_images(spark)
     images = spark.read.parquet(images_path())
-    zones = make_zones(n_coast=20000)
-    idx_b, _ = broadcast_cover(spark, zones)
+    idx_b, _ = broadcast_cover(spark, make_zones(n_coast=20000))
+    return lambda: materialize(lookup_tile_onepass(images, idx_b))
 
-    def job():
-        materialize(lookup_tile_onepass(images, idx_b))
 
-    for _ in range(3):  # worker spawn + C2 JIT per Python-exchange codepath
+# --scaling mode -> (rows, job builder, 64k-row Arrow batches). The
+# kernels chunk internally (cache-sized), so bigger Arrow batches just
+# amortize per-batch serde overhead on the coordinate-only modes.
+SCALING_MODES = {
+    "lookup_compute": (COMPUTE_ROWS, _compute_job, True),
+    "lookup_world_index": (WORLD_ROWS, _world_job, True),
+    "lookup_join_broadcast_free": (JOIN_ROWS, _join_job, True),
+    "full_pipeline": (SCALING_ROWS, _pipeline_job, False),
+    "transfer_ceiling_noop": (SCALING_ROWS, _noop_job, False),
+}
+
+
+def scaling_run(mode: str, cpus: int):
+    """Child of --scaling: time one mode at local[cpus] and print one JSON
+    line. 3 warm-ups (worker spawn + C2 JIT per Python-exchange codepath),
+    then the min of 5 reps: noise on this box is strictly ADDITIVE
+    (one-sided multi-second fault/steal stalls, BASELINE.md round 4), so
+    min-of-5 is the consistent estimator of machine capability; a median
+    gets dragged by a single stalled rep."""
+    from tzspark.engine import get_spark
+
+    n_rows, build, big_batches = SCALING_MODES[mode]
+    spark = get_spark(
+        app=f"tzspark-{mode}-{cpus}", master=f"local[{cpus}]",
+        shuffle_partitions=max(cpus, 16),
+        extra_conf=(
+            {"spark.sql.execution.arrow.maxRecordsPerBatch": "65536"}
+            if big_batches else None
+        ),
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    job = build(spark, cpus)
+    for _ in range(3):
         job()
     times = []
     for _ in range(5):
         t0 = time.time()
         job()
         times.append(time.time() - t0)
-    dt = min(times)  # min-of-5; see the estimator note above
+    dt = min(times)
     print(json.dumps({"cpus": cpus, "sec": round(dt, 3),
-                      "rows_sec": round(N_ROWS / dt, 1),
+                      "rows_sec": round(n_rows / dt, 1),
                       "all_secs": [round(t, 3) for t in times]}))
     spark.stop()
 
@@ -1008,18 +957,13 @@ def scaling_main():
     import shutil
 
     taskset = shutil.which("taskset")
-    for mode, flag, rows in (
-        ("lookup_compute", "--single-compute-run", COMPUTE_ROWS),
-        ("lookup_world_index", "--single-world-run", WORLD_ROWS),
-        ("lookup_join_broadcast_free", "--single-join-run", JOIN_ROWS),
-        ("full_pipeline", "--single-run", SCALING_ROWS),
-        ("transfer_ceiling_noop", "--single-noop-run", SCALING_ROWS),
-    ):
+    for mode, (rows, _build, _big) in SCALING_MODES.items():
         if only is not None and mode not in only:
             continue
         out = {}
         for cpus in (8, 32):
-            cmd = [sys.executable, os.path.abspath(__file__), flag, str(cpus)]
+            cmd = [sys.executable, os.path.abspath(__file__), "--scaling-run", mode,
+                   str(cpus)]
             if taskset:  # pin so local[8] really means 8 CPUs for ALL procs
                 cmd = [taskset, "-c", f"0-{cpus - 1}"] + cmd
             r = subprocess.run(cmd, capture_output=True, text=True, check=True)
@@ -1037,15 +981,8 @@ def scaling_main():
 if __name__ == "__main__":
     if "--scaling" in sys.argv:
         scaling_main()
-    elif "--single-compute-run" in sys.argv:
-        single_compute_run(int(sys.argv[sys.argv.index("--single-compute-run") + 1]))
-    elif "--single-noop-run" in sys.argv:
-        single_noop_run(int(sys.argv[sys.argv.index("--single-noop-run") + 1]))
-    elif "--single-world-run" in sys.argv:
-        single_world_run(int(sys.argv[sys.argv.index("--single-world-run") + 1]))
-    elif "--single-join-run" in sys.argv:
-        single_join_run(int(sys.argv[sys.argv.index("--single-join-run") + 1]))
-    elif "--single-run" in sys.argv:
-        single_run(int(sys.argv[sys.argv.index("--single-run") + 1]))
+    elif "--scaling-run" in sys.argv:
+        i = sys.argv.index("--scaling-run")
+        scaling_run(sys.argv[i + 1], int(sys.argv[i + 2]))
     else:
         bench_main()

@@ -12,7 +12,9 @@ assert the plan properties the design promises:
 5. quarantine side output: the extract UDF crosses into Python once (one
    ArrowEvalPython), not once more inside the validity Filter;
 6. join path: one FlatMapCoGroupsInArrow per lookup, the cover never
-   broadcast (join_path_checks; tier-1 runs it in tests/test_plans.py).
+   broadcast (join_path_checks; tier-1 runs it in tests/test_plans.py);
+6e. distance joins: one cell-keyed equi-join each, never an all-pairs
+   join, no Python stage (distance_join_checks; also in tier-1).
 """
 
 import os
@@ -148,28 +150,10 @@ def main():
     sections += s6
     failures += f6
 
-    # 6e. distance joins (radius + proximity self-join): grid-blocked cell
-    # equi-joins — the plan must contain NO CartesianProduct and NO
-    # BroadcastNestedLoopJoin (the shapes a naive theta-join would produce)
-    # and zero Python stages: the distance arithmetic is pure column ops.
-    from tzspark.covertable import proximity_self_join, radius_join
-    from tzspark.queries_geo import boxes_df
-
-    p6e = plan_of(
-        radius_join(pts_df(spark, sf_small), "event_id",
-                    boxes_df(spark, sf_small), radius=4.0, res=6)
-    )
-    sections.append(("radius join (grid-blocked distance join)", p6e))
-    p6f = plan_of(
-        proximity_self_join(pts_df(spark, sf_small), "event_id",
-                            radius=0.75, res=8)
-    )
-    sections.append(("proximity self-join (asymmetric cell blocking)", p6f))
-    for tag, pl in (("radius-join", p6e), ("proximity-join", p6f)):
-        if "CartesianProduct" in pl or "BroadcastNestedLoopJoin" in pl:
-            failures.append(f"{tag}: plan degenerates to an all-pairs join")
-        if re.search(r"ArrowEvalPython|MapInPandas|MapInArrow", pl):
-            failures.append(f"{tag}: unexpected Python stage (should be pure column ops)")
+    # 6e. the four distance joins: distance_join_checks below
+    s6e, f6e = distance_join_checks(spark, sf_small)
+    sections += s6e
+    failures += f6e
 
     # 7. as-of join (union-and-last-value form): NO join operator at all —
     # one Exchange on user_id feeds the window; sessionization's two windows
@@ -767,6 +751,9 @@ def main():
             "- join path: one FlatMapCoGroupsInArrow (points x index shards) "
             "per lookup, the cover never broadcast, multi-tenant cogroup keys "
             "lead with tenant, the image path's GPS extract evaluated once\n"
+            "- distance joins (radius, proximity, two-set pairs, co-location): "
+            "exactly one equi-join each, keyed on _cell (+ _tb), never an "
+            "all-pairs join, zero Python stages\n"
             "- as-of join: zero join operators, exactly one Exchange "
             "(user_id) feeding the last-value window\n"
             "- sessionization: both gap windows share one user_id Exchange "
@@ -843,6 +830,60 @@ def main():
     spark.stop()
     sys.exit(1 if failures else 0)
 
+
+
+def distance_join_checks(spark, sf_small):
+    """Section 6e, the four grid-blocked distance joins (covertable
+    radius_join, proximity_self_join, point_pairs_within, colocation_pairs),
+    as ([(title, plan)], [failure]). tests/test_plans.py runs the same
+    checks in tier-1.
+
+    Each plan has exactly one join, an equi-join keyed on the grid cell
+    ``_cell`` (plus the time bucket ``_tb`` for co-location) on both sides;
+    no CartesianProduct or BroadcastNestedLoopJoin (the shapes a naive
+    theta-join would produce); and no Python stage — the cell enumeration
+    and the distance arithmetic are pure column ops."""
+    from tzspark.covertable import (
+        colocation_pairs,
+        point_pairs_within,
+        proximity_self_join,
+        radius_join,
+    )
+    from tzspark.queries_geo import boxes_df, pts_df
+
+    pts = pts_df(spark, sf_small)
+    joins = [
+        ("radius-join", "radius join (grid-blocked distance join)", ["_cell"],
+         radius_join(pts, "event_id", boxes_df(spark, sf_small), radius=4.0, res=6)),
+        ("proximity-join", "proximity self-join (asymmetric cell blocking)", ["_cell"],
+         proximity_self_join(pts, "event_id", radius=0.75, res=8)),
+        ("pairs-within", "two-set point radius join (asymmetric cell blocking)",
+         ["_cell"],
+         point_pairs_within(pts.where(F.col("event_id") % 7 == 0), "event_id",
+                            pts.withColumnRenamed("event_id", "sid"), "sid",
+                            radius=1.5, res=8, carry_cols=["lat"])),
+        ("colocation", "co-location self-join ((cell, time-bucket) blocking)",
+         ["_cell", "_tb"],
+         colocation_pairs(pts_df(spark, sf_small, with_user=True), "event_id",
+                          "user_id", "ts", radius=1.0, window_s=3600, res=4)),
+    ]
+    sections, failures = [], []
+    for tag, title, keys, df in joins:
+        pl = plan_of(df)
+        sections.append((title, pl))
+        if "CartesianProduct" in pl or "BroadcastNestedLoopJoin" in pl:
+            failures.append(f"{tag}: plan degenerates to an all-pairs join")
+        if re.search(r"EvalPython|InPandas|InArrow", pl):
+            failures.append(f"{tag}: unexpected Python stage (should be pure column ops)")
+        n_join = len(re.findall(r"^\(\d+\) \w*Join\b", pl, re.M))
+        if n_join != 1:
+            failures.append(f"{tag}: {n_join} joins (expected exactly 1)")
+        for side in ("Left", "Right"):
+            m = re.search(side + r" keys \[\d+\]: \[([^\]]*)\]", pl)
+            got = re.sub(r"#\d+L?", "", m.group(1)).split(", ") if m else None
+            if got != keys:
+                failures.append(f"{tag}: {side.lower()} join keys {got} (expected {keys})")
+    return sections, failures
 
 
 def join_path_checks(spark, images, sf_small):

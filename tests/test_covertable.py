@@ -363,7 +363,8 @@ def test_radius_join_equals_bruteforce(spark):
     """radius_join (grid-blocked distance-bounded join) must return exactly
     the brute-force pair set at several radii and block resolutions,
     including r=0 (bbox containment/touch), a radius larger than a cell,
-    and rectangles clamped at the domain edge."""
+    rectangles clamped at the domain edge, and planted points on a cell
+    edge exactly r from a zone."""
     from tzspark.covertable import radius_join
 
     rng = np.random.default_rng(23)
@@ -374,6 +375,23 @@ def test_radius_join_equals_bruteforce(spark):
     lg0 = rng.uniform(-178, 160, n_zones)
     la1 = la0 + rng.uniform(0.5, 15, n_zones)
     lg1 = lg0 + rng.uniform(0.5, 15, n_zones)
+    # planted, per radius: a point on a cell edge (lat 22.5, lng 45.0 are
+    # edges at every res >= 3) with zones exactly r away across it, and a
+    # point exactly r below a zone whose bbox starts on that edge
+    radii = [(0.0, 5), (2.5, 6), (8.0, 4), (8.0, 7)]
+    lat[0], lng[0] = 22.5, 45.0
+    planted = []  # (radius, point, (min_lat, max_lat, min_lng, max_lng))
+    for i, r in enumerate(sorted({r for r, _ in radii})):
+        lat[1 + i], lng[1 + i] = 22.5 - r, 100.0
+        planted += [
+            (r, 0, (22.5 + r, 22.5 + r + 1.0, 44.0, 46.0)),
+            (r, 0, (22.0, 23.0, 45.0 - r - 1.0, 45.0 - r)),
+            (r, 1 + i, (22.5, 24.0, 99.0, 101.0)),
+        ]
+    la0, la1, lg0, lg1 = (
+        np.concatenate([v, [b[k] for _, _, b in planted]])
+        for k, v in enumerate((la0, la1, lg0, lg1))
+    )
 
     p = spark.createDataFrame(
         [(int(i), float(lat[i]), float(lng[i])) for i in range(n_pts)],
@@ -382,7 +400,7 @@ def test_radius_join_equals_bruteforce(spark):
     z = spark.createDataFrame(
         [
             (int(j), float(la0[j]), float(lg0[j]), float(la1[j]), float(lg1[j]))
-            for j in range(n_zones)
+            for j in range(len(la0))
         ],
         "zone_id long, min_lat double, min_lng double, max_lat double, max_lng double",
     )
@@ -393,7 +411,7 @@ def test_radius_join_equals_bruteforce(spark):
     dlng = np.maximum(np.maximum(lg0[None] - lg64, lg64 - lg1[None]), 0.0)
     d2 = dlat * dlat + dlng * dlng
 
-    for radius, res in [(0.0, 5), (2.5, 6), (8.0, 4), (8.0, 7)]:
+    for radius, res in radii:
         got = {
             (r["k"], r["zone_id"])
             for r in radius_join(p, "k", z, radius=radius, res=res).collect()
@@ -403,12 +421,15 @@ def test_radius_join_equals_bruteforce(spark):
             for i, j in zip(*np.nonzero(d2 <= radius * radius))
         }
         assert got == want, (radius, res, len(got), len(want))
+        live = {(k, n_zones + j) for j, (r, k, _) in enumerate(planted) if r == radius}
+        assert live and live <= want  # planted cases live
 
 
 def test_proximity_self_join_equals_bruteforce(spark):
     """proximity_self_join must return exactly the brute-force pair set —
     including coincident points (dist 0), pairs straddling cell borders,
-    and radii larger than a cell."""
+    radii larger than a cell, and planted pairs exactly r apart across a
+    cell edge."""
     from tzspark.covertable import proximity_self_join
 
     rng = np.random.default_rng(29)
@@ -419,6 +440,15 @@ def test_proximity_self_join_equals_bruteforce(spark):
     lat[50:80] = lat[20] + rng.uniform(-1, 1, 30).astype(np.float32)
     lng[50:80] = lng[20] + rng.uniform(-1, 1, 30).astype(np.float32)
     lat[90] , lng[90] = lat[91], lng[91]
+    # planted: a point on a cell edge (lat 22.5, lng 45.0 are edges at every
+    # res >= 3) and, per radius, points exactly r below and r left of it —
+    # with lower ids (their rectangle's upper edge lands on the cell edge)
+    # and with higher ids (the edge point's rectangle reaches down to them)
+    lat[110], lng[110] = 22.5, 45.0
+    for i, r in enumerate((0.5, 2.0)):
+        for k in (100 + 2 * i, 111 + 2 * i):
+            lat[k], lng[k] = 22.5 - r, 45.0
+            lat[k + 1], lng[k + 1] = 22.5, 45.0 - r
 
     p = spark.createDataFrame(
         [(int(i), float(lat[i]), float(lng[i])) for i in range(n)],
@@ -436,11 +466,15 @@ def test_proximity_self_join_equals_bruteforce(spark):
         ii, jj = np.nonzero(d2 <= radius * radius)
         want = {(int(i), int(j)) for i, j in zip(ii, jj) if i < j}
         assert got == want, (radius, res, len(got), len(want))
+        k = 2 * (radius == 2.0)
+        live = {(100 + k, 110), (101 + k, 110), (110, 111 + k), (110, 112 + k)}
+        assert live <= want  # planted cases live
 
 
 def test_point_pairs_within_equals_bruteforce(spark):
     """Two-set radius join (IDW's pair source): cell-blocked result ==
-    brute-force cross join, carry column intact."""
+    brute-force cross join, carry column intact, planted pairs exactly r
+    apart across a cell edge included."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -453,6 +487,13 @@ def test_point_pairs_within_equals_bruteforce(spark):
     rpts = [(1000 + i, float(lat), float(lng), float(v)) for i, (lat, lng, v) in
             enumerate(zip(rng.uniform(-20, 20, n_r), rng.uniform(-20, 20, n_r),
                           rng.normal(size=n_r)))]
+    # planted: left points on a cell edge (lat/lng 0.0 is an edge at every
+    # res) and exactly r below one; right points exactly r away across the
+    # edge, one on the edge itself, and one coincident (the r = 0 case)
+    lpts[0], lpts[1] = (0, 0.0, 0.0), (1, -1.5, 5.0)
+    rpts[0], rpts[1] = (1000, -1.5, 0.0, 0.5), (1001, 0.0, -4.0, 0.25)
+    rpts[2], rpts[3] = (1002, 0.0, 0.0, 2.0), (1003, 0.0, 5.0, 4.0)
+    planted = {1.5: {(0, 1000), (1, 1003)}, 4.0: {(0, 1001)}, 0.0: {(0, 1002)}}
     L = spark.createDataFrame(lpts, "pid long, lat double, lng double")
     R = spark.createDataFrame(rpts, "sid long, lat double, lng double, value double")
 
@@ -473,6 +514,7 @@ def test_point_pairs_within_equals_bruteforce(spark):
             for i, j in zip(*np.nonzero(d2 <= radius * radius))
         }
         assert set(got) == set(want), (radius, res)
+        assert planted[radius] <= set(want)  # planted cases live
         for k, (gd, gv) in got.items():
             assert abs(gd - want[k][0]) < 1e-12 and gv == want[k][1]
 
@@ -481,8 +523,9 @@ def test_colocation_pairs_equals_bruteforce(spark):
     """Spatiotemporal co-location: the (cell, time-bucket)-blocked self-join
     must return exactly the brute-force pair set — including pairs that
     straddle a time-bucket boundary (t and t+W in adjacent buckets), pairs
-    exactly W apart (inclusive edge), same-user pairs excluded, and radii
-    larger than a cell."""
+    exactly W apart (inclusive edge), same-user pairs excluded, radii
+    larger than a cell, and planted pairs exactly r apart across a cell
+    edge."""
     import datetime as dt
 
     from tzspark.covertable import colocation_pairs
@@ -506,6 +549,15 @@ def test_colocation_pairs_equals_bruteforce(spark):
     users[3], users[4], users[10], users[11] = 1, 2, 3, 4
     lat[4], lng[4] = lat[3], lng[3]
     lat[11], lng[11] = lat[10] + np.float32(0.1), lng[10]
+    # planted: an event on a cell edge (lat 22.5, lng 45.0 are edges at
+    # every res >= 3), and other users' events at the same instant exactly
+    # r below and r left of it, per radius, with lower and with higher ids
+    lat[25], lng[25], users[25] = 22.5, 45.0, 5
+    for i, r in enumerate((1.5, 30.0)):
+        for k in (20 + 2 * i, 26 + 2 * i):
+            lat[k], lng[k], users[k] = 22.5 - r, 45.0, 6
+            lat[k + 1], lng[k + 1], users[k + 1] = 22.5, 45.0 - r, 7
+    secs[20:30] = secs[20]
 
     rows = [
         (int(i), int(users[i]), t0 + dt.timedelta(seconds=int(secs[i])),
@@ -535,3 +587,5 @@ def test_colocation_pairs_equals_bruteforce(spark):
         assert got == want, (radius, res, len(got), len(want))
         if radius >= 1.5:
             assert (3, 4) in want and (10, 11) in want  # planted cases live
+        k = 2 * (radius == 30.0)
+        assert {(20 + k, 25), (21 + k, 25), (25, 26 + k), (25, 27 + k)} <= want

@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tzspark.cells import DEFAULT_MAX_RES, cell_id
+from tzspark.cells import DEFAULT_MAX_RES, cell_id, cell_id_col
 from tzspark.datasets import images_df, synth_coords
 from tzspark.engine import (
     assign_timezones,
@@ -65,6 +65,32 @@ def test_cell_id_column_matches_numpy(assigned):
         pdf["lat"].to_numpy(np.float32), pdf["lng"].to_numpy(np.float32), DEFAULT_MAX_RES
     )
     np.testing.assert_array_equal(pdf["cell_id"].to_numpy(np.int64), want)
+
+    # planted inputs the uniform fixture almost never draws: exact cell
+    # edges, the domain bounds, values just outside them, and doubles that
+    # the float32 truncation moves onto an edge
+    lat_v, lng_v = [], []
+    for res in (1, 4, DEFAULT_MAX_RES):
+        k = np.arange((1 << res) + 1)
+        lat_v += list(-90.0 + 180.0 * k / (1 << res))
+        lng_v += list(-180.0 + 360.0 * k / (1 << res))
+    lat_v += [90.0, -90.0, np.nextafter(90.0, 91), np.nextafter(-90.0, -91),
+              90.0000001, -90.0000001, 90.5, -90.5, 91.0, -91.0, 22.5 - 1e-9]
+    lng_v += [180.0, -180.0, np.nextafter(180.0, 181), np.nextafter(-180.0, -181),
+              180.00001, -180.00001, 180.5, -180.5, 181.0, -181.0, 45.0 + 1e-9]
+    n = len(lat_v) + len(lng_v)
+    lat = np.array([lat_v[i % len(lat_v)] for i in range(n)])
+    lng = np.array([lng_v[(7 * i) % len(lng_v)] for i in range(n)])
+    df = assigned.sparkSession.createDataFrame(
+        [(float(a), float(b)) for a, b in zip(lat, lng)], "lat double, lng double"
+    )
+    for res in (0, 1, 4, DEFAULT_MAX_RES, 15):
+        got = df.select(cell_id_col(F.col("lat"), F.col("lng"), res).alias("c"))
+        np.testing.assert_array_equal(
+            got.toPandas()["c"].to_numpy(np.int64),
+            cell_id(lat.astype(np.float32), lng.astype(np.float32), res),
+            err_msg=f"res {res}",
+        )
 
 
 def test_quarantine_path(spark, zones):

@@ -108,13 +108,14 @@ def cell_id_sql(lat_expr: str, lng_expr: str, res: int) -> str:
     return f"({row} * {n} + {col})"
 
 
-def cell_id_col(lat_col, lng_col, res: int):
-    """PySpark Column of the cell id. Mirrors cell_id() / cell_id_sql()."""
+def cell_rowcol_col(lat64, lng64, res: int):
+    """(row, col) PySpark Columns of the clamped grid cell at ``res``: the
+    cell_rowcol() arithmetic on float64 Columns as given, with no float32
+    cast — a rectangle edge such as ``lat - r`` is binned at its f64 value.
+    cell_id_col adds the float32 truncation for points."""
     from pyspark.sql import functions as F
 
     n = 1 << res
-    lat64 = lat_col.cast("float").cast("double")
-    lng64 = lng_col.cast("float").cast("double")
     row = F.least(
         F.greatest(F.floor((lat64 + 90.0) / 180.0 * n).cast("bigint"), F.lit(0)),
         F.lit(n - 1),
@@ -123,7 +124,37 @@ def cell_id_col(lat_col, lng_col, res: int):
         F.greatest(F.floor((lng64 + 180.0) / 360.0 * n).cast("bigint"), F.lit(0)),
         F.lit(n - 1),
     )
-    return row * n + col
+    return row, col
+
+
+def cell_id_col(lat_col, lng_col, res: int):
+    """PySpark Column of the cell id. Mirrors cell_id() / cell_id_sql():
+    truncate to float32, then cell_rowcol_col."""
+    row, col = cell_rowcol_col(
+        lat_col.cast("float").cast("double"), lng_col.cast("float").cast("double"), res
+    )
+    return row * (1 << res) + col
+
+
+def explode_rect_cells(df, lat0, lat1, lng0, lng1, res: int):
+    """``df`` with one row per grid cell at ``res`` that the [lat0, lat1] x
+    [lng0, lng1] rectangle (float64 Columns over ``df``) overlaps, keyed by
+    a new ``_cell`` column — rows by sequence()+explode, then columns, so
+    the (cells x rows) pair list is built JVM-side with no UDF. The range
+    bounds are projected once per input row, not re-evaluated inside the
+    explodes (the column range would otherwise be recomputed per row)."""
+    from pyspark.sql import functions as F
+
+    n = 1 << res
+    r0, c0 = cell_rowcol_col(lat0, lng0, res)
+    r1, c1 = cell_rowcol_col(lat1, lng1, res)
+    return (
+        df.select(*df.columns, r0.alias("_r0"), r1.alias("_r1"), c0.alias("_c0"),
+                  c1.alias("_c1"))
+        .withColumn("_row", F.explode(F.sequence("_r0", "_r1")))
+        .withColumn("_col", F.explode(F.sequence("_c0", "_c1")))
+        .select(*df.columns, (F.col("_row") * n + F.col("_col")).alias("_cell"))
+    )
 
 
 # ---------------------------------------------------------------------------

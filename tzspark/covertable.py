@@ -54,6 +54,8 @@ from .cells import (
     assign_points,
     cell_id_col,
     cell_id_parent,
+    cell_rowcol_col,
+    explode_rect_cells,
 )
 from .geom import F32
 
@@ -458,25 +460,9 @@ def assign_images_via_join(
 # ---------------------------------------------------------------------------
 
 
-def _grid_rowcol_range(lat_lo, lat_hi, lng_lo, lng_hi, res: int):
-    """(row0, row1, col0, col1) Columns of the grid cells a [lat_lo,lat_hi] x
-    [lng_lo,lng_hi] rectangle overlaps at ``res`` — the same clamp-to-domain
-    arithmetic as cells.cell_id_col, applied to a range instead of a point."""
-    n = 1 << res
-
-    def _row(x):
-        return F.least(
-            F.greatest(F.floor((x + 90.0) / 180.0 * n).cast("bigint"), F.lit(0)),
-            F.lit(n - 1),
-        )
-
-    def _col(x):
-        return F.least(
-            F.greatest(F.floor((x + 180.0) / 360.0 * n).cast("bigint"), F.lit(0)),
-            F.lit(n - 1),
-        )
-
-    return _row(lat_lo), _row(lat_hi), _col(lng_lo), _col(lng_hi)
+def _f64(c: str):
+    """Float32-truncated coordinate column as float64 (the oracle's cast)."""
+    return F.col(c).cast("float").cast("double")
 
 
 def radius_join(
@@ -496,7 +482,7 @@ def radius_join(
     Grid-blocked and fully relational, nothing broadcast: each side
     enumerates the grid cells its search rectangle overlaps at resolution
     ``res`` (the zone side its bbox, the point side the [lat+-r, lng+-r]
-    disc bound) via sequence()+explode, and candidates meet in a cell
+    disc bound) via cells.explode_rect_cells, and candidates meet in a cell
     equi-join. Any zone within r of a point has a bbox intersecting the
     point's rectangle, and two overlapping rectangles always share at least
     one grid cell both enumerated — so the candidate set is complete while
@@ -513,41 +499,24 @@ def radius_join(
 
     Returns (key, zone_id:int, dist2:double) — one row per qualifying pair.
     """
-    n = 1 << res
     r = float(radius)
-
-    la = F.col(lat_col).cast("float").cast("double")
-    lg = F.col(lng_col).cast("float").cast("double")
-    pr0, pr1, pc0, pc1 = _grid_rowcol_range(la - r, la + r, lg - r, lg + r, res)
-    p = (
+    p = explode_rect_cells(
         points.select(
             F.col(key_col).alias("_k"),
-            la.alias("_lat"),
-            lg.alias("_lng"),
-            pr0.alias("_r0"), pr1.alias("_r1"), pc0.alias("_c0"), pc1.alias("_c1"),
-        )
-        .withColumn("_row", F.explode(F.sequence("_r0", "_r1")))
-        .withColumn("_col", F.explode(F.sequence("_c0", "_c1")))
-        .select("_k", "_lat", "_lng", (F.col("_row") * n + F.col("_col")).alias("_cell"))
+            _f64(lat_col).alias("_lat"),
+            _f64(lng_col).alias("_lng"),
+        ),
+        F.col("_lat") - r, F.col("_lat") + r, F.col("_lng") - r, F.col("_lng") + r,
+        res,
     )
-
-    zr0, zr1, zc0, zc1 = _grid_rowcol_range(
-        F.col("min_lat"), F.col("max_lat"), F.col("min_lng"), F.col("max_lng"), res
-    )
-    z = (
+    z = explode_rect_cells(
         zones_bbox.select(
             F.col("zone_id").cast("int").alias("zone_id"),
             "min_lat", "min_lng", "max_lat", "max_lng",
-            zr0.alias("_r0"), zr1.alias("_r1"), zc0.alias("_c0"), zc1.alias("_c1"),
-        )
-        .withColumn("_row", F.explode(F.sequence("_r0", "_r1")))
-        .withColumn("_col", F.explode(F.sequence("_c0", "_c1")))
-        .select(
-            "zone_id", "min_lat", "min_lng", "max_lat", "max_lng",
-            (F.col("_row") * n + F.col("_col")).alias("_cell"),
-        )
+        ),
+        F.col("min_lat"), F.col("max_lat"), F.col("min_lng"), F.col("max_lng"),
+        res,
     )
-
     j = p.join(z.hint("shuffle_hash"), "_cell")
     dlat = F.greatest(
         F.col("min_lat") - F.col("_lat"), F.col("_lat") - F.col("max_lat"), F.lit(0.0)
@@ -582,6 +551,43 @@ def _blocking_res(res: int, radius: float) -> int:
     return max(res, min(fine, 20))
 
 
+def _pairs_within(a, b, radius, res, a_keys=None, where=None):
+    """Asymmetric cell blocking, the one core of the point-pair joins:
+    every (a, b) row pair whose f64 Euclidean distance between
+    (_lat_a, _lng_a) and (_lat_b, _lng_b) is <= ``radius``, with its
+    ``dist2``.
+
+    The A side enumerates every grid cell its [lat+-r, lng+-r] rectangle
+    overlaps (explode_rect_cells); the B side maps each point to its single
+    containing cell. If |a-b| <= r then b's point lies inside a's
+    rectangle, so b's one cell is among a's cells — complete — and because
+    B contributes exactly one cell per point, each candidate pair arises in
+    exactly one cell: no distinct needed. ``a_keys`` maps further join keys
+    to an array Column over A that is exploded after the cells (B must
+    carry each key as one value); ``where`` is an extra pair predicate.
+    Candidates are bounded by points-per-cell x cells-per-rectangle;
+    dense-cell skew is ordinary join skew (AQE-splittable), never |A| x |B|.
+    The blocking grid is refined by _blocking_res first (the output does
+    not depend on it)."""
+    res = _blocking_res(res, radius)
+    r = float(radius)
+    a_keys = a_keys or {}
+    la, lg = F.col("_lat_a"), F.col("_lng_a")
+    a = explode_rect_cells(a, la - r, la + r, lg - r, lg + r, res)
+    for k, seq in a_keys.items():
+        a = a.withColumn(k, F.explode(seq))
+    row, col = cell_rowcol_col(F.col("_lat_b"), F.col("_lng_b"), res)
+    b = b.withColumn("_cell", row * (1 << res) + col)
+    j = a.join(b.hint("shuffle_hash"), ["_cell", *a_keys])
+    if where is not None:
+        j = j.where(where)
+    dlat = F.col("_lat_a") - F.col("_lat_b")
+    dlng = F.col("_lng_a") - F.col("_lng_b")
+    return j.withColumn("dist2", dlat * dlat + dlng * dlng).where(
+        F.col("dist2") <= r * r
+    )
+
+
 def proximity_self_join(
     points: DataFrame,
     key_col: str,
@@ -593,53 +599,22 @@ def proximity_self_join(
     """Spatial self-join: every unordered pair of points within ``radius``
     degrees (exact Euclidean on float32-truncated coords) — the geo analog
     of the near-duplicate operators (queries_text), e.g. "image pairs taken
-    at the same spot".
-
-    Blocking is asymmetric, which makes dedup free: the LEFT side
-    enumerates every grid cell its [lat+-r, lng+-r] rectangle overlaps
-    (sequence()+explode, as in radius_join); the RIGHT side maps each point
-    to its single containing cell. If |a-b| <= r then b's point lies inside
-    a's rectangle, so b's one cell is among a's enumerated cells — complete
-    — and because the right side contributes exactly one cell per point,
-    each candidate pair arises in exactly one cell: no distinct needed.
-    ``a.key < b.key`` keeps one orientation. Candidates are bounded by
-    points-per-cell x cells-per-rectangle; dense-cell skew is ordinary join
-    skew (AQE-splittable), never |N|^2.
+    at the same spot". Cell-blocked by _pairs_within (each pair arises in
+    one cell); ``a.key < b.key`` keeps one orientation.
 
     Returns (id_a, id_b, dist2:double), id_a < id_b.
     """
-    res = _blocking_res(res, radius)
-    n = 1 << res
-    r = float(radius)
-
-    la = F.col(lat_col).cast("float").cast("double")
-    lg = F.col(lng_col).cast("float").cast("double")
-    r0, r1, c0, c1 = _grid_rowcol_range(la - r, la + r, lg - r, lg + r, res)
-    a = (
-        points.select(
-            F.col(key_col).alias("id_a"), la.alias("_lat_a"), lg.alias("_lng_a"),
-            r0.alias("_r0"), r1.alias("_r1"), c0.alias("_c0"), c1.alias("_c1"),
-        )
-        .withColumn("_row", F.explode(F.sequence("_r0", "_r1")))
-        .withColumn("_col", F.explode(F.sequence("_c0", "_c1")))
-        .select(
-            "id_a", "_lat_a", "_lng_a",
-            (F.col("_row") * n + F.col("_col")).alias("_cell"),
-        )
+    a = points.select(
+        F.col(key_col).alias("id_a"),
+        _f64(lat_col).alias("_lat_a"), _f64(lng_col).alias("_lng_a"),
     )
     b = points.select(
-        F.col(key_col).alias("id_b"), la.alias("_lat_b"), lg.alias("_lng_b"),
-        cell_id_col(F.col(lat_col), F.col(lng_col), res).alias("_cell"),
+        F.col(key_col).alias("id_b"),
+        _f64(lat_col).alias("_lat_b"), _f64(lng_col).alias("_lng_b"),
     )
-    j = a.join(b.hint("shuffle_hash"), "_cell").where(F.col("id_a") < F.col("id_b"))
-    dlat = F.col("_lat_a") - F.col("_lat_b")
-    dlng = F.col("_lng_a") - F.col("_lng_b")
-    d2 = dlat * dlat + dlng * dlng
-    return (
-        j.withColumn("dist2", d2)
-        .where(F.col("dist2") <= r * r)
-        .select("id_a", "id_b", "dist2")
-    )
+    return _pairs_within(
+        a, b, radius, res, where=F.col("id_a") < F.col("id_b")
+    ).select("id_a", "id_b", "dist2")
 
 
 def point_pairs_within(
@@ -654,52 +629,27 @@ def point_pairs_within(
     carry_cols: list = None,
 ) -> DataFrame:
     """Two-set point radius join: every (left, right) pair within ``radius``
-    degrees — proximity_self_join's asymmetric blocking without the
-    self-dedup. The LEFT side enumerates every grid cell its [lat+-r,
-    lng+-r] rectangle overlaps; the RIGHT side maps each point to its one
-    containing cell, so each qualifying pair arises in exactly one cell
-    (complete, duplicate-free, never |L| x |R|). ``carry_cols`` names right
-    columns to keep on the pairs (e.g. the site's measurement for IDW).
+    degrees — proximity_self_join's asymmetric blocking (_pairs_within)
+    without the self-dedup; the LEFT side enumerates its rectangle's cells,
+    so each qualifying pair arises in exactly one cell. ``carry_cols``
+    names right columns to keep on the pairs (e.g. the site's measurement
+    for IDW).
 
     Returns (<left_key>, <right_key>, dist2:double, *carry_cols).
     """
-    res = _blocking_res(res, radius)
-    n = 1 << res
-    r = float(radius)
     carry_cols = carry_cols or []
-
-    la = F.col(lat_col).cast("float").cast("double")
-    lg = F.col(lng_col).cast("float").cast("double")
-    r0, r1, c0, c1 = _grid_rowcol_range(la - r, la + r, lg - r, lg + r, res)
-    a = (
-        left.select(
-            F.col(left_key).alias("_kl"), la.alias("_lat_a"), lg.alias("_lng_a"),
-            r0.alias("_r0"), r1.alias("_r1"), c0.alias("_c0"), c1.alias("_c1"),
-        )
-        .withColumn("_row", F.explode(F.sequence("_r0", "_r1")))
-        .withColumn("_col", F.explode(F.sequence("_c0", "_c1")))
-        .select(
-            "_kl", "_lat_a", "_lng_a",
-            (F.col("_row") * n + F.col("_col")).alias("_cell"),
-        )
+    a = left.select(
+        F.col(left_key).alias("_kl"),
+        _f64(lat_col).alias("_lat_a"), _f64(lng_col).alias("_lng_a"),
     )
     b = right.select(
-        F.col(right_key).alias("_kr"), la.alias("_lat_b"), lg.alias("_lng_b"),
-        cell_id_col(F.col(lat_col), F.col(lng_col), res).alias("_cell"),
+        F.col(right_key).alias("_kr"),
+        _f64(lat_col).alias("_lat_b"), _f64(lng_col).alias("_lng_b"),
         *carry_cols,
     )
-    j = a.join(b.hint("shuffle_hash"), "_cell")
-    dlat = F.col("_lat_a") - F.col("_lat_b")
-    dlng = F.col("_lng_a") - F.col("_lng_b")
-    return (
-        j.withColumn("dist2", dlat * dlat + dlng * dlng)
-        .where(F.col("dist2") <= r * r)
-        .select(
-            F.col("_kl").alias(left_key),
-            F.col("_kr").alias(right_key),
-            "dist2",
-            *carry_cols,
-        )
+    return _pairs_within(a, b, radius, res).select(
+        F.col("_kl").alias(left_key), F.col("_kr").alias(right_key), "dist2",
+        *carry_cols,
     )
 
 
@@ -733,59 +683,31 @@ def colocation_pairs(
     Returns (id_a, id_b, user_a, user_b, dist2:double, dt_us:long),
     id_a < id_b.
     """
-    res = _blocking_res(res, radius)
-    n = 1 << res
-    r = float(radius)
     w_us = int(window_s) * 1_000_000
-
-    la = F.col(lat_col).cast("float").cast("double")
-    lg = F.col(lng_col).cast("float").cast("double")
     # NTZ-safe epoch microseconds (unix_micros rejects TIMESTAMP_NTZ)
     epoch = F.to_timestamp(F.lit("1970-01-01 00:00:00"))
     tus = F.timestamp_diff("MICROSECOND", epoch, F.col(ts_col))
-    r0, r1, c0, c1 = _grid_rowcol_range(la - r, la + r, lg - r, lg + r, res)
-    a = (
-        events.select(
-            F.col(key_col).alias("id_a"), F.col(user_col).alias("user_a"),
-            la.alias("_lat_a"), lg.alias("_lng_a"), tus.alias("_t_a"),
-            r0.alias("_r0"), r1.alias("_r1"), c0.alias("_c0"), c1.alias("_c1"),
-        )
-        .withColumn("_row", F.explode(F.sequence("_r0", "_r1")))
-        .withColumn("_col", F.explode(F.sequence("_c0", "_c1")))
-        .withColumn(
-            "_tb",
-            F.explode(
-                F.sequence(
-                    F.expr(f"(_t_a - {w_us}) DIV {w_us}"),
-                    F.expr(f"(_t_a + {w_us}) DIV {w_us}"),
-                )
-            ),
-        )
-        .select(
-            "id_a", "user_a", "_lat_a", "_lng_a", "_t_a", "_tb",
-            (F.col("_row") * n + F.col("_col")).alias("_cell"),
-        )
+    a = events.select(
+        F.col(key_col).alias("id_a"), F.col(user_col).alias("user_a"),
+        _f64(lat_col).alias("_lat_a"), _f64(lng_col).alias("_lng_a"),
+        tus.alias("_t_a"),
     )
     b = events.select(
         F.col(key_col).alias("id_b"), F.col(user_col).alias("user_b"),
-        la.alias("_lat_b"), lg.alias("_lng_b"), tus.alias("_t_b"),
-        (tus - (tus % w_us)).cast("long").alias("_tbw"),
-        cell_id_col(F.col(lat_col), F.col(lng_col), res).alias("_cell"),
-    ).withColumn("_tb", F.expr(f"_tbw DIV {w_us}")).drop("_tbw")
-    j = (
-        a.join(b.hint("shuffle_hash"), ["_cell", "_tb"])
-        .where(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("user_a") != F.col("user_b"))
-        )
+        _f64(lat_col).alias("_lat_b"), _f64(lng_col).alias("_lng_b"),
+        tus.alias("_t_b"),
+    ).withColumn("_tb", F.expr(f"(_t_b - _t_b % {w_us}) DIV {w_us}"))
+    tb_a = F.sequence(
+        F.expr(f"(_t_a - {w_us}) DIV {w_us}"), F.expr(f"(_t_a + {w_us}) DIV {w_us}")
     )
-    dlat = F.col("_lat_a") - F.col("_lat_b")
-    dlng = F.col("_lng_a") - F.col("_lng_b")
-    return (
-        j.withColumn("dist2", dlat * dlat + dlng * dlng)
-        .withColumn("dt_us", F.abs(F.col("_t_a") - F.col("_t_b")))
-        .where((F.col("dist2") <= r * r) & (F.col("dt_us") <= w_us))
-        .select("id_a", "id_b", "user_a", "user_b", "dist2", "dt_us")
+    dt_us = F.abs(F.col("_t_a") - F.col("_t_b"))
+    where = (
+        (F.col("id_a") < F.col("id_b"))
+        & (F.col("user_a") != F.col("user_b"))
+        & (dt_us <= w_us)
+    )
+    return _pairs_within(a, b, radius, res, a_keys={"_tb": tb_a}, where=where).select(
+        "id_a", "id_b", "user_a", "user_b", "dist2", dt_us.alias("dt_us")
     )
 
 

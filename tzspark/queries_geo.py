@@ -21,7 +21,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .cells import Zone, cell_id_col, cell_id_sql, compile_cover
+from .cells import (
+    Zone,
+    _ragged_ramp,
+    cell_id_col,
+    cell_id_sql,
+    cell_rowcol_col,
+    compile_cover,
+    explode_rect_cells,
+)
 from .geom import F32
 
 # ---------------------------------------------------------------------------
@@ -1465,51 +1473,14 @@ def q67_clip_conservation(spark, sf_dir):
     from .geom import clip_ring_rect, ring_area_signed
 
     RES = _Q67_RES
-    n = 1 << RES
     zt = zone_table_df(spark, _q67_zones())
     pairs = (
-        zt.withColumn(
-            "r0",
-            F.greatest(
-                F.floor((F.col("min_lat") + 90.0) / 180.0 * n).cast("bigint"),
-                F.lit(0),
-            ),
+        explode_rect_cells(
+            zt, F.col("min_lat"), F.col("max_lat"), F.col("min_lng"),
+            F.col("max_lng"), RES,
         )
-        .withColumn(
-            "r1",
-            F.least(
-                F.floor((F.col("max_lat") + 90.0) / 180.0 * n).cast("bigint"),
-                F.lit(n - 1),
-            ),
-        )
-        .withColumn(
-            "c0",
-            F.greatest(
-                F.floor((F.col("min_lng") + 180.0) / 360.0 * n).cast("bigint"),
-                F.lit(0),
-            ),
-        )
-        .withColumn(
-            "c1",
-            F.least(
-                F.floor((F.col("max_lng") + 180.0) / 360.0 * n).cast("bigint"),
-                F.lit(n - 1),
-            ),
-        )
-        .select(
-            "zone_id",
-            "tzid",
-            "lats",
-            "lngs",
-            F.explode(F.sequence("r0", "r1")).alias("crow"),
-            "c0",
-            "c1",
-        )
-        .select(
-            "zone_id", "tzid", "lats", "lngs", "crow",
-            F.explode(F.sequence("c0", "c1")).alias("ccol"),
-        )
-        .repartition(8, "zone_id", "crow", "ccol")
+        .select("zone_id", "tzid", "lats", "lngs", "_cell")
+        .repartition(8, "zone_id", "_cell")
     )
 
     out_schema = "zone_id int, tzid string, partial double"
@@ -1519,11 +1490,11 @@ def q67_clip_conservation(spark, sf_dir):
             if len(pdf) == 0:
                 continue
             acc = {}
-            for zid, tzid, lats, lngs, crow, ccol in zip(
-                pdf["zone_id"], pdf["tzid"], pdf["lats"], pdf["lngs"],
-                pdf["crow"], pdf["ccol"],
+            for zid, tzid, lats, lngs, cell in zip(
+                pdf["zone_id"], pdf["tzid"], pdf["lats"], pdf["lngs"], pdf["_cell"]
             ):
-                lat0, lng0, lat1, lng1 = cell_bounds(int(crow), int(ccol), RES)
+                crow, ccol = divmod(int(cell), 1 << RES)
+                lat0, lng0, lat1, lng1 = cell_bounds(crow, ccol, RES)
                 fy, fx = clip_ring_rect(lats, lngs, lat0, lng0, lat1, lng1)
                 a = ring_area_signed(fy, fx)
                 k = (int(zid), tzid)
@@ -2089,16 +2060,8 @@ def morton30_col(lat_col, lng_col):
     the odd (more significant) bit lanes — geohash bit order. Pure JVM
     integer ops, zero UDFs; the same code is both the geohash payload and
     the Z-order locality key (q80)."""
-    n = 1 << 15
-    lat64 = lat_col.cast("float").cast("double")
-    lng64 = lng_col.cast("float").cast("double")
-    li = F.least(
-        F.greatest(F.floor((lat64 + 90.0) / 180.0 * n).cast("bigint"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    gi = F.least(
-        F.greatest(F.floor((lng64 + 180.0) / 360.0 * n).cast("bigint"), F.lit(0)),
-        F.lit(n - 1),
+    li, gi = cell_rowcol_col(
+        lat_col.cast("float").cast("double"), lng_col.cast("float").cast("double"), 15
     )
     return F.shiftleft(_spread_bits_col(gi), 1).bitwiseOR(_spread_bits_col(li))
 
@@ -2443,7 +2406,6 @@ def overlay_join_zones(spark, zones_a, zones_b, grid_bits: int = 3):
     from .engine import zone_table_df
     from .geom import F32, clip_rings_rect_batch
 
-    n = 1 << grid_bits
     za = zone_table_df(spark, zones_a)
     zb = zone_table_df(spark, zones_b).select(
         F.col("zone_id").alias("b_zone"),
@@ -2453,27 +2415,16 @@ def overlay_join_zones(spark, zones_a, zones_b, grid_bits: int = 3):
         F.col("max_lng").alias("b_lng1"),
     )
 
-    def cells_of(df, lat0, lng0, lat1, lng1):
-        r0 = F.greatest(F.floor((F.col(lat0) + 90.0) / 180.0 * n), F.lit(0)).cast("long")
-        r1 = F.least(F.floor((F.col(lat1) + 90.0) / 180.0 * n), F.lit(n - 1)).cast("long")
-        c0 = F.greatest(F.floor((F.col(lng0) + 180.0) / 360.0 * n), F.lit(0)).cast("long")
-        c1 = F.least(F.floor((F.col(lng1) + 180.0) / 360.0 * n), F.lit(n - 1)).cast("long")
-        return df.withColumn(
-            "cell",
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.sequence(r0, r1),
-                        lambda r: F.transform(F.sequence(c0, c1), lambda c: r * n + c),
-                    )
-                )
-            ),
-        )
-
-    ca = cells_of(za, "min_lat", "min_lng", "max_lat", "max_lng")
-    cb = cells_of(zb, "b_lat0", "b_lng0", "b_lat1", "b_lng1")
+    ca = explode_rect_cells(
+        za, F.col("min_lat"), F.col("max_lat"), F.col("min_lng"), F.col("max_lng"),
+        grid_bits,
+    )
+    cb = explode_rect_cells(
+        zb, F.col("b_lat0"), F.col("b_lat1"), F.col("b_lng0"), F.col("b_lng1"),
+        grid_bits,
+    )
     pairs = (
-        ca.join(cb, "cell")
+        ca.join(cb, "_cell")
         .where(
             (F.col("min_lat") < F.col("b_lat1"))
             & (F.col("b_lat0") < F.col("max_lat"))
@@ -2497,15 +2448,8 @@ def overlay_join_zones(spark, zones_a, zones_b, grid_bits: int = 3):
         vmax = int(counts.max()) if p else 0
         pad = np.zeros((p, vmax))
         if vmax:
-            colidx = np.arange(vmax, dtype=np.int64)
-            mask = colidx[None, :] < counts[:, None]
-            within = (
-                np.arange(int(counts.sum()), dtype=np.int64)
-                - np.repeat(np.cumsum(counts) - counts, counts)
-            )
-            pad[mask] = vals[np.repeat(off[:-1], counts) + within].astype(
-                np.float64
-            )
+            mask = np.arange(vmax)[None, :] < counts[:, None]
+            pad[mask] = vals[_ragged_ramp(off[:-1], counts)].astype(np.float64)
         return pad, counts
 
     def _clip(batches):

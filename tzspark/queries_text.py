@@ -844,12 +844,13 @@ def min_label_cc(edges, max_rounds: int = 32, nodes=None, _contract: bool = True
 
     Two scale optimizations (round 6), both result-identical:
 
-    * The edge table is materialized ONCE, pre-partitioned on ``src``
-      (localCheckpoint preserves the hash partitioning into the checkpoint
-      RDD), so the per-round neighbor-min join re-reads cached blocks
-      instead of re-evaluating + re-shuffling the (possibly expensive)
-      upstream edge plan every round — the defect behind the 1M geo-DBSCAN
-      row's 81-97 s/rep (VERDICT r5 item 2).
+    * The edge table is materialized ONCE (repartitioned on ``src``, then
+      localCheckpoint), so every round's joins re-read cached blocks
+      instead of re-evaluating the (possibly expensive) upstream edge plan
+      — the defect behind the 1M geo-DBSCAN row's 81-97 s/rep (VERDICT r5
+      item 2); pinned in tests/test_cc_rounds.py. The checkpoint scan
+      reports no partitioning (UnknownPartitioning), so a round join that
+      does not broadcast the delta still shuffles the edges.
     * FRONTIER filtering: the neighbor-min only joins labels that CHANGED
       last round. Monotonicity makes this exact: labels only decrease, and
       a neighbor u last changed in round s was folded into v's label in
