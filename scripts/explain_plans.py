@@ -44,6 +44,23 @@ def plan_of(df) -> str:
     )
 
 
+def stable_ids(plan: str) -> str:
+    """Renumber the run-to-run counters in one plan from 1, in order of
+    first appearance — Spark's session-global expression ids (``name#123``)
+    and ``plan_id=N``, and random UUIDs (streaming run ids) — and mask the
+    random suffix of this script's mkdtemp dirs, so a regenerated PLANS.md
+    differs only where a plan does."""
+    plan = re.sub(r"(/plans_[a-z]+_)[a-z0-9_]{8}\b", r"\1XXXXXXXX", plan)
+    uuid = r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b"
+    for pat, fmt in ((r"(?<=#)\d+", "{}"), (r"(?<=plan_id=)\d+", "{}"),
+                     (uuid, "uuid-{}")):
+        ids = {}
+        plan = re.sub(
+            pat, lambda m: fmt.format(ids.setdefault(m.group(0), len(ids) + 1)), plan
+        )
+    return plan
+
+
 def main():
     spark = get_spark(app="plans", master="local[4]", shuffle_partitions=8,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
@@ -734,7 +751,7 @@ def main():
         "with `python scripts/explain_plans.py`.\n"
     )
     for title, plan in sections:
-        out.append(f"\n## {title}\n\n```\n{plan}\n```\n")
+        out.append(f"\n## {title}\n\n```\n{stable_ids(plan)}\n```\n")
     out.append("\n## Assertions\n")
     if failures:
         out.append("\n".join(f"- FAIL: {f}" for f in failures) + "\n")

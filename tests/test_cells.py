@@ -213,6 +213,26 @@ def test_nan_coordinates_get_no_zone(spark, zones, idx):
     ]
 
 
+def test_non_finite_points_resolve_to_no_zone():
+    """NaN and infinite coordinates are inside no ring (the oracle's ray
+    cast), though cell_id clamps them into border cells. Here a zone that
+    reaches past the domain fully claims every cell, border cells too, so
+    only resolve_points' explicit guard keeps them out; finite points in
+    the batch still resolve."""
+    from tzspark.cells import Zone
+
+    globe = Zone(
+        7, "Globe",
+        np.array([-100, -100, 100, 100], F32), np.array([-200, 200, 200, -200], F32),
+    )
+    idx = compile_cover([globe], base_res=2, max_res=4)
+    lat = np.array([np.nan, 10.0, np.nan, np.inf, -np.inf, 5.0, 0.0, 10.0], F32)
+    lng = np.array([10.0, np.nan, np.nan, 10.0, 10.0, np.inf, -np.inf, 20.0], F32)
+    want, _ = oracle_resolve([globe], lat, lng)
+    assert want.tolist() == [-1] * 7 + [7]
+    assert resolve_points(idx, lat, lng).tolist() == want.tolist()
+
+
 def test_cell_children_introspection(zones, idx):
     """R7: cell_children must agree with the probe — the resolved zone of an
     interior point appears in a full-claim list of its ancestor chain; a

@@ -79,8 +79,10 @@ def test_cell_id_column_matches_numpy(assigned):
     lng_v += [180.0, -180.0, np.nextafter(180.0, 181), np.nextafter(-180.0, -181),
               180.00001, -180.00001, 180.5, -180.5, 181.0, -181.0, 45.0 + 1e-9]
     n = len(lat_v) + len(lng_v)
-    lat = np.array([lat_v[i % len(lat_v)] for i in range(n)])
-    lng = np.array([lng_v[(7 * i) % len(lng_v)] for i in range(n)])
+    # NaN latitude, NaN longitude and both: Spark's floor(NaN) cast to
+    # bigint is 0, which cell_id must reproduce (then clamped like any row)
+    lat = np.array([lat_v[i % len(lat_v)] for i in range(n)] + [np.nan, 10.0, np.nan])
+    lng = np.array([lng_v[(7 * i) % len(lng_v)] for i in range(n)] + [10.0, np.nan, np.nan])
     df = assigned.sparkSession.createDataFrame(
         [(float(a), float(b)) for a, b in zip(lat, lng)], "lat double, lng double"
     )

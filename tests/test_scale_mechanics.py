@@ -99,8 +99,8 @@ def test_facade_assign_bucketed_join_no_shuffle(spark, tmp_path):
 
 
 def test_spark_distributed_compile_identical(spark):
-    """compile_cover_spark (per-zone cover fanned out as a Spark job) must
-    produce a byte-identical index to the driver-side compile."""
+    """compile_cover_spark (the cover fanned out over zone slices as a Spark
+    job) must produce a byte-identical index to the driver-side compile."""
     import pickle
 
     from tzspark.cells import compile_cover, compile_cover_spark

@@ -22,8 +22,9 @@ def world():
     t0 = time.time()
     # explicit workers= so the budget measures the PROCESS-POOL compiler
     # deterministically: in the full suite a live local[4] Spark session
-    # exists and auto mode would route the compile through it (~4 threads,
-    # 60-90s — a different, slower code path that made the budget flaky)
+    # exists and auto mode would route the compile through it
+    # (compile_cover_spark, ~1.5 s on a 4-vCPU host — a different code
+    # path, whose timing once made the budget flaky)
     idx = compile_cover(zones, workers=16)
     compile_s = time.time() - t0
     if compile_s >= 120.0:
@@ -42,10 +43,10 @@ def test_world_compile_and_broadcast_budget(world):
     zones, idx, compile_s = world
     assert idx.stats["zones"] == 24_000
     assert idx.stats["edges"] == 4_800_000
-    # regression tripwire, not a benchmark: typical pooled compile is
-    # 13-30 s, serial ~60 s; the budget catches an order-of-magnitude
-    # blowup while tolerating this box's CPU-steal/GC noise (BASELINE.md
-    # records the measured times)
+    # regression tripwire, not a benchmark: the pooled compile (workers=16)
+    # measures ~1.3 s on a 4-vCPU host, serial ~1.9 s, 4-process auto pool
+    # ~1.1 s; the budget catches an order-of-magnitude blowup while
+    # tolerating this box's CPU-steal/GC noise
     assert compile_s < 120.0, f"cover compile took {compile_s:.1f}s"
     blob_mb = len(pickle.dumps(idx)) / 1e6
     assert blob_mb < 200.0, f"broadcast pickle {blob_mb:.1f} MB"

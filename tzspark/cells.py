@@ -34,11 +34,9 @@ import numpy as np
 
 from .geom import (
     F32,
-    contains_batch_edges,
     ragged_parity,
     ring_bbox,
     ring_edges,
-    segment_bbox_overlaps_rect,
 )
 
 DEFAULT_BASE_RES = 4
@@ -59,13 +57,17 @@ INDEX_FORMAT_VERSION = 5  # v5: zone_edge_off spans + b_edge_idx always kept
 
 
 def cell_rowcol(lat, lng, res: int):
-    """(row, col) at resolution ``res``; float64 math from float32 coords."""
+    """(row, col) at resolution ``res``; float64 math from float32 coords.
+
+    Clamped with fmax/fmin, which take the bound for a NaN: a NaN
+    coordinate lands in row/col 0 like Spark's floor(NaN) cast to bigint
+    (0) in cell_id_col, instead of an undefined int64 cast."""
     n = 1 << res
     lat64 = np.asarray(lat, dtype=F32).astype(np.float64)
     lng64 = np.asarray(lng, dtype=F32).astype(np.float64)
-    row = np.clip(np.floor((lat64 + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
-    col = np.clip(np.floor((lng64 + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-    return row, col
+    row = np.fmin(np.fmax(np.floor((lat64 + 90.0) / 180.0 * n), 0), n - 1)
+    col = np.fmin(np.fmax(np.floor((lng64 + 180.0) / 360.0 * n), 0), n - 1)
+    return row.astype(np.int64), col.astype(np.int64)
 
 
 def cell_id(lat, lng, res: int):
@@ -231,11 +233,11 @@ class CompiledIndex:
     stats: dict = field(default_factory=dict)
 
 
-_ULPS = 4  # float32 slack on cell bounds (see _inflate)
+_ULPS = 4  # float32 slack on cell bounds (see _inflate_arrays)
 
 
-def _inflate(lo: float, hi: float):
-    """Widen an interval outward by a few float32 ulps.
+def _inflate_arrays(lo: np.ndarray, hi: np.ndarray):
+    """Widen each [lo, hi] interval outward by _ULPS float32 ulps.
 
     The reference PIP compares against a float32-ROUNDED ray intersection t
     (polygon.go:113-116), which can exceed the exact edge max-lat by 1-2
@@ -243,16 +245,9 @@ def _inflate(lo: float, hi: float):
     therefore drop an edge that the rounded kernel would still count for a
     point within ulps of a cell boundary. Inflating keeps the kept-edge set
     and the boundary classification a SUPERSET under f32 rounding — supersets
-    only cost compactness, never correctness."""
-    lo32, hi32 = F32(lo), F32(hi)
-    for _ in range(_ULPS):
-        lo32 = np.nextafter(lo32, F32(-np.inf), dtype=F32)
-        hi32 = np.nextafter(hi32, F32(np.inf), dtype=F32)
-    return float(lo32), float(hi32)
-
-
-def _inflate_arrays(lo: np.ndarray, hi: np.ndarray):
-    """Vectorized _inflate: widen [lo, hi] outward by _ULPS float32 ulps."""
+    only cost compactness, never correctness. Monotone in its inputs (an
+    f32 rounding, then nextafter steps), so a child cell's inflated bounds
+    lie inside its parent's."""
     lo32 = lo.astype(F32)
     hi32 = hi.astype(F32)
     for _ in range(_ULPS):
@@ -261,68 +256,80 @@ def _inflate_arrays(lo: np.ndarray, hi: np.ndarray):
     return lo32.astype(np.float64), hi32.astype(np.float64)
 
 
-def _classify_rect(zone_edges, zbbox, lat0, lng0, lat1, lng1):
-    """-> ('out' | 'full' | 'maybe', relevant_edge_mask)."""
-    lat0i, lat1i = _inflate(lat0, lat1)
-    lng0i, lng1i = _inflate(lng0, lng1)
-    zmin_lat, zmin_lng, zmax_lat, zmax_lng = zbbox
-    if zmax_lat < lat0i or zmin_lat > lat1i or zmax_lng < lng0i or zmin_lng > lng1i:
-        return "out", None
-    a_lat, a_lng, b_lat, b_lng = zone_edges
-    overlap = segment_bbox_overlaps_rect(
-        a_lat, a_lng, b_lat, b_lng, lat0i, lng0i, lat1i, lng1i
-    )
-    if not overlap.any():
-        # no boundary crosses the cell -> uniformly in or out; sample center
-        c_lat = F32((lat0 + lat1) / 2.0)
-        c_lng = F32((lng0 + lng1) / 2.0)
-        inside = contains_batch_edges(
-            a_lat, a_lng, b_lat, b_lng, np.array([c_lat]), np.array([c_lng])
-        )[0]
-        return ("full" if inside else "out"), None
-    return "maybe", overlap
+_COVER_PAIR_BUDGET = 500_000  # (cell, edge) pairs per chunk of _cover_zones
 
 
-_CLASSIFY_CHUNK = 4_000_000  # (cells x edges) bool elements per chunk
+def _chunk_bounds(counts: np.ndarray, budget: int) -> list:
+    """Consecutive [start, stop) row ranges whose ``counts`` sum to at most
+    ``budget`` (a single row over budget gets a range of its own)."""
+    cum = np.cumsum(counts, dtype=np.int64)
+    cuts = [0]
+    while cuts[-1] < len(cum):
+        base = cum[cuts[-1] - 1] if cuts[-1] else 0
+        nxt = int(np.searchsorted(cum, base + budget, side="right"))
+        cuts.append(max(nxt, cuts[-1] + 1))
+    return list(zip(cuts, cuts[1:]))
 
 
-def _zone_cover(zedges, zbbox, base_res: int, max_res: int):
-    """Level-synchronous quadtree cover of ONE zone, vectorized per level.
+def _cover_zones(edges, edge_off: np.ndarray, zone_bbox: np.ndarray,
+                 base_res: int, max_res: int):
+    """Level-synchronous quadtree cover of every zone of a flat edge table.
 
-    Classifies ALL frontier cells of a resolution in one numpy pass (cell-
-    bbox x edge-bbox overlap matrix, chunked; center-sample PIP batch for
-    non-crossing cells) instead of a per-cell Python loop — same predicates
-    and therefore the same cover as the scalar _classify_rect path, but
-    ~50x faster on reference-scale zone sets (~25k polygons).
+    ``edges`` is (a_lat, a_lng, b_lat, b_lng) float32, zone k owning rows
+    [edge_off[k], edge_off[k+1]); ``zone_bbox`` is its (Z, 4) float32 MBRs.
+    Zones with < 3 edges are degenerate rings that never match
+    (polygon.go:101-103) and get no cover.
 
-    Returns ({res: int64 cell-id array of full cells}, boundary list of
-    (cell_id, edge_subset_indices_local)).
+    One frontier of (zone, row, col) cells per resolution, for all zones
+    at once, starting from each zone's MBR rectangle at base_res. Per level
+    and cell, on float64 bounds widened by _inflate_arrays:
+      * out if the cell misses the zone's MBR;
+      * CROSSING if some edge's bbox overlaps the cell — crossing cells
+        subdivide into their 4 children, or at max_res become boundary
+        cells carrying their pruned edge subset: the edges that overlap the
+        cell in lng and are not entirely south of it (the only edges that
+        can flip the +lat ray cast of a point in the cell);
+      * otherwise no boundary crosses it, and the ray cast of its centre
+        decides the whole cell: in -> a full claim.
+    Each cell is tested against a CANDIDATE run of edges, not the zone's
+    whole ring: at base_res the zone's span, below it the parent's edges
+    that overlap the parent in lng. That drops no edge any test needs — a
+    child's inflated bounds lie inside its parent's, so an edge missing
+    the parent in lng misses the child too, and its ray-cast term for the
+    centre is exactly False (no straddle). Candidate runs keep ascending
+    edge order, so boundary subsets come out sorted. The (cell, candidate
+    edge) pairs are expanded in chunks of _COVER_PAIR_BUDGET.
+
+    Returns (full, boundary): ``full`` maps each res to (zone, cell) int64
+    arrays of full claims; ``boundary`` is (zone, cell, edge_cnt, edge_idx)
+    with one row per (zone, boundary cell) and edge_idx the rows' edge
+    subsets concatenated (row indices into ``edges``).
     """
-    a_lat, a_lng, b_lat, b_lng = zedges
+    a_lat, a_lng, b_lat, b_lng = edges
     e_min_lat = np.minimum(a_lat, b_lat).astype(np.float64)
     e_max_lat = np.maximum(a_lat, b_lat).astype(np.float64)
     e_min_lng = np.minimum(a_lng, b_lng).astype(np.float64)
     e_max_lng = np.maximum(a_lng, b_lng).astype(np.float64)
-    ne = e_min_lat.shape[0]
-    zmin_lat, zmin_lng, zmax_lat, zmax_lng = (float(v) for v in zbbox)
+    zmin_lat, zmin_lng, zmax_lat, zmax_lng = _bbox_cols(zone_bbox)
+    edge_off = np.asarray(edge_off, np.int64)
 
-    r0, _ = cell_rowcol(np.array([zbbox[0]]), np.array([zbbox[1]]), base_res)
-    r1, _ = cell_rowcol(np.array([zbbox[2]]), np.array([zbbox[3]]), base_res)
-    _, c0 = cell_rowcol(np.array([zbbox[0]]), np.array([zbbox[1]]), base_res)
-    _, c1 = cell_rowcol(np.array([zbbox[2]]), np.array([zbbox[3]]), base_res)
-    rr, cc = np.meshgrid(
-        np.arange(int(r0[0]), int(r1[0]) + 1, dtype=np.int64),
-        np.arange(int(c0[0]), int(c1[0]) + 1, dtype=np.int64),
-        indexing="ij",
-    )
-    rows, cols = rr.ravel(), cc.ravel()
+    # base-res rectangles over every live zone's MBR, row-major per zone
+    zone = np.flatnonzero(np.diff(edge_off) >= 3)
+    r0, c0 = cell_rowcol(zone_bbox[zone, 0], zone_bbox[zone, 1], base_res)
+    r1, c1 = cell_rowcol(zone_bbox[zone, 2], zone_bbox[zone, 3], base_res)
+    width = c1 - c0 + 1
+    ncell = (r1 - r0 + 1) * width
+    k = _ragged_ramp(np.zeros(len(zone), np.int64), ncell)
+    width = np.repeat(width, ncell)
+    rows = np.repeat(r0, ncell) + k // width
+    cols = np.repeat(c0, ncell) + k % width
+    zone = np.repeat(zone, ncell)
+    # each cell's candidate edges: the run [start, start + cnt) of ``pool``
+    pool = np.arange(len(a_lat), dtype=np.int64)
+    start, cnt = edge_off[zone], np.diff(edge_off)[zone]
 
     full = {}
-    boundary = []
     for res in range(base_res, max_res + 1):
-        if rows.shape[0] == 0:
-            full[res] = np.empty(0, np.int64)
-            continue
         n = 1 << res
         lat0 = -90.0 + 180.0 * rows / n
         lat1 = -90.0 + 180.0 * (rows + 1) / n
@@ -330,90 +337,59 @@ def _zone_cover(zedges, zbbox, base_res: int, max_res: int):
         lng1 = -180.0 + 360.0 * (cols + 1) / n
         lat0i, lat1i = _inflate_arrays(lat0, lat1)
         lng0i, lng1i = _inflate_arrays(lng0, lng1)
-
-        # zone-bbox gate (same as _classify_rect's early 'out')
         inb = ~(
-            (zmax_lat < lat0i) | (zmin_lat > lat1i)
-            | (zmax_lng < lng0i) | (zmin_lng > lng1i)
+            (zmax_lat[zone] < lat0i) | (zmin_lat[zone] > lat1i)
+            | (zmax_lng[zone] < lng0i) | (zmin_lng[zone] > lng1i)
         )
-        if not inb.any():
-            full[res] = np.empty(0, np.int64)
-            rows = cols = np.empty(0, np.int64)
-            continue
-        rows, cols = rows[inb], cols[inb]
-        lat0, lat1 = lat0[inb], lat1[inb]
-        lng0, lng1 = lng0[inb], lng1[inb]
-        lat0i, lat1i = lat0i[inb], lat1i[inb]
-        lng0i, lng1i = lng0i[inb], lng1i[inb]
+        zone, rows, cols, start, cnt = (
+            v[inb] for v in (zone, rows, cols, start, cnt)
+        )
+        lat0, lat1, lng0, lng1 = lat0[inb], lat1[inb], lng0[inb], lng1[inb]
+        lat0i, lat1i, lng0i, lng1i = (
+            lat0i[inb], lat1i[inb], lng0i[inb], lng1i[inb]
+        )
+        c_lat = ((lat0 + lat1) / 2.0).astype(F32)
+        c_lng = ((lng0 + lng1) / 2.0).astype(F32)
 
-        # any edge bbox overlapping each cell? (chunked C x E matrix)
-        ncells = rows.shape[0]
-        crosses = np.zeros(ncells, dtype=bool)
-        step = max(1, _CLASSIFY_CHUNK // max(ne, 1))
-        for s in range(0, ncells, step):
-            sl = slice(s, min(s + step, ncells))
-            m = (
-                (e_min_lat[None, :] <= lat1i[sl, None])
-                & (e_max_lat[None, :] >= lat0i[sl, None])
-                & (e_min_lng[None, :] <= lng1i[sl, None])
-                & (e_max_lng[None, :] >= lng0i[sl, None])
-            )
-            crosses[sl] = m.any(axis=1)
-
-        # non-crossing cells: one center sample decides the whole cell
-        nc = ~crosses
-        if nc.any():
-            c_lat = ((lat0[nc] + lat1[nc]) / 2.0).astype(F32)
-            c_lng = ((lng0[nc] + lng1[nc]) / 2.0).astype(F32)
-            inside = contains_batch_edges(a_lat, a_lng, b_lat, b_lng, c_lat, c_lng)
-            full[res] = (rows[nc][inside] * n + cols[nc][inside]).astype(np.int64)
-        else:
-            full[res] = np.empty(0, np.int64)
-
-        if res < max_res:
-            # subdivide crossing cells into their 4 children
-            rows, cols = rows[crosses], cols[crosses]
-            rows = np.repeat(rows * 2, 4) + np.tile([0, 0, 1, 1], rows.shape[0])
-            cols = np.repeat(cols * 2, 4) + np.tile([0, 1, 0, 1], cols.shape[0])
-        else:
-            # boundary cells: pruned edge subset per cell (_pip_edge_subset
-            # criterion: lng-range overlap, not entirely south — inflated)
-            b_rows = np.flatnonzero(crosses)
-            for k in b_rows:
-                keep = (
-                    (e_min_lng <= lng1i[k])
-                    & (e_max_lng >= lng0i[k])
-                    & (e_max_lat >= lat0i[k])
+        crosses = np.zeros(len(zone), dtype=bool)
+        inside = np.zeros(len(zone), dtype=bool)
+        kept, kept_cnt = [np.empty(0, np.int64)], np.zeros(len(zone), dtype=np.int64)
+        for s, e in _chunk_bounds(cnt, _COVER_PAIR_BUDGET):
+            pe = pool[_ragged_ramp(start[s:e], cnt[s:e])]
+            pc = np.repeat(np.arange(s, e, dtype=np.int64), cnt[s:e])
+            seg = np.cumsum(cnt[s:e]) - cnt[s:e]  # every run is non-empty
+            lng_ov = (e_min_lng[pe] <= lng1i[pc]) & (e_max_lng[pe] >= lng0i[pc])
+            north = e_max_lat[pe] >= lat0i[pc]
+            ov = lng_ov & north & (e_min_lat[pe] <= lat1i[pc])
+            crosses[s:e] = np.logical_or.reduceat(ov, seg)
+            x = crosses[pc]
+            keep = (lng_ov & north if res == max_res else lng_ov) & x
+            kept.append(pe[keep])
+            kept_cnt[s:e] = np.add.reduceat(keep, seg)
+            # non-crossing cells: one centre sample decides the whole cell
+            nc = np.flatnonzero(~crosses[s:e]) + s
+            if len(nc):
+                ge = pe[~x]
+                inside[nc] = ragged_parity(
+                    c_lat[nc], c_lng[nc], a_lat[ge], a_lng[ge], b_lat[ge],
+                    b_lng[ge], cnt[nc],
                 )
-                boundary.append(
-                    (int(rows[k]) * n + int(cols[k]), np.flatnonzero(keep))
-                )
-    return full, boundary
-
-
-def _pip_edge_subset(zone_edges, lat0, lng0, lat1, lng1) -> np.ndarray:
-    """Indices of edges that can affect the +lat ray cast for any point in
-    the cell [lat0,lat1) x [lng0,lng1).
-
-    An edge is irrelevant iff its lng interval misses every p.lng in the cell
-    (first conjunct of polygon.go:113-116 always false) or it lies entirely
-    south of the cell (intersection lat <= max edge lat < lat0 <= p.lat, so
-    the strict '<' always fails). Conservative non-strict bounds PLUS a few
-    f32 ulps of slack (_inflate — the rounded kernel's t can exceed the exact
-    edge max-lat) keep a superset; parity over the subset == parity over the
-    full ring.
-    """
-    lat0i, _ = _inflate(lat0, lat0)
-    lng0i, lng1i = _inflate(lng0, lng1)
-    a_lat, a_lng, b_lat, b_lng = zone_edges
-    e_min_lng = np.minimum(a_lng, b_lng)
-    e_max_lng = np.maximum(a_lng, b_lng)
-    e_max_lat = np.maximum(a_lat, b_lat)
-    keep = (e_min_lng <= lng1i) & (e_max_lng >= lng0i) & (e_max_lat >= lat0i)
-    return np.flatnonzero(keep)
+        full[res] = (zone[inside], rows[inside] * n + cols[inside])
+        pool = np.concatenate(kept)
+        zone, rows, cols = zone[crosses], rows[crosses], cols[crosses]
+        cnt = kept_cnt[crosses]
+        start = np.cumsum(cnt) - cnt
+        if res == max_res:
+            return full, (zone, rows * n + cols, cnt, pool)
+        # the 4 children of every crossing cell inherit its lng-overlap run
+        m = len(zone)
+        zone, start, cnt = (np.repeat(v, 4) for v in (zone, start, cnt))
+        rows = np.repeat(rows * 2, 4) + np.tile([0, 0, 1, 1], m)
+        cols = np.repeat(cols * 2, 4) + np.tile([0, 1, 0, 1], m)
 
 
 _KNN_BASE_RES = 4  # dense level the hierarchical refinement starts from
+_KNN_PAIR_BUDGET = 500_000  # (cell, zone) pairs per chunk of _knn_cells
 
 
 def _cell_rects(n: int, cells: np.ndarray = None):
@@ -539,7 +515,7 @@ def _knn_cells(zone_bbox: np.ndarray, res: int, cells: np.ndarray):
     # windows, BASELINE.md round 4) and every later chunk reuses them, so
     # many small chunks beat few huge ones — same flops, ~8x fewer fresh
     # pages at Z=24k (measured 103 s -> ~1 s for the res-4 dense level)
-    step = max(1, min(_KNN_CELL_BUDGET, 500_000) // max(nz, 1))
+    step = max(1, _KNN_PAIR_BUDGET // max(nz, 1))
     for s in range(0, len(lv), step):
         sl = slice(s, min(s + step, len(lv)))
         ncell = sl.stop - sl.start
@@ -561,24 +537,30 @@ def _knn_cells(zone_bbox: np.ndarray, res: int, cells: np.ndarray):
         np.concatenate(keep_parts) if keep_parts else np.empty(0, np.int32)
     )
 
-    # refine level by level: child candidates come from the parent's list
+    # refine level by level: child candidates come from the parent's list,
+    # in chunks of _KNN_PAIR_BUDGET (cell, candidate) pairs — each pair
+    # feeds ~20 float64 temporaries, and a level can hold ~650k pairs
     for r, lv_par, lv in zip(range(base + 1, res + 1), levels, levels[1:]):
         n = 1 << r
         c_lat0, c_lng0, c_lat1, c_lng1 = _cell_rects(n, lv)
         parent = np.searchsorted(lv_par, (lv // n >> 1) * (n >> 1) + (lv % n >> 1))
-        cnt = (off[parent + 1] - off[parent]).astype(np.int64)
-        pair_zrow = _ragged_ramp(off[parent], cnt)  # rows into zidx
-        pair_z = zidx[pair_zrow].astype(np.int64)
-        pair_c = np.repeat(np.arange(len(lv), dtype=np.int64), cnt)
-        seg = np.concatenate([[0], np.cumsum(cnt)]).astype(np.int64)
-        keep = _knn_keep_mask(
-            c_lat0[pair_c], c_lng0[pair_c], c_lat1[pair_c], c_lng1[pair_c],
-            z_lat0[pair_z], z_lng0[pair_z], z_lat1[pair_z], z_lng1[pair_z],
-            seg,
-        )
-        zidx = zidx[pair_zrow[keep]]
-        off = np.zeros(len(lv) + 1, dtype=np.int64)
-        off[1:] = np.cumsum(np.add.reduceat(keep.astype(np.int64), seg[:-1]))
+        start = off[parent]
+        cnt = off[parent + 1] - start
+        keep_parts = [np.empty(0, np.int32)]
+        kept_cnt = np.zeros(len(lv), dtype=np.int64)
+        for s, e in _chunk_bounds(cnt, _KNN_PAIR_BUDGET):
+            pair_z = zidx[_ragged_ramp(start[s:e], cnt[s:e])].astype(np.int64)
+            pair_c = np.repeat(np.arange(s, e, dtype=np.int64), cnt[s:e])
+            seg = np.concatenate([[0], np.cumsum(cnt[s:e])])
+            keep = _knn_keep_mask(
+                c_lat0[pair_c], c_lng0[pair_c], c_lat1[pair_c], c_lng1[pair_c],
+                z_lat0[pair_z], z_lng0[pair_z], z_lat1[pair_z], z_lng1[pair_z],
+                seg,
+            )
+            keep_parts.append(pair_z[keep].astype(np.int32))
+            kept_cnt[s:e] = np.add.reduceat(keep.astype(np.int64), seg[:-1])
+        zidx = np.concatenate(keep_parts)
+        off = np.concatenate([[0], np.cumsum(kept_cnt)]).astype(np.int64)
     return off, zidx
 
 
@@ -636,14 +618,36 @@ def _knn_update(prev: CompiledIndex, idx: CompiledIndex, pos: int,
     return knn_off, pool[_ragged_ramp(starts, new_cnt)].astype(np.int32)
 
 
-def _zone_cover_task(args):
-    """Picklable per-zone compile step (multiprocessing / mapPartitions)."""
-    ring_lat, ring_lng, base_res, max_res = args
-    edges = ring_edges(ring_lat, ring_lng)
-    return _zone_cover(edges, ring_bbox(ring_lat, ring_lng), base_res, max_res)
+def _cover_slice(task):
+    """Picklable pool / Spark step: _cover_zones over one slice of the zone
+    table, renumbered to the whole table's zone and edge indices."""
+    z0, e0, edges, edge_off, zone_bbox, base_res, max_res = task
+    full, (bz, bc, bn, bi) = _cover_zones(edges, edge_off, zone_bbox, base_res, max_res)
+    return {r: (z + z0, c) for r, (z, c) in full.items()}, (bz + z0, bc, bn, bi + e0)
 
 
-_PARALLEL_COMPILE_MIN = 512  # zones; below this fork overhead dominates
+def _cover_tasks(edges, edge_off, zone_bbox, base_res, max_res, n_slices):
+    """_cover_slice tasks over up to ``n_slices`` consecutive zone slices of
+    about equal edge counts (at least one task, even for no zones)."""
+    nz = len(edge_off) - 1
+    cuts = np.unique(np.concatenate([
+        [0], np.searchsorted(edge_off, np.linspace(0, edge_off[-1], n_slices + 1)[1:-1]),
+        [nz],
+    ]))
+    if len(cuts) < 2:
+        cuts = np.array([0, nz])
+    return [
+        (int(z0), int(edge_off[z0]),
+         tuple(a[edge_off[z0]:edge_off[z1]] for a in edges),
+         edge_off[z0 : z1 + 1] - edge_off[z0], zone_bbox[z0:z1], base_res, max_res)
+        for z0, z1 in zip(cuts, cuts[1:])
+    ]
+
+
+# zones; below this the fork + pickling overhead outweighs the split work
+# (measured on a 4-vCPU host with world-set samples: serial 0.18 s ==
+# 4-process pool 0.18 s at 2,000 zones; pool 1.15x at 4,000, 1.6x at 24k)
+_PARALLEL_COMPILE_MIN = 2048
 
 
 def _active_spark():
@@ -662,64 +666,65 @@ def _active_spark():
         return None
 
 
+def _zone_table(zones: list):
+    """Zones sorted by zone_id, plus the compile's flat inputs: their (Z, 4)
+    float32 MBRs, global edge arrays (a_lat, a_lng, b_lat, b_lng) and the
+    (Z+1,) int64 per-zone spans into them."""
+    zones = sorted(zones, key=lambda z: z.zone_id)
+    zone_bbox = np.array([z.bbox for z in zones], dtype=F32).reshape(-1, 4)
+    b_lat, b_lng = (
+        np.concatenate([getattr(z, k) for z in zones]) if zones else np.empty(0, F32)
+        for k in ("ring_lat", "ring_lng")
+    )
+    edge_off = np.concatenate(
+        [[0], np.cumsum([len(z.ring_lat) for z in zones])]
+    ).astype(np.int64)
+    # ring_edges over every ring at once: edge i runs from vertex i-1 to
+    # vertex i, and a ring's first edge is its closing edge
+    prev = np.arange(len(b_lat), dtype=np.int64) - 1
+    prev[edge_off[:-1]] = edge_off[1:] - 1
+    return zones, zone_bbox, (b_lat[prev], b_lng[prev], b_lat, b_lng), edge_off
+
+
 def compile_cover(
     zones: list,
     base_res: int = DEFAULT_BASE_RES,
     max_res: int = DEFAULT_MAX_RES,
     workers: int = None,
-    _covers: list = None,
 ) -> CompiledIndex:
-    """Quadtree-subdivide each zone into full/boundary cells and merge.
+    """Quadtree-subdivide every zone into full/boundary cells and merge.
 
-    Driver-side, numpy-vectorized per cell. This is the engine analog of the
-    reference's build step (AddTimezone + BuildRtree, timezone.go:29-45,
-    208-214), executed once per job then sc.broadcast().
+    Driver-side numpy: _cover_zones classifies each quadtree level of ALL
+    zones in one batched pass, so the Python cost is per level, not per
+    zone. This is the engine analog of the reference's build step
+    (AddTimezone + BuildRtree, timezone.go:29-45, 208-214), executed once
+    per job then sc.broadcast().
 
     Zones are independent, so reference-scale sets (~24k polygons) compile
     in a process pool (workers=None -> auto: serial below
-    _PARALLEL_COMPILE_MIN zones, else one process per core, capped). The
-    same per-zone task is what a Spark-distributed compile would run in
-    mapPartitions over the zone table; the merged index is identical and
-    deterministic either way (results merge in zone order).
+    _PARALLEL_COMPILE_MIN zones, else one process per core, capped), or,
+    with a live SparkSession, as a Spark job (compile_cover_spark). Both map
+    _cover_zones over zone slices and renumber to global zone indices; the
+    merged index is identical and deterministic on every path.
     """
     zones = sorted(zones, key=lambda z: z.zone_id)
-    zone_ids = np.array([z.zone_id for z in zones], dtype=np.int32)
-    tzids = [z.tzid for z in zones]
-    zone_bbox = np.array([z.bbox for z in zones], dtype=F32).reshape(-1, 4)
-
-    # global flat edge arrays + per-zone offsets
-    edge_parts = [ring_edges(z.ring_lat, z.ring_lng) for z in zones]
-    ea_lat = np.concatenate([p[0] for p in edge_parts]) if edge_parts else np.empty(0, F32)
-    ea_lng = np.concatenate([p[1] for p in edge_parts]) if edge_parts else np.empty(0, F32)
-    eb_lat = np.concatenate([p[2] for p in edge_parts]) if edge_parts else np.empty(0, F32)
-    eb_lng = np.concatenate([p[3] for p in edge_parts]) if edge_parts else np.empty(0, F32)
-    zone_edge_base = np.concatenate(
-        [[0], np.cumsum([len(p[0]) for p in edge_parts])]
-    ).astype(np.int64)
-
-    live = [zidx for zidx, z in enumerate(zones) if len(z.ring_lat) >= 3]
-    # degenerate (<3 vertex) rings never match (polygon.go:101-103) — skipped
     auto = workers is None
     if auto:
         import os
 
-        workers = (
-            min(os.cpu_count() or 1, 16) if len(live) >= _PARALLEL_COMPILE_MIN else 1
-        )
-    if _covers is not None:  # precomputed per-live-zone covers (Spark path)
-        covers = _covers
-    elif workers > 1 and auto and (spark := _active_spark()) is not None:
-        # live JVM driver: distribute through Spark instead of forking a
-        # pool under py4j threads (see _active_spark). Identical result —
-        # compile_cover_spark re-enters here with _covers precomputed.
-        return compile_cover_spark(spark, zones, base_res, max_res)
-    elif workers > 1:
+        # degenerate (<3 vertex) rings never match (polygon.go:101-103)
+        n_live = sum(len(z.ring_lat) >= 3 for z in zones)
+        workers = min(os.cpu_count() or 1, 16) if n_live >= _PARALLEL_COMPILE_MIN else 1
+        if workers > 1 and (spark := _active_spark()) is not None:
+            # live JVM driver: distribute through Spark instead of forking a
+            # pool under py4j threads (see _active_spark). Identical result.
+            return compile_cover_spark(spark, zones, base_res, max_res)
+    zones, zone_bbox, edges, edge_off = _zone_table(zones)
+    tasks = _cover_tasks(edges, edge_off, zone_bbox, base_res, max_res,
+                         1 if workers <= 1 else workers * 8)
+    if workers > 1:
         import multiprocessing as mp
 
-        tasks = [
-            (zones[zidx].ring_lat, zones[zidx].ring_lng, base_res, max_res)
-            for zidx in live
-        ]
         # fork is fastest but unsafe under a live py4j JVM (children inherit
         # locked JVM thread state); auto mode never reaches here with a JVM
         # alive (the Spark branch catches it), so fork implies no JVM —
@@ -732,93 +737,11 @@ def compile_cover(
             if _active_spark() is None and "fork" in mp.get_all_start_methods()
             else "spawn"
         )
-        ctx = mp.get_context(method)
-        with ctx.Pool(workers) as pool:
-            covers = pool.map(_zone_cover_task, tasks, chunksize=max(1, len(tasks) // (workers * 8)))
+        with mp.get_context(method).Pool(workers) as pool:
+            parts = pool.map(_cover_slice, tasks, chunksize=1)
     else:
-        covers = [
-            _zone_cover(edge_parts[zidx], zones[zidx].bbox, base_res, max_res)
-            for zidx in live
-        ]
-
-    # vectorized merge: gather every zone's claim/boundary rows into flat
-    # arrays, then ONE lexsort per structure produces the CSR layouts.
-    # Byte-identical to the old per-entry dict merge (cells ascending,
-    # candidates ascending zidx within a cell — zidx is the lexsort
-    # secondary key) but with zero per-cell Python: at Z=24k the dict form
-    # burned ~20 s in 1.9M list appends and 400k one-element astype calls.
-    full_cids = {r: [] for r in range(base_res, max_res + 1)}
-    full_owner = {r: [] for r in range(base_res, max_res + 1)}  # (zidx, len)
-    b_cid_l, b_zidx_l, b_sub_l, b_base_l = [], [], [], []
-    for zidx, (z_full, z_boundary) in zip(live, covers):
-        base = zone_edge_base[zidx]
-        for res, cids in z_full.items():
-            full_cids[res].append(cids)  # native dtype; one astype per res below
-            full_owner[res].append((zidx, len(cids)))
-        for cid, sub in z_boundary:
-            b_cid_l.append(cid)
-            b_zidx_l.append(zidx)
-            b_sub_l.append(sub)
-            b_base_l.append(base)
-
-    idx = CompiledIndex(
-        base_res=base_res,
-        max_res=max_res,
-        zone_ids=zone_ids,
-        tzids=tzids,
-        zone_bbox=zone_bbox,
-        ea_lat=ea_lat,
-        ea_lng=ea_lng,
-        eb_lat=eb_lat,
-        eb_lng=eb_lng,
-    )
-
-    for r in range(base_res, max_res + 1):
-        if not full_cids[r]:
-            idx.full[r] = (
-                np.empty(0, np.int64),
-                np.zeros(1, np.int64),
-                np.empty(0, np.int32),
-            )
-            continue
-        carr = np.concatenate(full_cids[r]).astype(np.int64, copy=False)
-        owners = np.array(full_owner[r], np.int64)
-        zarr = np.repeat(owners[:, 0], owners[:, 1]).astype(np.int32)
-        order = np.lexsort((zarr, carr))
-        carr, zarr = carr[order], zarr[order]
-        cells, counts = np.unique(carr, return_counts=True)
-        off = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
-        idx.full[r] = (cells, off, zarr)
-
-    if b_cid_l:
-        b_cid = np.asarray(b_cid_l, np.int64)
-        b_zdx = np.asarray(b_zidx_l, np.int64)
-        lens = np.array([len(sub) for sub in b_sub_l], np.int64)
-        starts = np.concatenate([[0], np.cumsum(lens)])[:-1]
-        big = np.concatenate(b_sub_l).astype(np.int64)
-        big += np.repeat(np.asarray(b_base_l, np.int64), lens)
-        order = np.lexsort((b_zdx, b_cid))
-        cells_b, cell_counts = np.unique(b_cid[order], return_counts=True)
-        idx.b_cells = cells_b
-        idx.b_off = np.concatenate([[0], np.cumsum(cell_counts)]).astype(np.int64)
-        idx.b_zone = b_zdx[order].astype(np.int32)
-        ordered_lens = lens[order]
-        idx.b_edge_off = np.concatenate([[0], np.cumsum(ordered_lens)]).astype(np.int64)
-        edge_idx = (
-            big[_ragged_ramp(starts[order], ordered_lens)]
-            if big.size
-            else np.empty(0, np.int64)
-        )
-    else:
-        idx.b_cells = np.empty(0, np.int64)
-        idx.b_off = np.zeros(1, np.int64)
-        idx.b_zone = np.empty(0, np.int32)
-        idx.b_edge_off = np.zeros(1, np.int64)
-        edge_idx = np.empty(0, np.int64)
-    idx.zone_edge_off = zone_edge_base
-    _set_boundary_edges(idx, edge_idx)
-    idx.knn_res = DEFAULT_KNN_RES
-    return _finalize_index(idx)
+        parts = [_cover_slice(t) for t in tasks]
+    return _build_index(zones, zone_bbox, edges, edge_off, parts, base_res, max_res)
 
 
 def compile_cover_spark(
@@ -827,30 +750,64 @@ def compile_cover_spark(
     base_res: int = DEFAULT_BASE_RES,
     max_res: int = DEFAULT_MAX_RES,
 ) -> CompiledIndex:
-    """Distribute the per-zone cover compile over Spark executors.
+    """Distribute the cover compile over Spark executors.
 
-    The per-zone step (_zone_cover_task) is embarrassingly parallel and
-    picklable, so zone sets too large for a driver process pool fan out as a
-    Spark job (the 100 TB-shape variant: the zone TABLE can itself be big
-    while each zone's cover result is tiny). Results are collected keyed by
-    zone index and merged in zone order — byte-identical to compile_cover on
-    the same input (pinned by tests/test_world_scale.py).
+    _cover_slice is picklable and zone slices are independent, so zone sets
+    too large for a driver process pool fan out as a Spark job (the 100
+    TB-shape variant: the zone TABLE can itself be big while each slice's
+    cover result is small). Results are collected in slice order and merged
+    — byte-identical to compile_cover on the same input (pinned by
+    tests/test_scale_mechanics.py).
     """
-    zones_sorted = sorted(zones, key=lambda z: z.zone_id)
-    live = [zidx for zidx, z in enumerate(zones_sorted) if len(z.ring_lat) >= 3]
-    tasks = [
-        (zidx, zones_sorted[zidx].ring_lat, zones_sorted[zidx].ring_lng)
-        for zidx in live
-    ]
-    n_slices = max(1, min(len(tasks), spark.sparkContext.defaultParallelism * 4))
-    pairs = (
-        spark.sparkContext.parallelize(tasks, numSlices=n_slices)
-        .map(lambda t: (t[0], _zone_cover_task((t[1], t[2], base_res, max_res))))
+    zones, zone_bbox, edges, edge_off = _zone_table(zones)
+    tasks = _cover_tasks(edges, edge_off, zone_bbox, base_res, max_res,
+                         spark.sparkContext.defaultParallelism * 4)
+    parts = (
+        spark.sparkContext.parallelize(tasks, numSlices=len(tasks))
+        .map(_cover_slice)
         .collect()
     )
-    by_zidx = dict(pairs)
-    covers = [by_zidx[zidx] for zidx in live]
-    return compile_cover(zones_sorted, base_res, max_res, _covers=covers)
+    return _build_index(zones, zone_bbox, edges, edge_off, parts, base_res, max_res)
+
+
+def _build_index(zones, zone_bbox, edges, edge_off, parts, base_res, max_res):
+    """CompiledIndex from _zone_table's output and the _cover_slice results
+    of its zone slices, in zone order: ONE lexsort per structure turns the
+    flat (zone, cell) rows into the CSR layouts (cells ascending,
+    candidates ascending zone index)."""
+    ea_lat, ea_lng, eb_lat, eb_lng = edges
+    idx = CompiledIndex(
+        base_res=base_res,
+        max_res=max_res,
+        zone_ids=np.array([z.zone_id for z in zones], dtype=np.int32),
+        tzids=[z.tzid for z in zones],
+        zone_bbox=zone_bbox,
+        ea_lat=ea_lat,
+        ea_lng=ea_lng,
+        eb_lat=eb_lat,
+        eb_lng=eb_lng,
+    )
+    b_zone, b_cell, b_cnt, b_edge = (
+        np.concatenate([p[1][k] for p in parts]) for k in range(4)
+    )
+    for r in range(base_res, max_res + 1):
+        zarr, carr = (np.concatenate([p[0][r][k] for p in parts]) for k in (0, 1))
+        order = np.lexsort((zarr, carr))
+        cells, counts = np.unique(carr[order], return_counts=True)
+        off = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
+        idx.full[r] = (cells, off, zarr[order].astype(np.int32))
+
+    order = np.lexsort((b_zone, b_cell))
+    cells_b, cell_counts = np.unique(b_cell[order], return_counts=True)
+    idx.b_cells = cells_b
+    idx.b_off = np.concatenate([[0], np.cumsum(cell_counts)]).astype(np.int64)
+    idx.b_zone = b_zone[order].astype(np.int32)
+    cnt = b_cnt[order]
+    idx.b_edge_off = np.concatenate([[0], np.cumsum(cnt)]).astype(np.int64)
+    idx.zone_edge_off = edge_off
+    _set_boundary_edges(idx, b_edge[_ragged_ramp((np.cumsum(b_cnt) - b_cnt)[order], cnt)])
+    idx.knn_res = DEFAULT_KNN_RES
+    return _finalize_index(idx)
 
 
 def _set_boundary_edges(idx: CompiledIndex, edge_idx: np.ndarray) -> None:
@@ -1027,13 +984,12 @@ def _splice_in(idx: CompiledIndex, zone: Zone, pos: int) -> CompiledIndex:
     out.eb_lng = np.concatenate([idx.eb_lng[:ins], nb_lng, idx.eb_lng[ins:]])
     out.zone_edge_off = np.concatenate([zeo[: pos + 1], zeo[pos:] + n_new])
 
-    # the one piece of real geometry work: the NEW zone's own cover
-    if len(zone.ring_lat) >= 3:
-        z_full, z_boundary = _zone_cover(
-            (na_lat, na_lng, nb_lat, nb_lng), zone.bbox, idx.base_res, idx.max_res
-        )
-    else:  # degenerate ring never matches (polygon.go:101-103)
-        z_full, z_boundary = {}, []
+    # the one piece of real geometry work: the NEW zone's own cover (none
+    # for a degenerate ring, which never matches — polygon.go:101-103)
+    z_full, (_, nb_cell, nb_cnt, nb_ei) = _cover_zones(
+        (na_lat, na_lng, nb_lat, nb_lng), np.array([0, n_new]),
+        out.zone_bbox[pos : pos + 1], idx.base_res, idx.max_res,
+    )
 
     # full-claim merge: expand old CSR to (cell, zidx) rows, renumber, append
     # the new zone's rows, lexsort back into (cell asc, zidx asc) CSR
@@ -1042,7 +998,7 @@ def _splice_in(idx: CompiledIndex, zone: Zone, pos: int) -> CompiledIndex:
         old_cell = np.repeat(cells, np.diff(off))
         old_z = zl.astype(np.int64)
         old_z[old_z >= pos] += 1
-        new_c = np.sort(np.asarray(z_full.get(r, np.empty(0, np.int64)), np.int64))
+        new_c = np.sort(z_full[r][1])
         ac = np.concatenate([old_cell, new_c])
         az = np.concatenate([old_z, np.full(len(new_c), pos, np.int64)])
         order = np.lexsort((az, ac))
@@ -1063,17 +1019,8 @@ def _splice_in(idx: CompiledIndex, zone: Zone, pos: int) -> CompiledIndex:
     old_z[old_z >= pos] += 1
     old_ei = idx.b_edge_idx.astype(np.int64)
     old_ei[old_ei >= ins] += n_new
-    nb_cell = np.array([c for c, _ in z_boundary], dtype=np.int64)
-    nb_subs = [np.asarray(s, np.int64) for _, s in z_boundary]
-    nb_cnt = np.array([len(s) for s in nb_subs], dtype=np.int64)
-    nb_ei = (
-        np.concatenate(nb_subs) + ins if nb_subs else np.empty(0, np.int64)
-    )
-    pool = np.concatenate([old_ei, nb_ei])
-    nb_start = (
-        np.concatenate([[0], np.cumsum(nb_cnt[:-1])]) if len(nb_cnt) else
-        np.empty(0, np.int64)
-    ) + len(old_ei)
+    pool = np.concatenate([old_ei, nb_ei + ins])
+    nb_start = np.cumsum(nb_cnt) - nb_cnt + len(old_ei)
     all_cell = np.concatenate([old_cell, nb_cell])
     all_z = np.concatenate([old_z, np.full(len(nb_cell), pos, np.int64)])
     all_cnt = np.concatenate([e_cnt, nb_cnt]).astype(np.int64)
@@ -1138,6 +1085,15 @@ def resolve_points(idx: CompiledIndex, lat: np.ndarray, lng: np.ndarray) -> np.n
     """
     lat = np.asarray(lat, dtype=F32)
     lng = np.asarray(lng, dtype=F32)
+    fin = np.isfinite(lat) & np.isfinite(lng)
+    if not fin.all():
+        # a NaN or infinite coordinate is inside no ring (the reference ray
+        # cast never gives it odd parity), but cell_id clamps it into a
+        # border cell that a zone may fully claim: keep it off the lookups
+        out = np.full(lat.shape[0], -1, dtype=np.int32)
+        ok = np.flatnonzero(fin)
+        out[ok] = resolve_points(idx, lat[ok], lng[ok])
+        return out
     n = lat.shape[0]
     out = np.full(n, np.iinfo(np.int32).max, dtype=np.int64)  # running argmin
 
@@ -1174,14 +1130,7 @@ def resolve_points(idx: CompiledIndex, lat: np.ndarray, lng: np.ndarray) -> np.n
             pair_ci = _ragged_ramp(idx.b_off[cp], n_cand)  # candidate index
             # chunk pairs so the flat edge table stays bounded in memory
             e_cnt_all = idx.b_edge_off[pair_ci + 1] - idx.b_edge_off[pair_ci]
-            budget = 250_000
-            cum = e_cnt_all.cumsum()
-            cuts = [0]
-            while cuts[-1] < len(pair_ci):
-                base = cum[cuts[-1] - 1] if cuts[-1] else 0
-                nxt = int(np.searchsorted(cum, base + budget, side="right"))
-                cuts.append(max(nxt, cuts[-1] + 1))
-            for s, e in zip(cuts, cuts[1:]):
+            for s, e in _chunk_bounds(e_cnt_all, 250_000):
                 _resolve_pairs(
                     idx, lat, lng, out, pair_pt[s:e], pair_ci[s:e], e_cnt_all[s:e]
                 )

@@ -199,7 +199,7 @@ def make_world_zones_skewed(
     the reference mmaps them, timezone.go:192). This variant appends
     n_coastlines zones whose west edge is a coast_verts-vertex sinusoid
     spanning 8 deg of latitude, so ONE zone's edge table is 100x the median —
-    the skew the cover compiler's chunking (cells._zone_cover) and the
+    the skew the cover compiler's pair chunking (cells._cover_zones) and the
     boundary-candidate pruning must absorb (pinned in tests/test_world_scale
     and BASELINE.md)."""
     zones = make_world_zones(**world_kw)
