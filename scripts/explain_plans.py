@@ -471,28 +471,33 @@ def main():
     # node must exist, the window agg must partial-combine BEFORE the state
     # Exchange, and dedup must be the StreamingDeduplicate operator keyed by
     # one Exchange — the state-store shapes that bound memory at scale.
+    import shutil
     import tempfile
 
     from tzspark.cells import cell_id_col
 
     tmp31 = tempfile.mkdtemp(prefix="plans_stream_")
-    pts_df(spark, sf_small, with_user=True).select(
-        "event_id", "ts", "lat", "lng"
-    ).coalesce(2).write.mode("overwrite").parquet(f"{tmp31}/pts")
-    stream31 = (
-        spark.readStream.schema("event_id bigint, ts timestamp, lat double, lng double")
-        .option("maxFilesPerTrigger", 8)
-        .parquet(f"{tmp31}/pts")
-    )
-    p32 = plan_of(
-        stream31.withWatermark("ts", "30 minutes")
-        .groupBy(
-            F.window("ts", "10 minutes").alias("w"),
-            cell_id_col(F.col("lat"), F.col("lng"), 6).alias("cell_id"),
+    try:
+        pts_df(spark, sf_small, with_user=True).select(
+            "event_id", "ts", "lat", "lng"
+        ).coalesce(2).write.mode("overwrite").parquet(f"{tmp31}/pts")
+        stream31 = (
+            spark.readStream.schema("event_id bigint, ts timestamp, lat double, lng double")
+            .option("maxFilesPerTrigger", 8)
+            .parquet(f"{tmp31}/pts")
         )
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "cell_id", "n_events")
-    )
+        p32 = plan_of(
+            stream31.withWatermark("ts", "30 minutes")
+            .groupBy(
+                F.window("ts", "10 minutes").alias("w"),
+                cell_id_col(F.col("lat"), F.col("lng"), 6).alias("cell_id"),
+            )
+            .agg(F.count("*").alias("n_events"))
+            .select(F.col("w.start").alias("window_start"), "cell_id", "n_events")
+        )
+        p33 = plan_of(stream31.dropDuplicates(["event_id"]))
+    finally:
+        shutil.rmtree(tmp31, ignore_errors=True)
     sections.append(("streaming windowed tile counts (q91 pre-start plan)", p32))
     if "EventTimeWatermark" not in p32:
         failures.append("stream-window: watermark node missing")
@@ -508,7 +513,6 @@ def main():
     ):
         failures.append("stream-window: no partial agg before the state Exchange")
 
-    p33 = plan_of(stream31.dropDuplicates(["event_id"]))
     sections.append(("streaming exact dedup (q93 pre-start plan)", p33))
     if "StreamingDeduplicate" not in p33:
         failures.append("stream-dedup: StreamingDeduplicate operator missing")
@@ -523,14 +527,18 @@ def main():
     ev34 = spark.read.parquet(f"{sf_small}/events.parquet").select(
         "event_id", "user_id", "value"
     )
-    vt34 = VersionedTable(spark, tempfile.mkdtemp(prefix="plans_vt_"))
-    vt34.commit_overwrite(ev34.where(F.col("event_id") % 2 == 0))
-    src34 = (
-        ev34.where(F.col("event_id") % 4 == 0)
-        .withColumn("value", F.col("value") * 2)
-        .unionByName(ev34.where(F.col("event_id") % 2 == 1))
-    )
-    p34 = plan_of(vt34._merge_frame(src34, ["event_id"]))
+    tmp34 = tempfile.mkdtemp(prefix="plans_vt_")
+    try:
+        vt34 = VersionedTable(spark, tmp34)
+        vt34.commit_overwrite(ev34.where(F.col("event_id") % 2 == 0))
+        src34 = (
+            ev34.where(F.col("event_id") % 4 == 0)
+            .withColumn("value", F.col("value") * 2)
+            .unionByName(ev34.where(F.col("event_id") % 2 == 1))
+        )
+        p34 = plan_of(vt34._merge_frame(src34, ["event_id"]))
+    finally:
+        shutil.rmtree(tmp34, ignore_errors=True)
     sections.append(("MERGE INTO frame (copy-on-write, left-anti kept side)", p34))
     if "LeftAnti" not in p34:
         failures.append("merge: kept side is not a left-anti join")

@@ -1,7 +1,8 @@
 """The batched cover compile (cells._cover_zones, behind compile_cover)
 against a scalar reference: a per-zone, per-cell quadtree walk that
 classifies one cell at a time with the original scalar predicates. Plus
-pinned index digests and a many-chunks run that must reproduce them."""
+pinned index digests, which many-chunks and many-slices runs must
+reproduce, and a check that the sliced compile stays on driver threads."""
 
 import hashlib
 import pickle
@@ -148,7 +149,7 @@ _free = st.lists(
                 (np.array([1, 2], F32), np.array([3, 4], F32))])
 def test_batched_cover_equals_scalar_reference(rings):
     zones = [Zone(3 * k + 1, f"Z{k}", lat, lng) for k, (lat, lng) in enumerate(rings)]
-    idx = compile_cover(zones, base_res=2, max_res=6, workers=1)
+    idx = compile_cover(zones, base_res=2, max_res=6)
     assert compiled_cover(idx) == reference_cover(zones, 2, 6)
 
 
@@ -182,7 +183,7 @@ def _digest(idx):
 @pytest.mark.parametrize("name", sorted(PINNED))
 def test_index_bytes_pinned(name):
     assert cells.INDEX_FORMAT_VERSION == 5
-    assert _digest(compile_cover(ZONE_SETS[name](), workers=1)) == PINNED[name]
+    assert _digest(compile_cover(ZONE_SETS[name]())) == PINNED[name]
 
 
 @pytest.mark.parametrize("name, budget", [("bench_cut", 4096), ("make_zones_4000", 1000)])
@@ -192,4 +193,38 @@ def test_tiny_pair_budgets_give_same_bytes(monkeypatch, name, budget):
     pinned bytes."""
     monkeypatch.setattr(cells, "_COVER_PAIR_BUDGET", budget)
     monkeypatch.setattr(cells, "_KNN_PAIR_BUDGET", budget)
-    assert _digest(compile_cover(ZONE_SETS[name](), workers=1)) == PINNED[name]
+    assert _digest(compile_cover(ZONE_SETS[name]())) == PINNED[name]
+
+
+@pytest.mark.parametrize("name", sorted(PINNED))
+def test_sliced_thread_compile_gives_same_bytes(monkeypatch, name):
+    """With the slicing threshold at one zone and four cores, both pinned
+    sets compile as up to 32 zone slices on the thread pool and give the
+    pinned bytes."""
+    monkeypatch.setattr(cells, "_PARALLEL_COMPILE_MIN", 1)
+    monkeypatch.setattr(cells.os, "cpu_count", lambda: 4)
+    calls = []
+    real = cells._cover_slice
+    monkeypatch.setattr(cells, "_cover_slice", lambda t: calls.append(1) or real(t))
+    assert _digest(compile_cover(ZONE_SETS[name]())) == PINNED[name]
+    assert len(calls) > 1
+
+
+def test_sliced_compile_starts_no_job_or_process(spark, monkeypatch):
+    """With a Spark session live, a compile at the slicing threshold runs on
+    driver threads: no Spark job and no child process."""
+    import multiprocessing
+    from multiprocessing.process import BaseProcess
+
+    monkeypatch.setattr(cells, "_PARALLEL_COMPILE_MIN", 1)
+    started = []
+    real_start = BaseProcess.start
+    monkeypatch.setattr(BaseProcess, "start", lambda p: started.append(p) or real_start(p))
+    zones = make_zones(n_coast=500)
+    spark.range(1).count()  # the status tracker has a job id to compare
+    tracker = spark.sparkContext.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(None))
+    idx = compile_cover(zones)
+    assert idx.stats["zones"] == len(zones)
+    assert sorted(tracker.getJobIdsForGroup(None)) == jobs
+    assert started == [] and multiprocessing.active_children() == []

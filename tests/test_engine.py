@@ -95,6 +95,40 @@ def test_cell_id_column_matches_numpy(assigned):
         )
 
 
+def test_cell_id_forms_agree_on_non_finite(spark):
+    """cell_id (numpy), cell_id_col (Spark) and cell_id_sql (DuckDB) give
+    the same cell for NaN and +-inf coordinates (row/col 0, n-1, 0), on
+    exact cell edges and on the +-90 / +-180 domain bounds."""
+    import duckdb
+    import pandas as pd
+
+    from tzspark.cells import cell_id_sql
+
+    special = [np.nan, np.inf, -np.inf, 90.0, -90.0, 180.0, -180.0, 0.0]
+    lat_v, lng_v = [], []
+    for a in special:  # every pair of specials
+        lat_v += special
+        lng_v += [a] * len(special)
+    for res in (0, 1, 4, 10):  # exact edges, with a special on the other axis
+        k = np.arange((1 << res) + 1)
+        lat_v += list(-90.0 + 180.0 * k / (1 << res))
+        lng_v += [special[i % len(special)] for i in k]
+        lng_v += list(-180.0 + 360.0 * k / (1 << res))
+        lat_v += [special[i % len(special)] for i in k]
+    pdf = pd.DataFrame({"lat": lat_v, "lng": lng_v})
+    sdf = spark.createDataFrame([(float(a), float(b)) for a, b in zip(lat_v, lng_v)],
+                                "lat double, lng double")
+    con = duckdb.connect()
+    for res in (0, 1, 4, 10):
+        want = cell_id(pdf["lat"].to_numpy(F32), pdf["lng"].to_numpy(F32), res)
+        got_spark = sdf.select(cell_id_col(F.col("lat"), F.col("lng"), res).alias("c"))
+        got_sql = con.sql(f"SELECT {cell_id_sql('lat', 'lng', res)} AS c FROM pdf")
+        np.testing.assert_array_equal(
+            got_spark.toPandas()["c"].to_numpy(np.int64), want, err_msg=f"spark res {res}")
+        np.testing.assert_array_equal(
+            got_sql.df()["c"].to_numpy(np.int64), want, err_msg=f"duckdb res {res}")
+
+
 def test_quarantine_path(spark, zones):
     from pyspark.sql import types as T
 

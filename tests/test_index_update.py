@@ -56,21 +56,21 @@ def zones():
 
 @pytest.fixture(scope="module")
 def idx_all(zones):
-    return compile_cover(zones, workers=1)
+    return compile_cover(zones)
 
 
 def test_delete_equals_fresh_compile(zones, idx_all):
     zid = zones[7].zone_id
     rest = [z for z in zones if z.zone_id != zid]
-    assert_index_equal(delete_zone(idx_all, zid), compile_cover(rest, workers=1))
+    assert_index_equal(delete_zone(idx_all, zid), compile_cover(rest))
 
 
 def test_delete_first_and_last(zones, idx_all):
     assert_index_equal(
-        delete_zone(idx_all, zones[0].zone_id), compile_cover(zones[1:], workers=1)
+        delete_zone(idx_all, zones[0].zone_id), compile_cover(zones[1:])
     )
     assert_index_equal(
-        delete_zone(idx_all, zones[-1].zone_id), compile_cover(zones[:-1], workers=1)
+        delete_zone(idx_all, zones[-1].zone_id), compile_cover(zones[:-1])
     )
 
 
@@ -78,7 +78,7 @@ def test_add_equals_fresh_compile(zones, idx_all):
     zid = zones[7].zone_id
     rest = [z for z in zones if z.zone_id != zid]
     assert_index_equal(
-        add_zone(compile_cover(rest, workers=1), zones[7]), idx_all
+        add_zone(compile_cover(rest), zones[7]), idx_all
     )
 
 
@@ -89,7 +89,7 @@ def test_replace_modified_geometry(zones, idx_all):
         z.ring_lat + np.float32(1.5), z.ring_lng - np.float32(0.5),
     )
     mod = [z2 if zz.zone_id == z.zone_id else zz for zz in zones]
-    assert_index_equal(replace_zone(idx_all, z2), compile_cover(mod, workers=1))
+    assert_index_equal(replace_zone(idx_all, z2), compile_cover(mod))
 
 
 def test_updated_index_resolves_like_oracle(zones, idx_all):
@@ -126,7 +126,7 @@ def test_add_degenerate_ring_is_noop_for_matching(zones, idx_all):
     lng = rng.uniform(-10, 46, 2000).astype(np.float32)
     assert np.array_equal(resolve_points(idx2, lat, lng),
                           resolve_points(idx_all, lat, lng))
-    assert_index_equal(idx2, compile_cover(zones + [deg], workers=1))
+    assert_index_equal(idx2, compile_cover(zones + [deg]))
 
 
 def test_errors(zones, idx_all):
@@ -175,10 +175,10 @@ class _Live:
 
     def __init__(self, zones):
         self.zones = {z.zone_id: z for z in zones}
-        self.idx = compile_cover(zones, workers=1)
+        self.idx = compile_cover(zones)
 
     def _check(self):
-        fresh = compile_cover(list(self.zones.values()), workers=1)
+        fresh = compile_cover(list(self.zones.values()))
         assert_index_equal(self.idx, fresh)
 
     def delete(self, zid):
@@ -300,10 +300,10 @@ def test_empty_knn_cell_raises(zones, monkeypatch):
         off, zidx = real(zone_bbox, res, cell_ids)
         return off - off[1] * (np.arange(len(off)) > 0), zidx[off[1]:]
 
-    idx = compile_cover(zones, workers=1)
+    idx = compile_cover(zones)
     monkeypatch.setattr(cells, "_knn_cells", drop_first_cell)
     with pytest.raises(RuntimeError, match="empty kNN candidate cell"):
-        compile_cover(zones, workers=1)
+        compile_cover(zones)
     north = max(zones, key=lambda z: z.bbox[2])  # listed in cell 0's column
     with pytest.raises(RuntimeError, match="empty kNN candidate cell"):
         replace_zone(idx, _moved(north, -80.0, -100.0))

@@ -98,20 +98,6 @@ def test_facade_assign_bucketed_join_no_shuffle(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {tname}")
 
 
-def test_spark_distributed_compile_identical(spark):
-    """compile_cover_spark (the cover fanned out over zone slices as a Spark
-    job) must produce a byte-identical index to the driver-side compile."""
-    import pickle
-
-    from tzspark.cells import compile_cover, compile_cover_spark
-    from tzspark.zones import make_zones
-
-    zones = make_zones(n_coast=1500)
-    a = compile_cover(zones)
-    b = compile_cover_spark(spark, zones)
-    assert pickle.dumps(a) == pickle.dumps(b)
-
-
 def test_hot_shard_points_split_across_tasks(spark):
     """The dense-urban-tile regime: a point stream concentrated in ONE cell
     puts almost every point in one shard of the join-path lookup. AQE cannot

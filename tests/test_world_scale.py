@@ -20,12 +20,10 @@ from tzspark.zones import make_world_zones, make_zones, oracle_assign
 def world():
     zones = make_world_zones()  # 1200 tzids x 20 polygons x 200 vertices
     t0 = time.time()
-    # explicit workers= so the budget measures the PROCESS-POOL compiler
-    # deterministically: in the full suite a live local[4] Spark session
-    # exists and auto mode would route the compile through it
-    # (compile_cover_spark, ~1.5 s on a 4-vCPU host — a different code
-    # path, whose timing once made the budget flaky)
-    idx = compile_cover(zones, workers=16)
+    # 24k live zones take the threaded compile (zone slices on a thread
+    # pool): the same path with or without the full suite's live local[4]
+    # Spark session, which it never touches
+    idx = compile_cover(zones)
     compile_s = time.time() - t0
     if compile_s >= 120.0:
         # This box stalls multi-second on first-touch page faults in an
@@ -34,7 +32,7 @@ def world():
         # estimator of the compiler's actual cost. Only pay the second
         # compile when the first breaches the tripwire.
         t0 = time.time()
-        idx = compile_cover(zones, workers=16)
+        idx = compile_cover(zones)
         compile_s = min(compile_s, time.time() - t0)
     return zones, idx, compile_s
 
@@ -43,10 +41,10 @@ def test_world_compile_and_broadcast_budget(world):
     zones, idx, compile_s = world
     assert idx.stats["zones"] == 24_000
     assert idx.stats["edges"] == 4_800_000
-    # regression tripwire, not a benchmark: the pooled compile (workers=16)
-    # measures ~1.3 s on a 4-vCPU host, serial ~1.9 s, 4-process auto pool
-    # ~1.1 s; the budget catches an order-of-magnitude blowup while
-    # tolerating this box's CPU-steal/GC noise
+    # regression tripwire, not a benchmark: on a 4-vCPU host in a slow
+    # phase the threaded compile measured 2.7-5.9 s cold, one slice 6.6 s;
+    # the budget catches an order-of-magnitude blowup while tolerating
+    # this box's CPU-steal/GC noise
     assert compile_s < 120.0, f"cover compile took {compile_s:.1f}s"
     blob_mb = len(pickle.dumps(idx)) / 1e6
     assert blob_mb < 200.0, f"broadcast pickle {blob_mb:.1f} MB"
@@ -133,7 +131,7 @@ def test_world_skewed_coastlines():
 
     zones = make_world_zones_skewed()
     t0 = time.time()
-    idx = compile_cover(zones, workers=16)  # see the `world` fixture note
+    idx = compile_cover(zones)  # threaded, see the `world` fixture note
     compile_s = time.time() - t0
     if compile_s >= 150.0:
         # same min-of-2 retry as the `world` fixture: this host's one-sided
@@ -141,7 +139,7 @@ def test_world_skewed_coastlines():
         # 21.3 s -> 14.2 s for the identical call in one process with the
         # fault probe calm throughout, BASELINE.md round 4)
         t0 = time.time()
-        idx = compile_cover(zones, workers=16)
+        idx = compile_cover(zones)
         compile_s = min(compile_s, time.time() - t0)
     assert idx.stats["zones"] == 24_006
     assert idx.stats["edges"] == 4_800_000 + 6 * 20_004

@@ -13,9 +13,10 @@ Column expressions, and ANSI SQL — no shuffle, no UDF), plus a driver-compiled
   pruned edge subset, so the exact float32 ray cast (geom.py) only ever sees
   nearby edges.
 
-The cover is compiled once on the driver (numpy), broadcast to executors, and
-probed inside pandas UDFs — the Spark-native replacement for the reference's
-mmap + rebuild-R-tree-on-load design (timezone.go:192, 208-214).
+The cover is compiled once on the driver (numpy; zone slices on a thread pool
+for reference-scale sets), broadcast to executors, and probed inside pandas
+UDFs — the Spark-native replacement for the reference's mmap +
+rebuild-R-tree-on-load design (timezone.go:192, 208-214).
 
 Grid definition (res r, n = 2**r):
     row  = clamp(floor((lat +  90) / 180 * n), 0, n-1)
@@ -28,6 +29,8 @@ SQL oracle (CAST(lat AS FLOAT) then double math) matches bit-for-bit.
 
 from __future__ import annotations
 
+import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -97,17 +100,21 @@ def cell_bounds(row: int, col: int, res: int):
 
 
 def cell_id_sql(lat_expr: str, lng_expr: str, res: int) -> str:
-    """ANSI-SQL text of the cell id, for DuckDB oracles. Mirrors cell_id()."""
+    """ANSI-SQL text of the cell id, for DuckDB oracles. Mirrors cell_id().
+
+    DuckDB cannot cast a non-finite float to BIGINT, so the scaled value is
+    clamped to [-1, n] and NaN mapped to 0 before the floor: NaN and -inf
+    land in row/col 0 and +inf in n-1, as in cell_id and cell_id_col."""
     n = 1 << res
-    row = (
-        f"LEAST(GREATEST(CAST(FLOOR((CAST({lat_expr} AS FLOAT) + 90.0) / 180.0 * {n}) "
-        f"AS BIGINT), 0), {n - 1})"
-    )
-    col = (
-        f"LEAST(GREATEST(CAST(FLOOR((CAST({lng_expr} AS FLOAT) + 180.0) / 360.0 * {n}) "
-        f"AS BIGINT), 0), {n - 1})"
-    )
-    return f"({row} * {n} + {col})"
+
+    def axis(expr, shift, span):
+        v = f"(CAST({expr} AS FLOAT) + {shift}) / {span} * {n}"
+        return (
+            f"LEAST(GREATEST(CAST(FLOOR(CASE WHEN isnan({v}) THEN 0 "
+            f"ELSE LEAST(GREATEST({v}, -1), {n}) END) AS BIGINT), 0), {n - 1})"
+        )
+
+    return f"({axis(lat_expr, '90.0', '180.0')} * {n} + {axis(lng_expr, '180.0', '360.0')})"
 
 
 def cell_rowcol_col(lat64, lng64, res: int):
@@ -619,8 +626,8 @@ def _knn_update(prev: CompiledIndex, idx: CompiledIndex, pos: int,
 
 
 def _cover_slice(task):
-    """Picklable pool / Spark step: _cover_zones over one slice of the zone
-    table, renumbered to the whole table's zone and edge indices."""
+    """_cover_zones over one slice of the zone table, renumbered to the whole
+    table's zone and edge indices."""
     z0, e0, edges, edge_off, zone_bbox, base_res, max_res = task
     full, (bz, bc, bn, bi) = _cover_zones(edges, edge_off, zone_bbox, base_res, max_res)
     return {r: (z + z0, c) for r, (z, c) in full.items()}, (bz + z0, bc, bn, bi + e0)
@@ -644,26 +651,11 @@ def _cover_tasks(edges, edge_off, zone_bbox, base_res, max_res, n_slices):
     ]
 
 
-# zones; below this the fork + pickling overhead outweighs the split work
-# (measured on a 4-vCPU host with world-set samples: serial 0.18 s ==
-# 4-process pool 0.18 s at 2,000 zones; pool 1.15x at 4,000, 1.6x at 24k)
-_PARALLEL_COMPILE_MIN = 2048
-
-
-def _active_spark():
-    """The live SparkSession, if any (None when pyspark absent / no session).
-    Used to decide how to parallelize the cover compile: forking a process
-    pool under a live py4j/JVM driver risks rare fork-with-threads child
-    deadlocks, so with a session alive the compile distributes through Spark
-    itself (compile_cover_spark — no fork at all, and the shape that scales
-    past one driver anyway). forkserver is NOT the answer: it re-imports the
-    caller's __main__ per child, which re-executes unguarded scripts."""
-    try:
-        from pyspark.sql import SparkSession
-
-        return SparkSession.getActiveSession() or SparkSession._instantiatedSession
-    except Exception:
-        return None
+# live zones; below this one slice is as fast as the thread map (random
+# world-set samples on a 4-vCPU host, medians of 7-9 runs: one slice as fast
+# or faster at 2,000 and 2,500 zones, threads 1.05-1.2x at 3,000 and 1.45x
+# at 4,000)
+_PARALLEL_COMPILE_MIN = 3000
 
 
 def _zone_table(zones: list):
@@ -690,7 +682,6 @@ def compile_cover(
     zones: list,
     base_res: int = DEFAULT_BASE_RES,
     max_res: int = DEFAULT_MAX_RES,
-    workers: int = None,
 ) -> CompiledIndex:
     """Quadtree-subdivide every zone into full/boundary cells and merge.
 
@@ -700,73 +691,27 @@ def compile_cover(
     (AddTimezone + BuildRtree, timezone.go:29-45, 208-214), executed once
     per job then sc.broadcast().
 
-    Zones are independent, so reference-scale sets (~24k polygons) compile
-    in a process pool (workers=None -> auto: serial below
-    _PARALLEL_COMPILE_MIN zones, else one process per core, capped), or,
-    with a live SparkSession, as a Spark job (compile_cover_spark). Both map
-    _cover_zones over zone slices and renumber to global zone indices; the
-    merged index is identical and deterministic on every path.
+    Zones are independent, so reference-scale sets (~24k polygons, at least
+    _PARALLEL_COMPILE_MIN live zones) map _cover_zones over zone slices on a
+    thread pool: its level passes are large numpy operations that release
+    the GIL. Smaller sets run as one slice. The slices are renumbered to
+    global zone indices and merged in order, so the index is identical and
+    deterministic either way.
     """
-    zones = sorted(zones, key=lambda z: z.zone_id)
-    auto = workers is None
-    if auto:
-        import os
-
-        # degenerate (<3 vertex) rings never match (polygon.go:101-103)
-        n_live = sum(len(z.ring_lat) >= 3 for z in zones)
-        workers = min(os.cpu_count() or 1, 16) if n_live >= _PARALLEL_COMPILE_MIN else 1
-        if workers > 1 and (spark := _active_spark()) is not None:
-            # live JVM driver: distribute through Spark instead of forking a
-            # pool under py4j threads (see _active_spark). Identical result.
-            return compile_cover_spark(spark, zones, base_res, max_res)
     zones, zone_bbox, edges, edge_off = _zone_table(zones)
+    # degenerate (<3 vertex) rings never match (polygon.go:101-103)
+    n_live = int(np.count_nonzero(np.diff(edge_off) >= 3))
+    threads = min(os.cpu_count() or 1, 16) if n_live >= _PARALLEL_COMPILE_MIN else 1
     tasks = _cover_tasks(edges, edge_off, zone_bbox, base_res, max_res,
-                         1 if workers <= 1 else workers * 8)
-    if workers > 1:
-        import multiprocessing as mp
-
-        # fork is fastest but unsafe under a live py4j JVM (children inherit
-        # locked JVM thread state); auto mode never reaches here with a JVM
-        # alive (the Spark branch catches it), so fork implies no JVM —
-        # an EXPLICIT workers= request with a session up gets spawn, which
-        # re-execs and cannot deadlock. Spawn's one constraint: the caller's
-        # __main__ must be importable (scripts/pytest yes; stdin/REPL no —
-        # such callers should leave workers=None and get the Spark path).
-        method = (
-            "fork"
-            if _active_spark() is None and "fork" in mp.get_all_start_methods()
-            else "spawn"
-        )
-        with mp.get_context(method).Pool(workers) as pool:
-            parts = pool.map(_cover_slice, tasks, chunksize=1)
+                         1 if threads == 1 else threads * 8)
+    if len(tasks) == 1:
+        # on the calling thread: a pool thread's allocations land in its own
+        # malloc arena, which the kNN build after it cannot reuse (+24 MB
+        # VmHWM on the 480-zone bench cut)
+        parts = [_cover_slice(tasks[0])]
     else:
-        parts = [_cover_slice(t) for t in tasks]
-    return _build_index(zones, zone_bbox, edges, edge_off, parts, base_res, max_res)
-
-
-def compile_cover_spark(
-    spark,
-    zones: list,
-    base_res: int = DEFAULT_BASE_RES,
-    max_res: int = DEFAULT_MAX_RES,
-) -> CompiledIndex:
-    """Distribute the cover compile over Spark executors.
-
-    _cover_slice is picklable and zone slices are independent, so zone sets
-    too large for a driver process pool fan out as a Spark job (the 100
-    TB-shape variant: the zone TABLE can itself be big while each slice's
-    cover result is small). Results are collected in slice order and merged
-    — byte-identical to compile_cover on the same input (pinned by
-    tests/test_scale_mechanics.py).
-    """
-    zones, zone_bbox, edges, edge_off = _zone_table(zones)
-    tasks = _cover_tasks(edges, edge_off, zone_bbox, base_res, max_res,
-                         spark.sparkContext.defaultParallelism * 4)
-    parts = (
-        spark.sparkContext.parallelize(tasks, numSlices=len(tasks))
-        .map(_cover_slice)
-        .collect()
-    )
+        with ThreadPoolExecutor(threads) as pool:
+            parts = list(pool.map(_cover_slice, tasks))
     return _build_index(zones, zone_bbox, edges, edge_off, parts, base_res, max_res)
 
 

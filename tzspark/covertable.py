@@ -57,6 +57,7 @@ from .cells import (
     cell_rowcol_col,
     explode_rect_cells,
 )
+from .engine import _pa_df
 from .geom import F32
 
 SHARD_RES = 4  # shard grid cap: 16 x 16 cells of 11.25 x 22.5 degrees
@@ -164,13 +165,6 @@ def open_shard(blob: bytes) -> CompiledIndex:
     return CompiledIndex(tzids=[], **d)
 
 
-def _df(spark: SparkSession, tbl, schema) -> DataFrame:
-    try:
-        return spark.createDataFrame(tbl, schema=schema)  # pyarrow Table path
-    except Exception:
-        return spark.createDataFrame(tbl.to_pandas(), schema=schema)
-
-
 class CoverTables:
     """The compiled cover as ONE table of spatial shards,
     ``(keys..., shard_id, blob)`` (see the module docstring).
@@ -201,7 +195,7 @@ class CoverTables:
         blobs = shard_blobs(idx)
         tbl = pa.table({"shard_id": pa.array(list(blobs), pa.int64()),
                         "blob": pa.array(list(blobs.values()), pa.binary())})
-        return cls(_df(spark, tbl, SHARDS_SCHEMA), idx.base_res, idx.max_res,
+        return cls(_pa_df(spark, tbl, SHARDS_SCHEMA), idx.base_res, idx.max_res,
                    idx.knn_res, shard_res(idx))
 
     @classmethod
@@ -295,7 +289,7 @@ def _salts(pts: DataFrame, keys: list, p: int):
     # a local (Arrow) relation: broadcasting it runs no Spark job
     tbl = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in live],
                                schema=to_arrow_schema(schema))
-    return _df(spark, tbl, schema), sum(r[-1] for r in live)
+    return _pa_df(spark, tbl, schema), sum(r[-1] for r in live)
 
 
 def _lookup(pts: DataFrame, cover: CoverTables):

@@ -474,19 +474,12 @@ def q40_knn_join(spark, sf_dir):
     return knn_via_join(p, "event_id", cov).select("event_id", "zone_id")
 
 
-def q43_zone_update_resolve(spark, sf_dir):
-    """R5/R6 (store Delete/Replace) + live append: resolve through an index
-    updated IN PLACE — zone 7 deleted, zone 12 replaced with a grown box,
-    new zone 100 added — via cells.delete_zone/replace_zone/add_zone (CSR
-    splicing, byte-identical to a fresh compile over the updated zone list,
-    tests/test_index_update.py). The other 23 zones' covers are never
-    recomputed. Oracle: the same f32 containment argmin over the mutated
-    box table expressed in SQL."""
+def _mutate_boxes(idx, zones):
+    """The nation-box index ``idx`` (compiled from ``zones``) updated in
+    place: zone 7 deleted, zone 12 replaced with a grown box, zone 100
+    added. _MUTATED_BOXES_SQL is the same box table in SQL."""
     from .cells import add_zone, delete_zone, replace_zone
-    from .engine import resolve_only_udf
 
-    zones = box_zones(spark, sf_dir)
-    idx = compile_cover(zones, base_res=3, max_res=7)
     old = {int(z.zone_id): z for z in zones}[12]
     la0 = old.ring_lat.min() - np.float32(6)
     la1 = old.ring_lat.max() + np.float32(4)
@@ -500,7 +493,34 @@ def q43_zone_update_resolve(spark, sf_dir):
         100, "Test/Added",
         np.array([40, 40, 52, 52], F32), np.array([-170, -150, -150, -170], F32),
     )
-    idx = add_zone(replace_zone(delete_zone(idx, 7), grown), added)
+    return add_zone(replace_zone(delete_zone(idx, 7), grown), added)
+
+
+# _mutate_boxes' box table, over the original boxes as CTE ``boxes0``
+_MUTATED_BOXES_SQL = """
+  SELECT zone_id, tzid,
+         CASE WHEN zone_id = 12 THEN min_lat - 6 ELSE min_lat END AS min_lat,
+         CASE WHEN zone_id = 12 THEN max_lat + 4 ELSE max_lat END AS max_lat,
+         CASE WHEN zone_id = 12 THEN min_lng - 20 ELSE min_lng END AS min_lng,
+         CASE WHEN zone_id = 12 THEN max_lng + 6 ELSE max_lng END AS max_lng
+  FROM boxes0 WHERE zone_id <> 7
+  UNION ALL
+  SELECT 100, 'Test/Added', 40.0, 52.0, -170.0, -150.0
+"""
+
+
+def q43_zone_update_resolve(spark, sf_dir):
+    """R5/R6 (store Delete/Replace) + live append: resolve through an index
+    updated IN PLACE — zone 7 deleted, zone 12 replaced with a grown box,
+    new zone 100 added — via cells.delete_zone/replace_zone/add_zone (CSR
+    splicing, byte-identical to a fresh compile over the updated zone list,
+    tests/test_index_update.py). The other 23 zones' covers are never
+    recomputed. Oracle: the same f32 containment argmin over the mutated
+    box table expressed in SQL."""
+    from .engine import resolve_only_udf
+
+    zones = box_zones(spark, sf_dir)
+    idx = _mutate_boxes(compile_cover(zones, base_res=3, max_res=7), zones)
     bidx = spark.sparkContext.broadcast(idx)
     p = pts_df(spark, sf_dir)
     return p.select(
@@ -510,16 +530,7 @@ def q43_zone_update_resolve(spark, sf_dir):
 
 Q43_SQL = f"""
 WITH pts AS ({PTS_SQL}), boxes0 AS ({BOXES_SQL}),
-boxes AS (
-  SELECT zone_id, tzid,
-         CASE WHEN zone_id = 12 THEN min_lat - 6 ELSE min_lat END AS min_lat,
-         CASE WHEN zone_id = 12 THEN max_lat + 4 ELSE max_lat END AS max_lat,
-         CASE WHEN zone_id = 12 THEN min_lng - 20 ELSE min_lng END AS min_lng,
-         CASE WHEN zone_id = 12 THEN max_lng + 6 ELSE max_lng END AS max_lng
-  FROM boxes0 WHERE zone_id <> 7
-  UNION ALL
-  SELECT 100, 'Test/Added', 40.0, 52.0, -170.0, -150.0
-)
+boxes AS ({_MUTATED_BOXES_SQL})
 SELECT p.event_id,
        CAST(COALESCE(MIN(CASE WHEN {_CONTAIN_F32} THEN b.zone_id END), -1) AS INTEGER) AS zone_id
 FROM pts p CROSS JOIN boxes b
@@ -541,25 +552,11 @@ def q89_versioned_resolve(spark, sf_dir):
     epoch's broadcast, slices unioned — at 10^12 rows the time slice is a
     parquet partition-prune (events are date-partitioned), so each epoch's
     backfill scans only its own files and no row is probed twice."""
-    from .cells import add_zone, delete_zone, replace_zone
     from .engine import resolve_only_udf
 
     zones = box_zones(spark, sf_dir)
     idx0 = compile_cover(zones, base_res=3, max_res=7)
-    old = {int(z.zone_id): z for z in zones}[12]
-    la0 = old.ring_lat.min() - np.float32(6)
-    la1 = old.ring_lat.max() + np.float32(4)
-    lg0 = old.ring_lng.min() - np.float32(20)
-    lg1 = old.ring_lng.max() + np.float32(6)
-    grown = Zone(
-        12, old.tzid,
-        np.array([la0, la0, la1, la1], F32), np.array([lg0, lg1, lg1, lg0], F32),
-    )
-    added = Zone(
-        100, "Test/Added",
-        np.array([40, 40, 52, 52], F32), np.array([-170, -150, -150, -170], F32),
-    )
-    idx1 = add_zone(replace_zone(delete_zone(idx0, 7), grown), added)
+    idx1 = _mutate_boxes(idx0, zones)
     b0 = spark.sparkContext.broadcast(idx0)
     b1 = spark.sparkContext.broadcast(idx1)
     p = pts_df(spark, sf_dir, with_user=True)
@@ -585,16 +582,7 @@ SELECT event_id, ts,
 FROM events
 ),
 boxes0 AS ({BOXES_SQL}),
-boxes1 AS (
-  SELECT zone_id, tzid,
-         CASE WHEN zone_id = 12 THEN min_lat - 6 ELSE min_lat END AS min_lat,
-         CASE WHEN zone_id = 12 THEN max_lat + 4 ELSE max_lat END AS max_lat,
-         CASE WHEN zone_id = 12 THEN min_lng - 20 ELSE min_lng END AS min_lng,
-         CASE WHEN zone_id = 12 THEN max_lng + 6 ELSE max_lng END AS max_lng
-  FROM boxes0 WHERE zone_id <> 7
-  UNION ALL
-  SELECT 100, 'Test/Added', 40.0, 52.0, -170.0, -150.0
-)
+boxes1 AS ({_MUTATED_BOXES_SQL})
 SELECT p.event_id, 'v0' AS zone_version,
        CAST(COALESCE(MIN(CASE WHEN {_CONTAIN_F32} THEN b.zone_id END), -1) AS INTEGER) AS zone_id
 FROM pts p CROSS JOIN boxes0 b
