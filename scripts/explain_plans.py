@@ -46,14 +46,15 @@ def plan_of(df) -> str:
 
 def stable_ids(plan: str) -> str:
     """Renumber the run-to-run counters in one plan from 1, in order of
-    first appearance — Spark's session-global expression ids (``name#123``)
-    and ``plan_id=N``, and random UUIDs (streaming run ids) — and mask the
-    random suffix of this script's mkdtemp dirs, so a regenerated PLANS.md
-    differs only where a plan does."""
+    first appearance — Spark's session-global expression ids (``name#123``),
+    ``plan_id=N`` and RDD ids (``MapPartitionsRDD[N]``, which shift with
+    whatever jobs ran earlier in the session), and random UUIDs (streaming
+    run ids) — and mask the random suffix of this script's mkdtemp dirs, so
+    a regenerated PLANS.md differs only where a plan does."""
     plan = re.sub(r"(/plans_[a-z]+_)[a-z0-9_]{8}\b", r"\1XXXXXXXX", plan)
     uuid = r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b"
     for pat, fmt in ((r"(?<=#)\d+", "{}"), (r"(?<=plan_id=)\d+", "{}"),
-                     (uuid, "uuid-{}")):
+                     (r"(?<=RDD\[)\d+(?=\])", "{}"), (uuid, "uuid-{}")):
         ids = {}
         plan = re.sub(
             pat, lambda m: fmt.format(ids.setdefault(m.group(0), len(ids) + 1)), plan

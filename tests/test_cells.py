@@ -3,6 +3,8 @@ golden oracle (full PIP over every zone) on fixtures and random points."""
 
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from tzspark.cells import (
     cell_id,
@@ -176,6 +178,88 @@ def test_knn_cells_restricted_equals_full_table():
         np.testing.assert_array_equal(
             s_zidx, np.concatenate(want) if want else np.empty(0, np.int32)
         )
+
+
+def _dense_knn_keep(bbox: np.ndarray, res: int) -> np.ndarray:
+    """(cells x zones) keep matrix straight from the kNN-table definition:
+    d_min(c, z) <= min over zones of d_max(c, z), per-cell float64 rects."""
+    from tzspark.cells import _cell_rects
+
+    c_lat0, c_lng0, c_lat1, c_lng1 = (v[:, None] for v in _cell_rects(1 << res))
+    z_lat0, z_lng0, z_lat1, z_lng1 = bbox.astype(np.float64).T
+    gl = np.maximum(np.maximum(z_lat0 - c_lat1, c_lat0 - z_lat1), 0)
+    gg = np.maximum(np.maximum(z_lng0 - c_lng1, c_lng0 - z_lng1), 0)
+    fl = np.maximum(np.maximum(z_lat0 - c_lat0, c_lat1 - z_lat1), 0)
+    fg = np.maximum(np.maximum(z_lng0 - c_lng0, c_lng1 - z_lng1), 0)
+    d_max = fl * fl + fg * fg
+    return gl * gl + gg * gg <= d_max.min(axis=1)[:, None]
+
+
+def _grid_line(draw, axis: int) -> float:
+    """A lat (axis 0) or lng (axis 1) grid line of some res <= 7 grid."""
+    k = draw(st.integers(0, 7))
+    i = draw(st.integers(0, 1 << k))
+    return (-90.0, -180.0)[axis] + (180.0, 360.0)[axis] * i / (1 << k)
+
+
+@st.composite
+def _adversarial_mbrs(draw):
+    """1-10 zone MBRs: bounds on cell edges, points, zero-width slivers,
+    duplicates (exact distance ties), the whole world, and free boxes."""
+    boxes = []
+    for _ in range(draw(st.integers(1, 10))):
+        kind = draw(st.sampled_from(["edges", "point", "sliver", "dup", "world", "free"]))
+        if kind == "dup" and boxes:
+            boxes.append(boxes[draw(st.integers(0, len(boxes) - 1))])
+            continue
+        if kind == "world":
+            boxes.append((-90.0, -180.0, 90.0, 180.0))
+            continue
+        if kind == "edges":
+            lat, lng = [_grid_line(draw, 0) for _ in "ab"], [_grid_line(draw, 1) for _ in "ab"]
+        else:
+            lat = [draw(st.floats(-90, 90)) for _ in "ab"]
+            lng = [draw(st.floats(-180, 180)) for _ in "ab"]
+            if kind == "point":
+                lat[1], lng[1] = lat[0], lng[0]
+            elif kind == "sliver":
+                lat[1] = lat[0]
+        boxes.append((min(lat), min(lng), max(lat), max(lng)))
+    return np.array(boxes, np.float32)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    bbox=_adversarial_mbrs(),
+    res=st.integers(2, 7),
+    budget=st.sampled_from([1, 7, 500_000]),
+    data=st.data(),
+)
+@example(bbox=np.array([[10.0, 20.0, 10.0, 20.0]], np.float32), res=7,
+         budget=500_000, data=None)
+@example(bbox=np.array([[-90, -180, 90, 180], [0, 0, 0, 0], [0, 0, 0, 0]], np.float32),
+         res=5, budget=1, data=None)
+def test_knn_cells_equal_dense_definition(bbox, res, budget, data):
+    """_knn_cells over any sorted cell subset, at any pair budget and at res
+    below and above _KNN_BASE_RES, gives each cell exactly the zones of the
+    dense definition, in zone order."""
+    from unittest import mock
+
+    from tzspark import cells as cells_mod
+
+    n = 1 << res
+    if data is None:
+        cells = np.arange(n * n, dtype=np.int64)
+    else:
+        cells = np.unique(np.array(
+            data.draw(st.lists(st.integers(0, n * n - 1), max_size=40)), np.int64))
+    with mock.patch.object(cells_mod, "_KNN_PAIR_BUDGET", budget):
+        off, zidx = cells_mod._knn_cells(bbox, res, cells)
+    keep = _dense_knn_keep(bbox, res)[cells]
+    assert off.dtype == np.int64 and zidx.dtype == np.int32
+    np.testing.assert_array_equal(np.diff(off), keep.sum(axis=1))
+    np.testing.assert_array_equal(zidx, np.nonzero(keep)[1].astype(np.int32))
+    assert (np.diff(off) > 0).all()  # every cell keeps its d_max argmin
 
 
 def test_nan_coordinates_get_no_zone(spark, zones, idx):

@@ -129,6 +129,48 @@ def test_cell_id_forms_agree_on_non_finite(spark):
             got_sql.df()["c"].to_numpy(np.int64), want, err_msg=f"duckdb res {res}")
 
 
+def test_cell_id_forms_agree_near_cell_edges(spark):
+    """cell_id, cell_id_col and cell_id_sql give the same cell for float32
+    points within 3 ulps of cell edges at res 4/10/15, and for points with
+    |lng| < 1e-4, where a sum rounded to FLOAT crosses the lng-0 edge."""
+    import duckdb
+    import pandas as pd
+
+    from tzspark.cells import cell_id_sql
+
+    rng = np.random.default_rng(17)
+    edges = []  # (axis, float64 edge value)
+    for res in (4, 10, 15):
+        n = 1 << res
+        for axis, lo, span in ((0, -90.0, 180.0), (1, -180.0, 360.0)):
+            k = np.unique(np.concatenate([[0, n // 2, n], rng.integers(0, n + 1, 60)]))
+            edges += [(axis, lo + span * i / n) for i in k]
+    lat_v, lng_v = [], []
+    for axis, e in edges:
+        v = F32(e)
+        for step in range(-3, 4):
+            near = v
+            for _ in range(abs(step)):
+                near = np.nextafter(near, F32(np.sign(step) * np.inf), dtype=F32)
+            other = F32(rng.uniform((-90, -180)[1 - axis], (90, 180)[1 - axis]))
+            lat_v.append(near if axis == 0 else other)
+            lng_v.append(other if axis == 0 else near)
+    lat_v += list(rng.uniform(-60, 60, 2000).astype(F32))
+    lng_v += list(rng.uniform(-1e-4, 1e-4, 2000).astype(F32))
+    lat, lng = np.array(lat_v, F32), np.array(lng_v, F32)
+    pdf = pd.DataFrame({"lat": lat, "lng": lng})
+    sdf = spark.createDataFrame(pdf.astype(np.float64))
+    con = duckdb.connect()
+    for res in (4, 10, 15):
+        want = cell_id(lat, lng, res)
+        got_spark = sdf.select(cell_id_col(F.col("lat"), F.col("lng"), res).alias("c"))
+        got_sql = con.sql(f"SELECT {cell_id_sql('lat', 'lng', res)} AS c FROM pdf")
+        np.testing.assert_array_equal(
+            got_spark.toPandas()["c"].to_numpy(np.int64), want, err_msg=f"spark res {res}")
+        np.testing.assert_array_equal(
+            got_sql.df()["c"].to_numpy(np.int64), want, err_msg=f"duckdb res {res}")
+
+
 def test_quarantine_path(spark, zones):
     from pyspark.sql import types as T
 

@@ -6,9 +6,11 @@ writes the PLANS.md sections):
   GPS extract evaluated once;
 * distance_join_checks: each of the four distance joins is one equi-join
   on the grid cell (plus the time bucket for co-location), never an
-  all-pairs join, with no Python stage."""
+  all-pairs join, with no Python stage.
 
-from scripts.explain_plans import distance_join_checks, join_path_checks
+Plus a unit test of the dump's per-plan renumbering (stable_ids)."""
+
+from scripts.explain_plans import distance_join_checks, join_path_checks, stable_ids
 from tzspark.datasets import images_df
 
 from tests.test_covertable import SF
@@ -26,3 +28,18 @@ def test_distance_join_plan_shape(spark):
     sections, failures = distance_join_checks(spark, SF)
     assert len(sections) == 4
     assert failures == []
+
+
+def test_stable_ids_renumbers_rdd_ids():
+    """Two plans that differ only in session-global RDD ids (and expression
+    ids) dump to the same text; distinct RDDs in one plan stay distinct."""
+    plan = ("Scan ExistingRDD[doc_id#{a}]\n"
+            "Arguments: [doc_id#{a}], MapPartitionsRDD[{r}] at localCheckpoint, "
+            "ExistingRDD, UnknownPartitioning(0)\n"
+            "+- ParallelCollectionRDD[{s}] at parallelize\n"
+            "+- MapPartitionsRDD[{r}] at localCheckpoint\n")
+    one = stable_ids(plan.format(a=24, r=248, s=7))
+    two = stable_ids(plan.format(a=27, r=253, s=12))
+    assert one == two
+    assert "MapPartitionsRDD[1]" in one and "ParallelCollectionRDD[2]" in one
+    assert "ExistingRDD[doc_id#1]" in one

@@ -103,3 +103,40 @@ def test_spark_submit_pyfiles_launch(tmp_path):
         got["lng"].to_numpy(),
     )
     assert (got["zone_id"].to_numpy() == exp).all()
+
+
+def test_package_zip_named_by_sources(tmp_path, monkeypatch):
+    """Two package dirs with different sources get different zips, each
+    holding its own cells.py, even when the second dir's files are older
+    than the first zip; unchanged sources reuse their zip, and a source
+    change rebuilds the checkout's one zip in place."""
+    import tempfile
+    import zipfile
+
+    from tzspark import shipping
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    old = (1_000_000_000, 1_000_000_000)  # older than any zip
+
+    def checkout(k, text):
+        pkg = tmp_path / f"checkout{k}" / "tzspark"
+        pkg.mkdir(parents=True, exist_ok=True)
+        (pkg / "__init__.py").write_text("")
+        (pkg / "cells.py").write_text(text)
+        for f in pkg.iterdir():
+            os.utime(f, old)
+        monkeypatch.setattr(shipping, "__file__", str(pkg / "shipping.py"))
+        return package_zip_path()
+
+    def cells_text(path):
+        with zipfile.ZipFile(path) as zf:
+            return zf.read("tzspark/cells.py").decode()
+
+    a, b = checkout(0, "A = 1\n"), checkout(1, "A = 2\n")
+    assert a != b
+    assert (cells_text(a), cells_text(b)) == ("A = 1\n", "A = 2\n")
+    stamp = os.stat(a).st_mtime_ns
+    assert checkout(0, "A = 1\n") == a and os.stat(a).st_mtime_ns == stamp
+    assert checkout(0, "A = 3\n") == a and cells_text(a) == "A = 3\n"
+    assert sorted(p.name for p in tmp_path.glob("tzspark_pyfiles_*")) == sorted(
+        os.path.basename(p) for p in (a, b))

@@ -5,6 +5,7 @@ README.md:9, import.go:26-28). Pins compile wall time, broadcast size,
 candidate stats, pruned-kNN exactness, and lookup throughput.
 """
 
+import hashlib
 import pickle
 import time
 
@@ -51,6 +52,18 @@ def test_world_compile_and_broadcast_budget(world):
     # boundary-candidate stats stay bounded (no cell explosion)
     assert idx.stats["max_candidates_per_cell"] <= 16
     assert idx.stats["mean_edges_per_candidate"] < 200
+
+
+# sha256 of the world set's knn_off bytes then knn_zidx bytes, recorded with
+# the per-pair kNN compile that the separable one replaced
+WORLD_KNN_SHA256 = "3a5c24124e7b5924f92bab0bafc2288339524f5e7df002278eac2fc70dae2e67"
+
+
+def test_world_knn_table_bytes_pinned(world):
+    _, idx, _ = world
+    h = hashlib.sha256(idx.knn_off.tobytes())
+    h.update(idx.knn_zidx.tobytes())
+    assert h.hexdigest() == WORLD_KNN_SHA256
 
 
 def test_world_resolve_matches_oracle_sample(world):

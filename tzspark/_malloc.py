@@ -6,8 +6,8 @@ before Python code runs) — so conftest/bench setting os.environ protects the
 JVM and Python workers but NOT the driver/pytest process itself. On this
 sandbox's bad windows (first-touch page faults of 100-500 µs instead of
 ~2 µs), every >128 KB numpy temporary is a fresh mmap that pays the storm on
-every call; measured on the world kNN-table compile: 37 s for a first
-_knn_keep_mask call vs 0.27 s for the identical second call.
+every call; measured on the world kNN-table compile: 37 s for the first
+chunk of (cell, zone) distance scoring vs 0.27 s for an identical second one.
 
 mallopt(3) changes the SAME tunables at runtime: disable trim (freed heap is
 never returned, so the high-water mark is faulted once per process) and lift

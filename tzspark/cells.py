@@ -102,13 +102,16 @@ def cell_bounds(row: int, col: int, res: int):
 def cell_id_sql(lat_expr: str, lng_expr: str, res: int) -> str:
     """ANSI-SQL text of the cell id, for DuckDB oracles. Mirrors cell_id().
 
-    DuckDB cannot cast a non-finite float to BIGINT, so the scaled value is
-    clamped to [-1, n] and NaN mapped to 0 before the floor: NaN and -inf
-    land in row/col 0 and +inf in n-1, as in cell_id and cell_id_col."""
+    The float32-truncated value is cast on to DOUBLE before the arithmetic:
+    DuckDB evaluates FLOAT + 90.0 in FLOAT, and that rounding moves points
+    near a cell edge into the next cell. DuckDB cannot cast a non-finite
+    float to BIGINT, so the scaled value is clamped to [-1, n] and NaN
+    mapped to 0 before the floor: NaN and -inf land in row/col 0 and +inf
+    in n-1, as in cell_id and cell_id_col."""
     n = 1 << res
 
     def axis(expr, shift, span):
-        v = f"(CAST({expr} AS FLOAT) + {shift}) / {span} * {n}"
+        v = f"(CAST(CAST({expr} AS FLOAT) AS DOUBLE) + {shift}) / {span} * {n}"
         return (
             f"LEAST(GREATEST(CAST(FLOOR(CASE WHEN isnan({v}) THEN 0 "
             f"ELSE LEAST(GREATEST({v}, -1), {n}) END) AS BIGINT), 0), {n - 1})"
@@ -396,33 +399,45 @@ def _cover_zones(edges, edge_off: np.ndarray, zone_bbox: np.ndarray,
 
 
 _KNN_BASE_RES = 4  # dense level the hierarchical refinement starts from
-_KNN_PAIR_BUDGET = 500_000  # (cell, zone) pairs per chunk of _knn_cells
+# Pairs per chunk of _knn_cells: (cell, zone) pairs of the dense base level,
+# (parent cell, zone) pairs of a refinement level. A parent pair holds ~12
+# float64 temporaries while its four children are scored.
+_KNN_PAIR_BUDGET = 500_000
+
+
+def _lat_lines(n: int, i) -> np.ndarray:
+    """Float64 latitude of grid line ``i`` of an n-row grid (row r spans
+    lines r and r + 1)."""
+    return -90.0 + 180.0 * np.asarray(i, np.float64) / n
+
+
+def _lng_lines(n: int, i) -> np.ndarray:
+    """Float64 longitude of grid line ``i`` of an n-column grid."""
+    return -180.0 + 360.0 * np.asarray(i, np.float64) / n
 
 
 def _cell_rects(n: int, cells: np.ndarray = None):
     """Per-cell float64 bounds at an n x n grid: every cell in cell-id order,
-    or the given cell ids."""
+    or the given cell ids. The per-cell form of the kNN table's definition,
+    which its dense test references use; _knn_cells takes the same grid
+    lines per row and per column."""
     if cells is None:
         cells = np.arange(n * n, dtype=np.int64)
-    rows_f = (cells // n).astype(np.float64)
-    cols_f = (cells % n).astype(np.float64)
-    return (
-        -90.0 + 180.0 * rows_f / n,
-        -180.0 + 360.0 * cols_f / n,
-        -90.0 + 180.0 * (rows_f + 1.0) / n,
-        -180.0 + 360.0 * (cols_f + 1.0) / n,
-    )
+    rows, cols = cells // n, cells % n
+    return (_lat_lines(n, rows), _lng_lines(n, cols),
+            _lat_lines(n, rows + 1), _lng_lines(n, cols + 1))
 
 
-def _rect_dists(c_lat0, c_lng0, c_lat1, c_lng1, z_lat0, z_lng0, z_lat1, z_lng1):
-    """Squared (nearest, farthest-corner) clamp distances between cell rects
-    and zone MBRs, elementwise. d_min <= d_max holds in float64 too (every
-    operation is monotone), which the incremental kNN update relies on."""
-    gl = np.maximum(np.maximum(z_lat0 - c_lat1, c_lat0 - z_lat1), 0.0)
-    gg = np.maximum(np.maximum(z_lng0 - c_lng1, c_lng0 - z_lng1), 0.0)
-    fl = np.maximum(np.maximum(z_lat0 - c_lat0, c_lat1 - z_lat1), 0.0)
-    fg = np.maximum(np.maximum(z_lng0 - c_lng0, c_lng1 - z_lng1), 0.0)
-    return gl * gl + gg * gg, fl * fl + fg * fg
+def _halves(c0, c1, z0, z1):
+    """Squared (nearest, farthest) clamp distances along one axis between
+    cell intervals [c0, c1] and zone intervals [z0, z1], elementwise or
+    broadcast. A cell's d_min to a zone MBR is its row (lat) near half plus
+    its column (lng) near half, and d_max the sum of the far halves. near <=
+    far holds in float64 too (every operation is monotone), so d_min <=
+    d_max, which the incremental kNN update relies on."""
+    g = np.maximum(np.maximum(z0 - c1, c0 - z1), 0.0)
+    f = np.maximum(np.maximum(z0 - c0, c1 - z1), 0.0)
+    return g * g, f * f
 
 
 def _seg_min(vals, seg_off):
@@ -431,19 +446,6 @@ def _seg_min(vals, seg_off):
     out = np.full(len(cnt), np.inf)
     out[cnt > 0] = np.minimum.reduceat(vals, seg_off[:-1][cnt > 0])
     return out
-
-
-def _knn_keep_mask(c_lat0, c_lng0, c_lat1, c_lng1, z_lat0, z_lng0, z_lat1,
-                   z_lng1, seg_off):
-    """Exactness predicate per (cell, zone) pair row, CSR-segmented by cell:
-    keep zones whose nearest rect-to-rect distance <= U(cell), where U(cell)
-    is the min over the cell's candidate zones of the farthest-corner clamp
-    distance. All arrays are per-PAIR (already gathered); seg_off bounds the
-    cells' pair segments."""
-    d_min, d_max = _rect_dists(
-        c_lat0, c_lng0, c_lat1, c_lng1, z_lat0, z_lng0, z_lat1, z_lng1
-    )
-    return d_min <= np.repeat(_seg_min(d_max, seg_off), np.diff(seg_off))
 
 
 def _bbox_cols(zone_bbox: np.ndarray):
@@ -477,14 +479,25 @@ def _knn_cells(zone_bbox: np.ndarray, res: int, cells: np.ndarray):
     because child candidate sets are contained in the parent's: for c' in c,
     d_min(z, c') >= d_min(z, c) and U(c') <= U(c) (the child's farthest
     corner is no farther), so anything kept at the child was kept at the
-    parent. This is what makes a res-8 grid (65k cells, ~7 candidates/cell,
-    ~12x faster probes than res 6) compile in ~1 s instead of the dense
-    (cells x zones) minute at Z = 24,000.
+    parent.
+
+    SEPARABLE: both squared distances split into a row half and a column
+    half, d_min = gl(row, z)² + gg(col, z)² and d_max = fl(row, z)² +
+    fg(col, z)² (_halves), because the clamp along lat depends only on the
+    cell's row and along lng only on its column. The dense level computes
+    the (rows x Z) and (cols x Z) halves once and adds them per cell; a
+    refinement level computes, per (parent, zone) pair, the halves of the
+    parent's two child rows and two child columns once and adds them for
+    all four children. The float64 values are those of the per-cell form:
+    a cell's bounds are the same grid lines (_cell_rects), each half is the
+    same subtract/max/square sequence, and the sum is the same one addition
+    (row half first), so the lists, and the index bytes, do not change.
 
     A cell's list depends only on its ancestors' lists, so the routine
-    visits just ``cells`` and their ancestors; over all cells it is the full
-    build (_compile_knn_table), over a few it is the incremental update's
-    rebuild (_knn_update), and both give the same bytes per cell.
+    visits just ``cells`` and their ancestors, scoring all four children of
+    each visited parent and keeping the ones asked for; over all cells it
+    is the full build (_compile_knn_table), over a few it is the incremental
+    update's rebuild (_knn_update), and both give the same bytes per cell.
 
     Which cells an update must rebuild. Let a zone change its MBR from Bo to
     Bn (a delete has no Bn, an add no Bo), and let U_old(c) be the min over
@@ -497,8 +510,8 @@ def _knn_cells(zone_bbox: np.ndarray, res: int, cells: np.ndarray):
     for the shifted zone indices. Only the cells that listed the zone or
     that satisfy d_min(Bn, c) <= U_old(c) can change.
     """
-    z_lat0, z_lng0, z_lat1, z_lng1 = _bbox_cols(zone_bbox)
-    nz = len(z_lat0)
+    z = _bbox_cols(zone_bbox)
+    nz = len(z[0])
     cells = np.asarray(cells, np.int64)
     if nz == 0:
         return np.zeros(len(cells) + 1, np.int64), np.empty(0, np.int32)
@@ -512,63 +525,79 @@ def _knn_cells(zone_bbox: np.ndarray, res: int, cells: np.ndarray):
         levels.append(np.unique((c // n >> 1) * (n >> 1) + (c % n >> 1)))
     levels.reverse()
 
-    # dense base level (chunked (cells x zones) matrices)
-    lv = levels[0]
-    c_lat0, c_lng0, c_lat1, c_lng1 = _cell_rects(1 << base, lv)
-    off = np.zeros(len(lv) + 1, dtype=np.int64)
-    keep_parts = []
-    # smaller chunks than the query-side budget: the FIRST chunk's
-    # temporaries fault in fresh pages (expensive on this host's bad
-    # windows, BASELINE.md round 4) and every later chunk reuses them, so
-    # many small chunks beat few huge ones — same flops, ~8x fewer fresh
-    # pages at Z=24k (measured 103 s -> ~1 s for the res-4 dense level)
-    step = max(1, _KNN_PAIR_BUDGET // max(nz, 1))
-    for s in range(0, len(lv), step):
-        sl = slice(s, min(s + step, len(lv)))
-        ncell = sl.stop - sl.start
-        pair_z = np.tile(np.arange(nz, dtype=np.int64), ncell)
-        pair_c = np.repeat(np.arange(ncell, dtype=np.int64), nz)
-        seg = np.arange(0, (ncell + 1) * nz, nz, dtype=np.int64)
-        keep = _knn_keep_mask(
-            c_lat0[sl][pair_c], c_lng0[sl][pair_c],
-            c_lat1[sl][pair_c], c_lng1[sl][pair_c],
-            z_lat0[pair_z], z_lng0[pair_z], z_lat1[pair_z], z_lng1[pair_z],
-            seg,
-        )
-        kept = pair_z[keep]
-        keep_parts.append(kept.astype(np.int32))
-        off[sl.start + 1 : sl.stop + 1] = np.cumsum(
-            np.add.reduceat(keep.astype(np.int64), seg[:-1])
-        ) + off[sl.start]
-    zidx = (
-        np.concatenate(keep_parts) if keep_parts else np.empty(0, np.int32)
-    )
-
-    # refine level by level: child candidates come from the parent's list,
-    # in chunks of _KNN_PAIR_BUDGET (cell, candidate) pairs — each pair
-    # feeds ~20 float64 temporaries, and a level can hold ~650k pairs
+    off, zidx = _knn_dense(levels[0], 1 << base, z)
     for r, lv_par, lv in zip(range(base + 1, res + 1), levels, levels[1:]):
-        n = 1 << r
-        c_lat0, c_lng0, c_lat1, c_lng1 = _cell_rects(n, lv)
-        parent = np.searchsorted(lv_par, (lv // n >> 1) * (n >> 1) + (lv % n >> 1))
-        start = off[parent]
-        cnt = off[parent + 1] - start
-        keep_parts = [np.empty(0, np.int32)]
-        kept_cnt = np.zeros(len(lv), dtype=np.int64)
-        for s, e in _chunk_bounds(cnt, _KNN_PAIR_BUDGET):
-            pair_z = zidx[_ragged_ramp(start[s:e], cnt[s:e])].astype(np.int64)
-            pair_c = np.repeat(np.arange(s, e, dtype=np.int64), cnt[s:e])
-            seg = np.concatenate([[0], np.cumsum(cnt[s:e])])
-            keep = _knn_keep_mask(
-                c_lat0[pair_c], c_lng0[pair_c], c_lat1[pair_c], c_lng1[pair_c],
-                z_lat0[pair_z], z_lng0[pair_z], z_lat1[pair_z], z_lng1[pair_z],
-                seg,
-            )
-            keep_parts.append(pair_z[keep].astype(np.int32))
-            kept_cnt[s:e] = np.add.reduceat(keep.astype(np.int64), seg[:-1])
-        zidx = np.concatenate(keep_parts)
-        off = np.concatenate([[0], np.cumsum(kept_cnt)]).astype(np.int64)
+        off, zidx = _knn_children(off, zidx, lv_par, lv, 1 << r, z)
     return off, zidx
+
+
+def _knn_dense(cells: np.ndarray, n: int, z):
+    """_knn_cells' base level: every zone scored against each of ``cells``
+    at an n x n grid, from (rows x Z) and (cols x Z) half-distances."""
+    z_lat0, z_lng0, z_lat1, z_lng1 = z
+    rows, ri = np.unique(cells // n, return_inverse=True)
+    cols, ci = np.unique(cells % n, return_inverse=True)
+    lat_near, lat_far = _halves(_lat_lines(n, rows)[:, None],
+                                _lat_lines(n, rows + 1)[:, None], z_lat0, z_lat1)
+    lng_near, lng_far = _halves(_lng_lines(n, cols)[:, None],
+                                _lng_lines(n, cols + 1)[:, None], z_lng0, z_lng1)
+    # chunks of _KNN_PAIR_BUDGET pairs rather than one (cells x zones)
+    # matrix: the first chunk's temporaries fault in fresh pages (expensive
+    # where first-touch faults are slow, BASELINE.md round 4) and every
+    # later chunk reuses them
+    step = max(1, _KNN_PAIR_BUDGET // len(z_lat0))
+    cnt = np.empty(len(cells), np.int64)
+    parts = [np.empty(0, np.int32)]
+    for s in range(0, len(cells), step):
+        r, c = ri[s : s + step], ci[s : s + step]
+        u = (lat_far[r] + lng_far[c]).min(axis=1)
+        keep = lat_near[r] + lng_near[c] <= u[:, None]
+        cnt[s : s + step] = keep.sum(axis=1)
+        parts.append(np.nonzero(keep)[1].astype(np.int32))
+    return np.concatenate([[0], np.cumsum(cnt)]).astype(np.int64), np.concatenate(parts)
+
+
+def _knn_children(off, zidx, lv_par: np.ndarray, lv: np.ndarray, n: int, z):
+    """One refinement level of _knn_cells: the four children of every parent
+    in ``lv_par`` (whose lists are the CSR ``off``/``zidx``) scored against
+    the parent's list, in chunks of _KNN_PAIR_BUDGET parent pairs; returns
+    the lists of the ``lv`` cells at the n x n grid."""
+    z_lat0, z_lng0, z_lat1, z_lng1 = z
+    prow, pcol = lv_par // (n >> 1), lv_par % (n >> 1)
+    lat = [_lat_lines(n, 2 * prow + k) for k in range(3)]  # child row lines
+    lng = [_lng_lines(n, 2 * pcol + k) for k in range(3)]
+    pcnt = np.diff(off)
+    kcnt = np.zeros((4, len(lv_par)), np.int64)  # child k = 2 * dr + dc
+    kstart = np.zeros((4, len(lv_par)), np.int64)
+    pool, pooled = [np.empty(0, np.int32)], 0
+    for s, e in _chunk_bounds(pcnt, _KNN_PAIR_BUDGET):
+        pz = zidx[off[s] : off[e]]
+        seg = off[s : e + 1] - off[s]
+        c = pcnt[s:e]
+        halves = []  # [child row/column 0, 1] -> (near, far) per pair
+        for lines, z0, z1 in ((lat, z_lat0, z_lat1), (lng, z_lng0, z_lng1)):
+            z0, z1 = z0[pz], z1[pz]
+            halves.append([_halves(np.repeat(lines[k][s:e], c),
+                                   np.repeat(lines[k + 1][s:e], c), z0, z1)
+                           for k in (0, 1)])
+        lat_h, lng_h = halves
+        for k in range(4):
+            (gl, fl), (gg, fg) = lat_h[k >> 1], lng_h[k & 1]
+            u = _seg_min(fl + fg, seg)
+            keep = gl + gg <= np.repeat(u, c)
+            kept = np.concatenate([[0], np.cumsum(keep)])[seg]
+            kcnt[k, s:e] = np.diff(kept)
+            kstart[k, s:e] = pooled + kept[:-1]
+            pool.append(pz[keep])
+            pooled += int(kept[-1])
+
+    child = ((2 * prow + (np.arange(4)[:, None] >> 1)) * n
+             + 2 * pcol + (np.arange(4)[:, None] & 1)).ravel()
+    order = np.argsort(child)
+    pos = order[np.searchsorted(child[order], lv)]
+    cnt = kcnt.ravel()[pos]
+    zidx = np.concatenate(pool)[_ragged_ramp(kstart.ravel()[pos], cnt)]
+    return np.concatenate([[0], np.cumsum(cnt)]).astype(np.int64), zidx
 
 
 def _knn_update(prev: CompiledIndex, idx: CompiledIndex, pos: int,
@@ -586,29 +615,30 @@ def _knn_update(prev: CompiledIndex, idx: CompiledIndex, pos: int,
     if old_bbox is not None:  # cells that listed the zone
         aff[np.searchsorted(off, np.flatnonzero(zi == pos), side="right") - 1] = True
     if new_bbox is not None:  # cells where the new MBR is within U_old
-        c_lat0, c_lng0, c_lat1, c_lng1 = _cell_rects(n)
-        d_new, _ = _rect_dists(
-            c_lat0, c_lng0, c_lat1, c_lng1, *np.asarray(new_bbox, np.float64)
-        )
+        b_lat0, b_lng0, b_lat1, b_lng1 = np.asarray(new_bbox, np.float64)
+        lines = np.arange(n + 1)
+        lat, lng = _lat_lines(n, lines), _lng_lines(n, lines)
+        gl, _ = _halves(lat[:-1], lat[1:], b_lat0, b_lat1)
+        gg, _ = _halves(lng[:-1], lng[1:], b_lng0, b_lng1)
+        d_new = (gl[:, None] + gg[None, :]).ravel()
+        z_lat0, z_lng0, z_lat1, z_lng1 = _bbox_cols(prev.zone_bbox)
+
+        def d_max(pc, pz):  # farthest-corner distance of (cell, zone) pairs
+            r, c = pc // n, pc % n
+            _, fl = _halves(lat[r], lat[r + 1], z_lat0[pz], z_lat1[pz])
+            _, fg = _halves(lng[c], lng[c + 1], z_lng0[pz], z_lng1[pz])
+            return fl + fg
+
         # U_old from the whole old list, only where d_new could be <= it:
         # any one candidate's d_max bounds U_old from above
-        z_lat0, z_lng0, z_lat1, z_lng1 = _bbox_cols(prev.zone_bbox)
         ub = np.full(n * n, np.inf)
-        has = cnt > 0
-        first = zi[off[:-1][has]]
-        _, ub[has] = _rect_dists(
-            c_lat0[has], c_lng0[has], c_lat1[has], c_lng1[has],
-            z_lat0[first], z_lng0[first], z_lat1[first], z_lng1[first],
-        )
+        has = np.flatnonzero(cnt > 0)
+        ub[has] = d_max(has, zi[off[has]])
         near = np.flatnonzero(d_new <= ub)
         ncnt = cnt[near]
         pz = zi[_ragged_ramp(off[near], ncnt)].astype(np.int64)
-        pc = np.repeat(near, ncnt)
-        _, d_max = _rect_dists(
-            c_lat0[pc], c_lng0[pc], c_lat1[pc], c_lng1[pc],
-            z_lat0[pz], z_lng0[pz], z_lat1[pz], z_lng1[pz],
-        )
-        u_old = _seg_min(d_max, np.concatenate([[0], np.cumsum(ncnt)]))
+        u_old = _seg_min(d_max(np.repeat(near, ncnt), pz),
+                         np.concatenate([[0], np.cumsum(ncnt)]))
         aff[near[d_new[near] <= u_old]] = True
 
     cells = np.flatnonzero(aff)

@@ -8,6 +8,7 @@ Idempotent and cheap (~100 KB zip, cached)."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -16,21 +17,36 @@ _SHIPPED = set()
 
 
 def package_zip_path() -> str:
-    """Build (once) a --py-files-shaped zip of the tzspark package."""
+    """Build (once per source change) a --py-files-shaped zip of the tzspark
+    package.
+
+    One zip per checkout: it is named by a digest of the package dir's real
+    path, so two checkouts never share a zip, and its comment holds a
+    blake2b digest of the package's ``*.py`` names and bytes, so any source
+    change rebuilds it in place, however the file mtimes compare."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "tzspark_pyfiles.zip")
-    src_mtime = max(
-        os.path.getmtime(os.path.join(pkg_dir, f))
-        for f in os.listdir(pkg_dir)
-        if f.endswith(".py")
-    )
-    if not os.path.exists(out) or os.path.getmtime(out) < src_mtime:
-        tmp = out + f".{os.getpid()}.tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for f in sorted(os.listdir(pkg_dir)):
-                if f.endswith(".py"):
-                    zf.write(os.path.join(pkg_dir, f), f"tzspark/{f}")
-        os.replace(tmp, out)
+    names = sorted(f for f in os.listdir(pkg_dir) if f.endswith(".py"))
+    h = hashlib.blake2b(digest_size=8)
+    sources = {}
+    for f in names:
+        with open(os.path.join(pkg_dir, f), "rb") as fh:
+            sources[f] = fh.read()
+        h.update(f.encode() + sources[f])
+    digest = h.hexdigest().encode()
+    tag = hashlib.blake2b(os.path.realpath(pkg_dir).encode(), digest_size=8).hexdigest()
+    out = os.path.join(tempfile.gettempdir(), f"tzspark_pyfiles_{tag}.zip")
+    try:
+        with zipfile.ZipFile(out) as zf:
+            if zf.comment == digest:
+                return out
+    except (OSError, zipfile.BadZipFile):
+        pass
+    tmp = out + f".{os.getpid()}.tmp"
+    with zipfile.ZipFile(tmp, "w") as zf:
+        zf.comment = digest
+        for f in names:
+            zf.writestr(f"tzspark/{f}", sources[f])
+    os.replace(tmp, out)
     return out
 
 
