@@ -7,7 +7,7 @@ value-hash -> CORRECTNESS_r{N}.json).
 
 Engine: tzspark/ — see SURVEY.md. Geo queries derive points from `events`
 and rectangular zones from `nation` (FIXTURES.md §4); q10-q12 run the real
-float32 PIP / cell-cover / kNN kernels inside pandas UDFs against pure-SQL
+float32 PIP / cell-cover / kNN kernels inside Arrow UDFs against pure-SQL
 oracles. Text/similarity queries cover the training-data operator families
 over `documents` / `embeddings`. The image queries (q24-q30) are oracle-
 checked too: the synthetic pixels and the codec are pure arithmetic in the

@@ -10,7 +10,9 @@ assert the plan properties the design promises:
 4. tile rollup: decode runs in ONE mapInArrow below the only Exchange, so
    only the tiny partial-sum rows shuffle;
 5. quarantine side output: the extract UDF crosses into Python once (one
-   ArrowEvalPython), not once more inside the validity Filter;
+   ArrowEvalPython), not once more inside the validity Filter; 1 and 5,
+   with the q11/q12/q43/q89/q106 probes, are probe_plan_checks (also run
+   in tier-1 by tests/test_plans.py);
 6. join path: one FlatMapCoGroupsInArrow per lookup, the cover never
    broadcast (join_path_checks; tier-1 runs it in tests/test_plans.py);
 6e. distance joins: one cell-keyed equi-join each, never an all-pairs
@@ -77,29 +79,6 @@ def main():
     sections = []
     failures = []
 
-    # 1. lookup pipeline + rollup
-    lookup = assign_timezones(images, idx_b, dim).groupBy("zone_id", "tzid").agg(
-        F.count("*").alias("n")
-    )
-    p1 = plan_of(lookup)
-    sections.append(("lookup pipeline -> per-zone rollup", p1))
-    # BroadcastExchange is the dim broadcast, not a data shuffle
-    n_exchange = len(re.findall(r"\bExchange\b", p1)) - len(
-        re.findall(r"BroadcastExchange", p1)
-    )
-    if "SortMergeJoin" in p1:
-        failures.append("lookup: unexpected SortMergeJoin")
-    if "BroadcastHashJoin" not in p1:
-        failures.append("lookup: tzid attach is not a broadcast join")
-    # one shuffle for the final agg is expected; more means a design leak
-    if n_exchange > 1:
-        failures.append(f"lookup: {n_exchange} Exchanges (expected <= 1)")
-    # the fused lookup must cross JVM<->Python exactly once (round-1 regression:
-    # the extract UDF was inlined twice, 3 ArrowEvalPython stages total)
-    n_python = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow)", p1))
-    if n_python != 1:
-        failures.append(f"lookup: {n_python} Python stages (expected exactly 1)")
-
     # 2. column pruning through the UDF projections
     gps_only = assign_timezones(images, idx_b, dim).select("zone_id")
     p2 = plan_of(gps_only)
@@ -133,15 +112,6 @@ def main():
     elif tree4.find("MapInArrow") < tree4.find("Exchange ("):
         failures.append("tile: the decode stage runs above the Exchange")
 
-    # 4b. quarantine side output: the nondeterministic extract UDF keeps the
-    # validity Filter above its one ArrowEvalPython (a deterministic UDF is
-    # re-instantiated inside the Filter: two Python stages per row)
-    p4b = plan_of(quarantined_rows(images))
-    sections.append(("quarantine side output (one extract crossing)", p4b))
-    n_py4b = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow)", p4b))
-    if n_py4b != 1 or "ArrowEvalPython" not in p4b:
-        failures.append(f"quarantine: {n_py4b} Python stages (expected exactly 1 ArrowEvalPython)")
-
     # 5. fused one-pass lookup+tile: ONE PythonMapInArrow, one Exchange,
     # bytes-only ReadSchema (payload crosses once, partials shuffle)
     from tzspark.engine import lookup_tile_onepass
@@ -172,6 +142,12 @@ def main():
     s6e, f6e = distance_join_checks(spark, sf_small)
     sections += s6e
     failures += f6e
+
+    # 1 and 4b (the lookup and its quarantine side output) and the
+    # oracle-checked probes: probe_plan_checks below
+    s1, f1 = probe_plan_checks(spark, images, sf_small)
+    sections += s1
+    failures += f1
 
     # 7. as-of join (union-and-last-value form): NO join operator at all —
     # one Exchange on user_id feeds the window; sessionization's two windows
@@ -399,21 +375,7 @@ def main():
     ):
         failures.append("interleave: window lost its source partitioning")
 
-    from tzspark.queries_geo import q89_versioned_resolve
     from tzspark.queries_text import q90_bm25_rank
-
-    p27 = plan_of(q89_versioned_resolve(spark, sf001))
-    sections.append(("versioned zone resolve (per-epoch broadcast probes)", p27))
-    if len(re.findall(r"\(\d+\) ArrowEvalPython", p27)) != 2:
-        failures.append("versioned: expected exactly TWO Arrow probes (one per epoch)")
-    if re.search(r"CartesianProduct|BroadcastNestedLoopJoin", p27):
-        failures.append("versioned: unexpected cross join")
-    # each epoch slice must filter on ts BEFORE its probe (the
-    # partition-prune shape at scale)
-    if len(re.findall(r"PushedFilters: \[[^\]]*IsNotNull\(ts\)", p27)) < 1 and not re.search(
-        r"Filter.*ts", p27
-    ):
-        failures.append("versioned: time-slice filter missing below the probes")
 
     p28 = plan_of(q90_bm25_rank(spark, sf001))
     sections.append(("BM25 ranking (Q-bounded explode, distributed top-k)", p28))
@@ -643,14 +605,10 @@ def main():
     if re.search(r"ArrowEvalPython|MapInArrow|MapInPandas", p41):
         failures.append("semdedup: unexpected Python stage (pure column ops)")
 
-    # 42-45. final round-5 wave: sharpness gate, dissolve, resample,
-    # boundary distance
+    # 42-44. final round-5 wave: sharpness gate, dissolve, resample (the
+    # boundary-distance probe, q106, is in probe_plan_checks)
     from tzspark.queries_extra import q103_image_sharpness
-    from tzspark.queries_geo import (
-        q104_zone_dissolve,
-        q105_trajectory_resample,
-        q106_boundary_distance,
-    )
+    from tzspark.queries_geo import q104_zone_dissolve, q105_trajectory_resample
 
     # 42. sharpness (q103): exactly ONE Arrow crossing (the gradient
     # kernel — the only stage that touches payload bytes); the keep flag
@@ -699,17 +657,6 @@ def main():
         failures.append(
             f"resample: {n_ex44} Exchanges (expected <=2: user window + final sort)"
         )
-
-    # 45. boundary distance (q106): the engine resolve is the single Arrow
-    # probe; the box attach is a broadcast hash join; edge math is JVM
-    p45 = plan_of(q106_boundary_distance(spark, sf001))
-    sections.append(("boundary distance (geofence margin)", p45))
-    if len(re.findall(r"\(\d+\) ArrowEvalPython", p45)) != 1:
-        failures.append("boundary: expected exactly ONE Arrow stage (the resolve probe)")
-    if "BroadcastHashJoin" not in p45:
-        failures.append("boundary: box attach is not a broadcast hash join")
-    if re.search(r"CartesianProduct|BroadcastNestedLoopJoin", p45):
-        failures.append("boundary: unexpected cross join")
 
     # 46-48. final wave: scene cuts, surprisal, daylight consistency
     from tzspark.queries_extra import q107_scene_cuts, q109_daylight_consistency
@@ -774,6 +721,8 @@ def main():
             "(shuffles post-decode partial sums only)\n"
             "- quarantine side output: exactly one ArrowEvalPython (the "
             "Filter does not re-run the extract UDF)\n"
+            "- q11/q12/q43/q106 probes: exactly one ArrowEvalPython each "
+            "(q89: one per epoch)\n"
             "- join path: one FlatMapCoGroupsInArrow (points x index shards) "
             "per lookup, the cover never broadcast, multi-tenant cogroup keys "
             "lead with tenant, the image path's GPS extract evaluated once\n"
@@ -856,6 +805,102 @@ def main():
     spark.stop()
     sys.exit(1 if failures else 0)
 
+
+
+def probe_plan_checks(spark, images, sf_small):
+    """Sections 1 and 4b and the oracle-checked probes (q11, q12, q43, q89,
+    q106): every Python-side lookup kernel crosses into Python once, as
+    ([(title, plan)], [failure]). tests/test_plans.py runs the same checks
+    in tier-1.
+
+    Each plan has exactly one ArrowEvalPython (q89: one per epoch). The
+    lookup, the quarantine extract and the q12/q106 probes are
+    nondeterministic arrow_udfs on purpose: a deterministic one is copied
+    into the Filter (or the inferred join-key filter) below its projection
+    and every row crosses twice."""
+    from tzspark.queries_geo import (
+        box_zones,
+        q11_resolve_cover,
+        q12_knn_engine,
+        q43_zone_update_resolve,
+        q89_versioned_resolve,
+        q106_boundary_distance,
+    )
+
+    zones = box_zones(spark, sf_small)
+    idx_b, _ = broadcast_cover(spark, zones)
+    dim = zone_dim_df(spark, zones)
+    sections, failures = [], []
+
+    # 1. lookup pipeline + rollup
+    lookup = assign_timezones(images, idx_b, dim).groupBy("zone_id", "tzid").agg(
+        F.count("*").alias("n")
+    )
+    p1 = plan_of(lookup)
+    sections.append(("lookup pipeline -> per-zone rollup", p1))
+    # BroadcastExchange is the dim broadcast, not a data shuffle
+    n_exchange = len(re.findall(r"\bExchange\b", p1)) - len(
+        re.findall(r"BroadcastExchange", p1)
+    )
+    if "SortMergeJoin" in p1:
+        failures.append("lookup: unexpected SortMergeJoin")
+    if "BroadcastHashJoin" not in p1:
+        failures.append("lookup: tzid attach is not a broadcast join")
+    # one shuffle for the final agg is expected; more means a design leak
+    if n_exchange > 1:
+        failures.append(f"lookup: {n_exchange} Exchanges (expected <= 1)")
+    # the fused lookup must cross JVM<->Python exactly once (round-1 regression:
+    # the extract UDF was inlined twice, 3 ArrowEvalPython stages total)
+    n_python = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow)", p1))
+    if n_python != 1 or "ArrowEvalPython" not in p1:
+        failures.append(f"lookup: {n_python} Python stages (expected exactly 1 ArrowEvalPython)")
+
+    # 4b. quarantine side output: the nondeterministic extract UDF keeps the
+    # validity Filter above its one ArrowEvalPython (a deterministic UDF is
+    # re-instantiated inside the Filter: two Python stages per row)
+    p4b = plan_of(quarantined_rows(images))
+    sections.append(("quarantine side output (one extract crossing)", p4b))
+    n_py4b = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow)", p4b))
+    if n_py4b != 1 or "ArrowEvalPython" not in p4b:
+        failures.append(f"quarantine: {n_py4b} Python stages (expected exactly 1 ArrowEvalPython)")
+
+    # q11/q12/q43: one assign probe each (q11/q43 mask its kNN answers in a
+    # later projection, q12 filters on them)
+    for tag, title, q in (
+        ("resolve", "cover resolve probe (q11)", q11_resolve_cover),
+        ("knn", "kNN probe filtered on via_knn (q12)", q12_knn_engine),
+        ("updated-resolve", "resolve through an updated index (q43)", q43_zone_update_resolve),
+    ):
+        pl = plan_of(q(spark, sf_small))
+        sections.append((title, pl))
+        n_py = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow)", pl))
+        if n_py != 1 or "ArrowEvalPython" not in pl:
+            failures.append(f"{tag}: {n_py} Python stages (expected exactly 1 ArrowEvalPython)")
+
+    p27 = plan_of(q89_versioned_resolve(spark, sf_small))
+    sections.append(("versioned zone resolve (per-epoch broadcast probes)", p27))
+    if len(re.findall(r"\(\d+\) ArrowEvalPython", p27)) != 2:
+        failures.append("versioned: expected exactly TWO Arrow probes (one per epoch)")
+    if re.search(r"CartesianProduct|BroadcastNestedLoopJoin", p27):
+        failures.append("versioned: unexpected cross join")
+    # each epoch slice must filter on ts BEFORE its probe (the
+    # partition-prune shape at scale)
+    if len(re.findall(r"PushedFilters: \[[^\]]*IsNotNull\(ts\)", p27)) < 1 and not re.search(
+        r"Filter.*ts", p27
+    ):
+        failures.append("versioned: time-slice filter missing below the probes")
+
+    # boundary distance (q106): the engine resolve is the single Arrow
+    # probe; the box attach is a broadcast hash join; edge math is JVM
+    p45 = plan_of(q106_boundary_distance(spark, sf_small))
+    sections.append(("boundary distance (geofence margin)", p45))
+    if len(re.findall(r"\(\d+\) ArrowEvalPython", p45)) != 1:
+        failures.append("boundary: expected exactly ONE Arrow stage (the resolve probe)")
+    if "BroadcastHashJoin" not in p45:
+        failures.append("boundary: box attach is not a broadcast hash join")
+    if re.search(r"CartesianProduct|BroadcastNestedLoopJoin", p45):
+        failures.append("boundary: unexpected cross join")
+    return sections, failures
 
 
 def distance_join_checks(spark, sf_small):

@@ -263,11 +263,12 @@ def test_knn_cells_equal_dense_definition(bbox, res, budget, data):
 
 
 def test_nan_coordinates_get_no_zone(spark, zones, idx):
-    """A NaN coordinate has no nearest zone (its distance to every MBR is
-    NaN): knn_fallback and search_many answer -1, assign_points and
-    assign_udf (a null lat/lng reaches the UDF as NaN) answer (-1, via_knn
-    False) — never the lowest zone_id. Valid points in the same batch keep
-    their answers, in domain (pruned table) and out of it (brute force)."""
+    """A NaN or infinite coordinate has no nearest zone (its distance to
+    every MBR is NaN or inf, a tie the min-id rule would answer with the
+    lowest zone_id): knn_fallback and search_many answer -1, assign_points
+    and assign_udf (a null lat/lng reaches the UDF as NaN) answer (-1,
+    via_knn False). Valid points in the same batch keep their answers, in
+    domain (pruned table) and out of it (brute force)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -275,26 +276,27 @@ def test_nan_coordinates_get_no_zone(spark, zones, idx):
     from tzspark.cells import assign_points, describe_point
     from tzspark.engine import assign_udf
 
-    lat = np.array([np.nan, 5.0, np.nan, 25.0, 200.0], F32)
-    lng = np.array([10.0, np.nan, np.nan, 10.0, 10.0], F32)
-    knn = [-1, -1, -1, *oracle_knn(zones, lat[3:], lng[3:]).tolist()]
+    inf = np.inf
+    lat = np.array([np.nan, 5.0, np.nan, 25.0, 200.0, -95.0, inf, 5.0, -inf], F32)
+    lng = np.array([10.0, np.nan, np.nan, 10.0, 10.0, 10.0, 10.0, -inf, inf], F32)
+    knn = [-1, -1, -1, *oracle_knn(zones, lat[3:6], lng[3:6]).tolist(), -1, -1, -1]
     assert knn_fallback(idx, lat, lng).tolist() == knn
     assert TimezoneLookup(zones).search_many(lat, lng).tolist() == knn
 
-    zid, via = assign_points(idx, lat[:4], lng[:4])
-    assert zid.tolist() == knn[:4] and via.tolist() == [False] * 3 + [True]
+    zid, via = assign_points(idx, lat, lng)
+    want_via = [False] * 3 + [True] * 3 + [False] * 3
+    assert zid.tolist() == knn and via.tolist() == want_via
     info = describe_point(idx, float("nan"), 10.0)
     assert (info["zone_id"], info["via"], info["tzid"]) == (-1, "", "")
 
     schema = T.StructType([T.StructField("lat", T.DoubleType(), True),
                            T.StructField("lng", T.DoubleType(), True)])
-    df = spark.createDataFrame([(None, 10.0), (5.0, None), (None, None), (25.0, 10.0)],
-                               schema)
+    rows = [(None, 10.0), (5.0, None), (None, None),
+            *zip(lat[3:].astype(float).tolist(), lng[3:].astype(float).tolist())]
+    df = spark.createDataFrame(rows, schema)
     a = df.select(assign_udf(spark.sparkContext.broadcast(idx))(
         F.col("lat"), F.col("lng")).alias("a")).select("a.*").collect()
-    assert [(r["zone_id"], r["via_knn"]) for r in a] == [
-        (-1, False), (-1, False), (-1, False), (knn[3], True)
-    ]
+    assert [(r["zone_id"], r["via_knn"]) for r in a] == list(zip(knn, want_via))
 
 
 def test_non_finite_points_resolve_to_no_zone():

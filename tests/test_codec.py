@@ -78,15 +78,16 @@ def test_synth_pixels_deterministic():
 
 
 def test_extract_gps_batch_misaligned_17n_total():
-    """Variable-length corrupt blobs that happen to total n*HEADER_LEN must
-    NOT take the fixed-width fast path (misaligned frombuffer would parse
-    garbage headers at wrong offsets)."""
+    """Variable-length blobs that happen to total n*HEADER_LEN must not be
+    parsed at misaligned offsets (each header is read at its own blob's
+    start); null and short blobs beside them are invalid and read as 0."""
     good, _, _ = encode_image(1, 5.0, 6.0, 8, 8, "raw")
     b1, b2 = good[:HEADER_LEN - 1], good[:HEADER_LEN + 1]  # total = 2*HEADER_LEN
-    lat, lng, ok = extract_gps_batch([b1, b2])
-    assert not ok[0]  # shorter than the header -> quarantined
-    assert ok[1]  # full valid header prefix -> parsed correctly
+    lat, lng, ok = extract_gps_batch([b1, b2, None, b"", good[:3], good])
+    assert ok.tolist() == [False, True, False, False, False, True]
     assert lat[1] == np.float32(5.0) and lng[1] == np.float32(6.0)
+    assert lat[5] == np.float32(5.0) and lng[5] == np.float32(6.0)
+    assert lat[[0, 2, 3, 4]].tolist() == [0.0] * 4 and lng[[0, 2, 3, 4]].tolist() == [0.0] * 4
 
 
 def test_batch_psnr_audit_equals_scalar_path():

@@ -31,7 +31,7 @@ from tzspark.covertable import (
     shard_blobs,
     shard_res,
 )
-from tzspark.engine import assign_udf, resolve_only_udf
+from tzspark.engine import assign_udf, with_contained_zone
 from tzspark.geom import F32
 from tzspark.queries_geo import box_zones, pts_df, q12_knn_engine
 
@@ -209,11 +209,7 @@ def test_resolve_join_equals_broadcast(spark, box_cover):
     idx, cov = box_cover
     p = pts_df(spark, SF)
     bidx = spark.sparkContext.broadcast(idx)
-    want = _pd(
-        p.select("event_id",
-                 resolve_only_udf(bidx)(F.col("lat"), F.col("lng")).alias("zone_id")),
-        ["event_id", "zone_id"],
-    )
+    want = _pd(with_contained_zone(p, assign_udf(bidx)), ["event_id", "zone_id"])
     got = _pd(resolve_via_join(p, "event_id", cov), ["event_id", "zone_id"])
     assert (want["zone_id"] == got["zone_id"]).all()
     assert (got["zone_id"] == -1).any()  # both regimes exercised

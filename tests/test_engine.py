@@ -171,6 +171,67 @@ def test_cell_id_forms_agree_near_cell_edges(spark):
             got_sql.df()["c"].to_numpy(np.int64), want, err_msg=f"duckdb res {res}")
 
 
+def test_lookup_kernels_without_spark(zones):
+    """The Arrow kernels behind extract_gps_udf, lookup_udf and assign_udf,
+    called as plain functions of pyarrow arrays, agree with
+    batch_image_stats + assign_points on one batch holding a null blob
+    (whose slot still has bytes), a blob shorter than the header, bad
+    magic, NaN/+-inf/out-of-domain header coordinates, on a sliced array
+    (non-zero offset, rebased by _arrow_binary_view), and on empty
+    batches."""
+    import pyarrow as pa
+
+    from tzspark.cells import assign_points, compile_cover, in_domain
+    from tzspark.engine import assign_kernel, gps_kernel, lookup_kernel
+    from tzspark.imagecodec import HEADER_LEN, batch_image_stats, encode_image, pack_blobs
+
+    idx = compile_cover(zones)
+    coords = [(10.0, 20.0), (-33.0, 151.0), (0.5, -170.0), (np.nan, 5.0),
+              (np.inf, 5.0), (5.0, -np.inf), (95.0, 5.0), (5.0, 200.0)]
+    blobs = [encode_image(i, la, lg, 4, 3, ("raw", "rle", "qnt")[i % 3])[0]
+             for i, (la, lg) in enumerate(coords)]
+    good = blobs[0]
+    blobs += [None, good[:HEADER_LEN - 1], b"XXXX" + good[4:]]
+    n = len(blobs)
+    base = pa.array([b"pad", *[good if b is None else b for b in blobs], b"pad"])
+    valid = np.array([True, *[b is not None for b in blobs], True])
+    bitmap = pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
+    arr = pa.Array.from_buffers(pa.binary(), n, [bitmap, *base.buffers()[1:]], offset=1)
+    assert arr.offset == 1 and arr.null_count == 1
+
+    st = batch_image_stats(*pack_blobs(blobs))
+    lat, lng, ok = st["lat"], st["lng"], st["ok"]
+    assert ok.tolist() == [True] * len(coords) + [False] * 3
+    g = gps_kernel(arr).flatten()
+    np.testing.assert_array_equal(g[0].to_numpy(), lat)
+    np.testing.assert_array_equal(g[1].to_numpy(), lng)
+    np.testing.assert_array_equal(g[2].to_numpy(zero_copy_only=False), ok)
+    np.testing.assert_array_equal(lat[:3], np.array([c[0] for c in coords[:3]], F32))
+
+    want_ok = ok & in_domain(lat, lng)
+    assert want_ok.tolist() == [True] * 3 + [False] * (n - 3)
+    want_zid = np.full(n, -1, np.int32)
+    want_via = np.zeros(n, bool)
+    want_zid[:3], want_via[:3] = assign_points(idx, lat[:3], lng[:3])
+    lk = [c.to_numpy(zero_copy_only=False) for c in lookup_kernel(idx, arr).flatten()]
+    for got, want in zip(lk, (lat, lng, want_ok, want_zid, want_via)):
+        np.testing.assert_array_equal(got, want)
+
+    # assign_kernel over the header coordinates, nulls where the blob is bad
+    la = pa.array(lat.astype(float), mask=~ok)
+    lg = pa.array(lng.astype(float), mask=~ok)
+    zid, via = assign_points(idx, np.where(ok, lat, np.nan), np.where(ok, lng, np.nan))
+    a = assign_kernel(idx, la, lg).flatten()
+    np.testing.assert_array_equal(a[0].to_numpy(), zid)
+    np.testing.assert_array_equal(a[1].to_numpy(zero_copy_only=False), via)
+    assert zid[3:].tolist() == [-1, -1, -1, *zid[6:8].tolist(), -1, -1, -1]
+    assert via[6:8].all()  # out of domain, finite: the brute-force kNN answer
+
+    empty = pa.array([], pa.binary())
+    assert len(gps_kernel(empty)) == len(lookup_kernel(idx, empty)) == 0
+    assert len(assign_kernel(idx, pa.array([], pa.float64()), pa.array([], pa.float64()))) == 0
+
+
 def test_quarantine_path(spark, zones):
     from pyspark.sql import types as T
 

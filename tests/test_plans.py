@@ -1,6 +1,9 @@
 """Plan-shape checks in tier-1 (scripts/explain_plans.py, which also
 writes the PLANS.md sections):
 
+* probe_plan_checks: the image lookup, the quarantine side output and the
+  q11/q12/q43/q89/q106 probes each cross into Python once (one
+  ArrowEvalPython; q89 one per epoch);
 * join_path_checks: one FlatMapCoGroupsInArrow per lookup, the cover never
   broadcast, multi-tenant cogroup keys led by tenant, and the image path's
   GPS extract evaluated once;
@@ -10,10 +13,25 @@ writes the PLANS.md sections):
 
 Plus a unit test of the dump's per-plan renumbering (stable_ids)."""
 
-from scripts.explain_plans import distance_join_checks, join_path_checks, stable_ids
+from scripts.explain_plans import (
+    distance_join_checks,
+    join_path_checks,
+    probe_plan_checks,
+    stable_ids,
+)
 from tzspark.datasets import images_df
 
 from tests.test_covertable import SF
+
+
+def test_probe_plan_shape(spark, tmp_path):
+    # read back from parquet, as the script does: a synthesized frame would
+    # add its own MapInPandas to the counted Python stages
+    path = str(tmp_path / "images.parquet")
+    images_df(spark, 400, partitions=2).write.parquet(path)
+    sections, failures = probe_plan_checks(spark, spark.read.parquet(path), SF)
+    assert len(sections) == 7
+    assert failures == []
 
 
 def test_join_path_plan_shape(spark):

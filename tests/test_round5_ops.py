@@ -181,12 +181,24 @@ def test_resample_fix_on_boundary_half_open(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_boundary_distance_semantics(spark):
+def test_boundary_distance_semantics(spark, tmp_path):
     """sf0.01 run: every distance is within [0, half box diagonal axis),
     the labeled edge is consistent with the recomputed per-edge distances,
     and exact W/E ties (integer lng grid) resolve to W (the documented
-    S<N<W<E priority)."""
-    from tzspark.queries_geo import boxes_df, pts_df, q106_boundary_distance
+    S<N<W<E priority).
+
+    Crafted fixture: points whose float64 lat sits 1e-9 below a box edge
+    and rounds onto it in float32. The engine resolves in float32: the
+    point under box 0's min_lat (-30) lands IN box 0 with d_s = -1e-9, the
+    one under box 0's max_lat (-18) lands in box 1, and the one under the
+    top row's max_lat (30) lands in no box. Q106_SQL joins boxes on the
+    same float32 containment (_CONTAIN_F32), so it agrees row for row; a
+    float64 join would leave the first point out and put the second in box
+    0 and the third in box 9."""
+    import duckdb
+    import pandas as pd
+
+    from tzspark.queries_geo import Q106_SQL, boxes_df, pts_df, q106_boundary_distance
 
     out = q106_boundary_distance(spark, "/root/testdata/sf0.01")
     pts = pts_df(spark, "/root/testdata/sf0.01")
@@ -212,6 +224,39 @@ def test_boundary_distance_semantics(spark):
     if tie.any():
         assert (j.loc[tie, "edge"] == "W").all()
     assert (j["margin_alert"] == (dmin < 1.0)).all()
+
+    # pts_df: lat = (user_id * 7 % 180) - 90 + value / 1e6,
+    #         lng = (event_id * 13 % 360) - 180
+    # box k: lat [(k % 5) * 12 - 30, +12), lng [(k // 5) * 20 - 50, +20)
+    events = pd.DataFrame({
+        "event_id": np.array([260, 11, 12, 13], np.int64),  # lng -40, -37, -24, -11
+        "user_id": np.array([60, 36, 65, 120], np.int64),  # lat -30, -18, 5, 30
+        "value": [-1e-3, -1e-3, 0.0, -1e-3],
+    })
+    nation = pd.DataFrame({
+        "n_nationkey": np.arange(25, dtype=np.int32),
+        "n_name": [f"N{k}" for k in range(25)],
+    })
+    d = tmp_path / "sf"
+    d.mkdir()
+    events.to_parquet(d / "events.parquet", index=False)
+    nation.to_parquet(d / "nation.parquet", index=False)
+
+    got = q106_boundary_distance(spark, str(d)).toPandas()
+    con = duckdb.connect()
+    for t in ("events", "nation"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
+    want = con.sql(Q106_SQL).df()
+
+    assert got["event_id"].tolist() == [11, 12, 260]
+    assert got["zone_id"].tolist() == [1, 7, 0]
+    assert got["edge"].tolist() == ["S", "N", "S"]
+    assert got["dist_edge"].tolist() == [0.0, 1.0, 0.0]
+    assert got["event_id"].tolist() == want["event_id"].tolist()
+    assert got["zone_id"].tolist() == want["zone_id"].tolist()
+    assert got["edge"].tolist() == want["edge"].tolist()
+    assert got["margin_alert"].tolist() == want["margin_alert"].tolist()
+    assert got["dist_edge"].tolist() == want["dist_edge"].tolist()
 
 
 # ---------------------------------------------------------------------------

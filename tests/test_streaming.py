@@ -240,7 +240,7 @@ def test_stream_zone_transitions_equal_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from tzspark.cells import compile_cover
-    from tzspark.engine import resolve_only_udf
+    from tzspark.engine import assign_udf, with_contained_zone
     from tzspark.queries_geo import box_zones, q65_zone_transitions
     from tzspark.streaming import run_available_now, stream_zone_transitions
 
@@ -261,7 +261,7 @@ def test_stream_zone_transitions_equal_batch(spark, tmp_path):
     bidx = spark.sparkContext.broadcast(
         compile_cover(zones, base_res=3, max_res=7)
     )
-    stream = (
+    stream = with_contained_zone(
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
@@ -271,8 +271,8 @@ def test_stream_zone_transitions_equal_batch(spark, tmp_path):
             "ts",
             ((F.col("user_id") * 7 % 180) - 90 + F.col("value") / 1e6).alias("lat"),
             ((F.col("event_id") * 13 % 360) - 180).cast("double").alias("lng"),
-        )
-        .withColumn("zone_id", resolve_only_udf(bidx)(F.col("lat"), F.col("lng")))
+        ),
+        assign_udf(bidx),
     )
     run_available_now(
         stream_zone_transitions(stream),

@@ -1195,13 +1195,14 @@ def knn_fallback(idx: CompiledIndex, lat: np.ndarray, lng: np.ndarray) -> np.nda
     # candidate list was computed for points INSIDE the cell, so e.g.
     # lat=200 could miss its true nearest zone. Unvalidated callers
     # (search_many, direct knn_fallback) route such points to the exact
-    # brute-force argmin instead. A NaN coordinate is no point at all: its
-    # distance to every zone is NaN, so it has no nearest zone (-1).
+    # brute-force argmin instead. A NaN or infinite coordinate is no point
+    # at all: its distance to every zone is NaN or inf, a tie the min-id
+    # rule would break as the lowest zone_id, so it has no nearest zone (-1).
     in_dom = in_domain(lat, lng)
     if not in_dom.all():
         out = np.full(n, -1, dtype=np.int32)
         ins = np.flatnonzero(in_dom)
-        outs = np.flatnonzero(~in_dom & ~(np.isnan(lat) | np.isnan(lng)))
+        outs = np.flatnonzero(~in_dom & np.isfinite(lat) & np.isfinite(lng))
         out[ins] = knn_fallback(idx, lat[ins], lng[ins])
         out[outs] = _knn_brute(idx, lat[outs], lng[outs])
         return out
@@ -1240,9 +1241,9 @@ def assign_points(idx: CompiledIndex, lat, lng) -> tuple:
     resolve_points, then knn_fallback for the points no zone contains.
 
     Returns (zone_id int32, via_knn bool). via_knn marks the kNN answers; a
-    point with no answer at all (NaN coordinates) gets zone_id -1 and
-    via_knn False. Every lookup path — the broadcast UDFs, the fused image
-    kernels, describe_point — goes through here."""
+    point with no answer at all (NaN or infinite coordinates) gets zone_id
+    -1 and via_knn False. Every lookup path — the broadcast Arrow UDFs, the
+    fused image kernels, describe_point — goes through here."""
     lat = np.asarray(lat, dtype=F32)
     lng = np.asarray(lng, dtype=F32)
     zid = resolve_points(idx, lat, lng)

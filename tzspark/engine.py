@@ -1,11 +1,20 @@
-"""The distributed pipeline: DataFrame plan + vectorized UDF kernels.
+"""The distributed pipeline: DataFrame plan + vectorized Arrow kernels.
 
 Spark-first re-expression of the reference's query lifecycle
 (/root/reference/timezone.go:58-78 `Search`): the R-tree probe becomes a
-broadcast compiled cell cover probed inside Arrow-batched pandas UDFs, the
-per-point loop becomes one declarative DataFrame plan that Catalyst optimizes
-(validity filter pushed to the scan, tzid attach as a broadcast hash join,
-tile rollup as a salted two-phase aggregation).
+broadcast compiled cell cover probed inside Arrow UDFs, the per-point loop
+becomes one declarative DataFrame plan that Catalyst optimizes (validity
+filter pushed to the scan, tzid attach as a broadcast hash join, tile rollup
+as a salted two-phase aggregation).
+
+One Arrow kernel per operation: GPS extract (gps_kernel), the fused image
+lookup (lookup_kernel) and the coordinate assignment (assign_kernel) are
+plain functions of pyarrow arrays, wrapped as `F.arrow_udf`s
+(extract_gps_udf, lookup_udf, assign_udf); the image kernels read the
+batch's binary column through the zero-copy view `_arrow_binary_view` and
+parse headers with imagecodec.parse_headers, so no batch is converted to
+pandas or to per-row bytes objects. Containment-only callers mask
+assign_udf's kNN answers (with_contained_zone).
 
 Scale notes (the 100 TB design, tested at local[*]):
 * the ONLY shuffle in the lookup path is none at all — GPS extract, cell
@@ -35,10 +44,11 @@ as `--py-files` could not import the daemon. The layer it moves is
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .cells import (
     DEFAULT_MAX_RES,
@@ -47,9 +57,8 @@ from .cells import (
     cell_id_col,
     compile_cover,
     in_domain,
-    resolve_points,
 )
-from .imagecodec import extract_gps_batch
+from .imagecodec import parse_headers
 
 
 def get_spark(
@@ -118,8 +127,6 @@ ZONE_TABLE_SCHEMA = T.StructType(
 
 def _zone_meta_arrays(zones: list):
     """(sorted zones, int32 ids, tzid pa.array, float32 bbox matrix)."""
-    import pyarrow as pa
-
     zs = sorted(zones, key=lambda z: z.zone_id)
     ids = np.fromiter((int(z.zone_id) for z in zs), np.int32, len(zs))
     tz = pa.array([z.tzid for z in zs], pa.string())
@@ -138,8 +145,6 @@ def zone_dim_df(spark: SparkSession, zones: list) -> DataFrame:
     """Small zone dimension (id, tzid, MBR) — always broadcast-joined.
     Arrow-built (round 6): the old row-tuple createDataFrame pickled every
     row through the driver (~1 s per 24k-zone call, paid per probe)."""
-    import pyarrow as pa
-
     zs, ids, tz, bbox = _zone_meta_arrays(zones)
     t = pa.table(
         {
@@ -161,8 +166,6 @@ def zone_table_df(spark: SparkSession, zones: list) -> DataFrame:
     (pa.ListArray) instead of per-vertex Python floats — the overlay bench
     layer (51,200 zones) went from seconds of driver pickling per call to
     a single columnar handoff."""
-    import pyarrow as pa
-
     zs, ids, tz, bbox = _zone_meta_arrays(zones)
     counts = np.fromiter((len(z.ring_lat) for z in zs), np.int64, len(zs))
     total = int(counts.sum())
@@ -209,17 +212,100 @@ GPS_STRUCT = T.StructType(
     ]
 )
 
+ASSIGN_STRUCT = T.StructType(
+    [
+        T.StructField("zone_id", T.IntegerType(), False),
+        T.StructField("via_knn", T.BooleanType(), False),
+    ]
+)
+
+LOOKUP_STRUCT = T.StructType(GPS_STRUCT.fields + ASSIGN_STRUCT.fields)
+
+
+def _arrow_binary_view(col):
+    """Zero-copy (data uint8, offsets int64) view of an Arrow binary array —
+    the Arrow-batch analog of the reference's mmap reinterpret
+    (geo/polygon.go:119-144): no per-row bytes objects are materialized."""
+    offset_dtype = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    bufs = col.buffers()
+    offs = (
+        np.frombuffer(bufs[1], dtype=offset_dtype)[col.offset : col.offset + len(col) + 1]
+        .astype(np.int64)
+    )
+    data = (
+        np.frombuffer(bufs[2], dtype=np.uint8)
+        if bufs[2] is not None
+        else np.empty(0, np.uint8)
+    )
+    # rebase sliced arrays: never let kernels see the full underlying buffer
+    if len(offs) and (offs[0] != 0 or offs[-1] != data.size):
+        data = data[offs[0] : offs[-1]]
+        offs = offs - offs[0]
+    if col.null_count:
+        import pyarrow.compute as pc
+
+        valid = pc.is_valid(col).to_numpy(zero_copy_only=False)
+    else:
+        valid = None
+    return data, offs, valid
+
+
+def _struct_array(schema: T.StructType, *cols) -> pa.StructArray:
+    """numpy columns -> the Arrow struct an arrow_udf of ``schema`` returns
+    (field nullability must match the declared type)."""
+    return pa.StructArray.from_arrays(
+        [pa.array(c) for c in cols], fields=list(to_arrow_type(schema))
+    )
+
+
+def as_f32(col: pa.Array) -> np.ndarray:
+    """A numeric Arrow coordinate column as float32 numpy, null -> NaN."""
+    return np.asarray(col.to_numpy(zero_copy_only=False), dtype=np.float32)
+
+
+def _headers(hdr: pa.Array) -> tuple:
+    """Image bytes (or their header prefix) -> (lat f32, lng f32, ok): the
+    zero-copy binary view parsed by imagecodec.parse_headers; null,
+    short and bad-magic blobs are not ok."""
+    data, offsets, valid = _arrow_binary_view(hdr)
+    h, ok = parse_headers(data, offsets)
+    if valid is not None:  # a null reads as an empty blob, whatever it spans
+        h[~valid] = np.zeros((), h.dtype)
+        ok &= valid
+    return h["lat"], h["lng"], ok
+
+
+def gps_kernel(hdr: pa.Array) -> pa.StructArray:
+    """extract_gps_udf's batch function: GPS_STRUCT per blob."""
+    return _struct_array(GPS_STRUCT, *_headers(hdr))
+
+
+def lookup_kernel(idx: CompiledIndex, hdr: pa.Array) -> pa.StructArray:
+    """lookup_udf's batch function: LOOKUP_STRUCT per blob. gps_ok also
+    requires in-domain coordinates; only gps_ok rows are assigned
+    (cells.assign_points), the rest get (-1, False)."""
+    lat, lng, ok = _headers(hdr)
+    ok &= in_domain(lat, lng)
+    zid = np.full(ok.shape[0], -1, dtype=np.int32)
+    via = np.zeros(ok.shape[0], dtype=bool)
+    okw = np.flatnonzero(ok)
+    if okw.size:
+        zid[okw], via[okw] = assign_points(idx, lat[okw], lng[okw])
+    return _struct_array(LOOKUP_STRUCT, lat, lng, ok, zid, via)
+
+
+def assign_kernel(idx: CompiledIndex, lat: pa.Array, lng: pa.Array) -> pa.StructArray:
+    """assign_udf's batch function: ASSIGN_STRUCT per coordinate pair."""
+    return _struct_array(ASSIGN_STRUCT, *assign_points(idx, as_f32(lat), as_f32(lng)))
+
 
 def extract_gps_udf():
-    """pandas_udf: image bytes -> (lat, lng, gps_ok). One np.frombuffer per
-    Arrow batch over the fixed-width header prefix — no per-row parsing."""
+    """arrow_udf: image bytes -> (lat, lng, gps_ok), parsed over the batch's
+    zero-copy binary view (gps_kernel) — no per-row bytes objects."""
 
-    @F.pandas_udf(GPS_STRUCT)
-    def _extract(b: pd.Series) -> pd.DataFrame:
-        lat, lng, ok = extract_gps_batch(b.tolist())
-        lat = lat.astype(np.float32)
-        lng = lng.astype(np.float32)
-        return pd.DataFrame({"lat": lat, "lng": lng, "gps_ok": ok})
+    @F.arrow_udf(GPS_STRUCT)
+    def _extract(hdr: pa.Array) -> pa.Array:
+        return gps_kernel(hdr)
 
     return _extract
 
@@ -234,29 +320,12 @@ def gps_header_col(bytes_col):
     return F.substring(bytes_col, 1, HEADER_LEN)
 
 
-ASSIGN_STRUCT = T.StructType(
-    [
-        T.StructField("zone_id", T.IntegerType(), False),
-        T.StructField("via_knn", T.BooleanType(), False),
-    ]
-)
-
-LOOKUP_STRUCT = T.StructType(
-    [
-        T.StructField("lat", T.FloatType(), True),
-        T.StructField("lng", T.FloatType(), True),
-        T.StructField("gps_ok", T.BooleanType(), False),
-        T.StructField("zone_id", T.IntegerType(), False),
-        T.StructField("via_knn", T.BooleanType(), False),
-    ]
-)
-
-
 def lookup_udf(idx_bcast):
     """The WHOLE reference `Search` (timezone.go:58-78) in ONE Arrow crossing:
-    header bytes -> (lat, lng, validity, zone_id, via_knn) per batch.
+    header bytes -> (lat, lng, validity, zone_id, via_knn) per batch
+    (lookup_kernel).
 
-    Fusing extract + validity + resolve + kNN into a single pandas UDF keeps
+    Fusing extract + validity + resolve + kNN into a single arrow_udf keeps
     the pipeline at exactly one JVM<->Python boundary (round-1 plans showed
     the separate extract UDF evaluated twice: once inlined into the validity
     Filter, once in the projection — 2 extra Arrow crossings per row).
@@ -266,53 +335,39 @@ def lookup_udf(idx_bcast):
     expression in the Filter node (the classic evaluate-expensive-UDF-once
     trick; the function itself is pure)."""
 
-    @F.pandas_udf(LOOKUP_STRUCT)
-    def _lookup(hdr: pd.Series) -> pd.DataFrame:
-        idx: CompiledIndex = idx_bcast.value
-        lat, lng, ok = extract_gps_batch(hdr.tolist())
-        ok &= in_domain(lat, lng)
-        n = ok.shape[0]
-        zid = np.full(n, -1, dtype=np.int32)
-        via = np.zeros(n, dtype=bool)
-        if ok.any():
-            okw = np.flatnonzero(ok)
-            zid[okw], via[okw] = assign_points(idx, lat[okw], lng[okw])
-        return pd.DataFrame(
-            {"lat": lat, "lng": lng, "gps_ok": ok, "zone_id": zid, "via_knn": via}
-        )
+    @F.arrow_udf(LOOKUP_STRUCT)
+    def _lookup(hdr: pa.Array) -> pa.Array:
+        return lookup_kernel(idx_bcast.value, hdr)
 
     return _lookup.asNondeterministic()
 
 
 def assign_udf(idx_bcast):
-    """pandas_udf: (lat, lng) -> (zone_id, via_knn). One pass: interior-cell
+    """arrow_udf: (lat, lng) -> (zone_id, via_knn). One pass: interior-cell
     O(1) hit, boundary-cell exact float32 ray cast, kNN for the remainder —
     the whole reference `Search` (timezone.go:58-78) per Arrow batch
-    (cells.assign_points). A null coordinate gets (-1, False)."""
+    (cells.assign_points). A null coordinate gets (-1, False).
 
-    @F.pandas_udf(ASSIGN_STRUCT)
-    def _assign(lat: pd.Series, lng: pd.Series) -> pd.DataFrame:
-        idx: CompiledIndex = idx_bcast.value
-        la = lat.to_numpy(dtype=np.float32, na_value=np.nan)
-        lg = lng.to_numpy(dtype=np.float32, na_value=np.nan)
-        zid, via = assign_points(idx, la, lg)
-        return pd.DataFrame({"zone_id": zid, "via_knn": via})
+    For containment only (cells.resolve_points semantics) use
+    with_contained_zone: the kNN answers become -1."""
+
+    @F.arrow_udf(ASSIGN_STRUCT)
+    def _assign(lat: pa.Array, lng: pa.Array) -> pa.Array:
+        return assign_kernel(idx_bcast.value, lat, lng)
 
     return _assign
 
 
-def resolve_only_udf(idx_bcast):
-    """pandas_udf: (lat, lng) -> zone_id, -1 when no containing zone (no kNN).
-    Used by the oracle-checked exact-containment queries."""
-
-    @F.pandas_udf(T.IntegerType())
-    def _resolve(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        idx: CompiledIndex = idx_bcast.value
-        la = lat.to_numpy(dtype=np.float32, na_value=np.nan)
-        lg = lng.to_numpy(dtype=np.float32, na_value=np.nan)
-        return pd.Series(resolve_points(idx, la, lg))
-
-    return _resolve
+def with_contained_zone(points: DataFrame, probe) -> DataFrame:
+    """``points`` + zone_id: the zone containing its (lat, lng) by the
+    assign_udf ``probe``, -1 where none (cells.resolve_points semantics:
+    the kNN answers are masked). The probe's struct is projected first and
+    zone_id read from it in the next projection, so each row crosses into
+    Python once."""
+    a = points.withColumn("_a", probe(F.col("lat"), F.col("lng")))
+    return a.withColumn(
+        "zone_id", F.when(F.col("_a.via_knn"), F.lit(-1)).otherwise(F.col("_a.zone_id"))
+    ).drop("_a")
 
 
 # ---------------------------------------------------------------------------
@@ -368,9 +423,10 @@ def quarantined_rows(images: DataFrame) -> DataFrame:
     """The rows assign_timezones drops — routed to a side output instead of
     erroring the job (reference errors per-call, timezone.go:62-64).
 
-    The extract UDF is marked nondeterministic, as lookup_udf is: otherwise
-    Catalyst re-instantiates it inside the Filter below the projection and
-    every row crosses into Python twice (two ArrowEvalPython stages)."""
+    The extract arrow_udf is marked nondeterministic, as lookup_udf is:
+    otherwise Catalyst re-instantiates it inside the Filter below the
+    projection and every row crosses into Python twice (two ArrowEvalPython
+    stages)."""
     extract = extract_gps_udf().asNondeterministic()
     gps = images.withColumn("g", extract(gps_header_col(F.col("bytes"))))
     return gps.where(
@@ -420,36 +476,6 @@ def _tile_partial_arrays(cells, lat, lng, stats):
     }
 
 
-def _arrow_binary_view(col):
-    """Zero-copy (data uint8, offsets int64) view of an Arrow binary array —
-    the Arrow-batch analog of the reference's mmap reinterpret
-    (geo/polygon.go:119-144): no per-row bytes objects are materialized."""
-    import pyarrow as pa
-
-    offset_dtype = np.int64 if pa.types.is_large_binary(col.type) else np.int32
-    bufs = col.buffers()
-    offs = (
-        np.frombuffer(bufs[1], dtype=offset_dtype)[col.offset : col.offset + len(col) + 1]
-        .astype(np.int64)
-    )
-    data = (
-        np.frombuffer(bufs[2], dtype=np.uint8)
-        if bufs[2] is not None
-        else np.empty(0, np.uint8)
-    )
-    # rebase sliced arrays: never let kernels see the full underlying buffer
-    if len(offs) and (offs[0] != 0 or offs[-1] != data.size):
-        data = data[offs[0] : offs[-1]]
-        offs = offs - offs[0]
-    if col.null_count:
-        import pyarrow.compute as pc
-
-        valid = pc.is_valid(col).to_numpy(zero_copy_only=False)
-    else:
-        valid = None
-    return data, offs, valid
-
-
 def _image_batch_stats(batch) -> dict:
     """The first step of every image mapInArrow kernel: zero-copy binary
     view of the batch's bytes column (column 0) -> vectorized header parse
@@ -485,8 +511,6 @@ def tile_rollup_fused(images: DataFrame, max_res: int = DEFAULT_MAX_RES) -> Data
     JVM<->Python boundary exactly once, in the operator that consumes them
     (a multi-KB column merely riding through an ArrowEvalPython stage was
     measured ~6x the direct crossing cost)."""
-    import pyarrow as pa
-
     from .cells import cell_id as cell_id_np
 
     def _fused(batches):
@@ -536,8 +560,6 @@ def lookup_tile_onepass(
     wall time. Output rows are tagged `grp` (0 = per-zone, 1 = per-tile);
     split with zone_rollup_view / tile_rollup_view after ONE materialization.
     """
-    import pyarrow as pa
-
     from .cells import cell_id as cell_id_np
 
     def _fused(batches):
@@ -632,7 +654,6 @@ def zonal_channel_rollup(
     perturb the result, which is what lets a DuckDB oracle hash-match the
     full rollup. Means come out as one int/int division per zone row at the
     end."""
-    import pyarrow as pa
 
     def _fused(batches):
         idx: CompiledIndex = idx_bcast.value

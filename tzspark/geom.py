@@ -18,7 +18,7 @@ Three implementations are provided:
 * ``contains_scalar`` — a line-faithful loop port, used only as the golden
   oracle in tests (this is the "pure-Python float32 oracle", SURVEY.md §5.1),
 * ``contains_batch`` / ``contains_batch_edges`` — vectorized numpy kernels
-  used inside pandas UDFs at runtime (SURVEY.md §2.2 F4),
+  used inside the Arrow UDF kernels at runtime (SURVEY.md §2.2 F4),
 * ``ragged_parity`` — the per-point edge-run form every lookup path refines
   with (the compiled cover's boundary cells and the cover-table join).
 """

@@ -158,37 +158,34 @@ def decode_image(buf: bytes) -> tuple:
     return np.float32(hdr["lat"]), np.float32(hdr["lng"]), flat.reshape(h, w, 3)
 
 
-def extract_gps_batch(bufs) -> tuple:
-    """Vectorized GPS extraction from a batch of image blobs.
+def parse_headers(data: np.ndarray, offsets: np.ndarray) -> tuple:
+    """The one header parser: (header records, ok) for a batch of blobs.
 
-    One np.frombuffer over the concatenated fixed-size header prefix — the
-    Arrow-batch analog of the reference's zero-copy mmap reinterpret
-    (geo/polygon.go:119-144). Returns (lat f32 array, lng f32 array,
-    valid bool array). Blobs shorter than the header or with a bad magic are
-    flagged invalid (quarantine path, timezone.go:62-64 analog).
-    """
-    n = len(bufs)
-    # fast path: caller already sliced fixed-width headers JVM-side
-    # (engine.gps_header_col) -> one join + one frombuffer, no per-row parse.
-    # Gated on EVERY buffer being exactly HEADER_LEN (a summed-length check
-    # alone would let variable-length corrupt blobs totalling n*HEADER_LEN
-    # parse at misaligned offsets and yield garbage coords flagged valid).
-    try:
-        if all(len(b) == HEADER_LEN for b in bufs):
-            hdr = np.frombuffer(b"".join(bufs), dtype=_HEADER_DTYPE)
-            ok = hdr["magic"] == MAGIC
-            return hdr["lat"].copy(), hdr["lng"].copy(), ok
-    except TypeError:
-        pass  # Nones present
-    prefix = bytearray(n * HEADER_LEN)
-    ok = np.ones(n, dtype=bool)
-    for k, b in enumerate(bufs):  # cheap memcpy of 17B slices, no parsing
-        if b is None or len(b) < HEADER_LEN:
-            ok[k] = False
-            continue
-        prefix[k * HEADER_LEN : (k + 1) * HEADER_LEN] = b[:HEADER_LEN]
-    hdr = np.frombuffer(bytes(prefix), dtype=_HEADER_DTYPE)
+    ``data`` is the raw uint8 byte stream of all blobs back to back (e.g. an
+    Arrow BinaryArray's data buffer, zero-copy); ``offsets`` the (n+1,) blob
+    boundaries. One strided gather of every blob's 17-byte prefix and one
+    structured view over it — the batch analog of the reference's mmap
+    reinterpret (geo/polygon.go:119-144), no per-row Python. Returns the
+    (n,) ``_HEADER_DTYPE`` records (lat/lng float32, w, h, fmt) and ``ok``:
+    the blob holds a whole header with the right magic. A blob shorter than
+    the header reads as an all-zero record (lat = lng = 0)."""
+    data = np.asarray(data, dtype=np.uint8)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    starts = offsets[:-1]
+    ok = offsets[1:] - starts >= HEADER_LEN
+    hdr = np.zeros(starts.shape[0], dtype=_HEADER_DTYPE)
+    idx = starts[ok][:, None] + np.arange(HEADER_LEN)
+    hdr[ok] = data[idx].reshape(-1).view(_HEADER_DTYPE)
     ok &= hdr["magic"] == MAGIC
+    return hdr, ok
+
+
+def extract_gps_batch(bufs) -> tuple:
+    """parse_headers over a list of bytes-likes (None tolerated) -> (lat f32
+    array, lng f32 array, valid bool array). Null blobs, blobs shorter than
+    the header and bad magic are flagged invalid (quarantine path,
+    timezone.go:62-64 analog)."""
+    hdr, ok = parse_headers(*pack_blobs(bufs))
     return hdr["lat"].copy(), hdr["lng"].copy(), ok
 
 
@@ -244,11 +241,9 @@ def batch_image_stats(
 
     ``data`` is the raw uint8 byte stream of all blobs back to back (e.g. an
     Arrow BinaryArray's data buffer, zero-copy); ``offsets`` the (n+1,) blob
-    boundaries. NO per-image Python loop anywhere: headers parse via one
-    strided gather + structured view (the batch analog of the reference's
-    mmap reinterpret, geo/polygon.go:119-144); RLE payloads decode with one
-    global np.repeat; per-image per-channel sums come from residue-class
-    cumulative sums.
+    boundaries. NO per-image Python loop anywhere: headers parse in one
+    parse_headers call; RLE payloads decode with one global np.repeat;
+    per-image per-channel sums come from residue-class cumulative sums.
 
     Returns dict of per-image arrays: lat/lng (f32), ok (bool — magic, layout
     and payload-length checks), w/h/n_pixels (int64), luma_sum (float64,
@@ -278,13 +273,8 @@ def batch_image_stats(
     if n == 0 or data.size < HEADER_LEN:
         return zero
 
+    hdr, ok = parse_headers(data, offsets)
     starts = offsets[:-1]
-    lens = offsets[1:] - starts
-    ok = lens >= HEADER_LEN
-    safe = np.where(ok, starts, 0)
-    idx = np.minimum(safe[:, None] + np.arange(HEADER_LEN), data.size - 1)
-    hdr = np.ascontiguousarray(data[idx]).reshape(-1).view(_HEADER_DTYPE)
-    ok &= hdr["magic"] == MAGIC
 
     w = hdr["w"].astype(np.int64)
     h = hdr["h"].astype(np.int64)
@@ -413,12 +403,11 @@ def batch_psnr_audit(data: np.ndarray, offsets: np.ndarray, row_idx: np.ndarray)
 
 def pack_blobs(bufs) -> tuple:
     """List of bytes-likes (None tolerated) -> (data uint8, offsets int64)
-    for batch_image_stats. One join + one frombuffer, no per-row parsing."""
-    lens = np.fromiter(
-        (0 if b is None else len(b) for b in bufs), dtype=np.int64, count=len(bufs)
-    )
-    joined = b"".join(bytes(b) for b in bufs if b is not None)
-    data = np.frombuffer(joined, dtype=np.uint8)
+    for parse_headers and batch_image_stats. One join + one frombuffer, no
+    per-row parsing."""
+    bufs = [b"" if b is None else b for b in bufs]
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
     offsets = np.concatenate([[0], np.cumsum(lens)])
     return data, offsets
 

@@ -7,7 +7,7 @@ deterministically from `events` and rectangular zones from `nation`
 
 The queries that matter most are q10-q12: they run the REAL engine kernels
 (float32 ray-cast PIP, compiled cell cover, kNN clamp distance) inside
-pandas UDFs and are checked against pure SQL — possible because rectangle
+Arrow UDFs and are checked against pure SQL — possible because rectangle
 PIP under the reference's half-open edge semantics (SURVEY.md §1.3) is
 exactly `lat >= min_lat AND lat < max_lat AND lng >= min_lng AND lng <
 max_lng` on float32-truncated coordinates.
@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,6 +31,7 @@ from .cells import (
     compile_cover,
     explode_rect_cells,
 )
+from .engine import as_f32, assign_udf, with_contained_zone, zone_table_df
 from .geom import F32
 
 # ---------------------------------------------------------------------------
@@ -371,12 +373,10 @@ def q10_pip_exact_kernel(spark, sf_dir):
     zones = box_zones(spark, sf_dir)
     bz = spark.sparkContext.broadcast(zones)
 
-    @F.pandas_udf(T.IntegerType())
-    def _pip(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        la = lat.to_numpy(dtype=np.float32)
-        lg = lng.to_numpy(dtype=np.float32)
-        zid, _ = oracle_resolve(bz.value, la, lg)
-        return pd.Series(zid)
+    @F.arrow_udf(T.IntegerType())
+    def _pip(lat: pa.Array, lng: pa.Array) -> pa.Array:
+        zid, _ = oracle_resolve(bz.value, as_f32(lat), as_f32(lng))
+        return pa.array(zid, pa.int32())
 
     p = pts_df(spark, sf_dir)
     return p.select("event_id", _pip(F.col("lat"), F.col("lng")).alias("zone_id"))
@@ -393,16 +393,12 @@ GROUP BY p.event_id
 
 def q11_resolve_cover(spark, sf_dir):
     """J1: the full engine path — compiled cell cover (interior shortcut +
-    boundary exact PIP) probed in a pandas UDF. Same oracle as q10."""
-    from .engine import resolve_only_udf
-
+    boundary exact PIP) probed in an Arrow UDF (engine.assign_udf, kNN
+    answers masked to -1 by with_contained_zone). Same oracle as q10."""
     zones = box_zones(spark, sf_dir)
-    idx = compile_cover(zones, base_res=3, max_res=7)
-    bidx = spark.sparkContext.broadcast(idx)
-    p = pts_df(spark, sf_dir)
-    return p.select(
-        "event_id", resolve_only_udf(bidx)(F.col("lat"), F.col("lng")).alias("zone_id")
-    )
+    bidx = spark.sparkContext.broadcast(compile_cover(zones, base_res=3, max_res=7))
+    p = with_contained_zone(pts_df(spark, sf_dir), assign_udf(bidx))
+    return p.select("event_id", "zone_id")
 
 
 Q11_SQL = Q10_SQL
@@ -414,8 +410,6 @@ def q12_knn_engine(spark, sf_dir):
     One assign probe, filtered on via_knn: a single Python stage. The probe
     is marked nondeterministic so Catalyst cannot copy it into the filter
     (the q106 single-evaluation guard)."""
-    from .engine import assign_udf
-
     zones = box_zones(spark, sf_dir)
     idx = compile_cover(zones, base_res=3, max_res=7)
     bidx = spark.sparkContext.broadcast(idx)
@@ -517,15 +511,11 @@ def q43_zone_update_resolve(spark, sf_dir):
     tests/test_index_update.py). The other 23 zones' covers are never
     recomputed. Oracle: the same f32 containment argmin over the mutated
     box table expressed in SQL."""
-    from .engine import resolve_only_udf
-
     zones = box_zones(spark, sf_dir)
     idx = _mutate_boxes(compile_cover(zones, base_res=3, max_res=7), zones)
     bidx = spark.sparkContext.broadcast(idx)
-    p = pts_df(spark, sf_dir)
-    return p.select(
-        "event_id", resolve_only_udf(bidx)(F.col("lat"), F.col("lng")).alias("zone_id")
-    )
+    p = with_contained_zone(pts_df(spark, sf_dir), assign_udf(bidx))
+    return p.select("event_id", "zone_id")
 
 
 Q43_SQL = f"""
@@ -552,8 +542,6 @@ def q89_versioned_resolve(spark, sf_dir):
     epoch's broadcast, slices unioned — at 10^12 rows the time slice is a
     parquet partition-prune (events are date-partitioned), so each epoch's
     backfill scans only its own files and no row is probed twice."""
-    from .engine import resolve_only_udf
-
     zones = box_zones(spark, sf_dir)
     idx0 = compile_cover(zones, base_res=3, max_res=7)
     idx1 = _mutate_boxes(idx0, zones)
@@ -561,15 +549,11 @@ def q89_versioned_resolve(spark, sf_dir):
     b1 = spark.sparkContext.broadcast(idx1)
     p = pts_df(spark, sf_dir, with_user=True)
     cut = F.lit(_CUTOVER).cast("timestamp")
-    out0 = p.where(F.col("ts") < cut).select(
-        "event_id",
-        F.lit("v0").alias("zone_version"),
-        resolve_only_udf(b0)(F.col("lat"), F.col("lng")).alias("zone_id"),
+    out0 = with_contained_zone(p.where(F.col("ts") < cut), assign_udf(b0)).select(
+        "event_id", F.lit("v0").alias("zone_version"), "zone_id"
     )
-    out1 = p.where(F.col("ts") >= cut).select(
-        "event_id",
-        F.lit("v1").alias("zone_version"),
-        resolve_only_udf(b1)(F.col("lat"), F.col("lng")).alias("zone_id"),
+    out1 = with_contained_zone(p.where(F.col("ts") >= cut), assign_udf(b1)).select(
+        "event_id", F.lit("v1").alias("zone_version"), "zone_id"
     )
     return out0.unionByName(out1).orderBy("event_id")
 
@@ -1212,7 +1196,6 @@ def q64_zone_geometry(spark, sf_dir):
     DuckDB oracle inlines every ring edge as f32-exact VALUES (same closing-
     edge-first order) and replays the identical f64 folds, so the whole
     relational machinery — not just the formula — is hash-gated."""
-    from .engine import zone_table_df
     from .zones import make_zones
 
     return zone_geometry(zone_table_df(spark, make_zones(n_coast=2000)))
@@ -1275,14 +1258,9 @@ def q65_zone_transitions(spark, sf_dir):
     (prev IS NULL)."""
     from pyspark.sql import Window as W
 
-    from .engine import resolve_only_udf
-
     zones = box_zones(spark, sf_dir)
     bidx = spark.sparkContext.broadcast(compile_cover(zones, base_res=3, max_res=7))
-    p = pts_df(spark, sf_dir, with_user=True)
-    a = p.withColumn(
-        "zone_id", resolve_only_udf(bidx)(F.col("lat"), F.col("lng"))
-    )
+    a = with_contained_zone(pts_df(spark, sf_dir, with_user=True), assign_udf(bidx))
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     t = a.select(
         "user_id",
@@ -1454,10 +1432,7 @@ def q67_clip_conservation(spark, sf_dir):
     in-batch and ONE final shuffle aggregates per zone. (At world scale
     the geometry rides once per partition via the broadcast cover rather
     than per pair row — same fold.)"""
-    import pandas as pd
-
     from .cells import cell_bounds
-    from .engine import zone_table_df
     from .geom import clip_ring_rect, ring_area_signed
 
     RES = _Q67_RES
@@ -1819,15 +1794,11 @@ def q75_zone_dwell(spark, sf_dir):
     integers (epoch microseconds), so the oracle match is exact."""
     from pyspark.sql import Window as W
 
-    from .engine import resolve_only_udf
-
     zones = box_zones(spark, sf_dir)
     bidx = spark.sparkContext.broadcast(compile_cover(zones, base_res=3, max_res=7))
-    p = pts_df(spark, sf_dir, with_user=True)
     epoch = F.to_timestamp(F.lit("1970-01-01 00:00:00"))
-    a = p.withColumn(
-        "zone_id", resolve_only_udf(bidx)(F.col("lat"), F.col("lng"))
-    ).withColumn("tus", F.timestamp_diff("MICROSECOND", epoch, F.col("ts")))
+    a = with_contained_zone(pts_df(spark, sf_dir, with_user=True), assign_udf(bidx))
+    a = a.withColumn("tus", F.timestamp_diff("MICROSECOND", epoch, F.col("ts")))
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("zone_id").over(w)
     t = a.select(
@@ -2241,9 +2212,6 @@ def q88_zone_value_quantiles(spark, sf_dir):
     buckets per group before the one Exchange; for 10^12 rows you'd swap
     in approx_percentile with a documented error bound, keeping this
     exact form as the oracle anchor on samples."""
-    from .cells import compile_cover
-    from .engine import resolve_only_udf
-
     zones = box_zones(spark, sf_dir)
     idx = compile_cover(zones, base_res=3, max_res=7)
     bidx = spark.sparkContext.broadcast(idx)
@@ -2254,10 +2222,7 @@ def q88_zone_value_quantiles(spark, sf_dir):
         ((F.col("user_id") * 7 % 180) - 90 + F.col("value") / 1e6).alias("lat"),
         ((F.col("event_id") * 13 % 360) - 180).cast("double").alias("lng"),
     )
-    r = p.select(
-        "value",
-        resolve_only_udf(bidx)(F.col("lat"), F.col("lng")).alias("zone_id"),
-    )
+    r = with_contained_zone(p, assign_udf(bidx)).select("value", "zone_id")
     q = F.expr("percentile(value, array(0.25D, 0.5D, 0.9D, 0.99D))")
     return (
         r.groupBy("zone_id")
@@ -2391,7 +2356,6 @@ def overlay_join_zones(spark, zones_a, zones_b, grid_bits: int = 3):
     (no per-pair Python loop; VERDICT r4 item 3). ``grid_bits`` sizes the
     blocking grid (2^bits per axis): pick it so cells hold O(1) polygons
     per layer — candidates per cell are |A_cell| x |B_cell|."""
-    from .engine import zone_table_df
     from .geom import F32, clip_rings_rect_batch
 
     za = zone_table_df(spark, zones_a)
@@ -2441,8 +2405,6 @@ def overlay_join_zones(spark, zones_a, zones_b, grid_bits: int = 3):
         return pad, counts
 
     def _clip(batches):
-        import pyarrow as pa
-
         for batch in batches:
             p = batch.num_rows
             if p == 0:
@@ -2796,17 +2758,20 @@ def q106_boundary_distance(spark, sf_dir):
     alone; also the coastal-proximity feature of geospatial training
     sets). Points resolve through the real compiled-cover engine path
     (q11's interior-shortcut + boundary PIP), then the distance to each of
-    the four box edges is pure column arithmetic; the nearest edge label
-    breaks ties deterministically (S < N < W < E priority via the struct
-    argmin's second key). Scale shape: the resolve is the engine's
+    the four box edges is pure column arithmetic (float64, so a point whose
+    float32 lat rounds onto an edge it sits just outside of reads a
+    distance of about -1e-9); the nearest edge label breaks ties
+    deterministically (S < N < W < E priority via the struct argmin's
+    second key). dist_edge is rounded to 6 places as floor(d * 1e6 + 0.5)
+    / 1e6, the same float64 operations in the SQL oracle, because ROUND
+    differs between the engines: Spark rounds 1.0001295 half-up from its
+    shortest decimal form to 1.00013, DuckDB rounds the binary value
+    1.00012949999... to 1.000129. Scale shape: the resolve is the engine's
     broadcast probe, the rest never shuffles; the margin filter pushes
     down to a scan predicate at 10^12 rows."""
-    from .engine import resolve_only_udf
-
     zones = box_zones(spark, sf_dir)
     idx = compile_cover(zones, base_res=3, max_res=7)
     bidx = spark.sparkContext.broadcast(idx)
-    p = pts_df(spark, sf_dir)
     # no explicit zone_id >= 0 filter (the inner join against boxes, ids all
     # >= 0, drops unresolved rows for free) AND the probe is marked
     # nondeterministic — the same single-evaluation guard the fused engine
@@ -2814,8 +2779,7 @@ def q106_boundary_distance(spark, sf_dir):
     # join-key isnotnull filter extracts the Python UDF twice (observed as
     # two ArrowEvalPython stages = the probe running 2x per row);
     # PLANS.md asserts the probe stays single
-    probe = resolve_only_udf(bidx).asNondeterministic()
-    r = p.withColumn("zone_id", probe(F.col("lat"), F.col("lng")))
+    r = with_contained_zone(pts_df(spark, sf_dir), assign_udf(bidx).asNondeterministic())
     b = boxes_df(spark, sf_dir).select("zone_id", "min_lat", "max_lat",
                                        "min_lng", "max_lng")
     j = r.join(F.broadcast(b), "zone_id")
@@ -2840,7 +2804,7 @@ def q106_boundary_distance(spark, sf_dir):
     return j.select(
         "event_id",
         "zone_id",
-        F.round(best["d"], 6).alias("dist_edge"),
+        (F.floor(best["d"] * 1e6 + 0.5) / 1e6).alias("dist_edge"),
         F.element_at(names, best["pri"] + 1).alias("edge"),
         (best["d"] < 1.0).alias("margin_alert"),
     ).orderBy("event_id")
@@ -2853,13 +2817,13 @@ j AS (
   SELECT p.event_id, b.zone_id,
          p.lat - b.min_lat AS d_s, b.max_lat - p.lat AS d_n,
          p.lng - b.min_lng AS d_w, b.max_lng - p.lng AS d_e
-  FROM pts p JOIN boxes b ON {_CONTAIN}
+  FROM pts p JOIN boxes b ON {_CONTAIN_F32}
 ),
 m AS (
   SELECT *, LEAST(d_s, d_n, d_w, d_e) AS dmin FROM j
 )
 SELECT event_id, zone_id,
-       ROUND(dmin, 6) AS dist_edge,
+       FLOOR(dmin * 1e6 + 0.5) / 1e6 AS dist_edge,
        CASE WHEN dmin = d_s THEN 'S' WHEN dmin = d_n THEN 'N'
             WHEN dmin = d_w THEN 'W' ELSE 'E' END AS edge,
        dmin < 1.0 AS margin_alert
