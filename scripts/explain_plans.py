@@ -11,8 +11,9 @@ assert the plan properties the design promises:
    only the tiny partial-sum rows shuffle;
 5. quarantine side output: the extract UDF crosses into Python once (one
    ArrowEvalPython), not once more inside the validity Filter; 1 and 5,
-   with the q11/q12/q43/q89/q106 probes, are probe_plan_checks (also run
-   in tier-1 by tests/test_plans.py);
+   with the q11/q12/q43/q89/q106 probes, are probe_plan_checks, and 1's
+   checks on TimezoneLookup.assign's memoized plan are facade_plan_checks
+   (both also run in tier-1 by tests/test_plans.py);
 6. join path: one FlatMapCoGroupsInArrow per lookup, the cover never
    broadcast (join_path_checks; tier-1 runs it in tests/test_plans.py);
 6e. distance joins: one cell-keyed equi-join each, never an all-pairs
@@ -148,6 +149,9 @@ def main():
     s1, f1 = probe_plan_checks(spark, images, sf_small)
     sections += s1
     failures += f1
+    s1f, f1f = facade_plan_checks(spark, images, sf_small)
+    sections += s1f
+    failures += f1f
 
     # 7. as-of join (union-and-last-value form): NO join operator at all —
     # one Exchange on user_id feeds the window; sessionization's two windows
@@ -715,6 +719,8 @@ def main():
         out.append(
             "- single Exchange in the lookup path (final rollup only)\n"
             "- tzid attach = BroadcastHashJoin, no SortMergeJoin\n"
+            "- TimezoneLookup.assign's memoized plan (its second call): the "
+            "same lookup checks\n"
             f"- zone_id-only projection scans ReadSchema struct<{read_cols}>\n"
             "- fmt equality filter pushed to the parquet scan\n"
             "- tile rollup: one MapInArrow decode below the only Exchange "
@@ -807,6 +813,49 @@ def main():
 
 
 
+def zone_rollup(assigned):
+    return assigned.groupBy("zone_id", "tzid").agg(F.count("*").alias("n"))
+
+
+def lookup_plan_failures(tag, plan):
+    """The lookup pipeline's rollup plan: the tzid attach is a broadcast
+    hash join, at most one non-broadcast Exchange (the rollup's), and the
+    fused lookup crosses into Python once (one ArrowEvalPython)."""
+    failures = []
+    # BroadcastExchange is the dim broadcast, not a data shuffle
+    n_exchange = len(re.findall(r"\bExchange\b", plan)) - len(
+        re.findall(r"BroadcastExchange", plan)
+    )
+    if "SortMergeJoin" in plan:
+        failures.append(f"{tag}: unexpected SortMergeJoin")
+    if "BroadcastHashJoin" not in plan:
+        failures.append(f"{tag}: tzid attach is not a broadcast join")
+    # one shuffle for the final agg is expected; more means a design leak
+    if n_exchange > 1:
+        failures.append(f"{tag}: {n_exchange} Exchanges (expected <= 1)")
+    # the fused lookup must cross JVM<->Python exactly once (round-1 regression:
+    # the extract UDF was inlined twice, 3 ArrowEvalPython stages total)
+    n_python = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow)", plan))
+    if n_python != 1 or "ArrowEvalPython" not in plan:
+        failures.append(f"{tag}: {n_python} Python stages (expected exactly 1 ArrowEvalPython)")
+    return failures
+
+
+def facade_plan_checks(spark, images, sf_small):
+    """The lookup section's checks on TimezoneLookup.assign's memoized plan
+    (the second call, which reuses the first call's LookupPlan), as
+    ([(title, plan)], [failure]). tests/test_plans.py runs the same checks
+    in tier-1."""
+    from tzspark.api import TimezoneLookup
+    from tzspark.queries_geo import box_zones
+
+    tl = TimezoneLookup(box_zones(spark, sf_small))
+    tl.assign(spark, images)
+    plan = plan_of(zone_rollup(tl.assign(spark, images)))
+    return ([("lookup pipeline via TimezoneLookup.assign (memoized plan)", plan)],
+            lookup_plan_failures("facade lookup", plan))
+
+
 def probe_plan_checks(spark, images, sf_small):
     """Sections 1 and 4b and the oracle-checked probes (q11, q12, q43, q89,
     q106): every Python-side lookup kernel crosses into Python once, as
@@ -833,27 +882,9 @@ def probe_plan_checks(spark, images, sf_small):
     sections, failures = [], []
 
     # 1. lookup pipeline + rollup
-    lookup = assign_timezones(images, idx_b, dim).groupBy("zone_id", "tzid").agg(
-        F.count("*").alias("n")
-    )
-    p1 = plan_of(lookup)
+    p1 = plan_of(zone_rollup(assign_timezones(images, idx_b, dim)))
     sections.append(("lookup pipeline -> per-zone rollup", p1))
-    # BroadcastExchange is the dim broadcast, not a data shuffle
-    n_exchange = len(re.findall(r"\bExchange\b", p1)) - len(
-        re.findall(r"BroadcastExchange", p1)
-    )
-    if "SortMergeJoin" in p1:
-        failures.append("lookup: unexpected SortMergeJoin")
-    if "BroadcastHashJoin" not in p1:
-        failures.append("lookup: tzid attach is not a broadcast join")
-    # one shuffle for the final agg is expected; more means a design leak
-    if n_exchange > 1:
-        failures.append(f"lookup: {n_exchange} Exchanges (expected <= 1)")
-    # the fused lookup must cross JVM<->Python exactly once (round-1 regression:
-    # the extract UDF was inlined twice, 3 ArrowEvalPython stages total)
-    n_python = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow)", p1))
-    if n_python != 1 or "ArrowEvalPython" not in p1:
-        failures.append(f"lookup: {n_python} Python stages (expected exactly 1 ArrowEvalPython)")
+    failures += lookup_plan_failures("lookup", p1)
 
     # 4b. quarantine side output: the nondeterministic extract UDF keeps the
     # validity Filter above its one ArrowEvalPython (a deterministic UDF is

@@ -49,6 +49,26 @@ def test_pipeline_matches_oracle(assigned, zones):
     assert pdf["via_knn"].sum() > 0  # offshore slice exercised
 
 
+ASSIGNED_DTYPES = [
+    ("zone_id", "int"), ("image_id", "string"), ("bytes", "binary"), ("w", "int"),
+    ("h", "int"), ("fmt", "string"), ("caption", "string"), ("phash", "bigint"),
+    ("lat", "float"), ("lng", "float"), ("quarantined", "boolean"),
+    ("via_knn", "boolean"), ("cell_id", "bigint"), ("tzid", "string"),
+]
+
+
+def test_assigned_schema(spark, assigned, zones):
+    """The lookup output's column order and types, from assign_timezones
+    and from the TimezoneLookup facade (first call and memoized plan)."""
+    from tzspark.api import TimezoneLookup
+
+    assert assigned.dtypes == ASSIGNED_DTYPES
+    tl = TimezoneLookup(zones)
+    imgs = images_df(spark, 10, partitions=1)
+    assert tl.assign(spark, imgs).dtypes == ASSIGNED_DTYPES
+    assert tl.assign(spark, imgs).dtypes == ASSIGNED_DTYPES
+
+
 def test_tzid_attached_broadcast(assigned, zones):
     by_id = {z.zone_id: z.tzid for z in zones}
     pdf = assigned.select("zone_id", "tzid").distinct().toPandas()

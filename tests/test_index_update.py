@@ -309,29 +309,95 @@ def test_empty_knn_cell_raises(zones, monkeypatch):
         replace_zone(idx, _moved(north, -80.0, -100.0))
 
 
-def test_facade_assign_memoizes_broadcast(spark, zones):
-    """TimezoneLookup.assign broadcasts the compiled index once per index:
-    two calls share one broadcast; a replace_zone in between releases it,
-    and the next call broadcasts the updated index and answers from it."""
+def test_facade_assign_memoizes_broadcast(spark, zones, monkeypatch):
+    """TimezoneLookup.assign builds its lookup plan (broadcast, zone dim,
+    Columns) once per index: three calls over two image DataFrames share one
+    plan and one broadcast; a replace_zone in between releases it, and the
+    next call builds exactly one plan over the updated index and answers
+    from it. Every answer equals assign_timezones over a fresh broadcast."""
+    import tzspark.engine as engine
     from tzspark.api import TimezoneLookup
     from tzspark.datasets import images_df, synth_coords
+    from tzspark.engine import assign_timezones, zone_dim_df
+
+    builds = []
+    real_lookup_udf = engine.lookup_udf
+    monkeypatch.setattr(engine, "lookup_udf",
+                        lambda b: builds.append(b) or real_lookup_udf(b))
 
     tl = TimezoneLookup(zones)
     imgs = images_df(spark, 400, partitions=2)
-    def broadcast_id():
-        return tl._assign_memo[2]._jbroadcast.id()
+    other = images_df(spark, 250, partitions=3)
 
-    tl.assign(spark, imgs)
-    first = broadcast_id()
-    tl.assign(spark, imgs)
-    assert broadcast_id() == first
+    def broadcast_id():
+        return tl._assign_memo[2].idx_bcast._jbroadcast.id()
+
+    def facade(df):
+        """tl.assign(df) and the plan builds it made."""
+        n = len(builds)
+        out = tl.assign(spark, df)
+        return out, len(builds) - n
+
+    def fresh(df):
+        return assign_timezones(df, spark.sparkContext.broadcast(tl.idx),
+                                zone_dim_df(spark, tl.zones), max_res=tl.max_res)
+
+    def rows(df):
+        return df.orderBy("image_id").collect()
+
+    got, ids = [], set()
+    for df in (imgs, other, imgs):
+        got.append((df, *facade(df)))
+        ids.add(broadcast_id())
+    assert [n for _, _, n in got] == [1, 0, 0] and len(ids) == 1
+    first = ids.pop()
+    for df, out, _ in got:
+        assert rows(out) == rows(fresh(df))
 
     z = zones[14]
     moved = _moved(z, -6.0, 9.0)
     tl.replace_zone(moved)
-    pdf = tl.assign(spark, imgs).select("image_id", "zone_id").toPandas()
+    assert tl._assign_memo is None
+    out, n_built = facade(imgs)
+    assert n_built == 1
     assert broadcast_id() != first
+    assert facade(other)[1] == 0
+    assert rows(out) == rows(fresh(imgs))
+    pdf = out.select("image_id", "zone_id").toPandas()
     lat, lng = synth_coords(pdf["image_id"].str[3:].astype(np.int64).to_numpy())
     live = [moved if q.zone_id == z.zone_id else q for q in zones]
     np.testing.assert_array_equal(pdf["zone_id"].to_numpy(np.int32),
                                   oracle_assign(live, lat, lng))
+
+
+def test_facade_plan_reuse_in_one_query(spark, zones):
+    """The memoized plan's Columns may meet in one query: a union of two
+    tl.assign results and a self-join of two results on image_id answer as
+    the calls do on their own (each DataFrame call gets fresh expression
+    ids, so the shared Columns cannot alias each other)."""
+    from pyspark.sql import functions as F
+
+    from tzspark.api import TimezoneLookup
+    from tzspark.datasets import images_df
+
+    tl = TimezoneLookup(zones)
+    a = images_df(spark, 300, partitions=2)
+    b = images_df(spark, 500, partitions=2).where(F.col("image_id") >= "img000000000300")
+    cols = ["image_id", "zone_id", "via_knn", "cell_id", "tzid"]
+
+    def rows(df):
+        return sorted(map(tuple, df.select(*cols).collect()))
+
+    one_a, one_b = rows(tl.assign(spark, a)), rows(tl.assign(spark, b))
+    assert len(one_a) == 300 and len(one_b) == 200
+    union = tl.assign(spark, a).unionByName(tl.assign(spark, b))
+    assert rows(union) == sorted(one_a + one_b)
+
+    left, right = tl.assign(spark, a), tl.assign(spark, a)
+    joined = left.alias("l").join(right.alias("r"), "image_id").select(
+        "image_id", *[F.col(f"{s}.{c}").alias(f"{s}_{c}") for s in "lr" for c in cols[1:]]
+    ).orderBy("image_id").collect()
+    assert len(joined) == 300
+    for r, want in zip(joined, one_a):
+        assert (r["image_id"], *(r[f"l_{c}"] for c in cols[1:])) == want
+        assert (r["image_id"], *(r[f"r_{c}"] for c in cols[1:])) == want

@@ -4,6 +4,8 @@ writes the PLANS.md sections):
 * probe_plan_checks: the image lookup, the quarantine side output and the
   q11/q12/q43/q89/q106 probes each cross into Python once (one
   ArrowEvalPython; q89 one per epoch);
+* facade_plan_checks: the image lookup's checks on the plan of a second
+  TimezoneLookup.assign call, built from its memoized LookupPlan;
 * join_path_checks: one FlatMapCoGroupsInArrow per lookup, the cover never
   broadcast, multi-tenant cogroup keys led by tenant, and the image path's
   GPS extract evaluated once;
@@ -15,6 +17,7 @@ Plus a unit test of the dump's per-plan renumbering (stable_ids)."""
 
 from scripts.explain_plans import (
     distance_join_checks,
+    facade_plan_checks,
     join_path_checks,
     probe_plan_checks,
     stable_ids,
@@ -31,6 +34,15 @@ def test_probe_plan_shape(spark, tmp_path):
     images_df(spark, 400, partitions=2).write.parquet(path)
     sections, failures = probe_plan_checks(spark, spark.read.parquet(path), SF)
     assert len(sections) == 7
+    assert failures == []
+
+
+def test_facade_plan_shape(spark, tmp_path):
+    # from parquet, for the reason test_probe_plan_shape gives
+    path = str(tmp_path / "images.parquet")
+    images_df(spark, 400, partitions=2).write.parquet(path)
+    sections, failures = facade_plan_checks(spark, spark.read.parquet(path), SF)
+    assert len(sections) == 1
     assert failures == []
 
 

@@ -125,17 +125,18 @@ class TimezoneLookup:
     # released (_swap_idx).
 
     def _swap_idx(self, idx: CompiledIndex) -> None:
-        """Install an updated index; unpersist the broadcast assign() made of
-        the old one. unpersist only drops executor copies — a DataFrame built
-        before the swap still evaluates (executors re-fetch the blocks). A
-        broadcast of an application that has since stopped is just dropped."""
+        """Install an updated index; drop the lookup plan assign() built over
+        the old one and unpersist its broadcast. unpersist only drops
+        executor copies — a DataFrame built before the swap still evaluates
+        (executors re-fetch the blocks). A broadcast of an application that
+        has since stopped is just dropped."""
         memo = getattr(self, "_assign_memo", None)
         if memo is not None:
             from pyspark import SparkContext
 
             sc = SparkContext._active_spark_context
             if sc is not None and sc.applicationId == memo[0]:
-                memo[2].unpersist()
+                memo[2].idx_bcast.unpersist()
             self._assign_memo = None
         self.idx = idx
 
@@ -279,19 +280,20 @@ class TimezoneLookup:
 
     def assign(self, spark, images_df):
         """The broadcast PIP join over an image+caption DataFrame."""
-        from .engine import assign_timezones, zone_dim_df
+        from .engine import LookupPlan, zone_dim_df
 
-        # one broadcast + zone dim per (Spark application, compiled index):
-        # re-pickling the index and rebuilding the dim per call is the
-        # driver-side setup of every op otherwise (_swap_idx releases it)
+        # one lookup plan (broadcast, zone dim, Columns) per (Spark
+        # application, compiled index): re-pickling the index and rebuilding
+        # the dim and the Columns per call is the driver-side setup of every
+        # op otherwise (_swap_idx releases it)
         app = spark.sparkContext.applicationId
         memo = getattr(self, "_assign_memo", None)
         if memo is None or memo[0] != app or memo[1] is not self.idx:
-            memo = self._assign_memo = (
-                app, self.idx, spark.sparkContext.broadcast(self.idx),
-                zone_dim_df(spark, self.zones),
-            )
-        return assign_timezones(images_df, memo[2], memo[3], max_res=self.max_res)
+            memo = self._assign_memo = (app, self.idx, LookupPlan(
+                spark.sparkContext.broadcast(self.idx), zone_dim_df(spark, self.zones),
+                max_res=self.max_res,
+            ))
+        return memo[2].apply(images_df)
 
     def _cover_dir(self, cache_dir: str) -> str:
         """The persisted cover's directory: keyed by the zone content and

@@ -14,8 +14,9 @@ Column expressions, and ANSI SQL — no shuffle, no UDF), plus a driver-compiled
   nearby edges.
 
 The cover is compiled once on the driver (numpy; zone slices on a thread pool
-for reference-scale sets), broadcast to executors, and probed inside pandas
-UDFs — the Spark-native replacement for the reference's mmap +
+for reference-scale sets), broadcast to executors, and probed inside the
+engine's `F.arrow_udf` kernels (engine.lookup_kernel / assign_kernel over
+pyarrow arrays) — the Spark-native replacement for the reference's mmap +
 rebuild-R-tree-on-load design (timezone.go:192, 208-214).
 
 Grid definition (res r, n = 2**r):

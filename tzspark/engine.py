@@ -381,6 +381,45 @@ def broadcast_cover(spark: SparkSession, zones: list, base_res=4, max_res=DEFAUL
     return spark.sparkContext.broadcast(idx), idx.stats
 
 
+class LookupPlan:
+    """The broadcast lookup as Columns, built once per (broadcast index,
+    zone dim, max_res) and applied to any number of image DataFrames.
+
+    Every ``F.*`` call is a py4j round trip (PySpark 4 also captures its
+    call site): building these Columns takes ~500 round trips, more driver
+    time than a 40k-image op spends in its kernels. apply() builds no
+    Column: four DataFrame calls over the held ones. Spark turns each
+    Column into a fresh expression (new expression ids) per DataFrame
+    call, so one plan's outputs can meet in one query (a union, a
+    self-join)."""
+
+    def __init__(self, idx_bcast, zone_dim: DataFrame, max_res: int = DEFAULT_MAX_RES):
+        self.idx_bcast = idx_bcast
+        self._all = F.col("*")
+        self._probe = lookup_udf(idx_bcast)(gps_header_col(F.col("bytes"))).alias("a")
+        self._ok = F.col("a.gps_ok")
+        lat, lng = F.col("a.lat"), F.col("a.lng")
+        self._outputs = [
+            lat.alias("lat"),
+            lng.alias("lng"),
+            (~self._ok).alias("quarantined"),
+            F.col("a.zone_id").alias("zone_id"),
+            F.col("a.via_knn").alias("via_knn"),
+            cell_id_col(lat, lng, max_res).alias("cell_id"),
+        ]
+        self._dim = F.broadcast(zone_dim.select("zone_id", "tzid"))
+
+    def apply(self, images: DataFrame) -> DataFrame:
+        """assign_timezones' output over ``images``: probe, keep the gps_ok
+        rows, project, attach tzid."""
+        return (
+            images.select(self._all, self._probe)
+            .where(self._ok)
+            .select(*images.columns, *self._outputs)
+            .join(self._dim, "zone_id", "left")
+        )
+
+
 def assign_timezones(
     images: DataFrame,
     idx_bcast,
@@ -396,27 +435,17 @@ def assign_timezones(
     + cell_id (pure column arithmetic, no UDF, no shuffle)
     + zone_id, via_knn (broadcast cover probe)
     + tzid (broadcast hash join on the small zone dimension)
+    in the column order zone_id, the image columns, lat, lng, quarantined,
+    via_knn, cell_id, tzid. Quarantined rows are dropped.
 
     Exactly ONE Python stage: only the 17-byte header prefix crosses the
     Arrow boundary (JVM-side substring), and extract + validity + resolve +
     kNN run fused inside lookup_udf — the multi-KB payload column never
     enters Python on this path (measured ~6x crossing cost when it does).
+    A caller that looks up many DataFrames against one index keeps a
+    LookupPlan instead (TimezoneLookup.assign does).
     """
-    looked = images.withColumn(
-        "a", lookup_udf(idx_bcast)(gps_header_col(F.col("bytes")))
-    )
-    pts = looked.select(
-        "*",
-        F.col("a.lat").alias("lat"),
-        F.col("a.lng").alias("lng"),
-        (~F.col("a.gps_ok")).alias("quarantined"),
-        F.col("a.zone_id").alias("zone_id"),
-        F.col("a.via_knn").alias("via_knn"),
-    ).drop("a")
-    assigned = pts.where(~F.col("quarantined")).withColumn(
-        "cell_id", cell_id_col(F.col("lat"), F.col("lng"), max_res)
-    )
-    return assigned.join(F.broadcast(zone_dim.select("zone_id", "tzid")), "zone_id", "left")
+    return LookupPlan(idx_bcast, zone_dim, max_res).apply(images)
 
 
 def quarantined_rows(images: DataFrame) -> DataFrame:
