@@ -192,9 +192,9 @@ def headline_queries(spark, images):
         )
 
     # the broadcast-FREE path at the same reference operating point: the
-    # cover persisted as a parquet table of index shards (one-off,
-    # content-hash cached), lookup is a points x shards cogroup running
-    # cells.assign_points — the apples-to-apples row against
+    # cover persisted as one index file (one-off, content-hash cached),
+    # mapped by each Python worker and probed where the rows are by the
+    # broadcast path's own kernels — the apples-to-apples row against
     # lookup_world_zones for the zone-sets-past-the-broadcast-budget regime
     def _world_lookup_join():
         from pyspark.sql import functions as F
@@ -206,16 +206,15 @@ def headline_queries(spark, images):
             F.sum(F.col("via_knn").cast("long")).alias("n_via_knn"),
         )
 
-    # MULTI-TENANT at world scale: two world-size zone sets unioned into one
-    # tenant-keyed shard table (covertable.union_tenants), resolved for a
-    # mixed image stream in a single shuffle-partitioned job — the regime
-    # where per-tenant broadcasts are impossible by construction (2x the
-    # world cover could never broadcast). Both covers below are the one
-    # persisted layout (CoverTables.save/load), read back from parquet; the
-    # thunks time the lookup + rollup.
+    # MULTI-TENANT at world scale: two world-size zone sets as one
+    # tenant-keyed cover (covertable.union_tenants, one index file each),
+    # resolved for a mixed image stream in a single job — the regime where
+    # per-tenant broadcasts are impossible by construction (2x the world
+    # cover could never broadcast). The tenant cover is saved and read back
+    # (CoverTables.save/load); the thunks time the lookup + rollup.
     from tzspark.covertable import CoverTables, assign_images_via_join
 
-    mt_path = tl_world._cover_dir(os.path.join(CACHE, "covers")) + "_mt2"
+    mt_path = os.path.join(CACHE, "covers", f"cover_{tl_world._content_key()}_mt2")
     if not os.path.exists(os.path.join(mt_path, "meta.json")):
         CoverTables.union_tenants(
             spark, {"a": tl_world.idx, "b": tl_world.idx}
@@ -224,8 +223,8 @@ def headline_queries(spark, images):
 
     # the world cover as the image-level lookup alone (no tzid attach):
     # against world_lookup_join it isolates the dim join + tzid rollup. The
-    # row keeps its name from the retired bucketed cover layout, so earlier
-    # BENCH artifacts stay comparable by name.
+    # row keeps its name from a retired cover layout, so earlier BENCH
+    # artifacts stay comparable by name.
     cov_wb = tl_world.cover_tables(spark, os.path.join(CACHE, "covers"))
 
     def _world_lookup_join_bucketed():
@@ -850,11 +849,10 @@ def _world_job(spark, cpus: int):
 
 def _join_job(spark, cpus: int):
     """The BROADCAST-FREE lookup (covertable assign_via_join) against the
-    reference-scale cover persisted as a parquet table of index shards —
-    the flagship path for zone sets past the broadcast budget. Unlike the
-    broadcast rows this one SHUFFLES (points x shards cogroup), so its
-    single-box N-vs-4N ratio also carries the local shuffle service's fixed
-    costs; on a real cluster the exchange is network-parallel."""
+    reference-scale cover persisted as one index file — the flagship path
+    for zone sets past the broadcast budget. Like the broadcast rows it
+    probes the points where they are (no shuffle); each Python worker maps
+    the file instead of unpickling a broadcast copy."""
     from pyspark.sql import functions as F
 
     from tzspark.api import TimezoneLookup

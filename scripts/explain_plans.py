@@ -14,8 +14,9 @@ assert the plan properties the design promises:
    with the q11/q12/q43/q89/q106 probes, are probe_plan_checks, and 1's
    checks on TimezoneLookup.assign's memoized plan are facade_plan_checks
    (both also run in tier-1 by tests/test_plans.py);
-6. join path: one FlatMapCoGroupsInArrow per lookup, the cover never
-   broadcast (join_path_checks; tier-1 runs it in tests/test_plans.py);
+6. join path: one ArrowEvalPython probe per lookup with no Exchange
+   below it, the index never broadcast (join_path_checks; tier-1 runs it
+   in tests/test_plans.py);
 6e. distance joins: one cell-keyed equi-join each, never an all-pairs
    join, no Python stage (distance_join_checks; also in tier-1).
 """
@@ -729,9 +730,9 @@ def main():
             "Filter does not re-run the extract UDF)\n"
             "- q11/q12/q43/q106 probes: exactly one ArrowEvalPython each "
             "(q89: one per epoch)\n"
-            "- join path: one FlatMapCoGroupsInArrow (points x index shards) "
-            "per lookup, the cover never broadcast, multi-tenant cogroup keys "
-            "lead with tenant, the image path's GPS extract evaluated once\n"
+            "- join path: one ArrowEvalPython probe over the mapped index "
+            "file per lookup, no Exchange below it, nothing cached, only the "
+            "zone dim broadcast; the multi-tenant probe reads tenant\n"
             "- distance joins (radius, proximity, two-set pairs, co-location): "
             "exactly one equi-join each, keyed on _cell (+ _tb), never an "
             "all-pairs join, zero Python stages\n"
@@ -988,17 +989,35 @@ def distance_join_checks(spark, sf_small):
     return sections, failures
 
 
-def join_path_checks(spark, images, sf_small):
-    """Sections 6-6c, the broadcast-free lookup (covertable's shard
-    cogroup), as ([(title, plan)], [failure]). tests/test_plans.py runs the
-    same checks in tier-1.
+def join_shape_failures(tag, plan) -> list:
+    """The join path's lookup shape in one formatted plan, as [failure]:
+    one Python stage (an ArrowEvalPython: the probe), no Exchange below it
+    (the rows are probed where they are), no InMemoryRelation, and no
+    BroadcastExchange but the (zone_id, tzid) dim's — the index never
+    travels as a broadcast."""
+    failures = []
+    tree = plan.split("\n\n\n")[0]
+    n_py = len(re.findall(r"^\(\d+\) \w*(?:EvalPython|InPandas|InArrow)\b", plan, re.M))
+    if n_py != 1 or "ArrowEvalPython" not in tree:
+        failures.append(f"{tag}: {n_py} Python stages (expected exactly 1 ArrowEvalPython)")
+    elif "Exchange" in tree[tree.find("ArrowEvalPython"):]:
+        failures.append(f"{tag}: an Exchange below the probe")
+    if "InMemoryRelation" in plan:
+        failures.append(f"{tag}: a cached relation in the lookup")
+    for cols in re.findall(r"\(\d+\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan):
+        if {re.sub(r"#\d+L?$", "", c) for c in cols.split(", ")} - {"zone_id", "tzid"}:
+            failures.append(f"{tag}: broadcasts [{cols}], not only the zone dim")
+    return failures
 
-    Every join-path lookup is ONE FlatMapCoGroupsInArrow (points x index
-    shards, cells.assign_points per group), the cover is never the input of
-    a BroadcastExchange (only the tiny salt table, the zone dim or a small
-    points side are), a multi-tenant cogroup groups on keys that lead with
-    tenant, and on the image path the GPS-extract UDF is evaluated once
-    (one ArrowEvalPython, under the cached narrow points)."""
+
+def join_path_checks(spark, images, sf_small):
+    """Sections 6-6c, the broadcast-free lookup (covertable's probe over a
+    mapped index file), as ([(title, plan)], [failure]).
+    tests/test_plans.py runs the same checks in tier-1.
+
+    Every join-path lookup has join_shape_failures' shape: one
+    ArrowEvalPython with no Exchange below it, nothing cached, nothing but
+    the zone dim broadcast; a multi-tenant probe reads the tenant column."""
     from tzspark.cells import compile_cover
     from tzspark.covertable import (
         CoverTables,
@@ -1011,39 +1030,22 @@ def join_path_checks(spark, images, sf_small):
     cov = CoverTables.from_index(spark, idx)
     sections, failures = [], []
 
-    def lookup_shape(tag, plan):
-        n_cg = len(re.findall(r"\(\d+\) FlatMapCoGroupsInArrow\b", plan))
-        if n_cg != 1:
-            failures.append(f"{tag}: {n_cg} FlatMapCoGroupsInArrow (expected exactly 1)")
-        bcast_inputs = re.findall(r"\(\d+\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
-        if any("blob#" in i for i in bcast_inputs):
-            failures.append(f"{tag}: the cover shards are broadcast")
-
     # 6. single-tenant assignment over a points table
     p6 = plan_of(
         assign_via_join(pts_df(spark, sf_small), "event_id", cov)
         .groupBy("zone_id").count()
     )
-    sections.append(("broadcast-free assignment (shard cogroup, join path)", p6))
-    lookup_shape("assign-join", p6)
-    if re.search(r"ArrowEvalPython|MapInArrow|MapInPandas", p6):
-        failures.append("assign-join: a Python stage besides the cogroup")
+    sections.append(("broadcast-free assignment (mapped index file, join path)", p6))
+    failures += join_shape_failures("assign-join", p6)
 
-    # 6b. the image path (TimezoneLookup.assign_join's core): the extract UDF
-    # runs once, inside the cached narrow points that feed both the salt
-    # count and the lookup; the raw image side joins back with no Python
+    # 6b. the image path (TimezoneLookup.assign_join's core): GPS extract,
+    # quarantine and lookup in one probe, as on the broadcast path
     p6b = plan_of(assign_images_via_join(images, cov).groupBy("zone_id").count())
-    sections.append(("broadcast-free image assignment (one GPS extract)", p6b))
-    lookup_shape("image-join", p6b)
-    n_py6b = len(re.findall(r"\(\d+\) ArrowEvalPython\b", p6b))
-    if n_py6b != 1:
-        failures.append(f"image-join: {n_py6b} ArrowEvalPython (expected exactly 1: the GPS extract)")
-    if "InMemoryRelation" not in p6b:
-        failures.append("image-join: the narrow points are not cached")
+    sections.append(("broadcast-free image assignment (one probe)", p6b))
+    failures += join_shape_failures("image-join", p6b)
 
-    # 6c. MULTI-TENANT: N zone sets unioned into one tenant-keyed shard table
-    # resolve in ONE cogroup whose grouping keys lead with tenant on both
-    # sides (no per-tenant broadcasts, no per-tenant jobs)
+    # 6c. MULTI-TENANT: one index file per tenant; one probe splits each
+    # batch on the tenant column (no per-tenant broadcasts or jobs)
     cov_mt = CoverTables.union_tenants(spark, {"a": idx, "b": idx})
     pts_t = pts_df(spark, sf_small).withColumn(
         "tenant", F.when(F.col("event_id") % 2 == 0, "a").otherwise("b")
@@ -1051,14 +1053,10 @@ def join_path_checks(spark, images, sf_small):
     p6c = plan_of(
         assign_via_join(pts_t, "event_id", cov_mt).groupBy("tenant", "zone_id").count()
     )
-    sections.append(("multi-tenant assignment (tenant-keyed shard table)", p6c))
-    lookup_shape("multi-tenant", p6c)
-    if not re.search(
-        r"\(\d+\) FlatMapCoGroupsInArrow\n(?:.*\n){2}Arguments: \[tenant#\d+, "
-        r"shard_id#\d+L, _salt#\d+\], \[tenant#\d+, shard_id#\d+L, _salt#\d+\]",
-        p6c,
-    ):
-        failures.append("multi-tenant: cogroup keys do not lead with tenant on both sides")
+    sections.append(("multi-tenant assignment (one index file per tenant)", p6c))
+    failures += join_shape_failures("multi-tenant", p6c)
+    if not re.search(r"Arguments: \[_probe\((?:cast\()?tenant#\d+", p6c):
+        failures.append("multi-tenant: the probe does not read the tenant column")
     return sections, failures
 
 

@@ -2,9 +2,14 @@
 against a scalar reference: a per-zone, per-cell quadtree walk that
 classifies one cell at a time with the original scalar predicates. Plus
 pinned index digests, which many-chunks and many-slices runs must
-reproduce, and a check that the sliced compile stays on driver threads."""
+reproduce, and a check that the sliced compile stays on driver threads.
+Plus the index file (cells.save_index / open_index): its bytes pinned
+beside the pickle's, round trips, and planted bad files rejected and
+regenerated."""
 
 import hashlib
+import json
+import os
 import pickle
 
 import numpy as np
@@ -176,6 +181,14 @@ PINNED = {
 ZONE_SETS = {"make_zones_4000": lambda: make_zones(n_coast=4000), "bench_cut": _bench_cut}
 
 
+# sha256 of the cells.save_index file of the same compiles: the index
+# file's layout is pinned beside the pickle's.
+FILE_PINNED = {
+    "make_zones_4000": "e641d28450fd480d0964f15ceeb164985ce0c6ea17c11eb09e7b7efe6d81f0db",
+    "bench_cut": "217701b9e40d79de04f0c86fe7d7298ca630a8b0327be81c9adce694fcc53b17",
+}
+
+
 def _digest(idx):
     return hashlib.sha256(pickle.dumps(idx, protocol=5)).hexdigest()
 
@@ -228,3 +241,81 @@ def test_sliced_compile_starts_no_job_or_process(spark, monkeypatch):
     assert idx.stats["zones"] == len(zones)
     assert sorted(tracker.getJobIdsForGroup(None)) == jobs
     assert started == [] and multiprocessing.active_children() == []
+
+
+# ---------------------------------------------------------------------------
+# the index file
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("name", sorted(PINNED))
+def test_index_file_pinned_and_round_trips(name, tmp_path):
+    """save_index writes the pinned bytes and returns their blake2b digest;
+    open_index gives back the same index as read-only views of the file."""
+    from test_index_update import assert_index_equal
+
+    idx = compile_cover(ZONE_SETS[name]())
+    path = str(tmp_path / "index")
+    digest = cells.save_index(idx, path)
+    with open(path, "rb") as f:
+        data = f.read()
+    assert hashlib.sha256(data).hexdigest() == FILE_PINNED[name]
+    assert digest == hashlib.blake2b(data, digest_size=16).hexdigest()
+    opened = cells.open_index(path)
+    assert_index_equal(opened, idx)
+    assert not opened.b_cells.flags.writeable
+    assert _digest(idx) == PINNED[name]
+
+
+def _edit_header(path, edit):
+    """Rewrite the index file's JSON header through ``edit(meta)``, keeping
+    its arrays."""
+    with open(path, "rb") as f:
+        data = f.read()
+    n = int.from_bytes(data[8:16], "little")
+    meta = json.loads(data[16 : 16 + n])
+    edit(meta)
+    head = json.dumps(meta).encode()
+    with open(path, "wb") as f:
+        f.write(data[:8] + len(head).to_bytes(8, "little") + head
+                + bytes(-(16 + len(head)) % 64) + data[16 + n + -(16 + n) % 64 :])
+
+
+def _plant(path, how):
+    """Damage a valid index file at ``path``."""
+    if how == "truncated":
+        os.truncate(path, os.path.getsize(path) - 64)
+    elif how == "other_version":
+        _edit_header(path, lambda m: m.update(version=m["version"] + 1))
+    elif how == "overrun":  # an extent past the end, the file size intact
+        _edit_header(path, lambda m: m["arrays"]["knn_zidx"].__setitem__(2, [10**8]))
+    else:  # a pickle where the index file should be
+        with open(path, "wb") as f:
+            pickle.dump({"v": 1}, f)
+
+
+PLANTS = ("truncated", "other_version", "overrun", "pickle")
+
+
+@pytest.mark.parametrize("how", PLANTS)
+def test_bad_index_file_rejected_and_regenerated(how, tmp_path):
+    """open_index raises ValueError on a damaged file, and
+    TimezoneLookup(cache_dir=...) compiles a fresh file over it instead of
+    reading it."""
+    from test_index_update import assert_index_equal
+
+    from tzspark.api import TimezoneLookup
+
+    zones = make_zones(n_coast=200)
+    cache = str(tmp_path)
+    TimezoneLookup(zones, cache_dir=cache)
+    (name,) = os.listdir(cache)
+    path = os.path.join(cache, name)
+    _plant(path, how)
+    with pytest.raises(ValueError):
+        cells.open_index(path)
+    tl = TimezoneLookup(zones, cache_dir=cache)
+    assert os.listdir(cache) == [name]
+    fresh = compile_cover(zones)
+    assert_index_equal(tl.idx, fresh)
+    assert_index_equal(cells.open_index(path), fresh)

@@ -1,11 +1,12 @@
 """Cover-as-table lookup (covertable.py): the broadcast-free join path must
 equal the broadcast kernels exactly — resolve, kNN, and the full facade
 assignment — including on the reference-scale world zone set. Its kernel is
-cells.assign_points on spatial shards of the index, so a shard must answer
-exactly like the full index for every point inside it."""
+cells.assign_points on the index mapped from its file, so the mapped index
+must answer exactly like the in-memory one."""
 
 import json
 import os
+import tempfile
 
 import numpy as np
 import pytest
@@ -16,20 +17,17 @@ from pyspark.sql import functions as F
 from tzspark.cells import (
     Zone,
     assign_points,
-    cell_id,
     compile_cover,
     knn_fallback,
+    open_index,
     resolve_points,
+    save_index,
 )
 from tzspark.covertable import (
-    SHARD_LAYOUT_VERSION,
     CoverTables,
     assign_via_join,
     knn_via_join,
-    open_shard,
     resolve_via_join,
-    shard_blobs,
-    shard_res,
 )
 from tzspark.engine import assign_udf, with_contained_zone
 from tzspark.geom import F32
@@ -51,20 +49,13 @@ def _pd(df, cols):
     return df.select(*cols).toPandas().set_index(cols[0]).sort_index()
 
 
-def _sharded_assign(idx, lat, lng):
-    """cells.assign_points run shard by shard, each point in the shard the
-    join path keys it to (cell_id at shard_res; NaN points go to shard 0,
-    where they must still get no answer)."""
-    blobs = shard_blobs(idx)
-    with np.errstate(invalid="ignore"):
-        sh = cell_id(lat, lng, shard_res(idx))
-    sh[np.isnan(lat) | np.isnan(lng)] = 0
-    zid = np.full(len(lat), -2, np.int32)
-    via = np.zeros(len(lat), bool)
-    for s in np.unique(sh):
-        m = sh == s
-        zid[m], via[m] = assign_points(open_shard(blobs[int(s)]), lat[m], lng[m])
-    return zid, via
+def _file_assign(idx, lat, lng):
+    """cells.assign_points on ``idx`` written to an index file and mapped
+    back (cells.open_index), as every join-path worker reads it."""
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "index")
+        save_index(idx, path)
+        return assign_points(open_index(path), lat, lng)
 
 
 @settings(max_examples=25, deadline=None)
@@ -80,11 +71,11 @@ def _sharded_assign(idx, lat, lng):
     base_res=st.sampled_from([3, 4]),
     probe_seed=st.integers(0, 2**31 - 1),
 )
-def test_shard_assign_equals_full_index(seeds, base_res, probe_seed):
-    """Shard-wise assign_points == full-index assign_points (zone_id and
-    via_knn) on random points, ring vertices, edge midpoints, points exactly
-    on shard boundaries and on the clamped grid edges, NaN and
-    out-of-domain input."""
+def test_file_index_equals_memory_index(seeds, base_res, probe_seed):
+    """assign_points on the file-mapped index == on the in-memory index
+    (zone_id and via_knn) on random points, ring vertices, edge midpoints,
+    points exactly on coarse grid lines and on the clamped grid edges, NaN
+    and out-of-domain input."""
     zones = [
         Zone(k, f"Z{k}", *_ring(cx, cy, r, n, ph))
         for k, (cy, cx, r, n, ph) in enumerate(seeds)
@@ -99,8 +90,8 @@ def test_shard_assign_equals_full_index(seeds, base_res, probe_seed):
     mid_lng = np.concatenate(
         [(z.ring_lng + np.roll(z.ring_lng, -1)) / F32(2) for z in zones]
     )
-    n = 1 << shard_res(idx)
-    b_lat = -90.0 + 180.0 * np.arange(n + 1) / n  # shard rows' edges
+    n = 1 << base_res
+    b_lat = -90.0 + 180.0 * np.arange(n + 1) / n  # base-res cell edges
     b_lng = -180.0 + 360.0 * np.arange(n + 1) / n
     g_lat, g_lng = np.meshgrid(b_lat, b_lng)
     u_lat, u_lng = rng.uniform(-90, 90, 300), rng.uniform(-180, 180, 300)
@@ -115,15 +106,15 @@ def test_shard_assign_equals_full_index(seeds, base_res, probe_seed):
         [10.0, np.nan, np.nan, 10.0, 10.0, 200.0, -200.0, 0.0],
     ]).astype(F32)
     want = assign_points(idx, lat, lng)
-    got = _sharded_assign(idx, lat, lng)
+    got = _file_assign(idx, lat, lng)
     np.testing.assert_array_equal(got[0], want[0])
     np.testing.assert_array_equal(got[1], want[1])
 
 
-def test_shard_assign_equals_full_index_bench_world():
+def test_file_index_equals_memory_index_bench_world():
     """The benchmark's 480-zone world cut (zones whose bbox centre lies in
     lat [0, 24] x lng [0, 36]): 100k synth_coords points, identical answers
-    shard-wise and on the full index."""
+    on the file-mapped and the in-memory index."""
     from tzspark.datasets import synth_coords
     from tzspark.zones import make_world_zones
 
@@ -134,7 +125,7 @@ def test_shard_assign_equals_full_index_bench_world():
     idx = compile_cover(zones)
     lat, lng = synth_coords(np.arange(100_000))
     want = assign_points(idx, lat, lng)
-    got = _sharded_assign(idx, lat, lng)
+    got = _file_assign(idx, lat, lng)
     np.testing.assert_array_equal(got[0], want[0])
     np.testing.assert_array_equal(got[1], want[1])
     assert want[1].any() and (~want[1]).any()  # both regimes exercised
@@ -168,11 +159,36 @@ def test_join_nan_null_and_out_of_domain(spark):
     assert got_k == {k: z for k, (z, v) in want.items() if v}
 
 
+def test_assign_via_join_any_key(spark):
+    """One output row per input row whatever ``key_col`` holds: duplicate
+    and null keys keep every row, with the broadcast assign_udf answers
+    (nothing joins back on the key)."""
+    from tzspark.engine import assign_udf
+    from tzspark.zones import make_zones
+
+    idx = compile_cover(make_zones())
+    cov = CoverTables.from_index(spark, idx)
+    rows = [(1, 10.0, 10.0, 0), (1, 45.0, 45.0, 1), (1, 10.0, 10.0, 2),
+            (None, 3.0, 3.0, 3), (None, 95.0, 10.0, 4), (2, None, 1.0, 5)]
+    p = spark.createDataFrame(rows, "k long, lat double, lng double, row int")
+    bidx = spark.sparkContext.broadcast(idx)
+    want = p.select("row", assign_udf(bidx)(F.col("lat"), F.col("lng")).alias("a")).select(
+        "row", "a.zone_id", "a.via_knn")
+    got = assign_via_join(p, "k", cov)
+    assert got.count() == len(rows)
+    assert sorted(got.select("row", "zone_id", "via_knn").collect()) == sorted(want.collect())
+    assert sorted(r["k"] for r in got.collect() if r["k"] is not None) == [1, 1, 1, 2]
+
+
 def test_stale_persisted_cover_is_regenerated(spark, tmp_path):
-    """cover_tables(cache_dir=...) regenerates, never reads, a cover dir at
-    its key that carries another shard layout version or the old
-    interior/boundary/knn table layout; the rewritten meta.json carries
-    this layout version and the answers are right."""
+    """cover_tables(cache_dir=...) regenerates, never reads, the index file
+    at its key when it is truncated, of another layout version, has an
+    array past its end, or is a pickle: the rewritten file maps to the
+    index and the answers are right. CoverTables.load rejects a saved cover
+    holding such a file, and the old shard-table layout."""
+    from test_cover_compile import PLANTS, _plant
+    from test_index_update import assert_index_equal
+
     from tzspark.api import TimezoneLookup
     from tzspark.zones import make_zones
 
@@ -182,27 +198,31 @@ def test_stale_persisted_cover_is_regenerated(spark, tmp_path):
     pp = p.toPandas()
     zid, via = assign_points(tl.idx, pp["lat"].to_numpy(F32), pp["lng"].to_numpy(F32))
     want = dict(zip(pp["event_id"], zip(zid.tolist(), via.tolist())))
-    for plant in ("other_version", "old_tables"):
+    for plant in PLANTS:
         cache = str(tmp_path / plant)
-        path = tl._cover_dir(cache)
-        if plant == "other_version":
-            CoverTables.from_index(spark, other).save(path)
-            with open(f"{path}/meta.json") as f:
-                meta = json.load(f)
-            meta["layout"] = SHARD_LAYOUT_VERSION + 1
-        else:  # the interior/boundary/knn layout and its meta
-            for t in ("interior", "boundary", "knn"):
-                spark.range(3).write.parquet(f"{path}/{t}")
-            meta = {"base_res": 4, "max_res": 10, "knn_res": 8, "keys": []}
-        with open(f"{path}/meta.json", "w") as f:
-            json.dump(meta, f)
+        path, _ = tl._index_file(cache, other)  # other's index at tl's key
+        _plant(path, plant)
         cov = tl.cover_tables(spark, cache_dir=cache)
-        with open(f"{path}/meta.json") as f:
-            assert json.load(f)["layout"] == SHARD_LAYOUT_VERSION
-        assert sorted(os.listdir(path)) == ["meta.json", "shards"]
+        assert cov.files == {None: path}
+        assert_index_equal(open_index(path), tl.idx)
         got = {r["event_id"]: (r["zone_id"], r["via_knn"])
                for r in assign_via_join(p, "event_id", cov).collect()}
         assert got == want, plant
+
+        saved = str(tmp_path / f"saved_{plant}")
+        CoverTables.from_index(spark, other).save(saved)
+        with open(f"{saved}/meta.json") as f:
+            ((_, name),) = json.load(f)["files"]
+        _plant(os.path.join(saved, name), plant)
+        with pytest.raises(ValueError):
+            CoverTables.load(spark, saved)
+    shards = str(tmp_path / "shard_layout")  # the shard-blob table and its meta
+    spark.range(3).write.parquet(f"{shards}/shards")
+    with open(f"{shards}/meta.json", "w") as f:
+        json.dump({"layout": 1, "base_res": 4, "max_res": 10, "knn_res": 8,
+                   "shard_res": 4, "keys": []}, f)
+    with pytest.raises(ValueError):
+        CoverTables.load(spark, shards)
 
 
 def test_resolve_join_equals_broadcast(spark, box_cover):
@@ -313,7 +333,7 @@ def test_union_tenants_isolation(spark):
     """Multi-tenant cover: the same point resolves against ITS tenant's
     zone set only — a point inside tenant A's box is offshore (kNN) for
     tenant B, and each tenant's answer equals its own single-tenant
-    broadcast kernel."""
+    broadcast kernel; a tenant with no cover gets (-1, False)."""
     from tzspark.cells import Zone
 
     za = [Zone(0, "A/Box", np.array([0, 0, 10, 10], F32),
@@ -330,10 +350,10 @@ def test_union_tenants_isolation(spark):
     pts = spark.createDataFrame(
         pd.DataFrame(
             {
-                "k": [1, 2, 3, 4],
-                "lat": np.array([5.0, 5.0, 45.0, 45.0], np.float32),
-                "lng": np.array([5.0, 5.0, 45.0, 45.0], np.float32),
-                "tenant": ["a", "b", "a", "b"],
+                "k": [1, 2, 3, 4, 5, 6],
+                "lat": np.array([5.0, 5.0, 45.0, 45.0, 5.0, 45.0], np.float32),
+                "lng": np.array([5.0, 5.0, 45.0, 45.0, 5.0, 45.0], np.float32),
+                "tenant": ["a", "b", "a", "b", "c", None],
             }
         )
     )
@@ -347,12 +367,44 @@ def test_union_tenants_isolation(spark):
     # (45,45): mirror image
     assert got[3] == (0, True)
     assert got[4] == (0, False)
+    # a tenant without a cover, and a null tenant: no answer
+    assert got[5] == got[6] == (-1, False)
 
     # per-tenant equality vs the single-tenant kernels
     la = np.array([5.0, 45.0], np.float32)
     lg = np.array([5.0, 45.0], np.float32)
     assert resolve_points(ia, la, lg).tolist() == [0, -1]
     assert knn_fallback(ib, la[:1], lg[:1]).tolist() == [0]
+
+
+def test_union_tenants_image_path(spark):
+    """assign_images_via_join on a tenant-keyed cover: each image gets its
+    own tenant's answers (those of that tenant's single cover), images of
+    a tenant without a cover are kept with (-1, False), and the output
+    columns are the single-cover path's plus nothing."""
+    from tzspark.covertable import assign_images_via_join
+    from tzspark.datasets import images_df
+    from tzspark.zones import make_zones
+
+    ia = compile_cover(make_zones(n_coast=200))
+    ib = compile_cover(make_zones(n_coast=200)[:9])
+    imgs = images_df(spark, 600, partitions=3).withColumn(
+        "tenant", F.element_at(F.array(F.lit("a"), F.lit("b"), F.lit("c")),
+                               (F.crc32("image_id") % 3 + 1).cast("int")))
+    cols = ["image_id", "tenant", "lat", "zone_id", "via_knn", "cell_id"]
+    got = assign_images_via_join(imgs, CoverTables.union_tenants(spark, {"a": ia, "b": ib}))
+    got = sorted(got.select(*cols).collect())
+    want = []
+    for t, idx in (("a", ia), ("b", ib)):
+        one = assign_images_via_join(imgs.where(F.col("tenant") == t),
+                                     CoverTables.from_index(spark, idx))
+        want += one.select(*cols).collect()
+    rest = imgs.where(F.col("tenant") == "c")
+    n_c = assign_images_via_join(rest, CoverTables.from_index(spark, ia)).count()
+    assert [r for r in got if r["tenant"] != "c"] == sorted(want)
+    c_rows = [r for r in got if r["tenant"] == "c"]
+    assert len(c_rows) == n_c > 0
+    assert {(r["zone_id"], r["via_knn"]) for r in c_rows} == {(-1, False)}
 
 
 def test_radius_join_equals_bruteforce(spark):

@@ -384,3 +384,18 @@ def test_onepass_equals_two_jobs(spark, zones):
     assert tr["n_pixels"].equals(want_tr["n_pixels"])
     np.testing.assert_allclose(tr["mean_luma"], want_tr["mean_luma"], rtol=1e-12)
     np.testing.assert_allclose(tr["mean_lat"], want_tr["mean_lat"], rtol=1e-12)
+
+
+def test_default_driver_memory_from_host(monkeypatch):
+    """get_spark's default spark.driver.memory is half of physical memory
+    (SC_PHYS_PAGES x SC_PAGE_SIZE), capped at 32g."""
+    import os
+
+    from tzspark.engine import default_driver_memory
+
+    page = 4096
+    for phys_gib, want in ((16, "8192m"), (15.5, "7936m"), (64, "32768m"), (256, "32768m")):
+        pages = int(phys_gib * (1 << 30)) // page
+        monkeypatch.setattr(os, "sysconf", lambda k, n=pages: {
+            "SC_PAGE_SIZE": page, "SC_PHYS_PAGES": n}[k])
+        assert default_driver_memory() == want

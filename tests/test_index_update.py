@@ -147,6 +147,24 @@ def test_input_index_not_mutated(zones, idx_all):
         assert np.array_equal(getattr(idx_all, f), v), f
 
 
+def test_updates_on_mapped_index(zones, idx_all, tmp_path):
+    """replace_zone, delete_zone and add_zone run on an index mapped
+    read-only from its file (cells.open_index) give the fresh compile, and
+    leave the file's views as they were."""
+    from tzspark.cells import open_index, save_index
+
+    path = str(tmp_path / "index")
+    save_index(idx_all, path)
+    mapped = open_index(path)
+    assert_index_equal(mapped, idx_all)
+    z, gone = zones[7], zones[11]
+    grown = _moved(z, 1.5, -0.5, scale=1.3)
+    out = add_zone(delete_zone(replace_zone(mapped, grown), gone.zone_id), gone)
+    live = [grown if q.zone_id == z.zone_id else q for q in zones]
+    assert_index_equal(out, compile_cover(live))
+    assert_index_equal(mapped, idx_all)
+
+
 # ---------------------------------------------------------------------------
 # update sequences: every step against a fresh compile of the zone list
 # ---------------------------------------------------------------------------

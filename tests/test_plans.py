@@ -6,9 +6,10 @@ writes the PLANS.md sections):
   ArrowEvalPython; q89 one per epoch);
 * facade_plan_checks: the image lookup's checks on the plan of a second
   TimezoneLookup.assign call, built from its memoized LookupPlan;
-* join_path_checks: one FlatMapCoGroupsInArrow per lookup, the cover never
-  broadcast, multi-tenant cogroup keys led by tenant, and the image path's
-  GPS extract evaluated once;
+* join_path_checks: each join-path lookup is one ArrowEvalPython probe over
+  the mapped index file with no Exchange below it, nothing cached and only
+  the zone dim broadcast; the multi-tenant probe reads the tenant column
+  (and a repartition planted before the probe fails the check);
 * distance_join_checks: each of the four distance joins is one equi-join
   on the grid cell (plus the time bucket for co-location), never an
   all-pairs join, with no Python stage.
@@ -19,6 +20,8 @@ from scripts.explain_plans import (
     distance_join_checks,
     facade_plan_checks,
     join_path_checks,
+    join_shape_failures,
+    plan_of,
     probe_plan_checks,
     stable_ids,
 )
@@ -46,12 +49,32 @@ def test_facade_plan_shape(spark, tmp_path):
     assert failures == []
 
 
-def test_join_path_plan_shape(spark):
-    sections, failures = join_path_checks(
-        spark, images_df(spark, 400, partitions=2), SF
-    )
+def test_join_path_plan_shape(spark, tmp_path):
+    # from parquet, for the reason test_probe_plan_shape gives
+    path = str(tmp_path / "images.parquet")
+    images_df(spark, 400, partitions=2).write.parquet(path)
+    sections, failures = join_path_checks(spark, spark.read.parquet(path), SF)
     assert len(sections) == 3
     assert failures == []
+
+
+def test_join_path_check_catches_planted_repartition(spark):
+    """A repartition planted before the join-path probe (the shuffle the
+    cogroup lookup had) fails join_shape_failures."""
+    from tzspark.cells import compile_cover
+    from tzspark.covertable import CoverTables, assign_via_join
+    from tzspark.queries_geo import box_zones, pts_df
+
+    cov = CoverTables.from_index(
+        spark, compile_cover(box_zones(spark, SF), base_res=3, max_res=7))
+    pts = pts_df(spark, SF)
+    plain = plan_of(assign_via_join(pts, "event_id", cov).groupBy("zone_id").count())
+    assert join_shape_failures("plain", plain) == []
+    planted = plan_of(
+        assign_via_join(pts.repartition(4, "event_id"), "event_id", cov)
+        .groupBy("zone_id").count())
+    assert join_shape_failures("planted", planted) == [
+        "planted: an Exchange below the probe"]
 
 
 def test_distance_join_plan_shape(spark):

@@ -98,17 +98,15 @@ def test_facade_assign_bucketed_join_no_shuffle(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {tname}")
 
 
-def test_hot_shard_points_split_across_tasks(spark):
-    """The dense-urban-tile regime: a point stream concentrated in ONE cell
-    puts almost every point in one shard of the join-path lookup. AQE cannot
-    split a cogroup group, so the lookup salts the hot shard itself: its
-    points must run in >= 2 tasks of the cogroup stage (read from
-    spark_partition_id on the cogroup output, which no exchange separates
-    from it), and the answers must equal the driver kernels."""
+def test_hot_spot_points_probe_without_exchange(spark):
+    """The dense-urban-tile regime: a point stream concentrated in ONE tiny
+    blob. The join-path lookup probes each row in the task that reads it,
+    so the hot spot stays spread over the input's partitions: no Exchange
+    in the plan, and the answers equal cells.assign_points."""
     import numpy as np
 
-    from tzspark.cells import assign_points, cell_id, compile_cover, resolve_points
-    from tzspark.covertable import CoverTables, _lookup, _narrow
+    from tzspark.cells import assign_points, compile_cover, resolve_points
+    from tzspark.covertable import CoverTables, assign_via_join
     from tzspark.geom import F32
 
     zones = make_zones(n_coast=2000)
@@ -137,15 +135,14 @@ def test_hot_shard_points_split_across_tasks(spark):
             .alias("lng"),
         )
     )
-    res, cached = _lookup(_narrow(pts, "pid", cov, "lat", "lng"), cov)
-    try:
-        got = (
-            res.select("_k", "zone_id", "via_knn", F.spark_partition_id().alias("task"))
-            .toPandas()
-            .sort_values("_k")
-        )
-    finally:
-        cached.unpersist()
+    res = assign_via_join(pts, "pid", cov)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    got = (
+        res.select("pid", "zone_id", "via_knn", F.spark_partition_id().alias("task"))
+        .toPandas()
+        .sort_values("pid")
+    )
     ids = np.arange(n_hot + n_bg, dtype=np.int64)
     la = np.where(
         ids < n_hot, 3.0 + ((ids * 2654435761) % 20000) / 1e6,
@@ -155,13 +152,9 @@ def test_hot_shard_points_split_across_tasks(spark):
         ids < n_hot, 3.0 + ((ids * 40503) % 20000) / 1e6,
         -6.0 + ((ids * 104729) % 48000) / 1000.0,
     ).astype(F32)
-    assert got["_k"].tolist() == ids.tolist()
-    # the hot shard's points ran in several cogroup tasks
-    shard = cell_id(la, lg, cov.shard_res)
-    hot = shard == shard[0]
-    assert hot.sum() >= n_hot
-    assert len(set(got["task"].to_numpy()[hot].tolist())) >= 2
-    # and the answers under the split equal the driver kernels
+    assert got["pid"].tolist() == ids.tolist()
+    # the hot blob's points ran in every input partition's task
+    assert len(set(got["task"].to_numpy()[:n_hot].tolist())) >= 2
     zid, via = assign_points(idx, la, lg)
     np.testing.assert_array_equal(got["zone_id"].to_numpy(), zid)
     np.testing.assert_array_equal(got["via_knn"].to_numpy(), via)

@@ -4,15 +4,17 @@ Parity map (a timezoneLookup user can switch 1:1):
     Timezonecache + Load/Save  -> TimezoneLookup.load / .save   (parquet)
     AddTimezone / ImportZip    -> .from_zones / .from_geojson / .from_geojson_zip
     BuildRtree (timezone.go:208)-> compiled cell cover, cached by content hash
+    mmap store (timezone.go:19-27) -> one index file mapped in place
+                                  (cells.save_index / open_index)
     Search(lat, lng)           -> .search(lat, lng) -> Result(name, coords, elapsed)
     (new, the point of the engine) .assign(images_df) — the distributed join
+                                  (.assign_join: over the mapped index file)
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
-import pickle
 import time
 from dataclasses import dataclass
 
@@ -25,7 +27,9 @@ from .cells import (
     Zone,
     compile_cover,
     knn_fallback,
+    open_index,
     resolve_points,
+    save_index,
 )
 from .geom import F32
 
@@ -84,15 +88,15 @@ class TimezoneLookup:
 
         return save_binary(self.zones, path)
 
-    # -- compiled-cover cache (R9: rebuild-on-load, amortized by caching) ----
+    # -- compiled-cover cache (R9: rebuild-on-load, amortized by an index file)
 
     def _content_key(self) -> str:
         from .cells import INDEX_FORMAT_VERSION
 
         h = hashlib.blake2b(digest_size=16)
-        # format version first: cached pickles from older CompiledIndex
-        # layouts (e.g. pre-kNN-table) must never load into newer code —
-        # they'd deserialize fine and silently fall back to slow paths.
+        # format version first: index files of older CompiledIndex layouts
+        # (e.g. pre-kNN-table) must never load into newer code — they'd
+        # map fine and silently fall back to slow paths.
         h.update(f"v{INDEX_FORMAT_VERSION}:{self.base_res}:{self.max_res}".encode())
         for z in self.zones:
             h.update(np.int64(z.zone_id).tobytes())
@@ -103,41 +107,46 @@ class TimezoneLookup:
 
     def _compile(self, cache_dir) -> CompiledIndex:
         if cache_dir:
-            os.makedirs(cache_dir, exist_ok=True)
-            p = os.path.join(cache_dir, f"cover_{self._content_key()}.pkl")
-            if os.path.exists(p):
-                with open(p, "rb") as f:
-                    return pickle.load(f)
-            idx = compile_cover(self.zones, self.base_res, self.max_res)
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as f:
-                pickle.dump(idx, f)
-            os.replace(tmp, p)
-            return idx
+            return self._index_file(cache_dir)[1]
         return compile_cover(self.zones, self.base_res, self.max_res)
+
+    def _index_file(self, cache_dir: str, idx: CompiledIndex = None) -> tuple:
+        """(path, index) of this zone content's index file in ``cache_dir``,
+        mapped (cells.open_index). A missing, truncated or stale file is
+        rewritten first, from ``idx`` or a fresh compile, never read."""
+        os.makedirs(cache_dir, exist_ok=True)
+        p = os.path.join(cache_dir, f"cover_{self._content_key()}.tzidx")
+        try:
+            return p, open_index(p)
+        except (OSError, ValueError):
+            if idx is None:
+                idx = compile_cover(self.zones, self.base_res, self.max_res)
+            save_index(idx, p + ".tmp")
+            os.replace(p + ".tmp", p)
+            return p, idx
 
     # -- incremental maintenance (store Delete/Replace — rtree R5/R6) -------
     # CSR splicing on the live compiled index (cells.delete_zone/add_zone/
     # replace_zone) plus a kNN table rebuilt only in the cells the changed
     # MBR can reach — byte-identical to a recompile over the updated zone
     # list. self.zones is updated too, so _content_key re-keys every cover
-    # cache correctly, and the superseded index's assign() broadcast is
-    # released (_swap_idx).
+    # cache correctly, and the superseded index's lookup plans and assign()
+    # broadcast are released (_swap_idx).
 
     def _swap_idx(self, idx: CompiledIndex) -> None:
-        """Install an updated index; drop the lookup plan assign() built over
-        the old one and unpersist its broadcast. unpersist only drops
-        executor copies — a DataFrame built before the swap still evaluates
+        """Install an updated index; drop the lookup plans built over the old
+        one and unpersist its broadcast. unpersist only drops executor
+        copies — a DataFrame built before the swap still evaluates
         (executors re-fetch the blocks). A broadcast of an application that
         has since stopped is just dropped."""
         memo = getattr(self, "_assign_memo", None)
-        if memo is not None:
+        if memo is not None and memo[2] is not None:
             from pyspark import SparkContext
 
             sc = SparkContext._active_spark_context
             if sc is not None and sc.applicationId == memo[0]:
                 memo[2].idx_bcast.unpersist()
-            self._assign_memo = None
+        self._assign_memo = None
         self.idx = idx
 
     def delete_zone(self, zone_id: int) -> "TimezoneLookup":
@@ -278,97 +287,58 @@ class TimezoneLookup:
 
     # -- the distributed join -------------------------------------------------
 
+    def _plans(self, spark) -> list:
+        """[application id, index, broadcast LookupPlan or None, {cache_dir:
+        join LookupPlan}], built once per application and index: rebuilding
+        the index copy, dim and Columns per call is every op's driver-side
+        setup otherwise (_swap_idx drops them)."""
+        app = spark.sparkContext.applicationId
+        memo = getattr(self, "_assign_memo", None)
+        if memo is None or memo[0] != app or memo[1] is not self.idx:
+            memo = self._assign_memo = [app, self.idx, None, {}]
+        return memo
+
     def assign(self, spark, images_df):
         """The broadcast PIP join over an image+caption DataFrame."""
         from .engine import LookupPlan, zone_dim_df
 
-        # one lookup plan (broadcast, zone dim, Columns) per (Spark
-        # application, compiled index): re-pickling the index and rebuilding
-        # the dim and the Columns per call is the driver-side setup of every
-        # op otherwise (_swap_idx releases it)
-        app = spark.sparkContext.applicationId
-        memo = getattr(self, "_assign_memo", None)
-        if memo is None or memo[0] != app or memo[1] is not self.idx:
-            memo = self._assign_memo = (app, self.idx, LookupPlan(
+        memo = self._plans(spark)
+        if memo[2] is None:
+            memo[2] = LookupPlan(
                 spark.sparkContext.broadcast(self.idx), zone_dim_df(spark, self.zones),
                 max_res=self.max_res,
-            ))
+            )
         return memo[2].apply(images_df)
 
-    def _cover_dir(self, cache_dir: str) -> str:
-        """The persisted cover's directory: keyed by the zone content and
-        the shard-blob layout version, hashed together."""
-        from .covertable import SHARD_LAYOUT_VERSION
-
-        h = hashlib.blake2b(digest_size=16)
-        h.update(f"{self._content_key()}:shards-v{SHARD_LAYOUT_VERSION}".encode())
-        return os.path.join(cache_dir, f"covertbl_{h.hexdigest()}")
-
-    def cover_tables(self, spark, cache_dir: str = None):
-        """The compiled cover as a table of spatial shards
-        (covertable.CoverTables), optionally persisted as parquet under
-        ``cache_dir`` — the broadcast-free counterpart of the pickle cache
-        in _compile. A persisted cover of another layout (or a torn one
-        without meta.json) is regenerated, never read.
-
-        Memoized per (Spark application, cache_dir, zone content): repeated
-        probes reuse one CoverTables instance instead of re-slicing the
-        index per call (the DataFrames are lazy table handles, no data is
-        cached by this)."""
-        import shutil
-
-        from .covertable import CoverTables
-
-        key = (spark.sparkContext.applicationId, cache_dir, self._content_key())
-        memo = getattr(self, "_covtbl_memo", None)
-        if memo is None:
-            memo = self._covtbl_memo = {}
-        if key in memo:
-            return memo[key]
-        if cache_dir:
-            path = self._cover_dir(cache_dir)
-            try:
-                out = CoverTables.load(spark, path)
-            except (OSError, ValueError):
-                shutil.rmtree(path, ignore_errors=True)
-                CoverTables.from_index(spark, self.idx).save(path)
-                out = CoverTables.load(spark, path)
-        else:
-            out = CoverTables.from_index(spark, self.idx)
-        memo[key] = out
-        return out
-
-    def assign_join(self, spark, images_df, cache_dir: str = None):
-        """assign() with ZERO broadcast of the compiled cover: GPS extract
-        (header-only Arrow crossing) -> quarantine -> cells.assign_points
-        on spatial shards of the index, cogrouped with the points
-        (covertable.assign_images_via_join) -> tzid attach.
-
-        Same output as assign() (pinned in tests/test_covertable.py); use it
-        when the zone set is past the broadcast budget (the 142 MB world
-        index is already 71% of the repo's 200 MB budget — a 10x richer or
-        multi-tenant zone table only works on this path). The tiny
-        (zone_id, tzid) dim still broadcasts — it is O(zones), not O(edges).
-        """
-        from pyspark.sql import functions as F
-
-        from .covertable import assign_images_via_join
+    def _join_plan(self, spark, cache_dir: str):
+        """assign_join's LookupPlan, over the cover_tables handle."""
+        from .covertable import CoverTables, lookup_plan
         from .engine import zone_dim_df
 
-        cov = self.cover_tables(spark, cache_dir)
-        # memoized like cover_tables: building the 24k-row dim frame from
-        # driver-side lists costs a createDataFrame per call otherwise
-        dkey = (spark.sparkContext.applicationId, self._content_key())
-        dmemo = getattr(self, "_dim_memo", None)
-        if dmemo is None:
-            dmemo = self._dim_memo = {}
-        dim = dmemo.get(dkey)
-        if dim is None:
-            dim = dmemo[dkey] = zone_dim_df(spark, self.zones)
-        assigned = assign_images_via_join(images_df, cov)
-        return assigned.join(
-            F.broadcast(dim.select("zone_id", "tzid")), "zone_id", "left"
-        )
+        plans = self._plans(spark)[3]
+        if cache_dir not in plans:
+            if cache_dir:
+                cov = CoverTables(spark, {None: self._index_file(cache_dir, self.idx)[0]})
+            else:
+                cov = CoverTables.from_index(spark, self.idx)
+            plans[cache_dir] = lookup_plan(cov, zone_dim_df(spark, self.zones))
+        return plans[cache_dir]
+
+    def cover_tables(self, spark, cache_dir: str = None):
+        """The compiled cover as an index file (covertable.CoverTables); with
+        ``cache_dir``, the index file TimezoneLookup(cache_dir=...) keeps
+        there (_index_file). Memoized with assign_join's plan."""
+        return self._join_plan(spark, cache_dir).idx_bcast
+
+    def assign_join(self, spark, images_df, cache_dir: str = None):
+        """assign() with ZERO broadcast of the compiled cover: the same
+        LookupPlan, its kernel reading the cover_tables index file that
+        each Python worker maps once (covertable.lookup_plan). Same output
+        as assign() (pinned in tests/test_covertable.py); use it when the
+        zone set is past the broadcast budget (the 142 MB world index is
+        already 71% of the repo's 200 MB budget). The tiny (zone_id, tzid)
+        dim still broadcasts — it is O(zones), not O(edges)."""
+        return self._join_plan(spark, cache_dir).apply(images_df)
 
     def assign_bucketed(self, spark, images_df, table_name: str, n_buckets: int = 32):
         """assign() + persist the result BUCKETED on cell_id (sorted within

@@ -53,10 +53,11 @@ DEFAULT_MAX_RES = 10
 DEFAULT_KNN_RES = 8
 _MATERIALIZE_MAX = 3_000_000  # duplicated edge rows above this -> index form
 
-# Mixed into the cover-cache content key (api._content_key): bump whenever
-# CompiledIndex gains/changes compiled structures so stale cached pickles
-# (e.g. pre-kNN-table, which would silently fall back to the brute path)
-# can never be loaded against newer code.
+# Written into every index file (save_index) and mixed into the cover-cache
+# content key (api._content_key): bump whenever CompiledIndex gains/changes
+# compiled structures, so an index file of an older layout (e.g.
+# pre-kNN-table, which would silently fall back to the brute path) is
+# rejected by open_index and regenerated, never read by newer code.
 INDEX_FORMAT_VERSION = 5  # v5: zone_edge_off spans + b_edge_idx always kept
 
 
@@ -242,6 +243,91 @@ class CompiledIndex:
     knn_off: np.ndarray = None  # ((1<<knn_res)^2 + 1,) int64 CSR
     knn_zidx: np.ndarray = None  # int32 indices into zone_ids/zone_bbox
     stats: dict = field(default_factory=dict)
+
+
+# ---------------------------------------------------------------------------
+# The index file, one flat memory-mappable layout (the reference's mmap
+# store, timezone.go:19-27, read in place as geo/polygon.go:119-144 does):
+#   magic (8 bytes) | header length (uint64 LE) | JSON header | arrays
+# The header holds the scalars, tzids, stats, layout version
+# (INDEX_FORMAT_VERSION), the arrays' total size and, per array, its offset
+# from the first array, dtype and shape. Arrays start on 64-byte boundaries.
+# ---------------------------------------------------------------------------
+
+_INDEX_MAGIC = b"TZSPKIDX"
+_ALIGN = 64
+_SCALARS = ("base_res", "max_res", "knn_res", "tzids", "stats")
+_ARRAY_FIELDS = [k for k, f in CompiledIndex.__dataclass_fields__.items() if f.type == "np.ndarray"]
+
+
+def save_index(idx: CompiledIndex, path: str) -> str:
+    """Write ``idx`` as one index file at ``path``; returns the blake2b
+    digest of the bytes written (the file's content hash)."""
+    import hashlib
+    import json
+
+    arrays = {f"full.{r}.{k}": a for r, v in idx.full.items() for k, a in enumerate(v)}
+    arrays.update((k, getattr(idx, k)) for k in _ARRAY_FIELDS
+                  if getattr(idx, k) is not None)
+    arrays = {k: np.ascontiguousarray(a) for k, a in arrays.items()}
+    table, off = {}, 0
+    for name, a in arrays.items():
+        table[name] = [off, a.dtype.str, list(a.shape)]
+        off += a.nbytes + -a.nbytes % _ALIGN
+    meta = {k: getattr(idx, k) for k in _SCALARS}
+    meta.update(version=INDEX_FORMAT_VERSION, arrays=table, data_bytes=off)
+    head = json.dumps(meta, sort_keys=True).encode()
+    chunks = [_INDEX_MAGIC + np.uint64(len(head)).tobytes() + head
+              + bytes(-(16 + len(head)) % _ALIGN)]
+    for a in arrays.values():
+        chunks += [a.reshape(-1).view(np.uint8), bytes(-a.nbytes % _ALIGN)]
+    h = hashlib.blake2b(digest_size=16)
+    with open(path, "wb") as f:
+        for c in chunks:
+            f.write(c)
+            h.update(c)
+    return h.hexdigest()
+
+
+def open_index(path: str) -> CompiledIndex:
+    """The index file at ``path`` as a CompiledIndex of read-only
+    np.frombuffer views over one np.memmap (nothing is copied or unpickled).
+    Raises ValueError for a truncated file, one of another layout version,
+    or one whose header is malformed or places an array past the end."""
+    import json
+
+    mm = np.memmap(path, dtype=np.uint8, mode="r")
+    if mm.size < 16 or bytes(mm[:8]) != _INDEX_MAGIC:
+        raise ValueError(f"{path}: not an index file")
+    n = int(np.frombuffer(mm, np.uint64, 1, 8)[0])
+    start = 16 + n + -(16 + n) % _ALIGN
+    try:
+        meta = json.loads(bytes(mm[16 : 16 + n]))
+        if meta["version"] != INDEX_FORMAT_VERSION:
+            raise ValueError(f"layout version {meta['version']!r}, expected {INDEX_FORMAT_VERSION}")
+        if mm.size != start + meta["data_bytes"]:
+            raise ValueError(f"{mm.size} bytes, the header gives {start + meta['data_bytes']}")
+        idx = CompiledIndex(**{k: meta[k] for k in _SCALARS}, zone_ids=None, zone_bbox=None)
+        full = {}
+        for name, (off, dt, shape) in meta["arrays"].items():
+            dt = np.dtype(dt)
+            count = int(np.prod(shape, dtype=np.int64))
+            if dt.hasobject or off < 0 or off + count * dt.itemsize > meta["data_bytes"]:
+                raise ValueError(f"array {name!r} runs past the end of the file")
+            a = np.frombuffer(mm, dt, count, start + off).reshape(shape)
+            if name.startswith("full."):
+                _, r, k = name.split(".")
+                full.setdefault(int(r), [None] * 3)[int(k)] = a
+            elif name in _ARRAY_FIELDS:
+                setattr(idx, name, a)
+            else:
+                raise ValueError(f"{name!r} is not an array field")
+        idx.full = {r: tuple(full[r]) for r in sorted(full)}
+        if "interior_cells" in idx.stats:  # JSON keys are strings
+            idx.stats["interior_cells"] = {int(r): c for r, c in idx.stats["interior_cells"].items()}
+    except (KeyError, TypeError, AttributeError, ValueError) as e:
+        raise ValueError(f"{path}: bad index file ({e!r})") from None
+    return idx
 
 
 _ULPS = 4  # float32 slack on cell bounds (see _inflate_arrays)

@@ -1,452 +1,251 @@
 """Cover-as-table lookup: the broadcast-free path.
 
-The default engine broadcasts the whole CompiledIndex to every executor
-(engine.assign_timezones) — right up to the point where the zone set outgrows
-the broadcast budget (142 MB at the synthetic reference operating point;
-real timezone-boundary-builder coastlines are 20k-vertex rings, and a 10x
-richer or multi-tenant zone table breaks it). This module is the other
-physical strategy for the SAME logical operator (SURVEY.md §2.3 J1): the
-compiled cover becomes a table of spatial shards, and the probe is a
-shuffle, not a broadcast. The kernel is the broadcast path's own
-cells.assign_points; only the way the index reaches it differs.
+The default engine broadcasts the whole CompiledIndex
+(engine.assign_timezones) and every Python worker unpickles its own copy,
+which breaks once the zone set outgrows the broadcast budget (142 MB at the
+synthetic reference operating point; a 10x richer or multi-tenant zone
+table). This module is the other physical strategy for the SAME logical
+operator (SURVEY.md §2.3 J1).
 
-A shard is one grid cell at resolution ``shard_res(idx)`` (<= base_res <=
-knn_res), holding the slice of the CompiledIndex inside it:
-
-* its interior cells per resolution and its boundary cells, with each
-  boundary candidate's pruned edge run materialized;
-* the kNN candidate lists (CSR) of its kNN cells;
-* the global zone_ids / zone_bbox — O(zones), so zone indices need no
-  renumbering and the brute-force kNN for clamped out-of-domain points
-  stays exact.
-
-Every interior, boundary and kNN cell has exactly one shard ancestor, and a
-point's cells at every resolution lie in the point's shard, so
-assign_points on the shard reads exactly what it reads on the full index
-(pinned in tests/test_covertable.py). A lookup keys the points by shard and
-runs
-
-    points.groupBy(keys, shard_id, salt)
-          .cogroup(shards.groupBy(keys, shard_id, salt))
-          .applyInArrow(assign_points per group)
-
-then joins the (key, zone_id, via_knn) result back onto the rows. The edges
-cross the exchange once per shard, not once per probe row.
-
-Skew: a cogroup group runs in one task, and AQE cannot split it. One small
-job counts the points per shard; a shard holding more than its share of the
-session's shuffle partitions spreads its points over that many salted groups,
-and only that shard's blob is replicated to each.
+A CoverTables is a handle from keys to index files (cells.save_index): one
+file per zone set, one per tenant after union_tenants, each named by its
+content hash and shipped once per Spark application (SparkContext.addFile).
+Each Python worker maps a file once (cells.open_index, cached per process by
+that hash), so an executor's workers share one copy in the page cache. The
+probes are the broadcast path's own (engine.LookupPlan, lookup_kernel,
+assign_kernel, with_contained_zone) with the handle in place of the
+broadcast; a tenant-keyed cover's kernel splits each Arrow batch on the
+tenant column. Each row is probed in the task that reads it: no shuffle, no
+salt, no join back, and a hot spot stays spread over the input's partitions.
 """
 
 from __future__ import annotations
 
-import pickle
+import atexit
+import json
+import os
+import shutil
+import tempfile
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .cells import (
     CompiledIndex,
-    _ragged_ramp,
-    assign_points,
-    cell_id_col,
-    cell_id_parent,
     cell_rowcol_col,
     explode_rect_cells,
+    open_index,
+    save_index,
 )
-from .engine import _pa_df
-from .geom import F32
-
-SHARD_RES = 4  # shard grid cap: 16 x 16 cells of 11.25 x 22.5 degrees
-# Kept in every blob and in a saved cover's meta.json, and mixed into
-# api.TimezoneLookup's cover cache key: bump it whenever the blob changes.
-SHARD_LAYOUT_VERSION = 1
-
-SHARDS_SCHEMA = T.StructType(
-    [
-        T.StructField("shard_id", T.LongType(), False),
-        T.StructField("blob", T.BinaryType(), False),
-    ]
+from .engine import (
+    ASSIGN_STRUCT,
+    LOOKUP_STRUCT,
+    LookupPlan,
+    assign_kernel,
+    assign_udf,
+    gps_header_col,
+    lookup_kernel,
+    with_contained_zone,
 )
 
-
-def shard_res(idx: CompiledIndex) -> int:
-    """Shard resolution: never finer than base_res or knn_res, so every
-    interior, boundary and kNN cell lies in exactly one shard."""
-    return min(SHARD_RES, idx.base_res, idx.knn_res)
+_OPENED = {}  # index file name (its content hash) -> CompiledIndex, per process
+_SHIPPED = set()  # (application id, file name) already given to addFile
+_SPOOL = []  # this process's directory of from_index files
 
 
-def _knn_block(shard: int, s_res: int, knn_res: int) -> np.ndarray:
-    """Ascending ids of the kNN cells inside ``shard``."""
-    m = 1 << (knn_res - s_res)
-    r0, c0 = (shard >> s_res) * m, (shard & ((1 << s_res) - 1)) * m
-    rows = np.arange(r0, r0 + m, dtype=np.int64)
-    cols = np.arange(c0, c0 + m, dtype=np.int64)
-    return (rows[:, None] * (1 << knn_res) + cols[None, :]).ravel()
+def _opened(path: str) -> CompiledIndex:
+    """The index file ``path`` names, mapped once per process from the copy
+    Spark shipped (SparkFiles: the driver's and every worker's)."""
+    name = os.path.basename(path)
+    idx = _OPENED.get(name)
+    if idx is None:
+        from pyspark import SparkFiles
+
+        idx = _OPENED[name] = open_index(SparkFiles.get(name))
+    return idx
 
 
-def _by_shard(cells: np.ndarray, res: int, s_res: int):
-    """(order, lo, hi): the positions of ``cells`` in shard s are
-    order[lo[s]:hi[s]], ascending (stable sort of sorted cell ids)."""
-    par = cell_id_parent(cells.astype(np.int64), res, s_res)
-    order = np.argsort(par, kind="stable")
-    ids = np.arange(1 << (2 * s_res))
-    return (order, np.searchsorted(par[order], ids, "left"),
-            np.searchsorted(par[order], ids, "right"))
-
-
-def _csr_take(off: np.ndarray, rows: np.ndarray):
-    """(offsets, flat positions) of the CSR rows ``rows``."""
-    cnt = off[rows + 1] - off[rows]
-    sub = np.zeros(len(rows) + 1, np.int64)
-    np.cumsum(cnt, out=sub[1:])
-    return sub, _ragged_ramp(off[rows], cnt)
-
-
-def shard_blobs(idx: CompiledIndex) -> dict:
-    """{shard_id: blob}: the index sliced into shards (no recompile). A blob
-    is a pickled dict of CompiledIndex fields; open_shard inverts it."""
-    s_res = shard_res(idx)
-    full = {r: (v, _by_shard(v[0], r, s_res)) for r, v in idx.full.items()}
-    b_cells = idx.b_cells if idx.b_cells is not None else np.empty(0, np.int64)
-    b_groups = _by_shard(b_cells, idx.max_res, s_res)
-    out = {}
-    for s in range(1 << (2 * s_res)):
-        d = {
-            "v": SHARD_LAYOUT_VERSION, "shard": s, "shard_res": s_res,
-            "base_res": idx.base_res, "max_res": idx.max_res,
-            "knn_res": idx.knn_res, "zone_ids": idx.zone_ids,
-            "zone_bbox": idx.zone_bbox, "full": {},
-        }
-        for r, ((cells, off, zl), (order, lo, hi)) in full.items():
-            rows = order[lo[s]:hi[s]]
-            sub, flat = _csr_take(off, rows)
-            d["full"][r] = (cells[rows], sub, zl[flat])
-        order, lo, hi = b_groups
-        rows = order[lo[s]:hi[s]]
-        d["b_cells"] = b_cells[rows]
-        if len(b_cells):
-            d["b_off"], cand = _csr_take(idx.b_off, rows)
-            d["b_zone"] = idx.b_zone[cand]
-            d["b_edge_off"], e = _csr_take(idx.b_edge_off, cand)
-            if idx.b_ea_lat is None:  # index form: gather the shard's runs
-                e = idx.b_edge_idx[e]
-                src = (idx.ea_lat, idx.ea_lng, idx.eb_lat, idx.eb_lng)
-            else:
-                src = (idx.b_ea_lat, idx.b_ea_lng, idx.b_eb_lat, idx.b_eb_lng)
-            for name, a in zip(("b_ea_lat", "b_ea_lng", "b_eb_lat", "b_eb_lng"), src):
-                d[name] = a[e]
-        d["knn_off"], d["knn_zidx"] = None, None
-        if idx.knn_off is not None:
-            d["knn_off"], flat = _csr_take(
-                idx.knn_off, _knn_block(s, s_res, idx.knn_res)
-            )
-            d["knn_zidx"] = idx.knn_zidx[flat]
-        out[s] = pickle.dumps(d, protocol=pickle.HIGHEST_PROTOCOL)
-    return out
-
-
-def open_shard(blob: bytes) -> CompiledIndex:
-    """A shard blob as a CompiledIndex that cells.assign_points accepts for
-    the points of that shard. Its kNN CSR is re-spread over the global kNN
-    cell numbering (empty outside the shard)."""
-    d = pickle.loads(blob)
-    if d.pop("v") != SHARD_LAYOUT_VERSION:
-        raise ValueError("shard blob of another layout version")
-    shard, s_res = d.pop("shard"), d.pop("shard_res")
-    if d["knn_off"] is not None:
-        k = d["knn_res"]
-        dense = np.zeros((1 << (2 * k)) + 1, np.int64)
-        dense[_knn_block(shard, s_res, k) + 1] = np.diff(d["knn_off"])
-        d["knn_off"] = np.cumsum(dense)
-    return CompiledIndex(tzids=[], **d)
+def _write(idx: CompiledIndex) -> str:
+    """Path of ``idx``'s index file, named by its content hash, in a
+    directory removed when the process exits."""
+    if not _SPOOL:
+        _SPOOL.append(tempfile.mkdtemp(prefix="tzspark-index-"))
+        atexit.register(shutil.rmtree, _SPOOL[0], True)
+    tmp = os.path.join(_SPOOL[0], f".{os.getpid()}.tmp")
+    path = os.path.join(_SPOOL[0], save_index(idx, tmp) + ".tzidx")
+    os.replace(tmp, path)
+    return path
 
 
 class CoverTables:
-    """The compiled cover as ONE table of spatial shards,
-    ``(keys..., shard_id, blob)`` (see the module docstring).
+    """The compiled cover as index files (see the module docstring).
 
-    ``keys`` names extra columns that lead every grouping key (e.g.
-    ('tenant',) after union_tenants): the points carry the same columns,
-    so MANY zone sets resolve in ONE job.
+    ``files`` maps a tenant (a str, or None for a single zone set) to the
+    path of its index file; ``keys`` names the tenant column the points
+    carry: ('tenant',) after union_tenants, () otherwise. ``value`` is the
+    single zone set's index, as Broadcast.value is, so engine.lookup_udf,
+    assign_udf and LookupPlan take the handle in place of a broadcast.
     """
 
-    def __init__(self, shards: DataFrame, base_res: int, max_res: int,
-                 knn_res: int, shard_res: int, keys: tuple = ()):
-        self.shards = shards
-        self.base_res = base_res
-        self.max_res = max_res
-        self.knn_res = knn_res
-        self.shard_res = shard_res
+    def __init__(self, spark: SparkSession, files: dict, keys: tuple = ()):
+        self.files = dict(files)
         self.keys = tuple(keys)
+        first, *_ = map(open_index, self.files.values())  # each must open
+        self.base_res, self.max_res, self.knn_res = first.base_res, first.max_res, first.knn_res
+        # once per (application, file name): Spark rejects a second path
+        # under a file name it already serves
+        sc = spark.sparkContext
+        for path in self.files.values():
+            key = (sc.applicationId, os.path.basename(path))
+            if key not in _SHIPPED:
+                sc.addFile(path)
+                _SHIPPED.add(key)
 
-    def _meta(self) -> dict:
-        return {"layout": SHARD_LAYOUT_VERSION, "base_res": self.base_res,
-                "max_res": self.max_res, "knn_res": self.knn_res,
-                "shard_res": self.shard_res, "keys": list(self.keys)}
+    @property
+    def value(self) -> CompiledIndex:
+        return _opened(self.files[None])
 
     @classmethod
     def from_index(cls, spark: SparkSession, idx: CompiledIndex) -> "CoverTables":
-        import pyarrow as pa
-
-        blobs = shard_blobs(idx)
-        tbl = pa.table({"shard_id": pa.array(list(blobs), pa.int64()),
-                        "blob": pa.array(list(blobs.values()), pa.binary())})
-        return cls(_pa_df(spark, tbl, SHARDS_SCHEMA), idx.base_res, idx.max_res,
-                   idx.knn_res, shard_res(idx))
+        return cls(spark, {None: _write(idx)})
 
     @classmethod
-    def union_tenants(
-        cls, spark: SparkSession, covers: dict
-    ) -> "CoverTables":
-        """Union per-tenant compiled covers into ONE tenant-keyed cover.
-
-        This is the multi-tenant regime that motivates the join path in the
-        first place: N zone sets whose combined size exceeds any broadcast
-        budget become rows of one shared table, and the probe is still a
-        single shuffle-partitioned job — grouping keys (tenant, shard_id).
-        All tenants must share the same resolutions (one compile config).
-        ``covers`` maps tenant id -> CompiledIndex.
-        """
-        parts = {t: cls.from_index(spark, idx) for t, idx in covers.items()}
-        first = next(iter(parts.values()))
-        shards = None
-        for t, ct in parts.items():
-            if ct._meta() != first._meta():
-                raise ValueError(f"tenant {t!r} compiled with different resolutions")
-            d = ct.shards.select(F.lit(t).alias("tenant"), "shard_id", "blob")
-            shards = d if shards is None else shards.unionByName(d)
-        return cls(shards, first.base_res, first.max_res, first.knn_res,
-                   first.shard_res, keys=("tenant",))
+    def union_tenants(cls, spark: SparkSession, covers: dict) -> "CoverTables":
+        """Per-tenant compiled covers as ONE tenant-keyed cover: one index
+        file per tenant, and one probe that splits each batch on the
+        points' tenant column (compared as a string), so N zone sets
+        resolve in one job with no per-tenant broadcast. All tenants must
+        share the same resolutions (one compile config). ``covers`` maps
+        tenant id -> CompiledIndex."""
+        if len({(i.base_res, i.max_res, i.knn_res) for i in covers.values()}) != 1:
+            raise ValueError("tenants compiled with different resolutions")
+        return cls(spark, {str(t): _write(i) for t, i in covers.items()}, ("tenant",))
 
     def save(self, path: str):
-        """Persist as a parquet dir of shard rows plus meta.json, written
-        last. Callers key ``path`` by the zone-content hash and the layout
-        version (api.TimezoneLookup.cover_tables), so a changed zone table
-        can never read a stale cover."""
-        import json
-        import os
-
+        """Persist as a directory of the index files plus meta.json, written
+        last (load reads a dir without it as torn)."""
         os.makedirs(path, exist_ok=True)
-        self.shards.write.mode("overwrite").parquet(f"{path}/shards")
-        with open(f"{path}/meta.json", "w") as f:
-            json.dump(self._meta(), f)
+        for p in self.files.values():
+            shutil.copyfile(p, os.path.join(path, os.path.basename(p)))
+        names = [[t, os.path.basename(p)] for t, p in self.files.items()]
+        with open(os.path.join(path, "meta.json"), "w") as f:
+            json.dump({"keys": list(self.keys), "files": names}, f)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "CoverTables":
-        """Open a saved cover. Raises ValueError for a cover of another
-        layout (a meta.json without this SHARD_LAYOUT_VERSION)."""
-        import json
-
-        with open(f"{path}/meta.json") as f:
+        """Open a saved cover. Raises ValueError when meta.json names no
+        index file or a file fails cells.open_index (truncated, another
+        layout version, arrays past its end)."""
+        with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
-        if meta.get("layout") != SHARD_LAYOUT_VERSION:
-            raise ValueError(
-                f"{path}: cover layout {meta.get('layout')!r}, "
-                f"expected {SHARD_LAYOUT_VERSION}"
-            )
-        return cls(
-            spark.read.parquet(f"{path}/shards"),
-            meta["base_res"], meta["max_res"], meta["knn_res"],
-            meta["shard_res"], keys=tuple(meta["keys"]),
-        )
+        files = {t: os.path.join(path, name) for t, name in meta.get("files", [])}
+        if not files:
+            raise ValueError(f"{path}: no index files")
+        return cls(spark, files, meta.get("keys", ()))
 
 
-def _assign_group(points, shard):
-    """One cogroup: the points of one (keys, shard, salt) group and that
-    shard's blob (no row when no cover exists for the keys)."""
-    import pyarrow as pa
-
-    n = points.num_rows
-    zid, via = np.full(n, -1, np.int32), np.zeros(n, bool)
-    if n and shard.num_rows:
-        lat = np.asarray(points.column("_lat").to_numpy(), F32)  # null -> NaN
-        lng = np.asarray(points.column("_lng").to_numpy(), F32)
-        zid, via = assign_points(open_shard(shard.column("blob")[0].as_py()), lat, lng)
-    return pa.table({"_k": points.column("_k"), "_lat": points.column("_lat"),
-                     "_lng": points.column("_lng"), "zone_id": zid, "via_knn": via})
-
-
-def _salts(pts: DataFrame, keys: list, p: int):
-    """((keys..., shard_id, _n) frame, total groups): each shard's salt
-    count from its point count and the shuffle partitions ``p``. A shard
-    holding a fraction f of the points gets ceil(f * p) salted groups."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    spark = pts.sparkSession
-    rows = pts.groupBy(*keys, "shard_id").count().collect()
-    total = sum(r["count"] for r in rows)
-    live = [(*r[:-1], min(p, -(-r["count"] * p // total)))
-            for r in rows if r["shard_id"] is not None]
-    schema = T.StructType(
-        [pts.schema[k] for k in keys]
-        + [T.StructField("shard_id", T.LongType()), T.StructField("_n", T.IntegerType())]
-    )
-    # a local (Arrow) relation: broadcasting it runs no Spark job
-    tbl = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in live],
-                               schema=to_arrow_schema(schema))
-    return _pa_df(spark, tbl, schema), sum(r[-1] for r in live)
-
-
-def _lookup(pts: DataFrame, cover: CoverTables):
-    """(_k, [keys...], _lat, _lng) -> (_k, _lat, _lng, zone_id, via_knn), one
-    row per input row: cells.assign_points on each point's shard. Null or NaN
-    coordinates get (-1, False), as on the broadcast path.
-
-    Returns (result, cached): ``cached`` is the narrow point frame, persisted
-    because the salt count and the lookup both read it (for the image path
-    it holds the GPS-extract output). Callers that run per micro-batch
-    unpersist it."""
-    from pyspark.storagelevel import StorageLevel
-
-    ks = list(cover.keys)
-    grp = [*ks, "shard_id", "_salt"]
-    cached = pts.withColumn(
-        "shard_id", cell_id_col(F.col("_lat"), F.col("_lng"), cover.shard_res)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    p = int(pts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    salts, n_groups = _salts(cached, ks, p)
-    # a fixed partition count on both sides: AQE coalesces by bytes, and the
-    # narrow points of a salted hot shard are few bytes but many ray casts —
-    # coalescing would fold the salted groups back into one task
-    n_part = max(1, min(p, n_groups))
-    left = (
-        cached.join(F.broadcast(salts), [*ks, "shard_id"], "left")
-        .withColumn("_salt", F.pmod(F.xxhash64("_k"), F.coalesce("_n", F.lit(1))).cast("int"))
-        .select("_k", *grp, "_lat", "_lng")
-        .repartition(n_part, *grp)
-    )
-    # only the shards that hold points ship, a hot one once per salt
-    right = (
-        cover.shards.join(F.broadcast(salts), [*ks, "shard_id"])
-        .select(*ks, "shard_id",
-                F.explode(F.sequence(F.lit(0), F.col("_n") - 1)).alias("_salt"), "blob")
-        .repartition(n_part, *grp)
-    )
-    schema = T.StructType(
-        [cached.schema["_k"], cached.schema["_lat"], cached.schema["_lng"],
-         T.StructField("zone_id", T.IntegerType(), False),
-         T.StructField("via_knn", T.BooleanType(), False)]
-    )
-    res = left.groupBy(*grp).cogroup(right.groupBy(*grp)).applyInArrow(
-        _assign_group, schema
-    )
-    return res, cached
-
-
-def _narrow(points: DataFrame, key_col: str, cover: CoverTables,
-            lat_col: str, lng_col: str) -> DataFrame:
-    return points.select(
-        F.col(key_col).alias("_k"),
-        *[F.col(k).cast(cover.shards.schema[k].dataType) for k in cover.keys],
-        F.col(lat_col).cast("float").alias("_lat"),
-        F.col(lng_col).cast("float").alias("_lng"),
+def _no_zone(res: pa.StructArray) -> pa.StructArray:
+    """``res`` with zone_id -1 and via_knn False on every row."""
+    n = len(res)
+    fill = {"zone_id": pa.array(np.full(n, -1, np.int32)),
+            "via_knn": pa.array(np.zeros(n, bool))}
+    return pa.StructArray.from_arrays(
+        [fill.get(f.name, res.field(f.name)) for f in res.type], fields=list(res.type)
     )
 
 
-def assign_via_join(
-    points: DataFrame,
-    key_col: str,
-    cover: CoverTables,
-    lat_col: str = "lat",
-    lng_col: str = "lng",
-) -> DataFrame:
+def _by_tenant(cover: CoverTables, kernel, tenant: pa.Array, *cols) -> pa.StructArray:
+    """``kernel(index, *cols)`` on each tenant's rows of one Arrow batch,
+    against that tenant's index file; the rows come back in batch order.
+    Rows of a tenant without an index (or of a null tenant) get zone_id -1
+    and via_knn False."""
+    enc = tenant.dictionary_encode()
+    code = enc.indices.fill_null(-1).to_numpy(zero_copy_only=False)
+    names = enc.dictionary.to_pylist()
+    order = np.argsort(code, kind="stable")
+    cut = np.searchsorted(code[order], np.arange(-1, len(names) + 1))
+    parts = []
+    for g in range(-1, len(names)):
+        rows = pa.array(order[cut[g + 1] : cut[g + 2]])
+        path = cover.files.get(names[g]) if g >= 0 else None
+        out = kernel(_opened(path or next(iter(cover.files.values()))),
+                     *(c.take(rows) for c in cols))
+        parts.append(out if path else _no_zone(out))
+    return pa.concat_arrays(parts).take(pa.array(np.argsort(order)))
+
+
+def _tenant_probe(cover: CoverTables, kernel, struct):
+    """``kernel`` split on the tenant column (_by_tenant) as a
+    nondeterministic arrow_udf: a function of the kernel's Columns."""
+
+    @F.arrow_udf(struct)
+    def _probe(tenant: pa.Array, *cols: pa.Array) -> pa.Array:
+        return _by_tenant(cover, kernel, tenant, *cols)
+
+    probe = _probe.asNondeterministic()
+    return lambda *cols: probe(F.col(cover.keys[0]).cast("string"), *cols)
+
+
+def lookup_plan(cover: CoverTables, zone_dim: DataFrame = None) -> LookupPlan:
+    """engine.LookupPlan over the cover's index files: the image lookup of
+    assign_timezones (tzid attached only when ``zone_dim`` is given)."""
+    probe = None
+    if cover.keys:
+        probe = _tenant_probe(cover, lookup_kernel, LOOKUP_STRUCT)(
+            gps_header_col(F.col("bytes")))
+    return LookupPlan(cover, zone_dim, cover.max_res, probe=probe)
+
+
+def _assign_probe(cover: CoverTables):
+    """(lat, lng) Columns -> the ASSIGN_STRUCT probe over the cover's index
+    files. Nondeterministic, like q12's probe, so a filter on its fields is
+    not copied below the projection (one Python crossing)."""
+    if cover.keys:
+        return _tenant_probe(cover, assign_kernel, ASSIGN_STRUCT)
+    return assign_udf(cover).asNondeterministic()
+
+
+def assign_via_join(points: DataFrame, key_col: str, cover: CoverTables,
+                    lat_col: str = "lat", lng_col: str = "lng") -> DataFrame:
     """The full engine assignment (engine.assign_udf semantics) with zero
-    broadcast of the cover: adds zone_id + via_knn to ``points``. A point no
-    zone contains gets its kNN zone (via_knn True); a null or NaN coordinate
-    gets (-1, False). ``key_col`` must be unique and non-null per row: the
-    result joins back on it. ``cover.keys`` columns (e.g. tenant) must be
-    present in ``points``."""
-    res, _ = _lookup(_narrow(points, key_col, cover, lat_col, lng_col), cover)
-    return points.join(
-        res.select("_k", "zone_id", "via_knn"), F.col(key_col) == F.col("_k")
-    ).drop("_k")
+    broadcast of the cover: adds zone_id + via_knn to ``points``, one row
+    per input row. A point no zone contains gets its kNN zone (via_knn
+    True); a null or NaN coordinate gets (-1, False). A tenant-keyed
+    cover's ``keys`` column (tenant) must be present in ``points``.
+    ``key_col`` is not read: nothing joins back on it, so any key (repeated
+    or null) is fine."""
+    a = points.withColumn("_a", _assign_probe(cover)(F.col(lat_col), F.col(lng_col)))
+    return a.select(*points.columns, "_a.zone_id", "_a.via_knn")
 
 
-def resolve_via_join(
-    points: DataFrame,
-    key_col: str,
-    cover: CoverTables,
-    lat_col: str = "lat",
-    lng_col: str = "lng",
-) -> DataFrame:
+def resolve_via_join(points: DataFrame, key_col: str, cover: CoverTables,
+                     lat_col: str = "lat", lng_col: str = "lng") -> DataFrame:
     """assign_via_join without the kNN answers: adds zone_id, the argmin
     containing zone (cells.resolve_points semantics), -1 when none."""
-    return assign_via_join(points, key_col, cover, lat_col, lng_col).withColumn(
-        "zone_id", F.when(F.col("via_knn"), F.lit(-1)).otherwise(F.col("zone_id"))
-    ).drop("via_knn")
+    return with_contained_zone(points, _assign_probe(cover), lat_col, lng_col)
 
 
-def knn_via_join(
-    points: DataFrame,
-    key_col: str,
-    cover: CoverTables,
-    lat_col: str = "lat",
-    lng_col: str = "lng",
-) -> DataFrame:
+def knn_via_join(points: DataFrame, key_col: str, cover: CoverTables,
+                 lat_col: str = "lat", lng_col: str = "lng") -> DataFrame:
     """The kNN answers of assign_via_join (cells.knn_fallback semantics):
     the rows no zone contains, with their nearest zone as zone_id. Rows a
     zone contains and rows with no answer (null/NaN coordinates) drop out."""
-    return assign_via_join(points, key_col, cover, lat_col, lng_col).where(
-        F.col("via_knn")
-    ).drop("via_knn")
+    a = assign_via_join(points, key_col, cover, lat_col, lng_col)
+    return a.where(F.col("via_knn")).drop("via_knn")
 
 
-def _assign_images(images: DataFrame, cover: CoverTables, key_col: str):
-    """assign_images_via_join plus its cached narrow frame (see _lookup)."""
-    from .engine import extract_gps_udf, gps_header_col
-
-    ks = list(cover.keys)
-    # Only the key [+ tenant keys] and the 17-byte header prefix enter
-    # Python for the extract. asNondeterministic: the quarantine filter
-    # references the UDF's struct fields, and Catalyst otherwise
-    # re-instantiates the UDF below the pushed filter (two stacked
-    # ArrowEvalPython nodes; engine.lookup_udf does the same). The function
-    # itself is pure.
-    g = images.select(
-        F.col(key_col).alias("_k"),
-        *ks,
-        extract_gps_udf().asNondeterministic()(
-            gps_header_col(F.col("bytes"))
-        ).alias("g"),
-    )
-    ok = g.where(
-        F.col("g.gps_ok")
-        & F.col("g.lat").between(-90.0, 90.0)
-        & F.col("g.lng").between(-180.0, 180.0)
-    )
-    res, cached = _lookup(_narrow(ok, "_k", cover, "g.lat", "g.lng"), cover)
-    # the heavy side is the RAW image table (no Python stage, scan pruned to
-    # the consumer's columns); lat/lng come back from the lookup result
-    out = images.join(res, F.col(key_col) == F.col("_k")).select(
-        *images.columns,
-        F.col("_lat").alias("lat"),
-        F.col("_lng").alias("lng"),
-        F.lit(False).alias("quarantined"),
-        cell_id_col(F.col("_lat"), F.col("_lng"), cover.max_res).alias("cell_id"),
-        "via_knn",
-        "zone_id",
-    )
-    return out, cached
-
-
-def assign_images_via_join(
-    images: DataFrame,
-    cover: CoverTables,
-    key_col: str = "image_id",
-) -> DataFrame:
-    """The image-table front half + the join assignment: GPS extract (header
-    bytes only cross into Python), quarantine (bad blob OR out-of-domain
-    coords), then the shard lookup. Mirrors engine.assign_timezones' row
-    semantics with zero broadcast of the cover; used by
-    api.TimezoneLookup.assign_join (batch) and streaming.stream_assign_join
-    (per micro-batch). Building the frame runs one small job (the per-shard
-    point count that sets the salts)."""
-    return _assign_images(images, cover, key_col)[0]
+def assign_images_via_join(images: DataFrame, cover: CoverTables,
+                           key_col: str = "image_id") -> DataFrame:
+    """engine.assign_timezones' rows and columns without tzid, with zero
+    broadcast of the cover: GPS extract, quarantine (bad blob OR
+    out-of-domain coords) and the lookup in one Arrow crossing over the
+    header prefix (lookup_plan). A tenant-keyed cover needs the tenant
+    column in ``images``. Used by api.TimezoneLookup.assign_join (with the
+    tzid attach) and streaming.stream_assign_join. ``key_col`` is not
+    read."""
+    return lookup_plan(cover).apply(images)
 
 
 # ---------------------------------------------------------------------------

@@ -21,7 +21,9 @@ Scale notes (the 100 TB design, tested at local[*]):
   encode, cover probe and kNN fallback are all per-row/narrow; tzid attach is
   a broadcast join; so the join scales linearly with executors,
 * the compiled cover is broadcast once per job (tens of MB for the real
-  timezone set — same order as the reference's ~50 MB mmap db),
+  timezone set — same order as the reference's ~50 MB mmap db); past that
+  budget the same LookupPlan probes an index file each Python worker maps
+  once (covertable, cells.open_index), still with no shuffle,
 * resolve + kNN run in ONE pass inside the UDF (no second scan, no cache of
   the matched/unmatched split); `via_knn` is emitted so downstream can audit,
 * skewed tiles (dense urban cells) are handled at aggregation time by salted
@@ -61,6 +63,15 @@ from .cells import (
 from .imagecodec import parse_headers
 
 
+def default_driver_memory() -> str:
+    """Half of this host's physical memory, capped at 32g: a fixed 32g heap
+    on a 16 GB host let the JVM grow until the kernel killed it."""
+    import os
+
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2, 32 << 30) >> 20}m"
+
+
 def get_spark(
     app: str = "tzspark",
     master: str = None,
@@ -93,7 +104,8 @@ def get_spark(
         # outliers; 4000 rows (~5 MB) removed them (tile 8M rows: 20-56 s
         # noisy -> 9-12 s stable) with no measurable cost on thin columns
         "spark.sql.execution.arrow.maxRecordsPerBatch": "4000",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or default_driver_memory(),
     }
     conf.update(extra_conf or {})
     for k, v in conf.items():
@@ -134,13 +146,6 @@ def _zone_meta_arrays(zones: list):
     return zs, ids, tz, bbox
 
 
-def _pa_df(spark, table, schema):
-    try:
-        return spark.createDataFrame(table, schema=schema)
-    except Exception:  # older session API: go through pandas
-        return spark.createDataFrame(table.to_pandas(), schema=schema)
-
-
 def zone_dim_df(spark: SparkSession, zones: list) -> DataFrame:
     """Small zone dimension (id, tzid, MBR) — always broadcast-joined.
     Arrow-built (round 6): the old row-tuple createDataFrame pickled every
@@ -156,7 +161,7 @@ def zone_dim_df(spark: SparkSession, zones: list) -> DataFrame:
             "max_lng": bbox[:, 3],
         }
     )
-    return _pa_df(spark, t, ZONE_DIM_SCHEMA)
+    return spark.createDataFrame(t, schema=ZONE_DIM_SCHEMA)
 
 
 def zone_table_df(spark: SparkSession, zones: list) -> DataFrame:
@@ -197,7 +202,7 @@ def zone_table_df(spark: SparkSession, zones: list) -> DataFrame:
             "lngs": lngs,
         }
     )
-    return _pa_df(spark, t, ZONE_TABLE_SCHEMA)
+    return spark.createDataFrame(t, schema=ZONE_TABLE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -358,13 +363,14 @@ def assign_udf(idx_bcast):
     return _assign
 
 
-def with_contained_zone(points: DataFrame, probe) -> DataFrame:
-    """``points`` + zone_id: the zone containing its (lat, lng) by the
-    assign_udf ``probe``, -1 where none (cells.resolve_points semantics:
+def with_contained_zone(points: DataFrame, probe, lat_col: str = "lat",
+                        lng_col: str = "lng") -> DataFrame:
+    """``points`` + zone_id: the zone containing its (lat_col, lng_col) by
+    the assign_udf ``probe``, -1 where none (cells.resolve_points semantics:
     the kNN answers are masked). The probe's struct is projected first and
     zone_id read from it in the next projection, so each row crosses into
     Python once."""
-    a = points.withColumn("_a", probe(F.col("lat"), F.col("lng")))
+    a = points.withColumn("_a", probe(F.col(lat_col), F.col(lng_col)))
     return a.withColumn(
         "zone_id", F.when(F.col("_a.via_knn"), F.lit(-1)).otherwise(F.col("_a.zone_id"))
     ).drop("_a")
@@ -382,8 +388,11 @@ def broadcast_cover(spark: SparkSession, zones: list, base_res=4, max_res=DEFAUL
 
 
 class LookupPlan:
-    """The broadcast lookup as Columns, built once per (broadcast index,
-    zone dim, max_res) and applied to any number of image DataFrames.
+    """The image lookup as Columns, built once per (index, zone dim,
+    max_res) and applied to any number of image DataFrames. ``idx_bcast``
+    is a broadcast or another handle whose ``value`` is the index
+    (covertable.CoverTables); ``probe`` replaces the lookup_udf Column (a
+    LOOKUP_STRUCT); without ``zone_dim`` no tzid is attached.
 
     Every ``F.*`` call is a py4j round trip (PySpark 4 also captures its
     call site): building these Columns takes ~500 round trips, more driver
@@ -393,10 +402,13 @@ class LookupPlan:
     call, so one plan's outputs can meet in one query (a union, a
     self-join)."""
 
-    def __init__(self, idx_bcast, zone_dim: DataFrame, max_res: int = DEFAULT_MAX_RES):
+    def __init__(self, idx_bcast, zone_dim: DataFrame, max_res: int = DEFAULT_MAX_RES,
+                 probe=None):
         self.idx_bcast = idx_bcast
         self._all = F.col("*")
-        self._probe = lookup_udf(idx_bcast)(gps_header_col(F.col("bytes"))).alias("a")
+        if probe is None:
+            probe = lookup_udf(idx_bcast)(gps_header_col(F.col("bytes")))
+        self._probe = probe.alias("a")
         self._ok = F.col("a.gps_ok")
         lat, lng = F.col("a.lat"), F.col("a.lng")
         self._outputs = [
@@ -407,17 +419,17 @@ class LookupPlan:
             F.col("a.via_knn").alias("via_knn"),
             cell_id_col(lat, lng, max_res).alias("cell_id"),
         ]
-        self._dim = F.broadcast(zone_dim.select("zone_id", "tzid"))
+        self._dim = None if zone_dim is None else F.broadcast(zone_dim.select("zone_id", "tzid"))
 
     def apply(self, images: DataFrame) -> DataFrame:
         """assign_timezones' output over ``images``: probe, keep the gps_ok
         rows, project, attach tzid."""
-        return (
+        out = (
             images.select(self._all, self._probe)
             .where(self._ok)
             .select(*images.columns, *self._outputs)
-            .join(self._dim, "zone_id", "left")
         )
+        return out if self._dim is None else out.join(self._dim, "zone_id", "left")
 
 
 def assign_timezones(

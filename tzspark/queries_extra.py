@@ -319,8 +319,8 @@ def q41_full_engine_boxes(spark, sf_dir):
 
 def q42_full_engine_boxes_join(spark, sf_dir):
     """q41's pipeline on the BROADCAST-FREE physical strategy: the facade's
-    assign_join (GPS extract -> quarantine -> cover-as-table cell-id
-    equi-joins -> kNN join -> tzid attach) must produce the exact same
+    assign_join (GPS extract -> quarantine -> resolve/kNN against the
+    mapped index file -> tzid attach) must produce the exact same
     per-image rows — same composed DuckDB oracle as q41, so both physical
     strategies of the lookup are value-pinned end to end."""
     from .api import TimezoneLookup

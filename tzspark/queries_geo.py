@@ -442,10 +442,11 @@ SELECT event_id, CAST(zone_id AS INTEGER) AS zone_id FROM d WHERE rn = 1
 def q39_resolve_join(spark, sf_dir):
     """J1, broadcast-free physical strategy: the SAME resolve semantics as
     q11 (compiled cover, argmin zone_id, float32 half-open PIP) executed on
-    the cover-as-table form (covertable.py): the points cogroup with the
-    spatial shards of the index and cells.assign_points runs per shard.
-    Same oracle as q10/q11; nothing index-sized is broadcast, so the path
-    survives zone tables 10x past the driver's broadcast budget."""
+    the cover-as-table form (covertable.py): q11's assign probe with its kNN
+    answers masked, reading the index from a file each Python worker maps
+    once instead of a broadcast. Same oracle as q10/q11; nothing
+    index-sized is broadcast, so the path survives zone tables 10x past the
+    driver's broadcast budget."""
     from .covertable import CoverTables, resolve_via_join
 
     zones = box_zones(spark, sf_dir)
@@ -457,8 +458,8 @@ def q39_resolve_join(spark, sf_dir):
 
 def q40_knn_join(spark, sf_dir):
     """J2, broadcast-free: the points no box contains -> nearest zone, the
-    kNN answers of the same shard lookup as q39 (covertable.knn_via_join).
-    Same oracle as q12."""
+    kNN answers of the same index-file probe as q39
+    (covertable.knn_via_join). Same oracle as q12."""
     from .covertable import CoverTables, knn_via_join
 
     zones = box_zones(spark, sf_dir)
@@ -642,9 +643,10 @@ def q52_multi_tenant_resolve(spark, sf_dir):
     """Multi-tenant lookup — the regime that MOTIVATES the join path: two
     zone sets (tenant 'a' = the nation boxes, tenant 'b' = the same boxes
     shifted +6 lat / +10 lng, all float32-exact) unioned into ONE
-    tenant-keyed cover (CoverTables.union_tenants) and resolved for a mixed
-    point stream in a single job — the points cogroup with the shards on
-    (tenant, shard_id), so N tenants cost one shuffle, not N broadcasts.
+    tenant-keyed cover (CoverTables.union_tenants: one index file per
+    tenant) and resolved for a mixed point stream in a single job — one
+    probe splits each Arrow batch on the tenant column, so N tenants cost
+    no shuffle and no broadcast.
     Oracle: per-tenant rectangle containment argmin + clamp-distance kNN
     over the tenant-unioned box table."""
     from .covertable import CoverTables, assign_via_join

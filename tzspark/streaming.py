@@ -1,15 +1,18 @@
 """Structured Streaming front-end for the lookup engine.
 
 The reference is strictly batch (no streaming anywhere — SURVEY.md §2.6);
-this is an engine extension: the same broadcast compiled-cover UDFs run
-unchanged inside a streaming query, because the lookup path is stateless
-per-row (no shuffle, no state store). Late data only matters for the
-windowed tile aggregation, handled with a watermark.
+this is an engine extension: the same compiled-cover UDFs run unchanged
+inside a streaming query, over a broadcast or over a mapped index file,
+because the lookup path is stateless per-row (no shuffle, no state store).
+Late data only matters for the windowed tile aggregation, handled with a
+watermark.
 
 Patterns provided:
 * ``stream_assign``       — readStream -> GPS extract -> resolve/kNN -> tzid
                             (stateless; any sink, exactly-once with
                             checkpointLocation)
+* ``stream_assign_join``  — the same lookup over a mapped index file instead
+                            of a broadcast (covertable), into a parquet sink
 * ``stream_tile_counts``  — event-time windowed per-tile counts with a
                             watermark for late rows
 * ``run_available_now``   — drain-everything-then-stop runner (used by tests
@@ -54,38 +57,16 @@ def stream_assign_join(
     key_col: str = "image_id",
 ):
     """The BROADCAST-FREE lookup (covertable.assign_images_via_join) on a
-    stream.
-
-    The lookup cogroups each point's spatial shard of the index with the
-    points and needs a per-shard point count first, so it is not a
-    streaming operator; but per micro-batch every key is complete, so the
-    idiomatic form is foreachBatch: each trigger's batch runs the exact
-    BATCH pipeline (same code, same semantics, pinned in
-    tests/test_streaming.py) and appends to the sink. checkpointLocation
-    gives exactly-once across restarts; foreachBatch requires the writer
-    itself to be idempotent, so the writer partitions by batch_id and
-    overwrites that partition.
-
-    Returns the started StreamingQuery (AvailableNow trigger — drain + stop).
-    """
-    from .covertable import _assign_images
-
-    def _process(batch_df: DataFrame, batch_id: int):
-        out, cached = _assign_images(batch_df, cover, key_col)
-        try:
-            # idempotent replay: a re-delivered batch replaces its own partition
-            out.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "_batch_id"
-            ).parquet(out_path)
-        finally:
-            # the batch's narrow points were cached for the lookup; drop
-            # them so caches do not pile up across triggers
-            cached.unpersist()
+    stream, into a parquet file sink at ``out_path``: a plain stateless
+    query (the batch plan, pinned in tests/test_streaming.py), exactly-once
+    through checkpointLocation and the sink's metadata log. Returns the
+    stopped StreamingQuery (AvailableNow trigger — drain + stop)."""
+    from .covertable import assign_images_via_join
 
     q = (
-        images_stream.writeStream.foreachBatch(_process)
+        assign_images_via_join(images_stream, cover, key_col)
+        .writeStream.format("parquet")
+        .option("path", out_path)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
