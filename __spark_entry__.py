@@ -44,21 +44,23 @@ from pyspark.sql import functions as F  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: synthesize the image+caption
     table from `events` (EXIF-style GPS in the blob), then run the full
-    engine — vectorized GPS extract -> cell encode -> broadcast compiled-
-    cover PIP resolve -> kNN fallback -> tzid attach (broadcast hash join) ->
-    per-zone rollup."""
+    engine — vectorized GPS extract -> cell encode -> compiled-cover PIP
+    resolve over the mapped index file -> kNN fallback -> tzid attach
+    (broadcast hash join) -> per-zone rollup."""
+    from tzspark.cells import compile_cover
+    from tzspark.covertable import CoverTables
     from tzspark.datasets import images_from_events
-    from tzspark.engine import assign_timezones, broadcast_cover, zone_dim_df
+    from tzspark.engine import assign_timezones, zone_dim_df
     from tzspark.shipping import ensure_shipped
     from tzspark.zones import make_zones
 
     ensure_shipped(spark)  # --py-files equivalent for pre-created sessions
     sf_dir = "/root/testdata/sf0.001"
     zones = make_zones(n_coast=8000)
-    idx_b, _stats = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
     imgs = images_from_events(spark, sf_dir)
-    assigned = assign_timezones(imgs, idx_b, dim)
+    assigned = assign_timezones(imgs, cov, dim)
     return (
         assigned.groupBy("zone_id", "tzid")
         .agg(

@@ -127,16 +127,24 @@ def ensure_pq(spark):
     return path, np.load(cb), probes
 
 
+def shipped_cover(spark, zones):
+    """``zones``' compiled cover (default resolutions) as a shipped index
+    file (covertable.CoverTables), the handle every lookup kernel takes."""
+    from tzspark.cells import compile_cover
+    from tzspark.covertable import CoverTables
+
+    return CoverTables.from_index(spark, compile_cover(zones))
+
+
 def run_pipeline(spark, images):
-    """The flagship lookup: extract -> cell encode -> broadcast cover probe
-    (resolve + kNN one pass) -> tzid broadcast join -> per-zone rollup."""
-    from tzspark.engine import assign_timezones, broadcast_cover, zone_dim_df
+    """The flagship lookup: extract -> cell encode -> cover probe (resolve +
+    kNN one pass) -> tzid broadcast join -> per-zone rollup."""
+    from tzspark.engine import assign_timezones, zone_dim_df
     from tzspark.zones import make_zones
 
     zones = make_zones(n_coast=20000)
-    idx_b, _ = broadcast_cover(spark, zones)
     dim = zone_dim_df(spark, zones)
-    assigned = assign_timezones(images, idx_b, dim)
+    assigned = assign_timezones(images, shipped_cover(spark, zones), dim)
     from pyspark.sql import functions as F
 
     return assigned.groupBy("zone_id", "tzid").agg(
@@ -151,7 +159,6 @@ def headline_queries(spark, images):
 
     from tzspark.engine import (
         assign_timezones,
-        broadcast_cover,
         salted_tile_counts,
         tile_rollup_fused,
         zone_dim_df,
@@ -165,7 +172,7 @@ def headline_queries(spark, images):
     from tzspark.zones import make_world_zones, make_zones
 
     zones = make_zones(n_coast=20000)
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = shipped_cover(spark, zones)
     dim = zone_dim_df(spark, zones)
 
     # reference-operating-point zone set (1,200 tzids / 24k polygons / 4.8M
@@ -177,40 +184,37 @@ def headline_queries(spark, images):
     tl_world = TimezoneLookup(
         make_world_zones(), cache_dir=os.path.join(CACHE, "covers")
     )
-    idx_bw = spark.sparkContext.broadcast(tl_world.idx)
+    # the index file the facade keeps in its cache_dir, shipped once: the
+    # world rows below all probe it (lookup_world_zones keeps its name from
+    # when it broadcast the pickled index)
+    cov_w = tl_world.cover_tables(spark)
     dim_w = zone_dim_df(spark, tl_world.zones)
 
     def _assigned():
-        return assign_timezones(images, idx_b, dim)
+        return assign_timezones(images, cov, dim)
 
     def _world_lookup():
         from pyspark.sql import functions as F
 
-        return assign_timezones(images, idx_bw, dim_w).groupBy("tzid").agg(
+        return assign_timezones(images, cov_w, dim_w).groupBy("tzid").agg(
             F.count("*").alias("n_images"),
             F.sum(F.col("via_knn").cast("long")).alias("n_via_knn"),
         )
 
-    # the broadcast-FREE path at the same reference operating point: the
-    # cover persisted as one index file (one-off, content-hash cached),
-    # mapped by each Python worker and probed where the rows are by the
-    # broadcast path's own kernels — the apples-to-apples row against
-    # lookup_world_zones for the zone-sets-past-the-broadcast-budget regime
+    # the same lookup through the facade's memoized plan (assign_join ==
+    # assign): against lookup_world_zones it isolates the per-call plan build
     def _world_lookup_join():
         from pyspark.sql import functions as F
 
-        return tl_world.assign_join(
-            spark, images, cache_dir=os.path.join(CACHE, "covers")
-        ).groupBy("tzid").agg(
+        return tl_world.assign_join(spark, images).groupBy("tzid").agg(
             F.count("*").alias("n_images"),
             F.sum(F.col("via_knn").cast("long")).alias("n_via_knn"),
         )
 
     # MULTI-TENANT at world scale: two world-size zone sets as one
     # tenant-keyed cover (covertable.union_tenants, one index file each),
-    # resolved for a mixed image stream in a single job — the regime where
-    # per-tenant broadcasts are impossible by construction (2x the world
-    # cover could never broadcast). The tenant cover is saved and read back
+    # resolved for a mixed image stream in a single job, one probe that
+    # splits each batch on the tenant column. The tenant cover is saved and read back
     # (CoverTables.save/load); the thunks time the lookup + rollup.
     from tzspark.covertable import CoverTables, assign_images_via_join
 
@@ -225,10 +229,8 @@ def headline_queries(spark, images):
     # against world_lookup_join it isolates the dim join + tzid rollup. The
     # row keeps its name from a retired cover layout, so earlier BENCH
     # artifacts stay comparable by name.
-    cov_wb = tl_world.cover_tables(spark, os.path.join(CACHE, "covers"))
-
     def _world_lookup_join_bucketed():
-        return assign_images_via_join(images, cov_wb).groupBy("zone_id").agg(
+        return assign_images_via_join(images, cov_w).groupBy("zone_id").agg(
             F.count("*").alias("n_images")
         )
 
@@ -538,7 +540,7 @@ def headline_queries(spark, images):
         "world_lookup_join": _world_lookup_join,
         "world_lookup_join_bucketed": _world_lookup_join_bucketed,
         "multi_tenant_world": _multi_tenant,
-        "onepass_lookup_tile": lambda: lookup_tile_onepass(images, idx_b),
+        "onepass_lookup_tile": lambda: lookup_tile_onepass(images, cov),
         "tile_rollup": lambda: tile_rollup_fused(images),
         "salted_tile_counts": lambda: salted_tile_counts(_assigned()),
         "resolve_cover_events": lambda: q11_resolve_cover(spark, SF_DIR),
@@ -602,7 +604,7 @@ def bench_main():
     ensure_images(spark)
     images = spark.read.parquet(images_path())
 
-    # warm-up: spawn python workers, distribute broadcasts, JIT codegen —
+    # warm-up: spawn python workers, map the index files, JIT codegen —
     # steady-state timings are what a long-running cluster job sees.
     # Measured: a fresh JVM needs ~4 executions of EACH Python-exchange
     # codepath (ArrowEvalPython vs PythonMapInArrow JIT independently:
@@ -727,17 +729,16 @@ JOIN_ROWS = int(os.environ.get("SPARK_GRAFT_JOIN_ROWS", "16000000"))
 
 
 def compute_job_df(spark, n_rows: int, n_parts: int = 256):
-    """CPU-bound core operator: the broadcast PIP lookup join over
+    """CPU-bound core operator: the PIP lookup join over
     coordinates derived by pure column arithmetic from spark.range — zero
     disk I/O, so single-box scaling reflects the operator, not the shared
     memory bus (on a real cluster, scan bandwidth scales with executors)."""
     from pyspark.sql import functions as F
 
-    from tzspark.engine import assign_udf, broadcast_cover
+    from tzspark.engine import assign_udf
     from tzspark.zones import make_zones
 
-    zones = make_zones(n_coast=20000)
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = shipped_cover(spark, make_zones(n_coast=20000))
     pts = spark.range(0, n_rows, 1, n_parts).select(
         ((F.pmod(F.col("id") * 7919, F.lit(50000)) / 1000.0) - 6.0)
         .cast("float")
@@ -746,7 +747,7 @@ def compute_job_df(spark, n_rows: int, n_parts: int = 256):
         .cast("float")
         .alias("lng"),
     )
-    a = pts.select(assign_udf(idx_b)(F.col("lat"), F.col("lng")).alias("a"))
+    a = pts.select(assign_udf(cov)(F.col("lat"), F.col("lng")).alias("a"))
     return a.groupBy("a.zone_id").count()
 
 
@@ -822,10 +823,10 @@ def kernel_scaling():
 
 def _world_job(spark, cpus: int):
     """The lookup join against the REFERENCE-SCALE zone index
-    (make_world_zones: 1,200 tzids / 24k polygons / 4.8M vertices, ~142 MB
-    broadcast) — the N-vs-4N row where the big broadcast is part of the
-    measured job (materialized to every python worker during warmup,
-    exactly like a long-running cluster job's first task wave)."""
+    (make_world_zones: 1,200 tzids / 24k polygons / 4.8M vertices, a ~142 MB
+    index file) — the N-vs-4N row where shipping the big index is part of
+    the measured job (fetched and mapped by every python worker during
+    warmup, exactly like a long-running cluster job's first task wave)."""
     from pyspark.sql import functions as F
 
     from tzspark.api import TimezoneLookup
@@ -833,7 +834,7 @@ def _world_job(spark, cpus: int):
     from tzspark.zones import make_world_zones
 
     tl = TimezoneLookup(make_world_zones(), cache_dir=os.path.join(CACHE, "covers"))
-    idx_b = spark.sparkContext.broadcast(tl.idx)
+    cov = tl.cover_tables(spark)
     n_rows = WORLD_ROWS
     pts = spark.range(0, n_rows, 1, max(n_rows // 500_000, cpus)).select(
         ((F.pmod(F.col("id") * 7919, F.lit(120000)) / 1000.0) - 60.0)
@@ -841,18 +842,18 @@ def _world_job(spark, cpus: int):
         ((F.pmod(F.col("id") * 104729, F.lit(360000)) / 1000.0) - 180.0)
         .cast("float").alias("lng"),
     )
-    df = pts.select(assign_udf(idx_b)(F.col("lat"), F.col("lng")).alias("a")).groupBy(
+    df = pts.select(assign_udf(cov)(F.col("lat"), F.col("lng")).alias("a")).groupBy(
         "a.zone_id"
     ).count()
     return lambda: materialize(df)
 
 
 def _join_job(spark, cpus: int):
-    """The BROADCAST-FREE lookup (covertable assign_via_join) against the
-    reference-scale cover persisted as one index file — the flagship path
-    for zone sets past the broadcast budget. Like the broadcast rows it
+    """The lookup through covertable.assign_via_join against the
+    reference-scale cover persisted as one index file: lookup_world_index's
+    probe, nondeterministic and with the point columns carried through. It
     probes the points where they are (no shuffle); each Python worker maps
-    the file instead of unpickling a broadcast copy."""
+    the file once."""
     from pyspark.sql import functions as F
 
     from tzspark.api import TimezoneLookup
@@ -860,7 +861,7 @@ def _join_job(spark, cpus: int):
     from tzspark.zones import make_world_zones
 
     tl = TimezoneLookup(make_world_zones(), cache_dir=os.path.join(CACHE, "covers"))
-    cov = tl.cover_tables(spark, cache_dir=os.path.join(CACHE, "covers"))
+    cov = tl.cover_tables(spark)
     n_rows = JOIN_ROWS
     pts = spark.range(0, n_rows, 1, max(n_rows // 250_000, cpus)).select(
         F.col("id").alias("k"),
@@ -869,7 +870,7 @@ def _join_job(spark, cpus: int):
         ((F.pmod(F.col("id") * 104729, F.lit(360000)) / 1000.0) - 180.0)
         .cast("float").alias("lng"),
     )
-    df = assign_via_join(pts, "k", cov).groupBy("zone_id").count()
+    df = assign_via_join(pts, cov).groupBy("zone_id").count()
     return lambda: materialize(df)
 
 
@@ -880,15 +881,15 @@ def _pipeline_job(spark, cpus: int):
     transfer, one shuffle of tiny partials. The outputs equal the old
     two-job form (pytest-pinned); the single pass halves the shared
     scan/transfer traffic that binds a one-box N-vs-4N comparison."""
-    from tzspark.engine import broadcast_cover, lookup_tile_onepass
+    from tzspark.engine import lookup_tile_onepass
     from tzspark.zones import make_zones
 
     global N_ROWS
     N_ROWS = SCALING_ROWS
     ensure_images(spark)
     images = spark.read.parquet(images_path())
-    idx_b, _ = broadcast_cover(spark, make_zones(n_coast=20000))
-    return lambda: materialize(lookup_tile_onepass(images, idx_b))
+    cov = shipped_cover(spark, make_zones(n_coast=20000))
+    return lambda: materialize(lookup_tile_onepass(images, cov))
 
 
 # --scaling mode -> (rows, job builder, 64k-row Arrow batches). The

@@ -30,9 +30,10 @@ os.environ.setdefault("PYTHONPATH", "/root/repo")
 
 from pyspark.sql import functions as F
 
+from tzspark.cells import compile_cover
+from tzspark.covertable import CoverTables
 from tzspark.engine import (
     assign_timezones,
-    broadcast_cover,
     get_spark,
     quarantined_rows,
     tile_rollup_fused,
@@ -75,14 +76,14 @@ def main():
         images_df(spark, 2000, partitions=4).write.mode("overwrite").parquet(tmp)
     images = spark.read.parquet(tmp)
     zones = make_zones(n_coast=2000)
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
 
     sections = []
     failures = []
 
     # 2. column pruning through the UDF projections
-    gps_only = assign_timezones(images, idx_b, dim).select("zone_id")
+    gps_only = assign_timezones(images, cov, dim).select("zone_id")
     p2 = plan_of(gps_only)
     sections.append(("zone_id-only projection (column pruning)", p2))
     m = re.search(r"ReadSchema: struct<([^>]*)>", p2)
@@ -118,7 +119,7 @@ def main():
     # bytes-only ReadSchema (payload crosses once, partials shuffle)
     from tzspark.engine import lookup_tile_onepass
 
-    p5 = plan_of(lookup_tile_onepass(images, idx_b))
+    p5 = plan_of(lookup_tile_onepass(images, cov))
     sections.append(("one-pass lookup + tile (mapInArrow fusion)", p5))
     if "MapInArrow" not in p5:
         failures.append("onepass: MapInArrow stage missing")
@@ -878,12 +879,12 @@ def probe_plan_checks(spark, images, sf_small):
     )
 
     zones = box_zones(spark, sf_small)
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
     sections, failures = [], []
 
     # 1. lookup pipeline + rollup
-    p1 = plan_of(zone_rollup(assign_timezones(images, idx_b, dim)))
+    p1 = plan_of(zone_rollup(assign_timezones(images, cov, dim)))
     sections.append(("lookup pipeline -> per-zone rollup", p1))
     failures += lookup_plan_failures("lookup", p1)
 
@@ -1018,12 +1019,7 @@ def join_path_checks(spark, images, sf_small):
     Every join-path lookup has join_shape_failures' shape: one
     ArrowEvalPython with no Exchange below it, nothing cached, nothing but
     the zone dim broadcast; a multi-tenant probe reads the tenant column."""
-    from tzspark.cells import compile_cover
-    from tzspark.covertable import (
-        CoverTables,
-        assign_images_via_join,
-        assign_via_join,
-    )
+    from tzspark.covertable import assign_images_via_join, assign_via_join
     from tzspark.queries_geo import box_zones, pts_df
 
     idx = compile_cover(box_zones(spark, sf_small), base_res=3, max_res=7)
@@ -1032,14 +1028,14 @@ def join_path_checks(spark, images, sf_small):
 
     # 6. single-tenant assignment over a points table
     p6 = plan_of(
-        assign_via_join(pts_df(spark, sf_small), "event_id", cov)
+        assign_via_join(pts_df(spark, sf_small), cov)
         .groupBy("zone_id").count()
     )
     sections.append(("broadcast-free assignment (mapped index file, join path)", p6))
     failures += join_shape_failures("assign-join", p6)
 
-    # 6b. the image path (TimezoneLookup.assign_join's core): GPS extract,
-    # quarantine and lookup in one probe, as on the broadcast path
+    # 6b. the image path (TimezoneLookup.assign's plan without the tzid
+    # attach): GPS extract, quarantine and lookup in one probe
     p6b = plan_of(assign_images_via_join(images, cov).groupBy("zone_id").count())
     sections.append(("broadcast-free image assignment (one probe)", p6b))
     failures += join_shape_failures("image-join", p6b)
@@ -1051,7 +1047,7 @@ def join_path_checks(spark, images, sf_small):
         "tenant", F.when(F.col("event_id") % 2 == 0, "a").otherwise("b")
     )
     p6c = plan_of(
-        assign_via_join(pts_t, "event_id", cov_mt).groupBy("tenant", "zone_id").count()
+        assign_via_join(pts_t, cov_mt).groupBy("tenant", "zone_id").count()
     )
     sections.append(("multi-tenant assignment (one index file per tenant)", p6c))
     failures += join_shape_failures("multi-tenant", p6c)

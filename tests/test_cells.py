@@ -274,6 +274,7 @@ def test_nan_coordinates_get_no_zone(spark, zones, idx):
 
     from tzspark.api import TimezoneLookup
     from tzspark.cells import assign_points, describe_point
+    from tzspark.covertable import CoverTables
     from tzspark.engine import assign_udf
 
     inf = np.inf
@@ -294,7 +295,7 @@ def test_nan_coordinates_get_no_zone(spark, zones, idx):
     rows = [(None, 10.0), (5.0, None), (None, None),
             *zip(lat[3:].astype(float).tolist(), lng[3:].astype(float).tolist())]
     df = spark.createDataFrame(rows, schema)
-    a = df.select(assign_udf(spark.sparkContext.broadcast(idx))(
+    a = df.select(assign_udf(CoverTables.from_index(spark, idx))(
         F.col("lat"), F.col("lng")).alias("a")).select("a.*").collect()
     assert [(r["zone_id"], r["via_knn"]) for r in a] == list(zip(knn, want_via))
 

@@ -8,7 +8,9 @@ from pyspark.sql import functions as F
 
 from tzspark.checkpoint import SnapshotRunner, run_resumable
 from tzspark.datasets import images_df
-from tzspark.engine import assign_timezones, broadcast_cover, zone_dim_df
+from tzspark.cells import compile_cover
+from tzspark.covertable import CoverTables
+from tzspark.engine import assign_timezones, zone_dim_df
 from tzspark.zones import make_zones
 
 N = 300
@@ -22,7 +24,7 @@ def zones():
 def test_stage_snapshot_and_resume(spark, zones, tmp_path):
     root = str(tmp_path / "snap")
     runner = SnapshotRunner(spark, root)
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
 
     calls = {"gen": 0, "assign": 0}
@@ -33,7 +35,7 @@ def test_stage_snapshot_and_resume(spark, zones, tmp_path):
 
     def assign():
         calls["assign"] += 1
-        return assign_timezones(runner.stage("images", gen), idx_b, dim).drop("bytes")
+        return assign_timezones(runner.stage("images", gen), cov, dim).drop("bytes")
 
     out1 = runner.stage("assigned", assign)
     assert out1.count() == N
@@ -71,12 +73,12 @@ def test_torn_write_recovery(spark, zones, tmp_path):
 
 def test_row_level_resume(spark, zones, tmp_path):
     out = str(tmp_path / "rows")
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
     imgs = images_df(spark, N, partitions=3)
 
     def transform(df):
-        return assign_timezones(df, idx_b, dim).select(
+        return assign_timezones(df, cov, dim).select(
             "image_id", "zone_id", "tzid", "via_knn"
         )
 

@@ -1,6 +1,6 @@
-"""Cover-as-table lookup (covertable.py): the broadcast-free join path must
-equal the broadcast kernels exactly — resolve, kNN, and the full facade
-assignment — including on the reference-scale world zone set. Its kernel is
+"""The shipped index file (covertable.py): the probes over it must equal the
+driver-side kernels exactly — resolve, kNN, and the full facade assignment —
+including on the reference-scale world zone set. Its kernel is
 cells.assign_points on the index mapped from its file, so the mapped index
 must answer exactly like the in-memory one."""
 
@@ -133,7 +133,7 @@ def test_file_index_equals_memory_index_bench_world():
 
 def test_join_nan_null_and_out_of_domain(spark):
     """NaN and null coordinates get (-1, False) on the join path, as from
-    cells.assign_points on the broadcast path; out-of-domain points get
+    cells.assign_points on the driver; out-of-domain points get
     their kNN zone. Checked through assign_via_join and both thin
     wrappers."""
     from tzspark.zones import make_zones
@@ -151,18 +151,18 @@ def test_join_nan_null_and_out_of_domain(spark):
     assert want[4] == (33, True) and want[5] == (32, True)
 
     got = {r["k"]: (r["zone_id"], r["via_knn"])
-           for r in assign_via_join(p, "k", cov).collect()}
+           for r in assign_via_join(p, cov).collect()}
     assert got == want
-    got_r = {r["k"]: r["zone_id"] for r in resolve_via_join(p, "k", cov).collect()}
+    got_r = {r["k"]: r["zone_id"] for r in resolve_via_join(p, cov).collect()}
     assert got_r == {k: (-1 if v else z) for k, (z, v) in want.items()}
-    got_k = {r["k"]: r["zone_id"] for r in knn_via_join(p, "k", cov).collect()}
+    got_k = {r["k"]: r["zone_id"] for r in knn_via_join(p, cov).collect()}
     assert got_k == {k: z for k, (z, v) in want.items() if v}
 
 
 def test_assign_via_join_any_key(spark):
-    """One output row per input row whatever ``key_col`` holds: duplicate
-    and null keys keep every row, with the broadcast assign_udf answers
-    (nothing joins back on the key)."""
+    """One output row per input row whatever its key holds: duplicate and
+    null keys keep every row, with the assign_udf answers (nothing joins
+    back on a key)."""
     from tzspark.engine import assign_udf
     from tzspark.zones import make_zones
 
@@ -171,42 +171,50 @@ def test_assign_via_join_any_key(spark):
     rows = [(1, 10.0, 10.0, 0), (1, 45.0, 45.0, 1), (1, 10.0, 10.0, 2),
             (None, 3.0, 3.0, 3), (None, 95.0, 10.0, 4), (2, None, 1.0, 5)]
     p = spark.createDataFrame(rows, "k long, lat double, lng double, row int")
-    bidx = spark.sparkContext.broadcast(idx)
-    want = p.select("row", assign_udf(bidx)(F.col("lat"), F.col("lng")).alias("a")).select(
+    want = p.select("row", assign_udf(cov)(F.col("lat"), F.col("lng")).alias("a")).select(
         "row", "a.zone_id", "a.via_knn")
-    got = assign_via_join(p, "k", cov)
+    got = assign_via_join(p, cov)
     assert got.count() == len(rows)
     assert sorted(got.select("row", "zone_id", "via_knn").collect()) == sorted(want.collect())
     assert sorted(r["k"] for r in got.collect() if r["k"] is not None) == [1, 1, 1, 2]
 
 
 def test_stale_persisted_cover_is_regenerated(spark, tmp_path):
-    """cover_tables(cache_dir=...) regenerates, never reads, the index file
-    at its key when it is truncated, of another layout version, has an
-    array past its end, or is a pickle: the rewritten file maps to the
-    index and the answers are right. CoverTables.load rejects a saved cover
-    holding such a file, and the old shard-table layout."""
+    """The cover_tables of a TimezoneLookup(cache_dir=...) regenerates,
+    never reads, the index file at its key when it was damaged after the
+    facade opened it: truncated, of another layout version, with an array
+    past its end, or a pickle. The rewritten file maps to the index and the
+    answers are right. CoverTables.load rejects a saved cover holding such
+    a file, and the old shard-table layout."""
     from test_cover_compile import PLANTS, _plant
     from test_index_update import assert_index_equal
 
     from tzspark.api import TimezoneLookup
     from tzspark.zones import make_zones
 
-    tl = TimezoneLookup(make_zones(n_coast=200))
-    other = compile_cover(make_zones(n_coast=200)[:5])  # wrong answers if read
+    zones = make_zones(n_coast=200)
+    other = compile_cover(zones[:5])  # wrong answers if read
     p = pts_df(spark, SF)
     pp = p.toPandas()
-    zid, via = assign_points(tl.idx, pp["lat"].to_numpy(F32), pp["lng"].to_numpy(F32))
-    want = dict(zip(pp["event_id"], zip(zid.tolist(), via.tolist())))
+    want = None
     for plant in PLANTS:
         cache = str(tmp_path / plant)
-        path, _ = tl._index_file(cache, other)  # other's index at tl's key
+        tl = TimezoneLookup(zones, cache_dir=cache)
+        if want is None:
+            zid, via = assign_points(tl.idx, pp["lat"].to_numpy(F32),
+                                     pp["lng"].to_numpy(F32))
+            want = dict(zip(pp["event_id"], zip(zid.tolist(), via.tolist())))
+        (name,) = os.listdir(cache)
+        path = os.path.join(cache, name)
+        # other's index at tl's key, as a new file: tl.idx maps the old one
+        save_index(other, path + ".other")
+        os.replace(path + ".other", path)
         _plant(path, plant)
-        cov = tl.cover_tables(spark, cache_dir=cache)
+        cov = tl.cover_tables(spark)
         assert cov.files == {None: path}
         assert_index_equal(open_index(path), tl.idx)
         got = {r["event_id"]: (r["zone_id"], r["via_knn"])
-               for r in assign_via_join(p, "event_id", cov).collect()}
+               for r in assign_via_join(p, cov).collect()}
         assert got == want, plant
 
         saved = str(tmp_path / f"saved_{plant}")
@@ -225,13 +233,25 @@ def test_stale_persisted_cover_is_regenerated(spark, tmp_path):
         CoverTables.load(spark, shards)
 
 
-def test_resolve_join_equals_broadcast(spark, box_cover):
+def _driver_answers(idx, p):
+    """(event_id-indexed pts_df, zone_id, via_knn) from cells.assign_points
+    on ``idx`` in this process."""
+    pp = _pd(p, ["event_id", "lat", "lng"])
+    return pp, *assign_points(idx, pp["lat"].to_numpy(F32), pp["lng"].to_numpy(F32))
+
+
+def test_resolve_join_equals_kernels(spark, box_cover):
+    """resolve_via_join and q11's with_contained_zone(assign_udf) probe of
+    the shipped file == cells.resolve_points semantics on the driver."""
     idx, cov = box_cover
     p = pts_df(spark, SF)
-    bidx = spark.sparkContext.broadcast(idx)
-    want = _pd(with_contained_zone(p, assign_udf(bidx)), ["event_id", "zone_id"])
-    got = _pd(resolve_via_join(p, "event_id", cov), ["event_id", "zone_id"])
-    assert (want["zone_id"] == got["zone_id"]).all()
+    pp, zid, via = _driver_answers(idx, p)
+    want = np.where(via, -1, zid)
+    probe = _pd(with_contained_zone(p, assign_udf(cov)), ["event_id", "zone_id"])
+    got = _pd(resolve_via_join(p, cov), ["event_id", "zone_id"])
+    assert got.index.tolist() == probe.index.tolist() == pp.index.tolist()
+    np.testing.assert_array_equal(probe["zone_id"].to_numpy(), want)
+    np.testing.assert_array_equal(got["zone_id"].to_numpy(), want)
     assert (got["zone_id"] == -1).any()  # both regimes exercised
     assert (got["zone_id"] >= 0).any()
 
@@ -252,18 +272,16 @@ def test_q12_one_python_stage(spark, box_cover):
     assert got["zone_id"].tolist() == knn_fallback(idx, la[un], lg[un]).tolist()
 
 
-def test_assign_join_equals_broadcast(spark, box_cover):
+def test_assign_join_equals_kernels(spark, box_cover):
+    """assign_via_join over the shipped file == cells.assign_points on the
+    driver, zone_id and via_knn."""
     idx, cov = box_cover
     p = pts_df(spark, SF)
-    bidx = spark.sparkContext.broadcast(idx)
-    want = _pd(
-        p.select("event_id", assign_udf(bidx)(F.col("lat"), F.col("lng")).alias("a"))
-        .select("event_id", "a.zone_id", "a.via_knn"),
-        ["event_id", "zone_id", "via_knn"],
-    )
-    got = _pd(assign_via_join(p, "event_id", cov), ["event_id", "zone_id", "via_knn"])
-    assert (want["zone_id"] == got["zone_id"]).all()
-    assert (want["via_knn"] == got["via_knn"]).all()
+    pp, zid, via = _driver_answers(idx, p)
+    got = _pd(assign_via_join(p, cov), ["event_id", "zone_id", "via_knn"])
+    assert got.index.tolist() == pp.index.tolist()
+    np.testing.assert_array_equal(got["zone_id"].to_numpy(), zid)
+    np.testing.assert_array_equal(got["via_knn"].to_numpy(), via)
 
 
 def test_save_load_roundtrip(spark, box_cover, tmp_path):
@@ -275,24 +293,29 @@ def test_save_load_roundtrip(spark, box_cover, tmp_path):
         cov.base_res, cov.max_res, cov.knn_res,
     )
     p = pts_df(spark, SF).limit(2000)
-    a = _pd(resolve_via_join(p, "event_id", cov), ["event_id", "zone_id"])
-    b = _pd(resolve_via_join(p, "event_id", cov2), ["event_id", "zone_id"])
+    a = _pd(resolve_via_join(p, cov), ["event_id", "zone_id"])
+    b = _pd(resolve_via_join(p, cov2), ["event_id", "zone_id"])
     assert (a["zone_id"] == b["zone_id"]).all()
 
 
 def test_facade_assign_join_equals_assign(spark, tmp_path):
-    """TimezoneLookup.assign_join == TimezoneLookup.assign on the image
-    table (full pipeline: GPS extract -> quarantine -> join assign -> tzid),
-    against the synthetic zone set incl. concave/hole/coast/ocean shapes."""
+    """TimezoneLookup(cache_dir=...).assign_join, which ships the index file
+    kept in cache_dir, == TimezoneLookup.assign over a CoverTables.from_index
+    spool file, on the image table (full pipeline: GPS extract -> quarantine
+    -> assign -> tzid), against the synthetic zone set incl.
+    concave/hole/coast/ocean shapes."""
     from tzspark.api import TimezoneLookup
     from tzspark.datasets import images_from_events
     from tzspark.zones import make_zones
 
-    tl = TimezoneLookup(make_zones(n_coast=2000))
+    zones = make_zones(n_coast=2000)
+    tl = TimezoneLookup(zones, cache_dir=str(tmp_path))
     imgs = images_from_events(spark, SF)
     cols = ["image_id", "zone_id", "via_knn", "tzid", "cell_id"]
-    want = _pd(tl.assign(spark, imgs), cols)
-    got = _pd(tl.assign_join(spark, imgs, cache_dir=str(tmp_path)), cols)
+    want = _pd(TimezoneLookup(zones).assign(spark, imgs), cols)
+    got = _pd(tl.assign_join(spark, imgs), cols)
+    ((_, path),) = tl.cover_tables(spark).files.items()
+    assert os.path.dirname(path) == str(tmp_path)
     assert len(want) == len(got)
     for c in cols[1:]:
         assert (want[c] == got[c]).all(), c
@@ -300,7 +323,7 @@ def test_facade_assign_join_equals_assign(spark, tmp_path):
 
 def test_world_scale_join_parity(spark):
     """The join path on a reference-shaped world set (multi-thousand zones,
-    index form with b_edge_idx) — equal to the broadcast kernels on random
+    index form with b_edge_idx) — equal to the driver-side kernels on random
     points across both matched and kNN regimes."""
     from tzspark.zones import make_world_zones
 
@@ -318,14 +341,14 @@ def test_world_scale_join_parity(spark):
         [(int(i), float(lat[i]), float(lng[i])) for i in range(n)],
         "pid long, lat float, lng float",
     )
-    got = _pd(resolve_via_join(p, "pid", cov), ["pid", "zone_id"])
+    got = _pd(resolve_via_join(p, cov), ["pid", "zone_id"])
     np.testing.assert_array_equal(got["zone_id"].to_numpy(), want)
 
     unmatched = p.join(
         spark.createDataFrame([(int(i),) for i in np.flatnonzero(un)], "pid long"),
         "pid",
     )
-    gk = _pd(knn_via_join(unmatched, "pid", cov), ["pid", "zone_id"])
+    gk = _pd(knn_via_join(unmatched, cov), ["pid", "zone_id"])
     np.testing.assert_array_equal(gk["zone_id"].to_numpy(), want_knn)
 
 
@@ -333,7 +356,7 @@ def test_union_tenants_isolation(spark):
     """Multi-tenant cover: the same point resolves against ITS tenant's
     zone set only — a point inside tenant A's box is offshore (kNN) for
     tenant B, and each tenant's answer equals its own single-tenant
-    broadcast kernel; a tenant with no cover gets (-1, False)."""
+    kernel; a tenant with no cover gets (-1, False)."""
     from tzspark.cells import Zone
 
     za = [Zone(0, "A/Box", np.array([0, 0, 10, 10], F32),
@@ -359,7 +382,7 @@ def test_union_tenants_isolation(spark):
     )
     got = {
         r["k"]: (r["zone_id"], r["via_knn"])
-        for r in assign_via_join(pts, "k", cov).collect()
+        for r in assign_via_join(pts, cov).collect()
     }
     # (5,5): inside A's box; offshore for B -> kNN still lands on B's only zone
     assert got[1] == (0, False)
@@ -405,6 +428,78 @@ def test_union_tenants_image_path(spark):
     c_rows = [r for r in got if r["tenant"] == "c"]
     assert len(c_rows) == n_c > 0
     assert {(r["zone_id"], r["via_knn"]) for r in c_rows} == {(-1, False)}
+
+
+def test_no_lookup_broadcasts_the_index(spark, monkeypatch):
+    """Every lookup reaches its index as the shipped file: with
+    SparkContext.broadcast refusing a CompiledIndex (and any pickling of
+    one, the other way an index could ride to a worker), the facade's
+    assign and assign_join, lookup_tile_onepass, zonal_channel_rollup and
+    q11/q12/q89 still answer as the driver-side kernels and the DuckDB
+    oracles do."""
+    import duckdb
+    from pyspark import SparkContext
+
+    from tzspark.api import TimezoneLookup
+    from tzspark.cells import CompiledIndex
+    from tzspark.datasets import images_df, synth_coords
+    from tzspark.engine import (
+        lookup_tile_onepass,
+        zonal_channel_rollup,
+        zone_dim_df,
+        zone_rollup_view,
+    )
+    from tzspark.queries_geo import (
+        Q11_SQL,
+        Q12_SQL,
+        Q89_SQL,
+        q11_resolve_cover,
+        q89_versioned_resolve,
+    )
+    from tzspark.zones import make_zones
+
+    real = SparkContext.broadcast
+
+    def refuse(sc, value):
+        if isinstance(value, CompiledIndex):
+            raise TypeError("a CompiledIndex was broadcast")
+        return real(sc, value)
+
+    def no_pickle(idx, protocol):
+        raise TypeError("a CompiledIndex was pickled")
+
+    monkeypatch.setattr(SparkContext, "broadcast", refuse)
+    monkeypatch.setattr(CompiledIndex, "__reduce_ex__", no_pickle, raising=False)
+
+    zones = make_zones(n_coast=400)
+    tl = TimezoneLookup(zones)
+    imgs = images_df(spark, 400, partitions=2)
+    tz = {int(z.zone_id): z.tzid for z in zones}
+    for call in (tl.assign, tl.assign_join):
+        pdf = call(spark, imgs).select("image_id", "zone_id", "tzid").toPandas()
+        pdf = pdf.sort_values("image_id")
+        lat, lng = synth_coords(pdf["image_id"].str[3:].astype(np.int64).to_numpy())
+        want = tl.search_many(lat, lng)
+        np.testing.assert_array_equal(pdf["zone_id"].to_numpy(np.int32), want)
+        assert pdf["tzid"].tolist() == [tz[int(z)] for z in want]
+    counts = dict(zip(*np.unique(want, return_counts=True)))
+
+    cov, dim = tl.cover_tables(spark), zone_dim_df(spark, zones)
+    onepass = zone_rollup_view(lookup_tile_onepass(imgs, cov, tl.max_res), dim)
+    zonal = zonal_channel_rollup(imgs, cov, dim)
+    for df in (onepass, zonal):
+        assert {r["zone_id"]: r["n_images"] for r in df.collect()} == counts
+
+    con = duckdb.connect()
+    for t in ("events", "nation"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    for q, sql, key in ((q11_resolve_cover, Q11_SQL, ["event_id"]),
+                        (q12_knn_engine, Q12_SQL, ["event_id"]),
+                        (q89_versioned_resolve, Q89_SQL, ["event_id", "zone_version"])):
+        got = q(spark, SF).toPandas().sort_values(key).reset_index(drop=True)
+        want_q = con.sql(sql).df().sort_values(key).reset_index(drop=True)
+        assert len(got) == len(want_q) > 0
+        assert got.astype(str).equals(want_q[got.columns].astype(str)), q.__name__
 
 
 def test_radius_join_equals_bruteforce(spark):

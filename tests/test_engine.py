@@ -6,11 +6,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tzspark.cells import DEFAULT_MAX_RES, cell_id, cell_id_col
+from tzspark.cells import DEFAULT_MAX_RES, cell_id, cell_id_col, compile_cover
+from tzspark.covertable import CoverTables
 from tzspark.datasets import images_df, synth_coords
 from tzspark.engine import (
     assign_timezones,
-    broadcast_cover,
     quarantined_rows,
     salted_tile_counts,
     tile_rollup_fused,
@@ -29,10 +29,10 @@ def zones():
 
 @pytest.fixture(scope="module")
 def assigned(spark, zones):
-    idx_b, stats = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
     imgs = images_df(spark, N, partitions=4)
-    df = assign_timezones(imgs, idx_b, dim)
+    df = assign_timezones(imgs, cov, dim)
     df.cache()
     return df
 
@@ -270,9 +270,9 @@ def test_quarantine_path(spark, zones):
     from tzspark.datasets import IMAGES_SCHEMA
 
     df = spark.createDataFrame(rows, IMAGES_SCHEMA)
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
-    ok = assign_timezones(df, idx_b, dim)
+    ok = assign_timezones(df, cov, dim)
     q = quarantined_rows(df)
     # the extract UDF runs once per row: the Filter must not re-instantiate it
     plan = q._jdf.queryExecution().executedPlan().toString()
@@ -356,14 +356,14 @@ def test_onepass_equals_two_jobs(spark, zones):
         zone_rollup_view,
     )
 
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
     imgs = images_df(spark, 500, partitions=4)
-    op = lookup_tile_onepass(imgs, idx_b).cache()
+    op = lookup_tile_onepass(imgs, cov).cache()
 
     zr = zone_rollup_view(op, dim).toPandas().sort_values("zone_id").reset_index(drop=True)
     want_zr = (
-        assign_timezones(imgs, idx_b, dim)
+        assign_timezones(imgs, cov, dim)
         .groupBy("zone_id", "tzid")
         .agg(
             F.count("*").alias("n_images"),

@@ -327,48 +327,53 @@ def test_empty_knn_cell_raises(zones, monkeypatch):
         replace_zone(idx, _moved(north, -80.0, -100.0))
 
 
-def test_facade_assign_memoizes_broadcast(spark, zones, monkeypatch):
-    """TimezoneLookup.assign builds its lookup plan (broadcast, zone dim,
-    Columns) once per index: three calls over two image DataFrames share one
-    plan and one broadcast; a replace_zone in between releases it, and the
-    next call builds exactly one plan over the updated index and answers
-    from it. Every answer equals assign_timezones over a fresh broadcast."""
+def test_facade_assign_memoizes_index_file(spark, zones, monkeypatch):
+    """TimezoneLookup.assign builds its lookup plan (shipped index file, zone
+    dim, Columns) once per index: three calls over two image DataFrames,
+    assign_join and cover_tables share one plan and one file; a replace_zone
+    in between releases it, and the next call builds exactly one plan over a
+    new file of the updated index and answers from it. Every answer equals
+    assign_timezones over a fresh CoverTables.from_index."""
     import tzspark.engine as engine
     from tzspark.api import TimezoneLookup
+    from tzspark.covertable import CoverTables
     from tzspark.datasets import images_df, synth_coords
     from tzspark.engine import assign_timezones, zone_dim_df
 
     builds = []
     real_lookup_udf = engine.lookup_udf
     monkeypatch.setattr(engine, "lookup_udf",
-                        lambda b: builds.append(b) or real_lookup_udf(b))
+                        lambda c: builds.append(c) or real_lookup_udf(c))
 
     tl = TimezoneLookup(zones)
     imgs = images_df(spark, 400, partitions=2)
     other = images_df(spark, 250, partitions=3)
 
-    def broadcast_id():
-        return tl._assign_memo[2].idx_bcast._jbroadcast.id()
+    def shipped():
+        return tl._assign_memo[2].cover.files[None]
 
-    def facade(df):
-        """tl.assign(df) and the plan builds it made."""
+    def facade(df, call=tl.assign):
+        """call(spark, df) and the plan builds it made."""
         n = len(builds)
-        out = tl.assign(spark, df)
+        out = call(spark, df)
         return out, len(builds) - n
 
     def fresh(df):
-        return assign_timezones(df, spark.sparkContext.broadcast(tl.idx),
+        return assign_timezones(df, CoverTables.from_index(spark, tl.idx),
                                 zone_dim_df(spark, tl.zones), max_res=tl.max_res)
 
     def rows(df):
         return df.orderBy("image_id").collect()
 
-    got, ids = [], set()
+    got, files = [], set()
     for df in (imgs, other, imgs):
         got.append((df, *facade(df)))
-        ids.add(broadcast_id())
-    assert [n for _, _, n in got] == [1, 0, 0] and len(ids) == 1
-    first = ids.pop()
+        files.add(shipped())
+    plan = tl._assign_memo[2]
+    got.append((other, *facade(other, tl.assign_join)))
+    assert tl._assign_memo[2] is plan and tl.cover_tables(spark) is plan.cover
+    assert [n for _, _, n in got] == [1, 0, 0, 0] and len(files) == 1
+    first = files.pop()
     for df, out, _ in got:
         assert rows(out) == rows(fresh(df))
 
@@ -378,14 +383,68 @@ def test_facade_assign_memoizes_broadcast(spark, zones, monkeypatch):
     assert tl._assign_memo is None
     out, n_built = facade(imgs)
     assert n_built == 1
-    assert broadcast_id() != first
-    assert facade(other)[1] == 0
+    assert shipped() != first
+    assert facade(other, tl.assign_join)[1] == 0
     assert rows(out) == rows(fresh(imgs))
     pdf = out.select("image_id", "zone_id").toPandas()
     lat, lng = synth_coords(pdf["image_id"].str[3:].astype(np.int64).to_numpy())
     live = [moved if q.zone_id == z.zone_id else q for q in zones]
     np.testing.assert_array_equal(pdf["zone_id"].to_numpy(np.int32),
                                   oracle_assign(live, lat, lng))
+
+
+def test_replace_zone_index_file_lifecycle(spark, zones, monkeypatch):
+    """The index files behind TimezoneLookup.assign across replace_zone: the
+    facade writes no file when it is built; an edit alone writes and ships
+    no file; each edit followed by an assign writes and ships exactly one
+    new file (Spark keeps serving every one of them, so N edits leave N
+    files); the edit drops the driver's mapping of the superseded file; and
+    a DataFrame built before the edits still evaluates to the old answers."""
+    import os
+
+    from pyspark import SparkContext
+
+    import tzspark.covertable as covertable
+    from tzspark.api import TimezoneLookup
+    from tzspark.datasets import images_df, synth_coords
+
+    writes, shipped = [], []
+    real_write, real_add = covertable._write, SparkContext.addFile
+    monkeypatch.setattr(covertable, "_write",
+                        lambda idx: writes.append(1) or real_write(idx))
+    monkeypatch.setattr(SparkContext, "addFile",
+                        lambda sc, path, *a: shipped.append(path) or real_add(sc, path, *a))
+
+    def answers(df, zs):
+        pdf = df.select("image_id", "zone_id").toPandas().sort_values("image_id")
+        lat, lng = synth_coords(pdf["image_id"].str[3:].astype(np.int64).to_numpy())
+        np.testing.assert_array_equal(pdf["zone_id"].to_numpy(np.int32),
+                                      oracle_assign(zs, lat, lng))
+
+    tl = TimezoneLookup(zones)
+    assert writes == [] and shipped == []
+    imgs = images_df(spark, 300, partitions=2)
+    before = tl.assign(spark, imgs)
+    cover = tl.cover_tables(spark)
+    assert cover.value is covertable._OPENED[os.path.basename(cover.files[None])]
+
+    live, paths = list(zones), [cover.files[None]]
+    for k, zid in enumerate((3, 17, 26)):
+        z = {q.zone_id: q for q in live}[zid]
+        moved = _moved(z, 2.5 + k, -4.0 + k, scale=0.8)
+        n_w, n_s = len(writes), len(shipped)
+        tl.replace_zone(moved)
+        assert (len(writes), len(shipped)) == (n_w, n_s)
+        assert os.path.basename(paths[-1]) not in covertable._OPENED
+        live = [moved if q.zone_id == zid else q for q in live]
+        after = tl.assign(spark, imgs)
+        assert (len(writes), len(shipped)) == (n_w + 1, n_s + 1)
+        paths.append(tl.cover_tables(spark).files[None])
+        assert shipped[-1] == paths[-1]
+        answers(after, live)
+        tl.cover_tables(spark).value  # the driver maps the new file
+    assert len(set(paths)) == 4 and all(os.path.exists(p) for p in paths)
+    answers(before, zones)
 
 
 def test_facade_plan_reuse_in_one_query(spark, zones):

@@ -68,10 +68,10 @@ def test_join_path_check_catches_planted_repartition(spark):
     cov = CoverTables.from_index(
         spark, compile_cover(box_zones(spark, SF), base_res=3, max_res=7))
     pts = pts_df(spark, SF)
-    plain = plan_of(assign_via_join(pts, "event_id", cov).groupBy("zone_id").count())
+    plain = plan_of(assign_via_join(pts, cov).groupBy("zone_id").count())
     assert join_shape_failures("plain", plain) == []
     planted = plan_of(
-        assign_via_join(pts.repartition(4, "event_id"), "event_id", cov)
+        assign_via_join(pts.repartition(4, "event_id"), cov)
         .groupBy("zone_id").count())
     assert join_shape_failures("planted", planted) == [
         "planted: an Exchange below the probe"]

@@ -6,9 +6,10 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from tzspark.cells import cell_id_col
+from tzspark.cells import cell_id_col, compile_cover
+from tzspark.covertable import CoverTables
 from tzspark.datasets import images_df
-from tzspark.engine import assign_timezones, broadcast_cover, zone_dim_df
+from tzspark.engine import assign_timezones, zone_dim_df
 from tzspark.zones import make_zones
 
 N = 400
@@ -21,9 +22,9 @@ def _plan(df) -> str:
 @pytest.fixture(scope="module")
 def assigned(spark):
     zones = make_zones(n_coast=2000)
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
-    return assign_timezones(images_df(spark, N, partitions=4), idx_b, dim).drop(
+    return assign_timezones(images_df(spark, N, partitions=4), cov, dim).drop(
         "bytes"
     )
 
@@ -135,7 +136,7 @@ def test_hot_spot_points_probe_without_exchange(spark):
             .alias("lng"),
         )
     )
-    res = assign_via_join(pts, "pid", cov)
+    res = assign_via_join(pts, cov)
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     got = (

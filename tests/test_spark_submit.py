@@ -5,7 +5,10 @@ multi-executor cluster").
 The job script runs from a foreign cwd with PYTHONPATH stripped, so BOTH the
 driver and the executor Python workers can only import tzspark from the
 --py-files zip (the test asserts the imported module does not come from the
-repo checkout). Output zone assignments are verified row-for-row against the
+repo checkout). The zone index reaches the executors as the engine ships it
+everywhere, a covertable.CoverTables index file given to
+SparkContext.addFile, so this also proves that shipping under spark-submit.
+Output zone assignments are verified row-for-row against the
 committed numpy float32 oracle (zones.oracle_assign) — the same golden the
 in-process engine is pinned to, so the packaged launch is held to the exact
 same answer as the library launch.
@@ -32,7 +35,9 @@ print("TZSPARK_FILE=" + tzspark.__file__)
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from tzspark.engine import assign_udf, broadcast_cover
+from tzspark.cells import compile_cover
+from tzspark.covertable import CoverTables
+from tzspark.engine import assign_udf
 from tzspark.zones import make_zones
 
 out, n = sys.argv[1], int(sys.argv[2])
@@ -40,7 +45,7 @@ spark = SparkSession.builder.appName("tzspark-submit-smoke").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 
 zones = make_zones(n_coast=400)
-idx_b, _ = broadcast_cover(spark, zones)
+cov = CoverTables.from_index(spark, compile_cover(zones))  # shipped by addFile
 pts = spark.range(0, n, 1, 8).select(
     F.col("id"),
     ((F.pmod(F.col("id") * 7919, F.lit(16000)) / 1000.0) - 7.0)
@@ -50,7 +55,7 @@ pts = spark.range(0, n, 1, 8).select(
 )
 res = pts.select(
     "id", "lat", "lng",
-    assign_udf(idx_b)(F.col("lat"), F.col("lng")).alias("a"),
+    assign_udf(cov)(F.col("lat"), F.col("lng")).alias("a"),
 ).select("id", "lat", "lng", F.col("a.zone_id").alias("zone_id"))
 res.write.mode("overwrite").parquet(out)
 spark.stop()

@@ -5,12 +5,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tzspark.cells import compile_cover
+from tzspark.covertable import CoverTables
 from tzspark.datasets import images_df
-from tzspark.engine import assign_timezones, broadcast_cover, zone_dim_df
+from tzspark.engine import assign_timezones, zone_dim_df
 from tzspark.streaming import (
     read_image_stream,
     run_available_now,
-    stream_assign,
     stream_tile_counts,
 )
 from tzspark.zones import make_zones
@@ -31,17 +32,17 @@ def image_dir(spark, tmp_path_factory):
 
 
 def test_stream_assign_equals_batch(spark, zones, image_dir, tmp_path):
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
     stream = read_image_stream(spark, image_dir, per_trigger_files=2)
     assert stream.isStreaming
-    assigned = stream_assign(stream, idx_b, dim).select(
+    assigned = assign_timezones(stream, cov, dim).select(
         "image_id", "zone_id", "tzid", "via_knn"
     )
     q = run_available_now(assigned, str(tmp_path / "ckpt"), "stream_out")
     out = spark.table("stream_out").toPandas().sort_values("image_id")
     batch = (
-        assign_timezones(spark.read.parquet(image_dir), idx_b, dim)
+        assign_timezones(spark.read.parquet(image_dir), cov, dim)
         .select("image_id", "zone_id", "tzid", "via_knn")
         .toPandas()
         .sort_values("image_id")
@@ -55,11 +56,11 @@ def test_stream_assign_equals_batch(spark, zones, image_dir, tmp_path):
 
 
 def test_stream_windowed_tile_counts(spark, zones, image_dir, tmp_path):
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
     stream = read_image_stream(spark, image_dir, per_trigger_files=3)
     # deterministic event time derived from the row index
-    assigned = stream_assign(stream, idx_b, dim).withColumn(
+    assigned = assign_timezones(stream, cov, dim).withColumn(
         "event_ts",
         F.to_timestamp(
             F.lit("2024-01-01 00:00:00")
@@ -116,10 +117,9 @@ def test_stream_dedup_within_watermark(spark, image_dir, tmp_path):
 
 
 def test_stream_assign_join_equals_batch(spark, tmp_path):
-    """The broadcast-free join lookup, run as a foreachBatch stream over the
-    same files, equals the batch assign_via_join row for row."""
-    from tzspark.cells import compile_cover
-    from tzspark.covertable import CoverTables, assign_images_via_join
+    """The image lookup without tzid, run as a stream over the same files,
+    equals the batch assign_images_via_join row for row."""
+    from tzspark.covertable import assign_images_via_join
     from tzspark.datasets import images_from_events
     from tzspark.queries_geo import box_zones
     from tzspark.streaming import read_image_stream, stream_assign_join
@@ -239,7 +239,6 @@ def test_stream_zone_transitions_equal_batch(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from tzspark.cells import compile_cover
     from tzspark.engine import assign_udf, with_contained_zone
     from tzspark.queries_geo import box_zones, q65_zone_transitions
     from tzspark.streaming import run_available_now, stream_zone_transitions
@@ -258,9 +257,7 @@ def test_stream_zone_transitions_equal_batch(spark, tmp_path):
         os.utime(p, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
 
     zones = box_zones(spark, sf)
-    bidx = spark.sparkContext.broadcast(
-        compile_cover(zones, base_res=3, max_res=7)
-    )
+    cov = CoverTables.from_index(spark, compile_cover(zones, base_res=3, max_res=7))
     stream = with_contained_zone(
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
@@ -272,7 +269,7 @@ def test_stream_zone_transitions_equal_batch(spark, tmp_path):
             ((F.col("user_id") * 7 % 180) - 90 + F.col("value") / 1e6).alias("lat"),
             ((F.col("event_id") * 13 % 360) - 180).cast("double").alias("lng"),
         ),
-        assign_udf(bidx),
+        assign_udf(cov),
     )
     run_available_now(
         stream_zone_transitions(stream),

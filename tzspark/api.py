@@ -7,8 +7,9 @@ Parity map (a timezoneLookup user can switch 1:1):
     mmap store (timezone.go:19-27) -> one index file mapped in place
                                   (cells.save_index / open_index)
     Search(lat, lng)           -> .search(lat, lng) -> Result(name, coords, elapsed)
-    (new, the point of the engine) .assign(images_df) — the distributed join
-                                  (.assign_join: over the mapped index file)
+    (new, the point of the engine) .assign(images_df) — the distributed join,
+                                  probing the mapped index file where the
+                                  rows are
 """
 
 from __future__ import annotations
@@ -51,8 +52,10 @@ class TimezoneLookup:
         self.zones = sorted(zones, key=lambda z: z.zone_id)
         self.base_res = base_res
         self.max_res = max_res
+        self.cache_dir = cache_dir
         self.idx = self._compile(cache_dir)
         self._tz_by_id = {int(z.zone_id): z.tzid for z in self.zones}
+        self._assign_memo = None  # [application id, index, LookupPlan] (_plan)
 
     # -- construction ------------------------------------------------------
 
@@ -130,22 +133,19 @@ class TimezoneLookup:
     # replace_zone) plus a kNN table rebuilt only in the cells the changed
     # MBR can reach — byte-identical to a recompile over the updated zone
     # list. self.zones is updated too, so _content_key re-keys every cover
-    # cache correctly, and the superseded index's lookup plans and assign()
-    # broadcast are released (_swap_idx).
+    # cache correctly, and the superseded index's lookup plan is released
+    # (_swap_idx).
 
     def _swap_idx(self, idx: CompiledIndex) -> None:
-        """Install an updated index; drop the lookup plans built over the old
-        one and unpersist its broadcast. unpersist only drops executor
-        copies — a DataFrame built before the swap still evaluates
-        (executors re-fetch the blocks). A broadcast of an application that
-        has since stopped is just dropped."""
-        memo = getattr(self, "_assign_memo", None)
-        if memo is not None and memo[2] is not None:
-            from pyspark import SparkContext
-
-            sc = SparkContext._active_spark_context
-            if sc is not None and sc.applicationId == memo[0]:
-                memo[2].idx_bcast.unpersist()
+        """Install an updated index; drop the lookup plan built over the old
+        one and the driver's mapping of its index file. It writes and ships
+        nothing: the next assign() ships the new index's file. A DataFrame
+        built before the swap still evaluates to the old answers, because
+        its kernel maps the old file, which Spark keeps serving: Spark
+        cannot un-register an addFile, so a session that edits and
+        re-assigns N times keeps N index files (one per index content)."""
+        if self._assign_memo is not None:
+            self._assign_memo[2].cover.release()
         self._assign_memo = None
         self.idx = idx
 
@@ -287,58 +287,40 @@ class TimezoneLookup:
 
     # -- the distributed join -------------------------------------------------
 
-    def _plans(self, spark) -> list:
-        """[application id, index, broadcast LookupPlan or None, {cache_dir:
-        join LookupPlan}], built once per application and index: rebuilding
-        the index copy, dim and Columns per call is every op's driver-side
-        setup otherwise (_swap_idx drops them)."""
-        app = spark.sparkContext.applicationId
-        memo = getattr(self, "_assign_memo", None)
-        if memo is None or memo[0] != app or memo[1] is not self.idx:
-            memo = self._assign_memo = [app, self.idx, None, {}]
-        return memo
-
-    def assign(self, spark, images_df):
-        """The broadcast PIP join over an image+caption DataFrame."""
-        from .engine import LookupPlan, zone_dim_df
-
-        memo = self._plans(spark)
-        if memo[2] is None:
-            memo[2] = LookupPlan(
-                spark.sparkContext.broadcast(self.idx), zone_dim_df(spark, self.zones),
-                max_res=self.max_res,
-            )
-        return memo[2].apply(images_df)
-
-    def _join_plan(self, spark, cache_dir: str):
-        """assign_join's LookupPlan, over the cover_tables handle."""
+    def _plan(self, spark):
+        """assign()'s LookupPlan, built once per application and index:
+        rebuilding the shipped file, dim and Columns per call is every op's
+        driver-side setup otherwise (_swap_idx drops it). Its cover is the
+        index file ``cache_dir`` keeps (_index_file), or a
+        CoverTables.from_index file without one; it is written at the first
+        call, never in __init__."""
         from .covertable import CoverTables, lookup_plan
         from .engine import zone_dim_df
 
-        plans = self._plans(spark)[3]
-        if cache_dir not in plans:
-            if cache_dir:
-                cov = CoverTables(spark, {None: self._index_file(cache_dir, self.idx)[0]})
+        app = spark.sparkContext.applicationId
+        memo = self._assign_memo
+        if memo is None or memo[0] != app or memo[1] is not self.idx:
+            if self.cache_dir:
+                cov = CoverTables(spark, {None: self._index_file(self.cache_dir, self.idx)[0]})
             else:
                 cov = CoverTables.from_index(spark, self.idx)
-            plans[cache_dir] = lookup_plan(cov, zone_dim_df(spark, self.zones))
-        return plans[cache_dir]
+            plan = lookup_plan(cov, zone_dim_df(spark, self.zones))
+            memo = self._assign_memo = [app, self.idx, plan]
+        return memo[2]
 
-    def cover_tables(self, spark, cache_dir: str = None):
-        """The compiled cover as an index file (covertable.CoverTables); with
-        ``cache_dir``, the index file TimezoneLookup(cache_dir=...) keeps
-        there (_index_file). Memoized with assign_join's plan."""
-        return self._join_plan(spark, cache_dir).idx_bcast
+    def cover_tables(self, spark):
+        """The compiled cover as a shipped index file (covertable.CoverTables),
+        the one assign() probes."""
+        return self._plan(spark).cover
 
-    def assign_join(self, spark, images_df, cache_dir: str = None):
-        """assign() with ZERO broadcast of the compiled cover: the same
-        LookupPlan, its kernel reading the cover_tables index file that
-        each Python worker maps once (covertable.lookup_plan). Same output
-        as assign() (pinned in tests/test_covertable.py); use it when the
-        zone set is past the broadcast budget (the 142 MB world index is
-        already 71% of the repo's 200 MB budget). The tiny (zone_id, tzid)
-        dim still broadcasts — it is O(zones), not O(edges)."""
-        return self._join_plan(spark, cache_dir).apply(images_df)
+    def assign(self, spark, images_df):
+        """The distributed lookup over an image+caption DataFrame
+        (engine.assign_timezones' output): one Arrow crossing per row, its
+        kernel reading the cover_tables index file that each Python worker
+        maps once, plus the tiny (zone_id, tzid) dim's broadcast join."""
+        return self._plan(spark).apply(images_df)
+
+    assign_join = assign  # the join path's name: the same memoized plan
 
     def assign_bucketed(self, spark, images_df, table_name: str, n_buckets: int = 32):
         """assign() + persist the result BUCKETED on cell_id (sorted within

@@ -14,8 +14,9 @@ Column expressions, and ANSI SQL — no shuffle, no UDF), plus a driver-compiled
   nearby edges.
 
 The cover is compiled once on the driver (numpy; zone slices on a thread pool
-for reference-scale sets), broadcast to executors, and probed inside the
-engine's `F.arrow_udf` kernels (engine.lookup_kernel / assign_kernel over
+for reference-scale sets), shipped to executors as one index file
+(save_index / open_index, mapped once per Python worker), and probed inside
+the engine's `F.arrow_udf` kernels (engine.lookup_kernel / assign_kernel over
 pyarrow arrays) — the Spark-native replacement for the reference's mmap +
 rebuild-R-tree-on-load design (timezone.go:192, 208-214).
 
@@ -197,7 +198,7 @@ class Zone:
 
 @dataclass
 class CompiledIndex:
-    """Broadcast-able compiled cover. All numpy, pickle-friendly, compact.
+    """The compiled cover. All numpy, one flat file (save_index), compact.
 
     Per resolution r in [base_res, max_res]: sorted interior cell ids +
     CSR lists of zones that FULLY claim each cell. At max_res additionally:
@@ -221,8 +222,8 @@ class CompiledIndex:
     # per-candidate edge subsets MATERIALIZED contiguously (float32): turns
     # the hot ray-cast loop into sequential streams instead of random gathers
     # (measured ~2x on uniform points; costs ~16B/edge of duplication).
-    # For reference-scale zone sets the duplication would blow the broadcast
-    # budget (~210 MB at 13M duplicated edge rows), so above
+    # For reference-scale zone sets the duplication would blow the index
+    # size (~210 MB at 13M duplicated edge rows), so above
     # _MATERIALIZE_MAX rows compile stores int32 indices into the global
     # edge arrays instead (b_edge_idx) and the probe gathers per batch.
     b_ea_lat: np.ndarray = None
@@ -806,7 +807,8 @@ def compile_cover(
     zones in one batched pass, so the Python cost is per level, not per
     zone. This is the engine analog of the reference's build step
     (AddTimezone + BuildRtree, timezone.go:29-45, 208-214), executed once
-    per job then sc.broadcast().
+    per zone set on the driver; the index then reaches the workers as one
+    mapped file (save_index, covertable.CoverTables).
 
     Zones are independent, so reference-scale sets (~24k polygons, at least
     _PARALLEL_COMPILE_MIN live zones) map _cover_zones over zone slices on a
@@ -1103,7 +1105,7 @@ def _splice_in(idx: CompiledIndex, zone: Zone, pos: int) -> CompiledIndex:
 
 def delete_zone(idx: CompiledIndex, zone_id: int) -> CompiledIndex:
     """A new CompiledIndex with ``zone_id`` removed (input left untouched —
-    it may be live in a broadcast). O(index size), no cover recompute."""
+    it may be live in a lookup plan). O(index size), no cover recompute."""
     pos, present = _zone_pos(idx, zone_id)
     if not present:
         raise KeyError(f"zone_id {zone_id} not in index")
@@ -1329,7 +1331,7 @@ def assign_points(idx: CompiledIndex, lat, lng) -> tuple:
 
     Returns (zone_id int32, via_knn bool). via_knn marks the kNN answers; a
     point with no answer at all (NaN or infinite coordinates) gets zone_id
-    -1 and via_knn False. Every lookup path — the broadcast Arrow UDFs, the
+    -1 and via_knn False. Every lookup path — the assign Arrow UDFs, the
     fused image kernels, describe_point — goes through here."""
     lat = np.asarray(lat, dtype=F32)
     lng = np.asarray(lng, dtype=F32)

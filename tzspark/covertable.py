@@ -1,20 +1,15 @@
-"""Cover-as-table lookup: the broadcast-free path.
-
-The default engine broadcasts the whole CompiledIndex
-(engine.assign_timezones) and every Python worker unpickles its own copy,
-which breaks once the zone set outgrows the broadcast budget (142 MB at the
-synthetic reference operating point; a 10x richer or multi-tenant zone
-table). This module is the other physical strategy for the SAME logical
-operator (SURVEY.md §2.3 J1).
+"""The compiled cover as shipped index files: how every lookup's index
+reaches a Python worker.
 
 A CoverTables is a handle from keys to index files (cells.save_index): one
 file per zone set, one per tenant after union_tenants, each named by its
 content hash and shipped once per Spark application (SparkContext.addFile).
 Each Python worker maps a file once (cells.open_index, cached per process by
-that hash), so an executor's workers share one copy in the page cache. The
-probes are the broadcast path's own (engine.LookupPlan, lookup_kernel,
-assign_kernel, with_contained_zone) with the handle in place of the
-broadcast; a tenant-keyed cover's kernel splits each Arrow batch on the
+that hash), so an executor's workers share one copy in the page cache, as
+the reference serves every lookup from one mmap store (timezone.go:19-27).
+The engine's kernels (engine.LookupPlan, lookup_udf, assign_udf,
+lookup_tile_onepass, zonal_channel_rollup) take the handle and read
+``cover.value``; a tenant-keyed cover's kernel splits each Arrow batch on the
 tenant column. Each row is probed in the task that reads it: no shuffle, no
 salt, no join back, and a hot spot stays spread over the input's partitions.
 """
@@ -85,8 +80,7 @@ class CoverTables:
     ``files`` maps a tenant (a str, or None for a single zone set) to the
     path of its index file; ``keys`` names the tenant column the points
     carry: ('tenant',) after union_tenants, () otherwise. ``value`` is the
-    single zone set's index, as Broadcast.value is, so engine.lookup_udf,
-    assign_udf and LookupPlan take the handle in place of a broadcast.
+    single zone set's index, mapped in the calling process.
     """
 
     def __init__(self, spark: SparkSession, files: dict, keys: tuple = ()):
@@ -106,6 +100,12 @@ class CoverTables:
     @property
     def value(self) -> CompiledIndex:
         return _opened(self.files[None])
+
+    def release(self):
+        """Drop this process's mappings of the handle's files (a worker that
+        still needs one maps it again)."""
+        for path in self.files.values():
+            _OPENED.pop(os.path.basename(path), None)
 
     @classmethod
     def from_index(cls, spark: SparkSession, idx: CompiledIndex) -> "CoverTables":
@@ -207,44 +207,40 @@ def _assign_probe(cover: CoverTables):
     return assign_udf(cover).asNondeterministic()
 
 
-def assign_via_join(points: DataFrame, key_col: str, cover: CoverTables,
+def assign_via_join(points: DataFrame, cover: CoverTables,
                     lat_col: str = "lat", lng_col: str = "lng") -> DataFrame:
-    """The full engine assignment (engine.assign_udf semantics) with zero
-    broadcast of the cover: adds zone_id + via_knn to ``points``, one row
+    """The full engine assignment (engine.assign_udf semantics, also over a
+    tenant-keyed cover): adds zone_id + via_knn to ``points``, one row
     per input row. A point no zone contains gets its kNN zone (via_knn
     True); a null or NaN coordinate gets (-1, False). A tenant-keyed
-    cover's ``keys`` column (tenant) must be present in ``points``.
-    ``key_col`` is not read: nothing joins back on it, so any key (repeated
-    or null) is fine."""
+    cover's ``keys`` column (tenant) must be present in ``points``. Nothing
+    joins back on a key, so a repeated or null key is fine."""
     a = points.withColumn("_a", _assign_probe(cover)(F.col(lat_col), F.col(lng_col)))
     return a.select(*points.columns, "_a.zone_id", "_a.via_knn")
 
 
-def resolve_via_join(points: DataFrame, key_col: str, cover: CoverTables,
+def resolve_via_join(points: DataFrame, cover: CoverTables,
                      lat_col: str = "lat", lng_col: str = "lng") -> DataFrame:
     """assign_via_join without the kNN answers: adds zone_id, the argmin
     containing zone (cells.resolve_points semantics), -1 when none."""
     return with_contained_zone(points, _assign_probe(cover), lat_col, lng_col)
 
 
-def knn_via_join(points: DataFrame, key_col: str, cover: CoverTables,
+def knn_via_join(points: DataFrame, cover: CoverTables,
                  lat_col: str = "lat", lng_col: str = "lng") -> DataFrame:
     """The kNN answers of assign_via_join (cells.knn_fallback semantics):
     the rows no zone contains, with their nearest zone as zone_id. Rows a
     zone contains and rows with no answer (null/NaN coordinates) drop out."""
-    a = assign_via_join(points, key_col, cover, lat_col, lng_col)
+    a = assign_via_join(points, cover, lat_col, lng_col)
     return a.where(F.col("via_knn")).drop("via_knn")
 
 
-def assign_images_via_join(images: DataFrame, cover: CoverTables,
-                           key_col: str = "image_id") -> DataFrame:
-    """engine.assign_timezones' rows and columns without tzid, with zero
-    broadcast of the cover: GPS extract, quarantine (bad blob OR
-    out-of-domain coords) and the lookup in one Arrow crossing over the
-    header prefix (lookup_plan). A tenant-keyed cover needs the tenant
-    column in ``images``. Used by api.TimezoneLookup.assign_join (with the
-    tzid attach) and streaming.stream_assign_join. ``key_col`` is not
-    read."""
+def assign_images_via_join(images: DataFrame, cover: CoverTables) -> DataFrame:
+    """engine.assign_timezones' rows and columns without tzid: GPS extract,
+    quarantine (bad blob OR out-of-domain coords) and the lookup in one
+    Arrow crossing over the header prefix (lookup_plan). A tenant-keyed
+    cover needs the tenant column in ``images``. Used by
+    streaming.stream_assign_join."""
     return lookup_plan(cover).apply(images)
 
 

@@ -2,10 +2,10 @@
 
 Spark-first re-expression of the reference's query lifecycle
 (/root/reference/timezone.go:58-78 `Search`): the R-tree probe becomes a
-broadcast compiled cell cover probed inside Arrow UDFs, the per-point loop
-becomes one declarative DataFrame plan that Catalyst optimizes (validity
-filter pushed to the scan, tzid attach as a broadcast hash join, tile rollup
-as a salted two-phase aggregation).
+compiled cell cover, shipped as one mapped index file and probed inside
+Arrow UDFs, the per-point loop becomes one declarative DataFrame plan that
+Catalyst optimizes (validity filter pushed to the scan, tzid attach as a
+broadcast hash join, tile rollup as a salted two-phase aggregation).
 
 One Arrow kernel per operation: GPS extract (gps_kernel), the fused image
 lookup (lookup_kernel) and the coordinate assignment (assign_kernel) are
@@ -20,10 +20,10 @@ Scale notes (the 100 TB design, tested at local[*]):
 * the ONLY shuffle in the lookup path is none at all — GPS extract, cell
   encode, cover probe and kNN fallback are all per-row/narrow; tzid attach is
   a broadcast join; so the join scales linearly with executors,
-* the compiled cover is broadcast once per job (tens of MB for the real
-  timezone set — same order as the reference's ~50 MB mmap db); past that
-  budget the same LookupPlan probes an index file each Python worker maps
-  once (covertable, cells.open_index), still with no shuffle,
+* the compiled cover reaches the workers one way: an index file
+  (covertable.CoverTables, cells.save_index) shipped once per application
+  and mapped once per Python worker, like the reference's mmap db — every
+  kernel takes that handle (``cover``) and reads ``cover.value``,
 * resolve + kNN run in ONE pass inside the UDF (no second scan, no cache of
   the matched/unmatched split); `via_knn` is emitted so downstream can audit,
 * skewed tiles (dense urban cells) are handled at aggregation time by salted
@@ -35,9 +35,9 @@ Per-task worker cost: every Spark Python task first runs PySpark's
 archive importer (16 in a worker, over pyspark.zip, the Spark jar and the
 py4j zip: 26,672 entries in pure Python), 100-200 ms per task against ~55 ms of
 lookup kernels for a 40k-image op. CPython 3.13 refreshes lazily. Importing
-tzspark (which every worker does when it unpickles a kernel or a
-CompiledIndex) installs a stat guard (`_zipimport.py`) so an unchanged
-archive is not re-read; a rewritten or removed one still is. It is not a
+tzspark (which every worker does when it unpickles a kernel and its
+covertable.CoverTables handle) installs a stat guard (`_zipimport.py`) so an
+unchanged archive is not re-read; a rewritten or removed one still is. It is not a
 custom `spark.python.daemon.module`, because executors that receive tzspark
 as `--py-files` could not import the daemon. The layer it moves is
 `engine.overhead_s` / `spark.executor_run_ms` in the benchmark's traced run.
@@ -57,7 +57,6 @@ from .cells import (
     CompiledIndex,
     assign_points,
     cell_id_col,
-    compile_cover,
     in_domain,
 )
 from .imagecodec import parse_headers
@@ -325,7 +324,7 @@ def gps_header_col(bytes_col):
     return F.substring(bytes_col, 1, HEADER_LEN)
 
 
-def lookup_udf(idx_bcast):
+def lookup_udf(cover):
     """The WHOLE reference `Search` (timezone.go:58-78) in ONE Arrow crossing:
     header bytes -> (lat, lng, validity, zone_id, via_knn) per batch
     (lookup_kernel).
@@ -342,12 +341,12 @@ def lookup_udf(idx_bcast):
 
     @F.arrow_udf(LOOKUP_STRUCT)
     def _lookup(hdr: pa.Array) -> pa.Array:
-        return lookup_kernel(idx_bcast.value, hdr)
+        return lookup_kernel(cover.value, hdr)
 
     return _lookup.asNondeterministic()
 
 
-def assign_udf(idx_bcast):
+def assign_udf(cover):
     """arrow_udf: (lat, lng) -> (zone_id, via_knn). One pass: interior-cell
     O(1) hit, boundary-cell exact float32 ray cast, kNN for the remainder —
     the whole reference `Search` (timezone.go:58-78) per Arrow batch
@@ -358,7 +357,7 @@ def assign_udf(idx_bcast):
 
     @F.arrow_udf(ASSIGN_STRUCT)
     def _assign(lat: pa.Array, lng: pa.Array) -> pa.Array:
-        return assign_kernel(idx_bcast.value, lat, lng)
+        return assign_kernel(cover.value, lat, lng)
 
     return _assign
 
@@ -381,18 +380,12 @@ def with_contained_zone(points: DataFrame, probe, lat_col: str = "lat",
 # ---------------------------------------------------------------------------
 
 
-def broadcast_cover(spark: SparkSession, zones: list, base_res=4, max_res=DEFAULT_MAX_RES):
-    """Driver-side compile + broadcast (reference BuildRtree analog)."""
-    idx = compile_cover(zones, base_res=base_res, max_res=max_res)
-    return spark.sparkContext.broadcast(idx), idx.stats
-
-
 class LookupPlan:
     """The image lookup as Columns, built once per (index, zone dim,
-    max_res) and applied to any number of image DataFrames. ``idx_bcast``
-    is a broadcast or another handle whose ``value`` is the index
-    (covertable.CoverTables); ``probe`` replaces the lookup_udf Column (a
-    LOOKUP_STRUCT); without ``zone_dim`` no tzid is attached.
+    max_res) and applied to any number of image DataFrames. ``cover`` is
+    the shipped index file (covertable.CoverTables; its ``value`` is the
+    index, mapped where the rows are); ``probe`` replaces the lookup_udf
+    Column (a LOOKUP_STRUCT); without ``zone_dim`` no tzid is attached.
 
     Every ``F.*`` call is a py4j round trip (PySpark 4 also captures its
     call site): building these Columns takes ~500 round trips, more driver
@@ -402,12 +395,12 @@ class LookupPlan:
     call, so one plan's outputs can meet in one query (a union, a
     self-join)."""
 
-    def __init__(self, idx_bcast, zone_dim: DataFrame, max_res: int = DEFAULT_MAX_RES,
+    def __init__(self, cover, zone_dim: DataFrame, max_res: int = DEFAULT_MAX_RES,
                  probe=None):
-        self.idx_bcast = idx_bcast
+        self.cover = cover
         self._all = F.col("*")
         if probe is None:
-            probe = lookup_udf(idx_bcast)(gps_header_col(F.col("bytes")))
+            probe = lookup_udf(cover)(gps_header_col(F.col("bytes")))
         self._probe = probe.alias("a")
         self._ok = F.col("a.gps_ok")
         lat, lng = F.col("a.lat"), F.col("a.lng")
@@ -434,7 +427,7 @@ class LookupPlan:
 
 def assign_timezones(
     images: DataFrame,
-    idx_bcast,
+    cover,
     zone_dim: DataFrame,
     max_res: int = DEFAULT_MAX_RES,
 ) -> DataFrame:
@@ -445,7 +438,8 @@ def assign_timezones(
     + quarantined flag (bad blob OR out-of-domain coords — the engine's
       row-level form of ErrCoordinatesNotValid, timezone.go:62-64)
     + cell_id (pure column arithmetic, no UDF, no shuffle)
-    + zone_id, via_knn (broadcast cover probe)
+    + zone_id, via_knn (the probe of ``cover``, a covertable.CoverTables:
+      the index file each Python worker maps once)
     + tzid (broadcast hash join on the small zone dimension)
     in the column order zone_id, the image columns, lat, lng, quarantined,
     via_knn, cell_id, tzid. Quarantined rows are dropped.
@@ -455,9 +449,10 @@ def assign_timezones(
     kNN run fused inside lookup_udf — the multi-KB payload column never
     enters Python on this path (measured ~6x crossing cost when it does).
     A caller that looks up many DataFrames against one index keeps a
-    LookupPlan instead (TimezoneLookup.assign does).
+    LookupPlan instead (TimezoneLookup.assign does). It runs unchanged on a
+    stream (read_image_stream): the lookup is stateless per row.
     """
-    return LookupPlan(idx_bcast, zone_dim, max_res).apply(images)
+    return LookupPlan(cover, zone_dim, max_res).apply(images)
 
 
 def quarantined_rows(images: DataFrame) -> DataFrame:
@@ -587,7 +582,7 @@ _ONEPASS_SCHEMA = T.StructType(
 
 
 def lookup_tile_onepass(
-    images: DataFrame, idx_bcast, max_res: int = DEFAULT_MAX_RES
+    images: DataFrame, cover, max_res: int = DEFAULT_MAX_RES
 ) -> DataFrame:
     """Per-zone rollup AND per-tile raster stats from ONE scan + ONE Arrow
     crossing: header parse -> validity -> resolve/kNN -> vectorized decode ->
@@ -604,7 +599,7 @@ def lookup_tile_onepass(
     from .cells import cell_id as cell_id_np
 
     def _fused(batches):
-        idx: CompiledIndex = idx_bcast.value
+        idx: CompiledIndex = cover.value
         for batch in batches:
             st = _image_batch_stats(batch)
             lat, lng = st["lat"], st["lng"]
@@ -681,7 +676,7 @@ _ZONAL_SCHEMA = T.StructType(
 
 
 def zonal_channel_rollup(
-    images: DataFrame, idx_bcast, zone_dim: DataFrame
+    images: DataFrame, cover, zone_dim: DataFrame
 ) -> DataFrame:
     """Raster ZONAL statistics: per-polygon aggregates of the decoded pixel
     content, fused into one scan + one Arrow crossing — the vector-zone
@@ -697,7 +692,7 @@ def zonal_channel_rollup(
     end."""
 
     def _fused(batches):
-        idx: CompiledIndex = idx_bcast.value
+        idx: CompiledIndex = cover.value
         for batch in batches:
             st = _image_batch_stats(batch)
             okw = np.flatnonzero(st["ok"])

@@ -303,26 +303,22 @@ def q41_full_engine_boxes(spark, sf_dir):
     rectangle PIP is exactly SQL-expressible. Per-image output (not a
     rollup) so any row-level drift hash-fails."""
     from .engine import assign_timezones, zone_dim_df
-    from .queries_geo import box_zones
+    from .queries_geo import box_cover, box_zones
 
     zones = box_zones(spark, sf_dir)
-    from .cells import compile_cover
-
-    idx = compile_cover(zones, base_res=3, max_res=7)
-    idx_b = spark.sparkContext.broadcast(idx)
     dim = zone_dim_df(spark, zones)
-    a = assign_timezones(_images(spark, sf_dir), idx_b, dim, max_res=7)
+    a = assign_timezones(_images(spark, sf_dir), box_cover(spark, zones), dim, max_res=7)
     return a.select(
         "image_id", "lat", "lng", "zone_id", "via_knn", "cell_id", "tzid"
     )
 
 
 def q42_full_engine_boxes_join(spark, sf_dir):
-    """q41's pipeline on the BROADCAST-FREE physical strategy: the facade's
-    assign_join (GPS extract -> quarantine -> resolve/kNN against the
-    mapped index file -> tzid attach) must produce the exact same
-    per-image rows — same composed DuckDB oracle as q41, so both physical
-    strategies of the lookup are value-pinned end to end."""
+    """q41's pipeline through the facade: TimezoneLookup.assign_join (GPS
+    extract -> quarantine -> resolve/kNN against the mapped index file ->
+    tzid attach) must produce the exact same per-image rows — same composed
+    DuckDB oracle as q41, so the facade's memoized plan is value-pinned end
+    to end."""
     from .api import TimezoneLookup
     from .queries_geo import box_zones
 
@@ -564,13 +560,15 @@ def q27_full_engine_synthetic(spark, sf_dir):
     oracle that inlines every ring edge and replays the float32 ray cast in
     SQL (_q27_sql) — plus the original pytest pin vs the float32 oracle."""
     from .datasets import images_from_events
-    from .engine import assign_timezones, broadcast_cover, zone_dim_df
+    from .cells import compile_cover
+    from .covertable import CoverTables
+    from .engine import assign_timezones, zone_dim_df
     from .zones import make_zones
 
     zones = make_zones(n_coast=8000)
-    idx_b, _ = broadcast_cover(spark, zones)
+    cov = CoverTables.from_index(spark, compile_cover(zones))
     dim = zone_dim_df(spark, zones)
-    assigned = assign_timezones(images_from_events(spark, sf_dir), idx_b, dim)
+    assigned = assign_timezones(images_from_events(spark, sf_dir), cov, dim)
     return (
         assigned.groupBy("tzid")
         .agg(
@@ -639,10 +637,9 @@ def q31_stream_assign(spark, sf_dir):
     engine. Coastline-zone streaming stays pinned in tests/test_streaming."""
     import tempfile
 
-    from .cells import compile_cover
-    from .engine import zone_dim_df
-    from .queries_geo import box_zones
-    from .streaming import read_image_stream, run_available_now, stream_assign
+    from .engine import assign_timezones, zone_dim_df
+    from .queries_geo import box_cover, box_zones
+    from .streaming import read_image_stream, run_available_now
 
     tmp = tempfile.mkdtemp(prefix="tzq31_")
     # 8 input files, 8 files/trigger -> the AvailableNow drain is ONE
@@ -651,10 +648,9 @@ def q31_stream_assign(spark, sf_dir):
         f"{tmp}/images"
     )
     zones = box_zones(spark, sf_dir)
-    idx_b = spark.sparkContext.broadcast(compile_cover(zones, base_res=3, max_res=7))
     dim = zone_dim_df(spark, zones)
     stream = read_image_stream(spark, f"{tmp}/images", per_trigger_files=8)
-    assigned = stream_assign(stream, idx_b, dim, max_res=7).select(
+    assigned = assign_timezones(stream, box_cover(spark, zones), dim, max_res=7).select(
         "image_id", "zone_id", "tzid", "via_knn"
     )
     run_available_now(assigned, f"{tmp}/ckpt", "q31_out")
@@ -1003,15 +999,12 @@ def _q41_assigned(spark, sf_dir):
     """The q41 fused per-image zone assignment (GPS extract -> cover PIP ->
     kNN -> tzid broadcast join) over the 25 nation boxes — shared input
     stage for the downstream analytics operators (q82/q83)."""
-    from .cells import compile_cover
     from .engine import assign_timezones, zone_dim_df
-    from .queries_geo import box_zones
+    from .queries_geo import box_cover, box_zones
 
     zones = box_zones(spark, sf_dir)
-    idx = compile_cover(zones, base_res=3, max_res=7)
-    idx_b = spark.sparkContext.broadcast(idx)
     dim = zone_dim_df(spark, zones)
-    a = assign_timezones(_images(spark, sf_dir), idx_b, dim, max_res=7)
+    a = assign_timezones(_images(spark, sf_dir), box_cover(spark, zones), dim, max_res=7)
     return a, dim
 
 
@@ -1364,15 +1357,11 @@ def q71_zonal_image_stats(spark, sf_dir):
     pixel-synthesis channel sums — integer-exact all the way, so the
     cross-engine hash match is exact, not approximate."""
     from .engine import zonal_channel_rollup, zone_dim_df
-    from .queries_geo import box_zones
-
-    from .cells import compile_cover
+    from .queries_geo import box_cover, box_zones
 
     zones = box_zones(spark, sf_dir)
-    idx = compile_cover(zones, base_res=3, max_res=7)
-    idx_b = spark.sparkContext.broadcast(idx)
     dim = zone_dim_df(spark, zones)
-    return zonal_channel_rollup(_images(spark, sf_dir), idx_b, dim).orderBy(
+    return zonal_channel_rollup(_images(spark, sf_dir), box_cover(spark, zones), dim).orderBy(
         "zone_id"
     )
 

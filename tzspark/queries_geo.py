@@ -99,6 +99,17 @@ def box_zones(spark: SparkSession, sf_dir: str) -> list:
     return zones
 
 
+def box_cover(spark: SparkSession, zones: list, mutated: bool = False):
+    """The nation boxes' compiled cover (base_res 3, max_res 7) as a shipped
+    index file (covertable.CoverTables.from_index), the handle every box
+    lookup query probes; ``mutated`` applies _mutate_boxes first (q43, q89's
+    v1)."""
+    from .covertable import CoverTables
+
+    idx = compile_cover(zones, base_res=3, max_res=7)
+    return CoverTables.from_index(spark, _mutate_boxes(idx, zones) if mutated else idx)
+
+
 _CONTAIN = (
     "p.lat >= b.min_lat AND p.lat < b.max_lat "
     "AND p.lng >= b.min_lng AND p.lng < b.max_lng"
@@ -395,9 +406,8 @@ def q11_resolve_cover(spark, sf_dir):
     """J1: the full engine path — compiled cell cover (interior shortcut +
     boundary exact PIP) probed in an Arrow UDF (engine.assign_udf, kNN
     answers masked to -1 by with_contained_zone). Same oracle as q10."""
-    zones = box_zones(spark, sf_dir)
-    bidx = spark.sparkContext.broadcast(compile_cover(zones, base_res=3, max_res=7))
-    p = with_contained_zone(pts_df(spark, sf_dir), assign_udf(bidx))
+    cov = box_cover(spark, box_zones(spark, sf_dir))
+    p = with_contained_zone(pts_df(spark, sf_dir), assign_udf(cov))
     return p.select("event_id", "zone_id")
 
 
@@ -410,10 +420,7 @@ def q12_knn_engine(spark, sf_dir):
     One assign probe, filtered on via_knn: a single Python stage. The probe
     is marked nondeterministic so Catalyst cannot copy it into the filter
     (the q106 single-evaluation guard)."""
-    zones = box_zones(spark, sf_dir)
-    idx = compile_cover(zones, base_res=3, max_res=7)
-    bidx = spark.sparkContext.broadcast(idx)
-    probe = assign_udf(bidx).asNondeterministic()
+    probe = assign_udf(box_cover(spark, box_zones(spark, sf_dir))).asNondeterministic()
     a = pts_df(spark, sf_dir).select(
         "event_id", probe(F.col("lat"), F.col("lng")).alias("a")
     )
@@ -440,33 +447,24 @@ SELECT event_id, CAST(zone_id AS INTEGER) AS zone_id FROM d WHERE rn = 1
 
 
 def q39_resolve_join(spark, sf_dir):
-    """J1, broadcast-free physical strategy: the SAME resolve semantics as
-    q11 (compiled cover, argmin zone_id, float32 half-open PIP) executed on
-    the cover-as-table form (covertable.py): q11's assign probe with its kNN
-    answers masked, reading the index from a file each Python worker maps
-    once instead of a broadcast. Same oracle as q10/q11; nothing
-    index-sized is broadcast, so the path survives zone tables 10x past the
-    driver's broadcast budget."""
-    from .covertable import CoverTables, resolve_via_join
+    """J1 through covertable.resolve_via_join: the SAME resolve semantics as
+    q11 (compiled cover, argmin zone_id, float32 half-open PIP), q11's
+    assign probe with its kNN answers masked, reading the index file each
+    Python worker maps once. Same oracle as q10/q11."""
+    from .covertable import resolve_via_join
 
-    zones = box_zones(spark, sf_dir)
-    idx = compile_cover(zones, base_res=3, max_res=7)
-    cov = CoverTables.from_index(spark, idx)
-    p = pts_df(spark, sf_dir)
-    return resolve_via_join(p, "event_id", cov).select("event_id", "zone_id")
+    cov = box_cover(spark, box_zones(spark, sf_dir))
+    return resolve_via_join(pts_df(spark, sf_dir), cov).select("event_id", "zone_id")
 
 
 def q40_knn_join(spark, sf_dir):
-    """J2, broadcast-free: the points no box contains -> nearest zone, the
+    """J2 through covertable: the points no box contains -> nearest zone, the
     kNN answers of the same index-file probe as q39
     (covertable.knn_via_join). Same oracle as q12."""
-    from .covertable import CoverTables, knn_via_join
+    from .covertable import knn_via_join
 
-    zones = box_zones(spark, sf_dir)
-    idx = compile_cover(zones, base_res=3, max_res=7)
-    cov = CoverTables.from_index(spark, idx)
-    p = pts_df(spark, sf_dir)
-    return knn_via_join(p, "event_id", cov).select("event_id", "zone_id")
+    cov = box_cover(spark, box_zones(spark, sf_dir))
+    return knn_via_join(pts_df(spark, sf_dir), cov).select("event_id", "zone_id")
 
 
 def _mutate_boxes(idx, zones):
@@ -512,10 +510,8 @@ def q43_zone_update_resolve(spark, sf_dir):
     tests/test_index_update.py). The other 23 zones' covers are never
     recomputed. Oracle: the same f32 containment argmin over the mutated
     box table expressed in SQL."""
-    zones = box_zones(spark, sf_dir)
-    idx = _mutate_boxes(compile_cover(zones, base_res=3, max_res=7), zones)
-    bidx = spark.sparkContext.broadcast(idx)
-    p = with_contained_zone(pts_df(spark, sf_dir), assign_udf(bidx))
+    cov = box_cover(spark, box_zones(spark, sf_dir), mutated=True)
+    p = with_contained_zone(pts_df(spark, sf_dir), assign_udf(cov))
     return p.select("event_id", "zone_id")
 
 
@@ -540,14 +536,11 @@ def q89_versioned_resolve(spark, sf_dir):
     boxes; v1 = q43's mutated set (zone 7 deleted, 12 grown, 100 added),
     effective at the cutover. Implementation: one compiled cover per
     version, events sliced by event time, each slice probed with its
-    epoch's broadcast, slices unioned — at 10^12 rows the time slice is a
+    epoch's index file, slices unioned — at 10^12 rows the time slice is a
     parquet partition-prune (events are date-partitioned), so each epoch's
     backfill scans only its own files and no row is probed twice."""
     zones = box_zones(spark, sf_dir)
-    idx0 = compile_cover(zones, base_res=3, max_res=7)
-    idx1 = _mutate_boxes(idx0, zones)
-    b0 = spark.sparkContext.broadcast(idx0)
-    b1 = spark.sparkContext.broadcast(idx1)
+    b0, b1 = box_cover(spark, zones), box_cover(spark, zones, mutated=True)
     p = pts_df(spark, sf_dir, with_user=True)
     cut = F.lit(_CUTOVER).cast("timestamp")
     out0 = with_contained_zone(p.where(F.col("ts") < cut), assign_udf(b0)).select(
@@ -670,7 +663,7 @@ def q52_multi_tenant_resolve(spark, sf_dir):
     p = pts_df(spark, sf_dir).withColumn(
         "tenant", F.when(F.col("event_id") % 2 == 0, "a").otherwise("b")
     )
-    return assign_via_join(p, "event_id", cov).select(
+    return assign_via_join(p, cov).select(
         "event_id", "tenant", "zone_id", "via_knn"
     )
 
@@ -1254,15 +1247,14 @@ def q65_zone_transitions(spark, sf_dir):
     q11 kernel; -1 = no zone), each user's events are ordered by (ts,
     event_id), and one row is emitted per zone CHANGE — from_zone ->
     to_zone at the crossing event. Scale shape: the assignment is narrow
-    (broadcast cover probe, zero shuffle), the LAG needs exactly ONE
+    (cover probe, zero shuffle), the LAG needs exactly ONE
     Exchange on user_id, and the change filter is partition-local — the
     same plan at 10^12 rows. The first event per user is not a transition
     (prev IS NULL)."""
     from pyspark.sql import Window as W
 
-    zones = box_zones(spark, sf_dir)
-    bidx = spark.sparkContext.broadcast(compile_cover(zones, base_res=3, max_res=7))
-    a = with_contained_zone(pts_df(spark, sf_dir, with_user=True), assign_udf(bidx))
+    cov = box_cover(spark, box_zones(spark, sf_dir))
+    a = with_contained_zone(pts_df(spark, sf_dir, with_user=True), assign_udf(cov))
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     t = a.select(
         "user_id",
@@ -1432,7 +1424,7 @@ def q67_clip_conservation(spark, sf_dir):
     is built JVM-side with sequence()/explode over zone rows, fragments
     never materialize — mapInPandas folds each pair to a partial area sum
     in-batch and ONE final shuffle aggregates per zone. (At world scale
-    the geometry rides once per partition via the broadcast cover rather
+    the geometry rides once per partition via the shipped cover rather
     than per pair row — same fold.)"""
     from .cells import cell_bounds
     from .geom import clip_ring_rect, ring_area_signed
@@ -1792,14 +1784,13 @@ def q75_zone_dwell(spark, sf_dir):
     The visit id is the running sum of zone-change flags, computed in the
     SAME ordered window (one user_id Exchange) that feeds the LAG; the
     per-visit rollup reuses that partitioning, so the whole operator is
-    one shuffle + a narrow broadcast-cover probe. All outputs are exact
+    one shuffle + a narrow cover probe. All outputs are exact
     integers (epoch microseconds), so the oracle match is exact."""
     from pyspark.sql import Window as W
 
-    zones = box_zones(spark, sf_dir)
-    bidx = spark.sparkContext.broadcast(compile_cover(zones, base_res=3, max_res=7))
+    cov = box_cover(spark, box_zones(spark, sf_dir))
     epoch = F.to_timestamp(F.lit("1970-01-01 00:00:00"))
-    a = with_contained_zone(pts_df(spark, sf_dir, with_user=True), assign_udf(bidx))
+    a = with_contained_zone(pts_df(spark, sf_dir, with_user=True), assign_udf(cov))
     a = a.withColumn("tus", F.timestamp_diff("MICROSECOND", epoch, F.col("ts")))
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("zone_id").over(w)
@@ -2206,7 +2197,7 @@ def q88_zone_value_quantiles(spark, sf_dir):
     """Per-zone value-distribution profile — exact distributed quantiles
     (p25/p50/p90/p99) of the event metric per resolved timezone polygon,
     the latency/metric-percentile rollup every geo-observability pipeline
-    runs. Zone resolution reuses the broadcast compiled-cover probe (one
+    runs. Zone resolution reuses the compiled-cover probe (one
     Arrow stage); Spark's exact `percentile` agg matches DuckDB's
     quantile_cont interpolation (rank p*(n-1), linear) so the profile is
     value-pinned cross-engine. Scale shape: percentile is a full-sort agg
@@ -2214,9 +2205,7 @@ def q88_zone_value_quantiles(spark, sf_dir):
     buckets per group before the one Exchange; for 10^12 rows you'd swap
     in approx_percentile with a documented error bound, keeping this
     exact form as the oracle anchor on samples."""
-    zones = box_zones(spark, sf_dir)
-    idx = compile_cover(zones, base_res=3, max_res=7)
-    bidx = spark.sparkContext.broadcast(idx)
+    cov = box_cover(spark, box_zones(spark, sf_dir))
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     p = ev.select(
         "event_id",
@@ -2224,7 +2213,7 @@ def q88_zone_value_quantiles(spark, sf_dir):
         ((F.col("user_id") * 7 % 180) - 90 + F.col("value") / 1e6).alias("lat"),
         ((F.col("event_id") * 13 % 360) - 180).cast("double").alias("lng"),
     )
-    r = with_contained_zone(p, assign_udf(bidx)).select("value", "zone_id")
+    r = with_contained_zone(p, assign_udf(cov)).select("value", "zone_id")
     q = F.expr("percentile(value, array(0.25D, 0.5D, 0.9D, 0.99D))")
     return (
         r.groupBy("zone_id")
@@ -2769,11 +2758,9 @@ def q106_boundary_distance(spark, sf_dir):
     differs between the engines: Spark rounds 1.0001295 half-up from its
     shortest decimal form to 1.00013, DuckDB rounds the binary value
     1.00012949999... to 1.000129. Scale shape: the resolve is the engine's
-    broadcast probe, the rest never shuffles; the margin filter pushes
+    cover probe, the rest never shuffles; the margin filter pushes
     down to a scan predicate at 10^12 rows."""
-    zones = box_zones(spark, sf_dir)
-    idx = compile_cover(zones, base_res=3, max_res=7)
-    bidx = spark.sparkContext.broadcast(idx)
+    cov = box_cover(spark, box_zones(spark, sf_dir))
     # no explicit zone_id >= 0 filter (the inner join against boxes, ids all
     # >= 0, drops unresolved rows for free) AND the probe is marked
     # nondeterministic — the same single-evaluation guard the fused engine
@@ -2781,7 +2768,7 @@ def q106_boundary_distance(spark, sf_dir):
     # join-key isnotnull filter extracts the Python UDF twice (observed as
     # two ArrowEvalPython stages = the probe running 2x per row);
     # PLANS.md asserts the probe stays single
-    r = with_contained_zone(pts_df(spark, sf_dir), assign_udf(bidx).asNondeterministic())
+    r = with_contained_zone(pts_df(spark, sf_dir), assign_udf(cov).asNondeterministic())
     b = boxes_df(spark, sf_dir).select("zone_id", "min_lat", "max_lat",
                                        "min_lng", "max_lng")
     j = r.join(F.broadcast(b), "zone_id")

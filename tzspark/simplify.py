@@ -2,7 +2,7 @@
 
 A zone-preprocessing operator the reference lacks but every geospatial
 engine ships: reduce ring vertex counts under a perpendicular-distance
-tolerance before compiling covers (smaller broadcast, faster ray casts)
+tolerance before compiling covers (smaller index file, faster ray casts)
 while keeping the shape within eps of the original.
 
 The recursion is the classic stack form per ring (bounded by ring length);

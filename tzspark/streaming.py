@@ -2,17 +2,16 @@
 
 The reference is strictly batch (no streaming anywhere — SURVEY.md §2.6);
 this is an engine extension: the same compiled-cover UDFs run unchanged
-inside a streaming query, over a broadcast or over a mapped index file,
-because the lookup path is stateless per-row (no shuffle, no state store).
-Late data only matters for the windowed tile aggregation, handled with a
-watermark.
+inside a streaming query over the mapped index file, because the lookup path
+is stateless per-row (no shuffle, no state store): engine.assign_timezones
+takes a read_image_stream DataFrame as it is (any sink, exactly-once with
+checkpointLocation). Late data only matters for the windowed tile
+aggregation, handled with a watermark.
 
 Patterns provided:
-* ``stream_assign``       — readStream -> GPS extract -> resolve/kNN -> tzid
-                            (stateless; any sink, exactly-once with
-                            checkpointLocation)
-* ``stream_assign_join``  — the same lookup over a mapped index file instead
-                            of a broadcast (covertable), into a parquet sink
+* ``stream_assign_join``  — the lookup without tzid
+                            (covertable.assign_images_via_join) into a
+                            parquet sink
 * ``stream_tile_counts``  — event-time windowed per-tile counts with a
                             watermark for late rows
 * ``run_available_now``   — drain-everything-then-stop runner (used by tests
@@ -36,35 +35,21 @@ def read_image_stream(spark: SparkSession, path: str, per_trigger_files: int = 4
     )
 
 
-def stream_assign(
-    images_stream: DataFrame, idx_bcast, zone_dim: DataFrame, max_res: int = None
-) -> DataFrame:
-    """The lookup pipeline on a stream — identical operators to the batch
-    path (engine.assign_timezones), reused verbatim: extract -> validity ->
-    cell encode -> broadcast cover probe -> broadcast tzid join."""
-    from .engine import DEFAULT_MAX_RES, assign_timezones
-
-    if max_res is None:
-        max_res = DEFAULT_MAX_RES
-    return assign_timezones(images_stream, idx_bcast, zone_dim, max_res=max_res)
-
-
 def stream_assign_join(
     images_stream: DataFrame,
     cover,
     out_path: str,
     checkpoint_dir: str,
-    key_col: str = "image_id",
 ):
-    """The BROADCAST-FREE lookup (covertable.assign_images_via_join) on a
-    stream, into a parquet file sink at ``out_path``: a plain stateless
-    query (the batch plan, pinned in tests/test_streaming.py), exactly-once
-    through checkpointLocation and the sink's metadata log. Returns the
-    stopped StreamingQuery (AvailableNow trigger — drain + stop)."""
+    """The lookup (covertable.assign_images_via_join) on a stream, into a
+    parquet file sink at ``out_path``: a plain stateless query (the batch
+    plan, pinned in tests/test_streaming.py), exactly-once through
+    checkpointLocation and the sink's metadata log. Returns the stopped
+    StreamingQuery (AvailableNow trigger — drain + stop)."""
     from .covertable import assign_images_via_join
 
     q = (
-        assign_images_via_join(images_stream, cover, key_col)
+        assign_images_via_join(images_stream, cover)
         .writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint_dir)
@@ -248,7 +233,7 @@ def stream_zone_transitions(assigned_events_stream: DataFrame):
     the streaming twin of queries_geo.q65_zone_transitions.
 
     Input: an event stream already carrying ``zone_id`` from the stateless
-    broadcast-cover probe upstream (the assignment itself needs no state),
+    cover probe upstream (the assignment itself needs no state),
     plus (user_id, event_id, ts). Per-user state is ONE integer — the zone
     of the user's latest event — so the state store is O(active users)
     regardless of stream length; each micro-batch sorts its own rows by
