@@ -37,9 +37,9 @@ py4j zip: 26,672 entries in pure Python), 100-200 ms per task against ~55 ms of
 lookup kernels for a 40k-image op. CPython 3.13 refreshes lazily. Importing
 tzspark (which every worker does when it unpickles a kernel and its
 covertable.CoverTables handle) installs a stat guard (`_zipimport.py`) so an
-unchanged archive is not re-read; a rewritten or removed one still is. It is not a
-custom `spark.python.daemon.module`, because executors that receive tzspark
-as `--py-files` could not import the daemon. The layer it moves is
+unchanged archive is not re-read; a rewritten or removed one still is. It is
+not a custom `spark.python.daemon.module`, because executors that receive
+tzspark as `--py-files` could not import the daemon. The layer it moves is
 `engine.overhead_s` / `spark.executor_run_ms` in the benchmark's traced run.
 """
 
