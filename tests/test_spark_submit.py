@@ -12,6 +12,10 @@ Output zone assignments are verified row-for-row against the
 committed numpy float32 oracle (zones.oracle_assign) — the same golden the
 in-process engine is pinned to, so the packaged launch is held to the exact
 same answer as the library launch.
+
+The launch gets engine.get_spark's local-master transport confs (Unix
+domain sockets in tzspark's short private directory), so the zip-shipped
+kernels and the addFile'd index file also run over that transport.
 """
 
 import os
@@ -21,6 +25,7 @@ import sys
 import pyspark
 import pytest
 
+from tzspark.engine import socket_dir
 from tzspark.shipping import package_zip_path
 from tzspark.zones import make_zones, oracle_assign
 
@@ -43,6 +48,7 @@ from tzspark.zones import make_zones
 out, n = sys.argv[1], int(sys.argv[2])
 spark = SparkSession.builder.appName("tzspark-submit-smoke").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
+print("UDS=" + spark.sparkContext.getConf().get("spark.python.unix.domain.socket.enabled"))
 
 zones = make_zones(n_coast=400)
 cov = CoverTables.from_index(spark, compile_cover(zones))  # shipped by addFile
@@ -81,6 +87,8 @@ def test_spark_submit_pyfiles_launch(tmp_path):
         "--master", "local[4]",
         "--conf", "spark.sql.shuffle.partitions=8",
         "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
+        "--conf", "spark.python.unix.domain.socket.enabled=true",
+        "--conf", f"spark.python.unix.domain.socket.dir={socket_dir()}",
         "--py-files", package_zip_path(),
         str(job), str(out), str(N_POINTS),
     ]
@@ -89,6 +97,7 @@ def test_spark_submit_pyfiles_launch(tmp_path):
     )
     assert r.returncode == 0, r.stderr[-3000:]
     assert "SUBMIT_OK" in r.stdout
+    assert "UDS=true" in r.stdout
 
     # the driver-side import really resolved outside the repo checkout
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

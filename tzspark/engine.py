@@ -41,9 +41,28 @@ unchanged archive is not re-read; a rewritten or removed one still is. It is
 not a custom `spark.python.daemon.module`, because executors that receive
 tzspark as `--py-files` could not import the daemon. The layer it moves is
 `engine.overhead_s` / `spark.executor_run_ms` in the benchmark's traced run.
+
+The other half of that cost is the transport. Over Spark's default loopback
+TCP socket the worker waits ~25 ms per task for the JVM's first Arrow
+message (likely Nagle on the JVM's small writes against the worker's
+delayed ACK; TCP_NODELAY on the worker's end alone does not help): a
+10-row arrow_udf task takes 55-64 ms of executor run time, a JVM-only task
+11 ms. On a local master get_spark therefore sets Spark's Unix domain
+socket transport for the worker daemon and its workers, collect/toPandas
+and the accumulator server; a Unix socket has neither mechanism (18-28 ms
+per such task). The sockets live in socket_dir(), a short private
+directory under /tmp, because a socket path is limited to 107 bytes and
+Spark's default, java.io.tmpdir, can be deep inside a checkout. A cluster
+master keeps TCP: a directory made on the driver does not exist on the
+executors' hosts.
 """
 
 from __future__ import annotations
+
+import atexit
+import os
+import shutil
+import tempfile
 
 import numpy as np
 import pyarrow as pa
@@ -65,33 +84,43 @@ from .imagecodec import parse_headers
 def default_driver_memory() -> str:
     """Half of this host's physical memory, capped at 32g: a fixed 32g heap
     on a 16 GB host let the JVM grow until the kernel killed it."""
-    import os
-
     phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     return f"{min(phys // 2, 32 << 30) >> 20}m"
 
 
-def get_spark(
-    app: str = "tzspark",
-    master: str = None,
-    shuffle_partitions: int = 32,
-    extra_conf: dict = None,
-) -> SparkSession:
-    """Session tuned for the engine: AQE + Arrow on, skew join handling."""
-    import os
+_SOCKET_DIR = None  # (path, pid of the process that made it)
 
-    # executors' python workers must import tzspark no matter the caller's
-    # cwd — the cluster equivalent is spark-submit --py-files tzspark.zip
-    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pp = os.environ.get("PYTHONPATH", "")
-    if pkg_parent not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = pkg_parent + (os.pathsep + pp if pp else "")
 
-    b = SparkSession.builder.appName(app)
-    if master:
-        b = b.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        b = b.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+def _remove_socket_dir(path: str, pid: int):
+    if os.getpid() == pid:  # not from a forked child that exits normally
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def socket_dir() -> str:
+    """This process's directory for Spark's Unix domain sockets: made once
+    with mkdtemp under /tmp (mode 0700, 25 characters), reused by every
+    later session, removed when the process exits. Not under TMPDIR or
+    java.io.tmpdir: a socket path is limited to 107 bytes, and a long
+    checkout or work directory (perfbench's tmpdir is under the checkout)
+    plus Spark's 43-character socket name passes that limit."""
+    global _SOCKET_DIR
+    if _SOCKET_DIR is None or not os.path.isdir(_SOCKET_DIR[0]):
+        _SOCKET_DIR = (tempfile.mkdtemp(prefix="tzspark-uds-", dir="/tmp"), os.getpid())
+        atexit.register(_remove_socket_dir, *_SOCKET_DIR)
+    return _SOCKET_DIR[0]
+
+
+def session_conf(
+    master: str = None, shuffle_partitions: int = 32, extra_conf: dict = None
+) -> tuple[str | None, dict]:
+    """get_spark's (master, conf): the master to set on the builder (None
+    when SPARK_MASTER is set, so the launcher's master stands) and every
+    conf it sets. A local master (local[N], local-cluster) also gets Spark's
+    Unix domain socket transport in socket_dir(); a cluster master gets
+    neither conf, as a directory made on the driver does not exist on the
+    executors' hosts. ``extra_conf`` overrides any of them."""
+    if not master and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",
@@ -106,7 +135,35 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
         or default_driver_memory(),
     }
+    if master and master.startswith("local"):
+        conf["spark.python.unix.domain.socket.enabled"] = "true"
+        conf["spark.python.unix.domain.socket.dir"] = socket_dir()
     conf.update(extra_conf or {})
+    return master, conf
+
+
+def get_spark(
+    app: str = "tzspark",
+    master: str = None,
+    shuffle_partitions: int = 32,
+    extra_conf: dict = None,
+) -> SparkSession:
+    """Session tuned for the engine (session_conf): AQE + Arrow on, skew
+    join handling, and on a local master every JVM<->Python exchange (the
+    Python worker daemon and its workers, collect/toPandas, the accumulator
+    server) over Unix domain sockets instead of loopback TCP, which saves
+    a fixed ~35 ms per Python task (see the module docstring)."""
+    # executors' python workers must import tzspark no matter the caller's
+    # cwd — the cluster equivalent is spark-submit --py-files tzspark.zip
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pp = os.environ.get("PYTHONPATH", "")
+    if pkg_parent not in pp.split(os.pathsep):
+        os.environ["PYTHONPATH"] = pkg_parent + (os.pathsep + pp if pp else "")
+
+    master, conf = session_conf(master, shuffle_partitions, extra_conf)
+    b = SparkSession.builder.appName(app)
+    if master:
+        b = b.master(master)
     for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()
